@@ -248,6 +248,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "cpus": cpus,
+        # host cores, so an oversubscribed run is not read as cpus-way data
+        "nproc": os.cpu_count(),
         "n_queries": len(timings),
         "failed": sorted(n for n, t in timings.items() if t < 0),
         "jobs": {

@@ -44,11 +44,6 @@ def default_fill(primary: Column, fallback: Column) -> Column:
     ).otherwise(primary)
 
 
-def share_feed_url(share_id: Column) -> Column:
-    """O4 (task.ts:78) — per-share feed URL."""
-    return F.concat(F.lit(GARMIN_SHARE_BASE + "Feed/Share/"), share_id)
-
-
 def share_link_url(share_id: Column) -> Column:
     """Feature link URL (task.ts:128)."""
     return F.concat(F.lit(GARMIN_SHARE_BASE), share_id)

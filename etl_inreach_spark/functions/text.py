@@ -1,5 +1,5 @@
 """Text-analysis expressions for the documents table: tokenization,
-shingling, quality stats, language-ID heuristic, fingerprints.
+set similarity, quality stats, language-ID heuristic, fingerprints.
 
 Everything here is a built-in Column expression (codegen, no UDF) and
 has a 1:1 DuckDB rendering so the oracles can hash-match exactly.
@@ -38,24 +38,6 @@ def subword_count(text: Column) -> Column:
     individual punctuation marks each count once."""
     return F.size(
         F.regexp_extract_all(text, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), F.lit(0))
-    )
-
-
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct character k-grams — the unit set for Jaccard/MinHash.
-
-    sequence+substring keeps it JVM-side; distinct so Jaccard is a
-    set measure.
-    """
-    # guard: sequence(1, 0) steps DOWNWARD to [1, 0] in Spark, so a
-    # text shorter than k must short-circuit to an empty set
-    return F.when(F.length(text) < k, F.array().cast("array<string>")).otherwise(
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.length(text) - F.lit(k - 1)),
-                lambda i: F.substring(text, i, F.lit(k)),
-            )
-        )
     )
 
 

@@ -13,9 +13,7 @@ count, and per-feed errors, DEBUG-gated. The Spark rendering:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -47,12 +45,3 @@ def observe_feed_metrics(
     )
     return out, obs
 
-
-def observe_counts(
-    df: DataFrame, exprs: Sequence[Column], name: str = "metrics"
-) -> tuple[DataFrame, Observation]:
-    """Generic observation attachment: ``exprs`` are aggregate
-    expressions evaluated over every row that flows through this point
-    of the plan — the AccumulatorV2 analog with DataFrame semantics."""
-    obs = Observation(name)
-    return df.observe(obs, *exprs), obs

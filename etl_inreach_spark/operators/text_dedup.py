@@ -99,12 +99,6 @@ def poly_gram_hash_sql(g: str, k: int, p: int = POLY_P, m: int = MERSENNE31) -> 
     return h
 
 
-def poly_gram_hasher(k: int):
-    """Single-arg Column hash bound to gram length ``k`` — the form
-    ``shingles_exploded``/``simhash_pairs`` accept as ``gram_hash``."""
-    return lambda g: poly_gram_hash(g, k)
-
-
 # Affine re-hash constants (MINSTD multiplier) for widening the 31-bit
 # polynomial hash to 60 bits: h2 = (A2*h1 + B2) mod M is a bijection of
 # h1, and the universal-family re-hash decorrelates its bits from h1's

@@ -13,7 +13,10 @@ cast back to DOUBLE; see SURVEY.md §7 "hard parts" #4.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import functools
+import json
+from collections.abc import Callable, Iterable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -35,279 +38,55 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     return deco
 
 
-# --- Registry ordering -------------------------------------------------
-#
-# The driver's correctness harness verifies the FIRST 50 entries of
-# queries() only, so dict order is the coverage dial (round-2 lesson:
-# indices 50-62 silently got no oracle verdict). Policy: queries that
-# have never had a green CORRECTNESS row, or whose implementation
-# changed this round, are pinned to the FRONT; long-stable greens
-# rotate to the TAIL; anything unlisted (e.g. a brand-new query that
-# forgot to update these lists) lands in the middle, still inside the
-# window as long as the tail stays >= (total - 50) names.
-#
-# Verdict history (rN = CORRECTNESS_r0N):
-#   Round-11 rotation — executes the ROUND-11 ROTATION PLAN written
-#   at r10 close verbatim (CORRECTNESS_r10 was 50/50 green — every
-#   r10-window name has a fresh verdict and rotates out with one
-#   round of headroom). _FRONT groups, in order:
-#   (1) both former _PENDING names (r10 additions) — never
-#       driver-verified (judge re-ran both at r10 HEAD: PASS, but
-#       the driver's signature is the contract);
-#   (2) the 41-name r7-window remainder — out r8+r9+r10: PAST the
-#       staleness bound, must re-enter now;
-#   (3) the head of the r8-window block (greens out r9+r10 — AT the
-#       staleness bound), 7 names to fill 50 exactly
-#       (incremental_dedup_convergence .. embedding_project_jl).
-#   2 + 41 + 7 = 50 exactly.
-_FRONT: tuple[str, ...] = (
-    # (1) former _PENDING (r10 additions) — never driver-verified
-    "minhash_after_exact_dedup",
-    "nb_quality_capped_vocab",
-    # (2) r7-window remainder — out r8+r9+r10, PAST the
-    # staleness bound
-    "tpch_q19_disjunctive_filter",
-    "tpch_q22_sales_opportunity",
-    "zorder_locality_orders",
-    "pseudonymize_customers",
-    "hof_array_zoo",
-    "window_function_zoo",
-    "streaming_static_enrich",
-    "cdc_latest_state",
-    "rollup_time_revenue",
-    "variant_props_extract",
-    "partitioned_sink_prune",
-    "csv_roundtrip_orders",
-    "cogroup_conversion_latency",
-    "zorder_events_key",
-    "ansi_safe_functions",
-    "doc_chunk_overlap",
-    "triangle_count_copurchase",
-    "vocab_top_terms",
-    "tfidf_top_terms",
-    "funnel_conversion",
-    "histogram_order_totals",
-    "embedding_quantize_int8",
-    "embedding_cosine_dedup",
-    "multimodal_frame_sample",
-    "cube_pricing",
-    "catalog_row_counts",
-    "latest_per_key",
-    "share_normalize",
-    "split_coordinates",
-    "json_props_extract",
-    "timestamp_normalize",
-    "time_window_filter",
-    "string_functions_showcase",
-    "broadcast_config_join",
-    "term_lift_pairs",
-    "bigram_lm_quality",
-    "kmeans_cluster_sizes",
-    "hilbert_key_orders",
-    "rrf_hybrid_retrieval",
-    "dup_span_maximal",
-    "recursive_nation_chain",
-    # (3) r8-window head — out r9+r10, at the staleness bound
-    "incremental_dedup_convergence",
-    "bucketed_join_revenue",
-    "compaction_roundtrip_orders",
-    "binary_media_metadata",
-    "bpe_merge_sequence",
-    "bpe_segment_documents",
-    "embedding_project_jl",
-)
-# ROUND-12 ROTATION PLAN (write this into _FRONT at r12 start):
-#   1.  any _PENDING names below (r11 additions — never
-#       driver-verified) — MUST enter first;
-#   2.  the 43-name r8-window remainder at the _TAIL head
-#       (schema_evolution_merge .. tumbling_15min_counts) —
-#       out r9+r10+r11: PAST the staleness bound, MUST re-enter r12;
-#   3.  fill the remaining window with the head of the r9-window
-#       block (ivf_pq_adc_topk ..) — out r10+r11, at the bound.
-#   Structural debt (tracked, not hidden): the registry (193+)
-#   exceeds 3.8x the 50-name window, so blocks cannot fully re-enter
-#   the round after they age out; the r9-block remainder and the
-#   r10-window greens (out r11 only, one round of headroom) lead r13.
-#
-# _PENDING: oracle-gated queries added AFTER the r11 window froze (the
-# 50-name _FRONT above is the frozen window). Names here MUST move to
-# _FRONT in r12 (group 1 of the plan above). Cap 12 (test-enforced).
-_PENDING: tuple[str, ...] = (
-    # r11 additions (VERDICT r10 items 4-5) — enter _FRONT in r12
-    "fuzzy_name_pairs_edit2",
-    "incremental_semantic_dedup_convergence",
-)
-_TAIL: tuple[str, ...] = (
-    # r8-window remainder (green in CORRECTNESS_r08) — out r9+r10+r11
-    # after this rotation, PAST the staleness bound; group 2 of the
-    # ROUND-12 plan, kept at the tail head so they re-enter first
-    "schema_evolution_merge",
-    "ewma_user_daily",
-    "exact_quantile_rankselect",
-    "mad_anomaly_daily",
-    "embedding_standardize",
-    "lateral_top2_customers",
-    "pareto_frontier_orders",
-    "temperature_resample_sources",
-    "ngram_diversity_sources",
-    "pagerank3_copurchase",
-    "cohort_retention_weekly",
-    "trailing_1h_distinct_users",
-    "null_safe_join_buckets",
-    "not_in_null_semantics",
-    "set_ops_bag_semantics",
-    "k_anonymity_audit",
-    "distribution_drift_orders",
-    "asof_next_purchase_after_click",
-    "interval_overlap_order_windows",
-    "dedup_clusters_star",
-    "tpch_q13_order_distribution",
-    "tpch_q18_large_orders",
-    "tpch_q21_last_shipper",
-    "bm25_term_search",
-    "walk3_centrality",
-    "bloom_prune_join",
-    "incremental_agg_merge",
-    "embedding_argmax_arrow",
-    "pandas_udaf_median_price",
-    "corpus_curation_pipeline",
-    "streaming_sliding_counts",
-    "scd2_point_in_time_join",
-    "top3_orders_per_customer",
-    "semi_join_active_customers",
-    "anti_join_inactive_customers",
-    "asof_last_click_before_purchase",
-    "cross_join_region_nation",
-    "range_join_ship_within_90d",
-    "rollup_pricing",
-    "set_ops_repeat_customers",
-    "set_ops_churned_customers",
-    "window_running_stats",
-    "tumbling_15min_counts",
-    # r9 window (all green in CORRECTNESS_r09) — out r10+r11; group 3
-    # (window fill) of the ROUND-12 plan
-    "ivf_pq_adc_topk",
-    "kmeans_lloyd_round_update",
-    "nb_quality_train_score",
-    "grouped_quantile_rankselect",
-    "phrase_match_positional",
-    "revenue_weighted_quantile",
-    "ks_drift_orders",
-    "ohlc_user_hourly",
-    "session_path_trigrams",
-    "source_centroid_similarity",
-    "auc_price_status",
-    "benford_first_digit_orders",
-    "farthest_point_seeds",
-    "source_concentration_hhi",
-    "gini_order_values",
-    "distinct_users_per_type",
-    "sessionize_events",
-    "session_window_native",
-    "salted_skew_join",
-    "sliding_1h_user_activity",
-    "seq_pack_bins",
-    "repetition_profile",
-    "contamination_check",
-    "upsert_merge_roundtrip",
-    "streaming_tumbling_counts",
-    "streaming_groupstate_latest",
-    "approx_distinct_users",
-    "approx_order_percentiles",
-    "global_top10_orders",
-    "shipping_priority_top10",
-    "pivot_event_counts",
-    "skew_safe_event_counts",
-    "order_stats_summary",
-    "full_outer_nation_activity",
-    "unpivot_order_flags",
-    "sql_revenue_by_nation",
-    "mode_ship_month",
-    "order_value_percentiles",
-    "ann_ivf_topk",
-    "cms_user_event_counts",
-    "fuzzy_name_pairs_edit1",
-    "semantic_dedup_embeddings",
-    "data_quality_checks",
-    "snapshot_diff_orders",
-    "tpch_q7_volume_shipping",
-    "tpch_q10_returned_items",
-    "cms_incremental_merge",
-    "groupwise_split_documents",
-    "compress_consecutive_events",
-    "tpch_q14_promo_revenue",
-    # r10 window (all 50 green in CORRECTNESS_r10) — out r11 only,
-    # one round of headroom; re-enter r13
-    "kmeans_lloyd_round2_update",
-    "curation_gate_composed",
-    "token_budget_select",
-    "ann_lsh_topk",
-    "corr_price_quantity",
-    "date_dim_generate",
-    "doc_fingerprints",
-    "eav_pivot",
-    "embedding_norms",
-    "embedding_topk",
-    "exact_dedup_documents",
-    "grouping_sets_pricing",
-    "hash_split_documents",
-    "kmv_distinct_users",
-    "lang_id_documents",
-    "multimodal_features",
-    "ntile_customer_value",
-    "pricing_summary",
-    "quality_filter_pipeline",
-    "simhash_near_dup",
-    "text_stats",
-    "unit_strip_cast",
-    "seq_pack_chunks",
-    "multimodal_resize",
-    "kml_pipeline_roundtrip",
-    "streaming_dedup_ids",
-    "near_dup_jaccard",
-    "minhash_lsh_dedup",
-    "dedup_clusters",
-    "streaming_stateful_latest",
-    "scd2_user_state",
-    "resample_gapfill_events",
-    "data_profile_orders",
-    "tpch_q5_local_supplier",
-    "orders_above_cust_avg",
-    "streaming_stream_stream_join",
-    "segment_dedup_rebuild",
-    "stratified_sample_documents",
-    "reservoir_sample_per_source",
-    "domain_mix_weights",
-    "udtf_token_runs",
-    "priority_sample_documents",
-    "global_row_index_orders",
-    "negative_sample_contrastive",
-    "heavy_hitters_lang",
-    "kmv_corpus_overlap",
-    "tpch_q6_forecast_revenue",
-    "tpch_q8_market_share",
-    "tpch_q15_top_supplier",
-    "tpch_q17_small_qty_revenue",
-)
+# The driver verifies only the FIRST 50 entries of queries(), so the
+# order is derived from the committed verdict history (the repo root's
+# CORRECTNESS_r{N}.json): never-verified first, then oldest last passing
+# verdict, then name. While checked queries pass, every query is
+# re-verified within ceil(len(registry) / 50) rounds; a failed or
+# oracle-less verdict keeps its query at the front.
+_REPO_ROOT = Path(__file__).resolve().parent.parent
 
 
-def _ordered(names: list[str]) -> list[str]:
-    front = [n for n in _FRONT if n in names]
-    pending = [n for n in _PENDING if n in names]
-    tail = [n for n in _TAIL if n in names]
-    pinned = set(front) | set(pending) | set(tail)
-    middle = [n for n in names if n not in pinned]
-    return front + pending + middle + tail
+def last_verified(history: Mapping[int, Mapping[str, Mapping]]) -> dict[str, int]:
+    """Round of each query's latest passing verdict in ``history``
+    (round -> {name -> verdict row}). A row passes when it ran clean,
+    rows and schema match and the value hash did not mismatch, so
+    rows-only verdicts count."""
+    last: dict[str, int] = {}
+    for rnd, rows in sorted(history.items()):
+        for name, row in rows.items():
+            if (
+                row.get("err") is None
+                and row.get("rows_match") is True
+                and row.get("schema_match") is True
+                and row.get("hash_match") is not False
+            ):
+                last[name] = rnd
+    return last
+
+
+def _ordered(names: Iterable[str], last: Mapping[str, int]) -> list[str]:
+    return sorted(names, key=lambda n: (last.get(n, -1), n))
+
+
+@functools.cache
+def _committed_last_verified() -> dict[str, int]:
+    history = {}
+    for p in _REPO_ROOT.glob("CORRECTNESS_r*.json"):
+        rnd = p.stem.removeprefix("CORRECTNESS_r")
+        if rnd.isdigit():
+            history[int(rnd)] = json.loads(p.read_text())
+    return last_verified(history)
 
 
 def all_queries() -> dict[str, QueryFn]:
     _load_all()
-    return {n: _QUERIES[n] for n in _ordered(list(_QUERIES))}
+    return {n: _QUERIES[n] for n in _ordered(_QUERIES, _committed_last_verified())}
 
 
 def all_oracles() -> dict[str, str]:
     _load_all()
-    return {n: _ORACLES[n] for n in _ordered(list(_QUERIES)) if n in _ORACLES}
+    return {n: _ORACLES[n] for n in all_queries() if n in _ORACLES}
 
 
 _LOADED = False

@@ -8,6 +8,8 @@ value-oracled against DuckDB.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -724,9 +726,6 @@ def cogroup_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``in columns`` membership instead of assuming the schema, and
     tooling that needs a row count goes through an eager
     localCheckpoint first (tools/scale_probe.time_query)."""
-    import numpy as np
-    import pandas as pd
-
     tune(spark)
     ev = load_table(spark, sf_dir, "events")
     bucket = F.pmod(F.col("user_id"), F.lit(256)).alias("bucket")
@@ -1109,22 +1108,17 @@ def pandas_udaf_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     belong to the sort-based order_value_percentiles path. The point
     under the gate is the pandas-UDAF API tier itself."""
     tune(spark)
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit functionType, no type hints: this module runs under
-    # `from __future__ import annotations`, which turns hints into
-    # strings that pandas_udf's signature inference rejects
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def exact_median(cents):
-        import numpy as np
-
+    # typed-hint GROUPED_AGG form (Series -> scalar); the stringized
+    # hints resolve against this module's globals, which import pd
+    @F.pandas_udf("double")
+    def exact_median(cents: pd.Series) -> float:
         return float(np.median(cents.to_numpy(dtype="int64")))
 
     # Spark refuses to mix a group-agg pandas UDF with JVM aggregates
     # in one agg() (INVALID_PANDAS_UDF_PLACEMENT), so the row count is
     # a second pandas UDAF rather than F.count
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def group_size(cents):
+    @F.pandas_udf("long")
+    def group_size(cents: pd.Series) -> int:
         return len(cents)
 
     o = load_table(spark, sf_dir, "orders")
