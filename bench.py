@@ -5,9 +5,10 @@ Env:
   SPARK_GRAFT_SF_DIR  parquet dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS    local[] thread count (default 32)
 
-Each query is executed to completion with a `noop` format write so the
-measurement covers the full distributed plan (scan -> shuffle -> sink)
-without driver-side collect overhead. Timings are wall-clock seconds.
+Each query is timed by `tools.measure.measure`: build plus a `noop`
+format write, so the measurement covers the full distributed plan
+(scan -> shuffle -> sink) without driver-side collect overhead. Timings
+are wall-clock seconds.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 from etl_inreach_spark.queries import all_queries  # noqa: E402
 from etl_inreach_spark.session import get_spark  # noqa: E402
+from tools.measure import drop_blocks, measure, warm_up  # noqa: E402
 
 
 def _spin() -> int:
@@ -107,14 +109,7 @@ def main() -> None:
     spark = build_spark(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
-    # Warm up the JVM and the Arrow Python workers once so the first
-    # pandas-UDF query doesn't pay worker spin-up inside its timing.
-    import pandas as _pd  # noqa: F401
-
-    warm = spark.range(cpus * 2).repartition(cpus)
-    warm.mapInPandas(lambda it: it, "id long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_up(spark)
 
     qs = all_queries()
     # streaming_dedup_ids drains a Structured Streaming checkpoint over
@@ -150,48 +145,13 @@ def main() -> None:
     # min-of-2/3 let that warmup noise pollute round-over-round
     # comparison (VERDICT r2; round-4 host-speed regression).
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "4"))
-    # Opt-in INTERLEAVED repeats (r12, additive): the default loop
-    # runs a query's repeats back-to-back, so one of this host's
-    # multi-second stall windows can inflate ALL of a query's repeats
-    # at once and min-of-N never sees a clean draw (r11: dedup_clusters
-    # drew 9.55 s in the driver bench while interleaved min-of-4 on the
-    # same code measured 3.3 s). SPARK_GRAFT_BENCH_INTERLEAVE=1 runs
-    # round-major instead (every query once per round, the
-    # tools/retime_suspects.py discipline) so a stall inflates one
-    # ROUND of every query rather than every repeat of one query.
-    # Default (unset) keeps the byte-identical legacy order/output.
-    interleave = bool(os.environ.get("SPARK_GRAFT_BENCH_INTERLEAVE"))
-
-    def _drop_leaked_blocks() -> None:
-        # localCheckpoint(eager=True) blocks unpin only when Python's
-        # GC + Spark's ContextCleaner get around to it; across ~100
-        # queries the lag accumulates into storage-vs-execution memory
-        # pressure that shows up as multi-second eviction/GC stalls in
-        # UNRELATED later queries. Discarded plans are never re-read,
-        # so dropping them between queries is safe and deterministic.
-        try:
-            for _rid, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-                rdd.unpersist()
-        except Exception:
-            pass
-        # Full GC between queries (untimed): the checkpoint-heavy
-        # iterative queries leave multi-GB heap debt that otherwise
-        # surfaces as consistent multi-second slowdowns in whichever
-        # queries FOLLOW them alphabetically (doc_fingerprints after
-        # dedup_clusters_star spiked 1.6 -> 5.9 s across all 4 repeats
-        # while standalone min-of-6 stayed at 1.7 s).
-        try:
-            spark.sparkContext._jvm.System.gc()
-        except Exception:
-            pass
-
     # Spark JOB COUNT per query: wall-clock on this host is
     # stall-dominated (scheduler stalls spread identical plans over a
     # 2-6x range), but the number of jobs an operator launches is a
     # pure function of its convergence/checkpoint behavior — the
     # stall-proof regression metric (already used for CC: 54->44 and
-    # 39->29 across rounds). Counted via a per-run job group against
-    # the status tracker for EVERY query (VERDICT r7 item 6); the
+    # 39->29 across rounds). Counted by measure() from the status
+    # store for EVERY query (VERDICT r7 item 6); the
     # emitted map keeps the multi-job pipelines (> 5 jobs) plus the
     # five legacy iterative names for round-over-round comparability.
     # min across repeats (AQE warm-path can shave a job on later
@@ -205,40 +165,24 @@ def main() -> None:
     }
     jobs: dict[str, int] = {}
     timings: dict[str, float] = {}
-    sc = spark.sparkContext
 
     def _run_once(name: str, rep: int) -> None:
-        group = f"bench:{name}:{rep}"
-        sc.setJobGroup(group, name)
-        t0 = time.monotonic()
         try:
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = round(time.monotonic() - t0, 3)
+            rec = measure(spark, f"bench:{name}:{rep}", lambda: qs[name](spark, sf_dir))
+            dt = rec["wall_s"]
             prev = timings.get(name)
             timings[name] = dt if prev is None or prev < 0 else min(prev, dt)
-            nj = len(sc.statusTracker().getJobIdsForGroup(group))
-            jobs[name] = min(jobs.get(name, nj), nj)
+            jobs[name] = min(jobs.get(name, rec["jobs"]), rec["jobs"])
         except Exception as e:  # keep the bench line parseable on failure
             print(f"bench: {name} FAILED: {e}", file=sys.stderr)
             # a later transient failure must not discard a valid
             # earlier timing; only an all-repeats failure is -1
             timings.setdefault(name, -1.0)
-        finally:
-            # PySpark has no clearJobGroup; reset the local props
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setLocalProperty("spark.job.description", None)
 
-    if interleave:
+    for name in sorted(qs):
         for rep in range(max(repeats, 1)):
-            for name in sorted(qs):
-                _run_once(name, rep)
-                _drop_leaked_blocks()
-    else:
-        for name in sorted(qs):
-            for rep in range(max(repeats, 1)):
-                _run_once(name, rep)
-            _drop_leaked_blocks()
+            _run_once(name, rep)
+        drop_blocks(spark)
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     payload = {

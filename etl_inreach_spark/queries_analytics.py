@@ -723,9 +723,10 @@ def cogroup_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cogroup children, so the pandas function receives batches
     MISSING its declared input columns (collect()/writes are fine —
     they require every output column). The function therefore probes
-    ``in columns`` membership instead of assuming the schema, and
-    tooling that needs a row count goes through an eager
-    localCheckpoint first (tools/scale_probe.time_query)."""
+    ``in columns`` membership instead of assuming the schema, and a
+    row count must go through an eager localCheckpoint first: a bare
+    ``count()`` prunes the cogroup inputs and crashes the pandas
+    function."""
     tune(spark)
     ev = load_table(spark, sf_dir, "events")
     bucket = F.pmod(F.col("user_id"), F.lit(256)).alias("bucket")

@@ -20,10 +20,11 @@ creation, so 8- and 32-core passes must be separate processes):
 
 The replica dir is built on first use and REUSED by path (both passes
 must see identical bytes; delete the root to rebuild). Timing is
-min-of-N noop-sink wall (bench.py methodology) with a fresh DataFrame
-build per repeat. Combine the two JSONs downstream into per-query
-t_low/t_high ratios; data-bound queries should approach
-cpus_high/cpus_low while barrier-bound iterative queries stay near 1.
+min-of-N ``tools.measure.measure`` wall (build + noop write, as in
+bench.py) with a fresh DataFrame build per repeat. Combine the two
+JSONs downstream into per-query t_low/t_high ratios; data-bound
+queries should approach cpus_high/cpus_low while barrier-bound
+iterative queries stay near 1.
 """
 
 from __future__ import annotations
@@ -32,12 +33,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_inreach_spark.queries import all_queries  # noqa: E402
 from etl_inreach_spark.session import get_spark  # noqa: E402
+from tools.measure import drop_blocks, measure, warm_up  # noqa: E402
 from tools.scale_probe import BASE_SF_DIR, make_replica_dir  # noqa: E402
 
 
@@ -76,23 +77,14 @@ def main() -> int:
         with open(marker, "w") as f:
             json.dump(params, f)
 
-    # warm Arrow workers like bench.py so the first pandas UDF doesn't
-    # pay interpreter startup
-    import pandas as _pd  # noqa: F401
-    spark.range(2).selectExpr("id").toPandas()
-
+    warm_up(spark)
     results: dict[str, float] = {}
-    sc = spark.sparkContext
     for name in args.queries:
-        best = None
-        for rep in range(args.repeats):
-            sc.setJobDescription(f"core-probe:{name}:{rep}")
-            t0 = time.monotonic()
-            df = qs[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
-            sc.setJobDescription(None)
+        best = min(
+            measure(spark, f"core-probe:{name}", lambda: qs[name](spark, sf_dir))["wall_s"]
+            for _ in range(args.repeats)
+        )
+        drop_blocks(spark)
         results[name] = round(best, 2)
         print(f"{name}: {best:.2f}s @ {cpus} cores", file=sys.stderr)
 

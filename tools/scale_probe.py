@@ -23,13 +23,13 @@ import math
 import os
 import sys
 import tempfile
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_inreach_spark.catalog import TABLES, table_path  # noqa: E402
 from etl_inreach_spark.queries import all_queries  # noqa: E402
 from etl_inreach_spark.session import get_spark  # noqa: E402
+from tools.measure import drop_blocks, measure  # noqa: E402
 
 BASE_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_QUERIES = (
@@ -117,25 +117,6 @@ def make_replica_dir(
     return out
 
 
-def time_query(fn, spark, sf_dir: str, repeats: int = 2) -> tuple[float, int]:
-    best, rows = None, 0
-    for _ in range(repeats):
-        t0 = time.monotonic()
-        df = fn(spark, sf_dir)
-        # Count via an eager checkpoint, NOT df.count(): count() lets
-        # the optimizer prune every output column, and Spark pushes
-        # that pruning into FlatMapCoGroupsInPandas children — the
-        # pandas function then receives batches missing its declared
-        # input columns and crashes (observed on the cogroup query;
-        # collect()/writes are unaffected because they need all
-        # columns). The checkpoint executes the FULL plan, which is
-        # also what the timing should measure.
-        rows = df.localCheckpoint(eager=True).count()
-        dt = time.monotonic() - t0
-        best = dt if best is None else min(best, dt)
-    return best, rows
-
-
 def main() -> int:
     # usage: scale_probe.py [R] [--tables t1,t2] [query ...]
     argv = sys.argv[1:]
@@ -175,8 +156,17 @@ def main() -> int:
         d1 = make_replica_dir(spark, BASE_SF_DIR, 1, root, tables)
         dr = make_replica_dir(spark, BASE_SF_DIR, r, root, tables)
         for name in names:
-            t1, rows1 = time_query(qs[name], spark, d1)
-            tr, rowsr = time_query(qs[name], spark, dr)
+            walls, rows = [], []
+            for d in (d1, dr):
+                walls.append(min(
+                    measure(spark, "scale-probe", lambda: qs[name](spark, d))["wall_s"]
+                    for _ in range(2)
+                ))
+                # one untimed count, through an eager checkpoint: a bare
+                # count() prunes cogroup pandas inputs away
+                rows.append(qs[name](spark, d).localCheckpoint(eager=True).count())
+                drop_blocks(spark)
+            (t1, tr), (rows1, rowsr) = walls, rows
             exp = math.log(tr / t1) / math.log(r)
             results[name] = {
                 "t_1x": round(t1, 2),

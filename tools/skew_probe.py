@@ -61,10 +61,11 @@ GC after warm-up, never immediately before a timed repeat (the
 full-heap pause overlapped the repeat and became its own 150 s
 phantom straggler).
 
-Max task time comes from Spark's REST status API (the probe session
-enables the UI), taking the max over all stages of the query's job
-group, reported PER REPEAT (ADVICE r8: min-of-max hides intermittent
-stragglers). Run solo (bench discipline applies).
+Each repeat is one ``tools.measure.measure`` call; max task time and
+the straggler ratio come from Spark's in-process status store (no UI
+server), taken over all stages of the repeat's job groups and reported
+PER REPEAT (ADVICE r8: min-of-max hides intermittent stragglers). Run
+solo (bench discipline applies).
 
 Usage: python tools/skew_probe.py [sf_dir] [replication] [family]
 """
@@ -77,140 +78,47 @@ import shutil
 import sys
 import tempfile
 import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
 from etl_inreach_spark.catalog import load_table  # noqa: E402
-from etl_inreach_spark.session import RUNTIME_CONF  # noqa: E402
-
-
-def _get_spark_with_ui():
-    from pyspark.sql import SparkSession
-
-    from etl_inreach_spark.session import BUILDER_ONLY_CONF
-
-    from etl_inreach_spark.session import _default_driver_mem
-
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("skew-probe")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4050")
-        # mirror get_spark's cores-sized shuffle partitions: every
-        # real session (bench, oracle, driver) runs with this, and
-        # Spark's join planning re-targets even user REPARTITION_BY_NUM
-        # exchanges to this conf — probing under the 200 default
-        # measured a different physical layout (150+ empty tasks in
-        # pinned grid joins crushed the worst-stage p50 and made the
-        # max/p50 ratio unreadable at probe scale)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        # mirror get_spark's sizing: the default 1g driver heap OOMs
-        # on the 10x-documents shingle checkpoint
-        .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()),
-        )
-        .config("spark.driver.maxResultSize", "4g")
-    )
-    for k, v in {**RUNTIME_CONF, **BUILDER_ONLY_CONF}.items():
-        b = b.config(k, v)
-    return b.getOrCreate()
-
-
-def _rest(path: str):
-    with urllib.request.urlopen(f"http://localhost:4050/api/v1{path}") as r:
-        return json.load(r)
-
-
-def _max_task_ms(app_id: str, stage_ids: set[int]) -> tuple[float, float]:
-    """(max task ms, p50 task ms OF THE SAME STAGE). The pair is the
-    straggler detector this host actually needs: its CPU draws vary
-    up to 10-30x BETWEEN runs (r10 measured an identical 1-task scan
-    stage at 8.9 s and 405.9 s in consecutive executions), which
-    inflates every task of a stage TOGETHER — only a genuine skew
-    straggler inflates max far above the stage's own median, so
-    max/p50 survives the noise windows that absolute max-task values
-    do not."""
-    worst, worst_p50 = 0.0, 0.0
-    for sid in stage_ids:
-        try:
-            summ = _rest(
-                f"/applications/{app_id}/stages/{sid}/0/taskSummary"
-                "?quantiles=0.5,1.0"
-            )
-            mx = float(summ["duration"][1])
-            if mx > worst:
-                worst, worst_p50 = mx, float(summ["duration"][0])
-        except Exception:
-            continue
-    return worst, worst_p50
+from etl_inreach_spark.session import get_spark  # noqa: E402
+from tools.measure import measure, noop_write  # noqa: E402
 
 
 def _run(spark, name, fn, sf_dir, repeats: int = 3, warm: bool = True):
     """One discarded warm-up pass (codegen/shuffle JIT; skippable for
     straggler runs where cold-JIT noise is orders of magnitude below
-    the signal), then min-of-``repeats`` for wall (the bench
-    discipline) and ALL per-repeat max-task values for the straggler
-    signal: a straggler detector must not hide an intermittent
-    straggler behind a min-of-max (ADVICE r8), so the probe reports
-    every repeat's max task plus its worst case.
-
-    Execution is a NOOP-format write, NOT count(): count() lets
-    Catalyst ELIMINATE a left join against a distinct-keyed side when
-    no joined column is referenced — semantic_dedup's kept flag is
-    exactly that shape, and the r9 probe initially "measured" the
-    hot-cell pair search at 1.4 s because the optimizer had deleted
-    it from the plan (the isolated join takes ~110 s). The noop write
-    materializes every column, so nothing can be optimized away while
-    still writing no bytes — the same discipline bench.py uses."""
-
-    def _exec(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    sc = spark.sparkContext
+    the signal), then ``repeats`` measured noop writes (never count():
+    see the module docstring). Wall is min-of-``repeats`` (the bench
+    discipline); max task and straggler ratio are reported for EVERY
+    repeat, because a min-of-max would hide an intermittent straggler
+    (ADVICE r8)."""
     n = fn(spark, sf_dir).count()  # row count only, not measured
     if warm:
-        _exec(fn(spark, sf_dir))  # warm-up, not measured
+        noop_write(fn(spark, sf_dir))  # warm-up, not measured
     # ONE settle-down GC before the measurement loop: garbage from
     # earlier executions otherwise bleeds old-gen pauses into the
     # measured tasks. NOT per-repeat — a full GC of the large local
     # heap right before a repeat overlapped that repeat's tasks and
     # manufactured a 150 s phantom straggler of its own.
-    sc._jvm.System.gc()
+    spark.sparkContext._jvm.System.gc()
     time.sleep(2)
-    best_wall = None
-    task_maxes: list[float] = []
-    ratios: list[float] = []
-    for rep in range(repeats):
-        group = f"probe:{name}:{rep}"
-        sc.setJobGroup(group, name)
-        t0 = time.monotonic()
-        _exec(fn(spark, sf_dir))
-        wall = time.monotonic() - t0
-        app_id = sc.applicationId
-        stage_ids: set[int] = set()
-        for j in sc.statusTracker().getJobIdsForGroup(group):
-            ji = sc.statusTracker().getJobInfo(j)
-            if ji is not None:
-                stage_ids.update(ji.stageIds)
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        mx, p50 = _max_task_ms(app_id, stage_ids)
-        task_maxes.append(mx / 1000.0)
-        ratios.append(mx / p50 if p50 > 0 else 1.0)
-        best_wall = wall if best_wall is None else min(best_wall, wall)
+    recs = [
+        measure(spark, f"probe:{name}:{rep}", lambda: fn(spark, sf_dir))
+        for rep in range(repeats)
+    ]
     return {
-        "wall_sec": round(best_wall, 2),
+        "wall_sec": round(min(r["wall_s"] for r in recs), 2),
         "rows": n,
-        "max_task_sec": round(max(task_maxes), 2),
-        "max_task_sec_per_repeat": [round(t, 2) for t in task_maxes],
-        # max/p50 of the worst stage, per repeat: the host-noise-proof
-        # straggler signature (see _max_task_ms)
-        "straggler_ratio_per_repeat": [round(r, 1) for r in ratios],
+        "max_task_sec": round(max(r["max_task_s"] for r in recs), 2),
+        "max_task_sec_per_repeat": [round(r["max_task_s"], 2) for r in recs],
+        # worst max/p50 task ratio over stages of >= 4 tasks, per
+        # repeat: host noise inflates every task of a stage together,
+        # so only a genuine skew straggler lifts max far above p50
+        "straggler_ratio_per_repeat": [round(r["straggler_ratio"], 1) for r in recs],
     }
 
 
@@ -941,7 +849,7 @@ def _fresh_spark():
     if active is not None:
         active.stop()
         time.sleep(1)
-    s = _get_spark_with_ui()
+    s = get_spark("skew-probe")
     s.sparkContext.setLogLevel("ERROR")
     return s
 
