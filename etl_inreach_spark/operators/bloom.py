@@ -168,19 +168,3 @@ def bloom_prune(
             .drop(f"_pos{i}", f"_w{i}", f"_bits{i}")
         )
     return out
-
-
-def bloom_params(n_keys: int, target_fpp: float = 0.01) -> tuple[int, int]:
-    """Textbook sizing: (m_bits, k_hashes) hitting ``target_fpp`` for
-    ``n_keys`` — m = -n ln p / (ln 2)^2, k = (m/n) ln 2. m rounds up
-    to a power of two (the probe arithmetic uses mod-m double hashing;
-    a power of two keeps the word table a clean 2^j rows) and k clamps
-    to [1, 16]."""
-    import math
-
-    if n_keys <= 0:
-        return (1 << 10, 1)
-    m = -n_keys * math.log(target_fpp) / (math.log(2) ** 2)
-    m_bits = 1 << max(10, math.ceil(math.log2(m)))
-    k = max(1, min(16, round(m_bits / n_keys * math.log(2))))
-    return m_bits, k

@@ -1,9 +1,9 @@
 """Deterministic distributed k-means: exact-integer Lloyd iterations
 that are bit-for-bit partition-invariant.
 
-The float-averaging Lloyd trainers in this repo (``pq_train`` in
-operators/pq.py, ``train_ivf_centroids`` in operators/similarity.py)
-are deterministic only up to float-summation order — a repartition can
+A float-averaging Lloyd trainer (such as ``pq_train`` in
+operators/pq.py) is deterministic only up to float-summation order — a
+repartition can
 flip the last ulp of a mean and, through an argmin tie, a whole
 assignment. This module removes that caveat: every quantity the
 algorithm compares or accumulates is a 64-bit integer, so the trained

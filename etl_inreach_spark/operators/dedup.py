@@ -105,22 +105,6 @@ def topk_by_key(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
-def exact_dedup(df: DataFrame, subset: Sequence[str], keep_min_col: str | None = None) -> DataFrame:
-    """Exact deduplication on a column subset.
-
-    With ``keep_min_col`` the survivor is deterministic (the row with
-    the minimal value of that column — e.g. earliest doc_id), rendered
-    as a min_by hash aggregation (partial-agg friendly). Without it,
-    plain ``dropDuplicates`` (non-deterministic survivor, cheapest).
-    """
-    if keep_min_col is None:
-        return df.dropDuplicates(list(subset))
-    cols = df.columns
-    picked = F.min_by(F.struct(*[F.col(c) for c in cols]), F.col(keep_min_col))
-    out = df.groupBy(*[F.col(c) for c in subset]).agg(picked.alias("_row"))
-    return out.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",

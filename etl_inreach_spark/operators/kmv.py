@@ -60,7 +60,7 @@ def kmv_sketch(df: DataFrame, key: Column, k: int = 256) -> DataFrame:
     combined groupBy on a single bigint column; the k-smallest cut is
     ``ORDER BY LIMIT k`` (TakeOrdered — bounded per-partition heaps);
     the final collect_list runs over <= k rows. The sketch is monoid
-    state: merge = k smallest of the concatenation (``kmv_merge``)."""
+    state: merge = k smallest of the concatenation."""
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
     return (
@@ -80,16 +80,6 @@ def _est(ks: Column, k: int) -> Column:
         F.size(ks) >= k,
         F.lit(float(k - 1) * KMV_M) / F.element_at(ks, k),
     ).otherwise(F.size(ks).cast("double"))
-
-
-def kmv_merge(sk_a: DataFrame, sk_b: DataFrame, k: int = 256) -> DataFrame:
-    """K(A ∪ B): the k smallest of the two sketches' union — the
-    monoid op (1x1 broadcast cross join, array arithmetic only)."""
-    a = sk_a.select(F.col("ks").alias("_ka"))
-    b = sk_b.select(F.col("ks").alias("_kb"))
-    return a.crossJoin(F.broadcast(b)).select(
-        F.slice(F.array_sort(F.array_union("_ka", "_kb")), 1, k).alias("ks")
-    )
 
 
 def kmv_set_estimates(

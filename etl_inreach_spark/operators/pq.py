@@ -26,18 +26,19 @@ Spark-first shapes (no Python in any per-row path):
 * ``pq_encode`` is a broadcast join on ``sub`` (codebooks are
   num_sub * ksub rows — kilobytes) + min_by argmin + one groupBy per
   vector id; output is one array<int> codes column per vector.
-* ``pq_adc_topk`` never touches raw corpus vectors: the per-query
+* ``ivf_pq_topk`` never touches raw corpus vectors: the per-query
   distance TABLE (num_queries * num_sub * ksub rows) is broadcast,
   exploded codes equi-join it on (sub, code), and per-(query, id)
   partial SUMs reduce to the approximate distance — the classic
-  ADC scan as a map-side-combined aggregation. Top-k per query is a
-  bounded window (operators/dedup.topk_by_key).
+  ADC scan as a map-side-combined aggregation, run only over the
+  corpus rows of the nprobe cells each query probes. Top-k per query
+  is a bounded window (operators/dedup.topk_by_key).
 
-Like the Lloyd trainer in operators/similarity.py, training averages
-floats, so results are deterministic only up to float-summation order;
-PQ is therefore pytest-pinned (numpy parity + recall sanity), not
-DuckDB-oracle-gated. Complements ivf_topk (cell pruning) — production
-IVF-PQ composes the two: IVF prunes cells, PQ compresses residuals.
+Like any float Lloyd trainer, training averages floats, so results
+are deterministic only up to float-summation order; ``pq_train`` is
+therefore pytest-pinned (numpy parity + recall sanity) rather than
+DuckDB-oracle-gated. ``ivf_pq_build`` composes it with IVF: the coarse
+cells prune, PQ compresses the residuals.
 """
 
 from __future__ import annotations
@@ -197,58 +198,6 @@ def pq_encode(
             F.col("_pid").alias(id_col),
             F.transform(F.col("_sc"), lambda s: s["code"]).alias("codes"),
         )
-    )
-
-
-def pq_adc_topk(
-    codes: DataFrame,
-    cent: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    num_sub: int = 8,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k per query over the COMPRESSED corpus
-    (asymmetric distance computation).
-
-    The distance table (q_id, sub, code, _d) has
-    |queries| * num_sub * ksub rows — tiny, broadcast. Exploded codes
-    join it on (sub, code); SUM per (q_id, id) with map-side combine
-    yields the ADC distance; ties break on corpus id. Output:
-    (q_id, id, adc_dist, rank)."""
-    table = (
-        subvectors(queries, num_sub, dim, q_id_col, q_vec_col)
-        .withColumnRenamed("_pid", "_qid")
-        .join(F.broadcast(cent), "sub")
-        .select(
-            "_qid", "sub", "code", _l2sq(F.col("_sv"), F.col("_cvec")).alias("_d")
-        )
-    )
-    # codes[i] is the code for subspace i — posexplode's position IS
-    # the 0-based sub index subvectors() emits; no offset.
-    code_rows = codes.select(
-        F.col(id_col).alias("_pid"),
-        F.posexplode("codes").alias("sub", "code"),
-    )
-    dists = (
-        code_rows.join(F.broadcast(table), ["sub", "code"])
-        .groupBy("_qid", "_pid")
-        .agg(F.sum("_d").alias("adc_dist"))
-    )
-    return topk_by_key(
-        dists,
-        ["_qid"],
-        [F.col("adc_dist").asc(), F.col("_pid").asc()],
-        k,
-        rank_col="rank",
-    ).select(
-        F.col("_qid").alias(q_id_col),
-        F.col("_pid").alias(id_col),
-        "adc_dist",
-        "rank",
     )
 
 
@@ -512,31 +461,4 @@ def ivf_pq_topk(
         F.col("_pid").alias(id_col),
         "adc_dist",
         "rank",
-    )
-
-
-def save_ivf_pq(
-    path: str, cells: DataFrame, books: DataFrame, index: DataFrame
-) -> None:
-    """Persist the three index relations as parquet subdirectories.
-    The build is the expensive pass over the corpus (k-means iters +
-    encode); search only ever reads these relations — so the serving
-    pattern is build-once / probe-per-query-batch, exactly like the
-    incremental-dedup signature state. ``index`` (1 cell int +
-    num_sub codes per vector) is the compressed corpus: at 100 TB of
-    raw embeddings this is the ~100x-smaller artifact that search
-    fans out over, partitioned by cell so an nprobe-cell probe is a
-    partition-pruned scan."""
-    cells.write.mode("overwrite").parquet(f"{path}/cells")
-    books.write.mode("overwrite").parquet(f"{path}/books")
-    index.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/index")
-
-
-def load_ivf_pq(spark, path: str) -> "tuple[DataFrame, DataFrame, DataFrame]":
-    """(cells, books, index) read back; drop-in for the build's return
-    value (bit-identical search results — pinned in tests)."""
-    return (
-        spark.read.parquet(f"{path}/cells"),
-        spark.read.parquet(f"{path}/books"),
-        spark.read.parquet(f"{path}/index"),
     )

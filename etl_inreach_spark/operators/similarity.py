@@ -7,15 +7,16 @@ Scale design:
     shuffle-free, one pass over the corpus per batch of queries, then
     a per-query top-k window on a tiny intermediate. Right answer for
     "score 100 TB of corpus against K queries".
-  * LSH — constant-size bit signature per vector computed by a
-    vectorized Arrow pandas UDF (numpy matmul against fixed seeded
-    hyperplanes); candidates = bucket collisions (multi-probe over
-    1-bit flips); exact cosine re-rank within candidates. Turns
-    all-pairs O(n*m) into per-bucket work.
-  * IVF — k-means coarse quantizer (trained on a bounded sample),
-    corpus partitioned by nearest centroid, queries probe the nprobe
-    nearest cells; exact re-rank inside probed cells. The standard
-    recall/scan-fraction dial for clustered corpora.
+  * LSH — constant-size bucket id per vector from portable Rademacher
+    hyperplanes (a JVM-side Column expression, bit-reproducible in
+    DuckDB); candidates = bucket collisions (multi-probe over 1-bit
+    flips); exact cosine re-rank within candidates. Turns all-pairs
+    O(n*m) into per-bucket work.
+  * IVF — coarse quantizer (hash-sampled centroids, or the integer
+    Lloyd trainer in operators/clustering.py), corpus partitioned by
+    nearest centroid, queries probe the nprobe nearest cells; exact
+    re-rank inside probed cells. The standard recall/scan-fraction
+    dial for clustered corpora.
   * exact pair join — block-grid GEMM: vectors bucketed into B blocks,
     every block pair (i <= j) becomes one grid cell, each cell does a
     vectorized float64 matmul. Replication factor B on one side —
@@ -25,8 +26,6 @@ Scale design:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -34,8 +33,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.functions.vectors import cosine, l2_norm
 from etl_inreach_spark.operators.dedup import topk_by_key
-
-LSH_SEED = 42
 
 
 def brute_force_topk(
@@ -65,179 +62,9 @@ def brute_force_topk(
     return top.select(query_id_col, id_col, "rank", "cos")
 
 
-def brute_force_topk_gemm(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-) -> DataFrame:
-    """Exact top-k cosine neighbors, two-phase partial-top-k rendering
-    — the shape that survives LARGE query sets where
-    ``brute_force_topk``'s shuffle does not.
-
-    ``brute_force_topk`` shuffles the full scored cross product
-    (|corpus| x |queries| rows) into the per-query window. Here:
-
-      phase 1 (map-side, no shuffle): each corpus partition scores all
-        queries with ONE float64 GEMM (Arrow batch -> numpy matmul)
-        and keeps only its LOCAL top-k per query — the partial top-k
-        aggregation Spark SQL lacks. Emitted rows are bounded by
-        |partitions| x |queries| x k, independent of corpus size.
-      phase 2: global top-k window over that bounded intermediate.
-
-    The query matrix rides into the closure (requires queries to fit
-    driver memory — same contract as the broadcast in
-    ``brute_force_topk``). Self-matches excluded; ties broken by
-    neighbor id ascending, identical to ``brute_force_topk`` — pytest
-    pins set-equality between the two on the fixed data. Scores come
-    from the matmul, so they are not bit-identical to the
-    sequential-fold path (use brute_force_topk where the value-hash
-    oracle needs bit-exact cos)."""
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.vstack([r[1] for r in q_rows]).astype("float64")
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1), 1e-12)[:, None]
-
-    # Fixed GEMM block width: BLAS picks its kernel/blocking from the
-    # matrix shapes, so the same (query, vector) pair scored in batches
-    # of different sizes can differ in the last ULP — enough to flip an
-    # exact-cosine tie (duplicate vectors) against the id-ASC tie-break
-    # the global window applies. Zero-padding every block to one fixed
-    # width makes each pair's score a function of (q_mat, vector) only,
-    # bit-identical across partitions.
-    _BLOCK = 1024
-
-    def _block_sims(mat: np.ndarray) -> np.ndarray:
-        n = mat.shape[0]
-        out = np.empty((q_mat.shape[0], n))
-        for s in range(0, n, _BLOCK):
-            blk = mat[s : s + _BLOCK]
-            if blk.shape[0] < _BLOCK:
-                blk = np.vstack([blk, np.zeros((_BLOCK - blk.shape[0], mat.shape[1]))])
-            out[:, s : s + _BLOCK] = (q_mat @ blk.T)[:, : min(_BLOCK, n - s)]
-        return out
-
-    def local_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy()
-            # sort the batch by id so the stable sims-sort below breaks
-            # exact-cosine ties (duplicate vectors!) by id ASC — the
-            # same tie-break as the global window; argpartition would
-            # pick arbitrarily at the boundary and could locally drop
-            # the id the global contract keeps
-            by_id = np.argsort(ids, kind="stable")
-            ids = ids[by_id]
-            mat = np.vstack(pdf[vec_col].to_numpy()[by_id]).astype("float64")
-            mat /= np.maximum(np.linalg.norm(mat, axis=1), 1e-12)[:, None]
-            sims = _block_sims(mat)  # (n_q, n_batch)
-            sims[q_ids[:, None] == ids[None, :]] = -np.inf  # self-matches
-            take = min(k, sims.shape[1])
-            part = np.argsort(-sims, axis=1, kind="stable")[:, :take]
-            rows = np.repeat(np.arange(len(q_ids)), take)
-            cols = part.reshape(-1)
-            keep = np.isfinite(sims[rows, cols])
-            yield pd.DataFrame(
-                {
-                    query_id_col: q_ids[rows[keep]],
-                    id_col: ids[cols[keep]],
-                    "cos": sims[rows[keep], cols[keep]],
-                }
-            )
-
-    partial = corpus.select(id_col, vec_col).mapInPandas(
-        local_topk, f"{query_id_col} bigint, {id_col} bigint, cos double"
-    )
-    top = topk_by_key(
-        partial, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
-    )
-    return top.select(query_id_col, id_col, "rank", "cos")
-
-
-def lsh_signatures(
-    df: DataFrame,
-    dim: int,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = LSH_SEED,
-) -> DataFrame:
-    """Random-hyperplane signature per vector (int bucket id).
-
-    Arrow-vectorized mapInPandas: one numpy matmul per batch against
-    planes generated from a fixed seed on each executor (deterministic,
-    no broadcast needed — planes are derived, not shipped).
-    """
-    vec_t = df.schema[vec_col].dataType.simpleString()
-    out_schema = f"{id_col} bigint, {vec_col} {vec_t}, bucket int"
-
-    def sign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes = np.random.RandomState(seed).randn(dim, num_planes)
-        weights = 1 << np.arange(num_planes)
-        for pdf in batches:
-            mat = np.vstack(pdf[vec_col].to_numpy())
-            bits = (mat @ planes) > 0
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    vec_col: pdf[vec_col],
-                    "bucket": (bits @ weights).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(sign_batches, out_schema)
-
-
 def _probe_buckets(bucket, num_planes: int):
     """bucket plus all 1-bit-flip neighbors (multi-probe)."""
     return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)])
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    num_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-) -> DataFrame:
-    """Approximate top-k: bucket join on LSH signature (multi-probe
-    radius 1), exact cosine re-rank inside candidate buckets.
-
-    Same output contract as brute_force_topk; recall < 1 by design —
-    pytest pins the achieved recall on the fixed testdata.
-
-    Honest scaling note: hyperplane LSH recall rides on angular
-    cluster structure. The driver's synthetic embeddings are
-    near-orthogonal random vectors (max query cosine ~0.4), so recall
-    here ~= scan fraction (planes=4 + 1-bit probes => ~31% scan, ~35%
-    recall); on real clustered embedding corpora the same operator
-    concentrates true neighbors into probed buckets and recall >>
-    scan fraction. The operator is the scale PATTERN: signature once
-    per vector (Arrow-vectorized), candidates via equi-join, exact
-    math only inside buckets.
-    """
-    c_sig = lsh_signatures(corpus, dim, num_planes, id_col, vec_col)
-    q_sig = lsh_signatures(queries, dim, num_planes, id_col, vec_col).select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(_probe_buckets(F.col("bucket"), num_planes)).alias("bucket"),
-    )
-    cand = c_sig.join(F.broadcast(q_sig), on="bucket").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    scored = cand.select(
-        query_id_col, id_col, cosine(F.col("_qvec"), F.col(vec_col)).alias("cos")
-    ).dropDuplicates([query_id_col, id_col])
-    top = topk_by_key(
-        scored, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
-    )
-    return top.select(query_id_col, id_col, "rank", "cos")
 
 
 # Portable-hash family shared by the oracle-able ANN variants below:
@@ -309,9 +136,12 @@ def lsh_topk_portable(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
 ) -> DataFrame:
-    """``lsh_topk`` with the portable Rademacher signature — the
-    value-oracle-able rendering (the numpy/Gaussian path stays the
-    production default; same split as SimHash's portable variant).
+    """Approximate top-k: bucket join on the portable Rademacher LSH
+    signature (multi-probe radius 1), exact cosine re-rank inside
+    candidate buckets. Value-oracle-able: the buckets reproduce
+    bit-for-bit in portable SQL. Recall < 1 by design: on
+    near-orthogonal random embeddings recall ~= scan fraction, while on
+    clustered corpora the true neighbors concentrate in probed buckets.
 
     No candidate dedup is needed: each corpus vector owns exactly ONE
     bucket and a query's probe set {b, b^1, b^2, ...} is distinct
@@ -344,8 +174,8 @@ def portable_centroids(
     """(cell, _cvec): the ``nlist`` corpus vectors minimizing the
     portable hash of their id — a deterministic, SQL-expressible
     pseudo-random sample serving as IVF coarse centroids (k-means
-    sampling init without the Lloyd refinement; the k-means-trained
-    quantizer stays the production default in ``ivf_topk``).
+    sampling init without the Lloyd refinement; operators/clustering.py
+    trains the refined quantizer).
 
     The hash sort is a global top-nlist: at scale this is a partial
     per-partition top-k + tiny driver merge (Spark's TakeOrdered),
@@ -397,8 +227,8 @@ def _nearest_cells(
     (_cc DESC, cell ASC) window order including Spark's
     NaN-is-greatest rule. Replaces the crossJoin + window top-n (a
     full shuffle of the input) with one narrow map — measured ~4x on
-    the Lloyd-round queries, bit-identical results (the float-trainer
-    numpy-parity test and the cross-engine oracles both pin it).
+    the Lloyd-round queries, bit-identical results (the Lloyd-round
+    fold-replica test and the cross-engine oracles both pin it).
     The bottom window path remains for the empty-centroid edge.
 
     Vector contract (ADVICE r11): ``vec_col`` must be non-NULL,
@@ -520,10 +350,13 @@ def ivf_topk_portable(
     vec_col: str = "embedding",
     query_id_col: str = "q_id",
 ) -> DataFrame:
-    """``ivf_topk`` with the portable hash-sampled coarse quantizer —
-    fully value-oracle-able: centroid choice, cell assignment (argmax
-    of the sequential-fold cosine), probing, and re-rank all reproduce
-    bit-for-bit in portable SQL.
+    """Approximate top-k via IVF with the portable hash-sampled coarse
+    quantizer: corpus partitioned by nearest centroid, each query scans
+    only its ``nprobe`` nearest cells with exact cosine re-rank. Scan
+    fraction ~ nprobe/nlist on balanced cells; probing every cell
+    reproduces brute force. Fully value-oracle-able: centroid choice,
+    cell assignment (argmax of the sequential-fold cosine), probing,
+    and re-rank all reproduce bit-for-bit in portable SQL.
 
     A corpus vector owns exactly one cell and a query probes nprobe
     DISTINCT cells, so no candidate dedup is needed."""
@@ -623,107 +456,6 @@ def cosine_pairs_exact(
         .select("id_a", "id_b", cosine(F.col("_va"), F.col("_vb")).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
-
-
-def train_ivf_centroids(
-    df: DataFrame,
-    dim: int,
-    nlist: int = 16,
-    sample_size: int = 4096,
-    iters: int = 10,
-    vec_col: str = "embedding",
-    seed: int = LSH_SEED,
-) -> np.ndarray:
-    """Coarse k-means quantizer trained on a BOUNDED sample (Lloyd's
-    iterations in numpy on the driver — the sample size, not the
-    corpus size, bounds driver memory; standard IVF practice)."""
-    sample = np.vstack(
-        [r[0] for r in df.select(vec_col).limit(sample_size).collect()]
-    ).astype("float64")
-    if sample.shape[1] != dim:
-        raise ValueError(f"embedding dim {sample.shape[1]} != declared dim {dim}")
-    norms = np.maximum(np.linalg.norm(sample, axis=1), 1e-12)  # zero-vector safe
-    sample /= norms[:, None]
-    nlist = min(nlist, len(sample))  # tiny corpora: one cell per vector
-    rng = np.random.RandomState(seed)
-    centroids = sample[rng.choice(len(sample), nlist, replace=False)]
-    for _ in range(iters):
-        assign = np.argmax(sample @ centroids.T, axis=1)
-        for c in range(nlist):
-            members = sample[assign == c]
-            if len(members):
-                centroids[c] = members.mean(axis=0)
-        centroids /= np.maximum(np.linalg.norm(centroids, axis=1), 1e-12)[:, None]
-    return centroids
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, vec, cell) — nearest-centroid cell(s) per vector. nprobe=1
-    indexes the corpus; nprobe>1 explodes a query into the cells it
-    probes. Arrow-vectorized matmul per batch; centroids ride into the
-    closure (KBs)."""
-    vec_t = df.schema[vec_col].dataType.simpleString()
-    out_schema = f"{id_col} bigint, {vec_col} {vec_t}, cell int"
-    cent = centroids.astype("float64")
-
-    def assign_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            mat = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            mat /= np.maximum(np.linalg.norm(mat, axis=1), 1e-12)[:, None]
-            sims = mat @ cent.T
-            top = np.argsort(-sims, axis=1)[:, :nprobe]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy().repeat(nprobe),
-                    vec_col: pdf[vec_col].to_numpy().repeat(nprobe),
-                    "cell": top.reshape(-1).astype("int32"),
-                }
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(assign_batches, out_schema)
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-    nlist: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-) -> DataFrame:
-    """Approximate top-k via IVF: corpus partitioned by nearest
-    centroid, each query scans only its ``nprobe`` nearest cells with
-    exact cosine re-rank. Scan fraction ~ nprobe/nlist on balanced
-    cells; recall approaches 1 as nprobe -> nlist (pytest pins both
-    ends on the fixed testdata)."""
-    centroids = train_ivf_centroids(corpus, dim, nlist=nlist, vec_col=vec_col)
-    c_cells = ivf_assign(corpus, centroids, nprobe=1, id_col=id_col, vec_col=vec_col)
-    q_cells = ivf_assign(
-        queries, centroids, nprobe=nprobe, id_col=id_col, vec_col=vec_col
-    ).select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        "cell",
-    )
-    cand = c_cells.join(F.broadcast(q_cells), on="cell").filter(
-        F.col(query_id_col) != F.col(id_col)
-    )
-    scored = cand.select(
-        query_id_col, id_col, cosine(F.col("_qvec"), F.col(vec_col)).alias("cos")
-    ).dropDuplicates([query_id_col, id_col])
-    top = topk_by_key(
-        scored, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
-    )
-    return top.select(query_id_col, id_col, "rank", "cos")
 
 
 def semantic_dedup_cells(
@@ -924,90 +656,3 @@ def semantic_dedup_cells(
     ).select(
         id_col, "cell", F.coalesce(~F.col("_drop"), F.lit(True)).alias("kept")
     )
-
-
-def kmeans_lloyd_distributed(
-    corpus: DataFrame,
-    nlist: int = 16,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Fully DISTRIBUTED spherical k-means (Lloyd's iterations) over a
-    DataFrame — the quantizer trainer for corpora where even a sample
-    misrepresents the distribution and ``train_ivf_centroids``'s
-    driver-side numpy sample is not enough.
-
-    Per round (same loop discipline as operators/dedup
-    connected_components — eager localCheckpoint per iteration as the
-    lineage cut):
-      1. assignment: broadcast the nlist centroids, argmax
-         sequential-fold cosine per vector (one shuffle-free pass);
-      2. update: explode members to (cell, dim, x) and partial-agg
-         avg per (cell, dim) — the shuffle carries nlist*dim rows,
-         NOT the corpus — then re-normalize to the unit sphere and
-         collect the nlist*dim means back into centroid arrays
-         (bounded: nlist rows).
-    Empty cells keep their previous centroid. Initialization is the
-    portable hash-sampled pick (``portable_centroids``) so the whole
-    run is deterministic — no RNG, replay-safe.
-
-    Returns the final (cell, _cvec) centroid relation, same contract
-    as ``portable_centroids`` so callers can feed ``_nearest_cells``.
-    Cost per iter: one corpus pass + a nlist*dim-row shuffle; at
-    100 TB the corpus pass dominates and is embarrassingly parallel.
-    Iterative and order-sensitive -> pytest-verified (inertia
-    non-increasing, parity with the numpy reference on fixed data),
-    not oracle-gated."""
-    cent = portable_centroids(corpus, nlist, id_col, vec_col).localCheckpoint(
-        eager=True
-    )
-    unit = (
-        corpus.select(
-            id_col,
-            F.col(vec_col).alias("_v"),
-            # norm once per vector, NOT per element inside the divide
-            F.greatest(l2_norm(F.col(vec_col)), F.lit(1e-12)).alias("_n"),
-        )
-        .select(
-            id_col,
-            F.transform(
-                F.col("_v"), lambda x: x.cast("double") / F.col("_n")
-            ).alias("_uv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(iters):
-        asg = _nearest_cells(unit, cent, 1, id_col, "_uv")
-        el = asg.select(
-            "cell", F.posexplode("_uv").alias("dim", "_x")
-        )
-        means = (
-            el.groupBy("cell", "dim")
-            .agg(F.avg("_x").alias("_m"))
-            .groupBy("cell")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("dim", "_m"))
-                ).alias("_dm")
-            )
-            .select(
-                "cell",
-                F.transform(F.col("_dm"), lambda s: s["_m"]).alias("_raw"),
-            )
-        )
-        renorm = means.select(
-            "cell",
-            F.transform(
-                F.col("_raw"),
-                lambda x: x / F.greatest(l2_norm(F.col("_raw")), F.lit(1e-12)),
-            ).alias("_cvec"),
-        )
-        # empty cells: keep the previous centroid
-        cent = (
-            cent.select("cell", F.col("_cvec").alias("_prev"))
-            .join(renorm, "cell", "left")
-            .select("cell", F.coalesce("_cvec", "_prev").alias("_cvec"))
-            .localCheckpoint(eager=True)
-        )
-    return cent

@@ -66,7 +66,7 @@ MERSENNE31 = (1 << 31) - 1
 POLY_P = 131
 
 
-def _materialize_enabled(requested: bool) -> bool:
+def _materialize_enabled() -> bool:
     """Gate for the eager localCheckpoint barriers. Setting
     SPARK_GRAFT_NO_MATERIALIZE=1 disables them so the FULL logical
     subtree stays visible to plan inspection (a checkpoint truncates
@@ -76,9 +76,7 @@ def _materialize_enabled(requested: bool) -> bool:
     bench paths leave it unset."""
     import os
 
-    if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
-        return False
-    return requested
+    return not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
 
 
 def poly_gram_hash(g: Column, k: int, p: int = POLY_P, m: int = MERSENNE31) -> Column:
@@ -372,22 +370,21 @@ def ngram_jaccard_pairs(
     block_cols: tuple[str, ...] = (),
     length_block: int | None = None,
     shingle_k: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs (id_a < id_b, jaccard >= threshold),
     optionally restricted to equal ``block_cols`` and
     |len_a - len_b| <= ``length_block``.
 
-    ``materialize`` (default True) eagerly localCheckpoints the
-    (doc, shingle-hash) relation: THREE consumers read it (document
-    frequency, the ranked prefix join, exact-Jaccard verification),
-    and without a barrier each re-runs the full char-explode + window
-    Horner subtree — measured 3.8 -> 2.5 s at sf0.1. The trade is one
-    O(|corpus shingles|) executor-storage write for two recomputes; at
-    cluster scale the same knob should point at persist(MEMORY_AND_
-    DISK) or a reliable checkpoint if executor loss matters (measured
-    here: localCheckpoint beats persist+count 2.2 s vs 3.7 s because
-    it stores partitions inside the job that first computes them).
+    The (doc, shingle-hash) relation is localCheckpointed: THREE
+    consumers read it (document frequency, the ranked prefix join,
+    exact-Jaccard verification), and without a barrier each re-runs
+    the full char-explode + window Horner subtree — measured 3.8 ->
+    2.5 s at sf0.1. The trade is one O(|corpus shingles|)
+    executor-storage write for two recomputes; at cluster scale the
+    same barrier should be persist(MEMORY_AND_DISK) or a reliable
+    checkpoint if executor loss matters (measured here:
+    localCheckpoint beats persist+count 2.2 s vs 3.7 s because it
+    stores partitions inside the job that first computes them).
 
     Candidate generation is PPJoin-style (Chaudhuri et al., "A
     Primitive Operator for Similarity Joins"; Xiao et al., "Efficient
@@ -406,7 +403,7 @@ def ngram_jaccard_pairs(
     Both filters are exact-recall; all join keys are 8-byte hashes.
     """
     sh = shingles_exploded(df, id_col, text_col, shingle_k, extra_cols=block_cols)
-    if _materialize_enabled(materialize):
+    if _materialize_enabled():
         # LAZY (r11): the first consuming stage materializes the
         # shingle pass; concurrent consumers dedupe via block locks.
         sh = sh.localCheckpoint(eager=False)
@@ -523,7 +520,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_k: int = 5,
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash + LSH banding + exact-Jaccard verification.
 
@@ -547,7 +543,7 @@ def minhash_lsh_pairs(
     integer compares, not an intersection count.
     """
     sh = shingles_exploded(df, id_col, text_col, shingle_k)
-    if _materialize_enabled(materialize):
+    if _materialize_enabled():
         # two consumers (signature build + exact verify) — same
         # recompute-vs-store trade as ngram_jaccard_pairs; LAZY (r11)
         # so the signature stage materializes it (no separate job)

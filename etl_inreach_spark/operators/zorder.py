@@ -278,10 +278,10 @@ def with_hilbert(
     bounds aggregate (broadcast), min-max bucketize both columns to
     the 2^bits grid, then broadcast-hash-join the driver-built
     (bx, by) -> code lookup — no UDF, no shuffle of ``df`` itself.
-    The layout key write_hilbert partitions by, exposed for querying
-    and oracle replay (a DuckDB recursive CTE runs the same 8-level
-    rotation recurrence per row; pinned exactly equal to the lookup
-    for the whole 256x256 grid)."""
+    The Hilbert layout key, exposed for querying and oracle replay (a
+    DuckDB recursive CTE runs the same 8-level rotation recurrence per
+    row; pinned exactly equal to the lookup for the whole 256x256
+    grid)."""
     if len(cols) != 2:
         raise ValueError("with_hilbert is 2-D")
     spark = df.sparkSession
@@ -300,32 +300,4 @@ def with_hilbert(
         .withColumn("_hy", by)
         .join(F.broadcast(lut), ["_hx", "_hy"])
         .drop("_hx", "_hy", *[f"_lo_{c}" for c in cols], *[f"_hi_{c}" for c in cols])
-    )
-
-
-def write_hilbert(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 8,
-    num_files: int = 16,
-) -> None:
-    """Parquet layout clustered by the 2-D Hilbert code of ``cols``:
-    min-max bucketize both columns to a 2^bits grid, broadcast-join
-    the code, then SAMPLED range partition on it — evenly sized files
-    whose envelopes are still tight on both columns, with no grid
-    snapping needed (contrast write_zordered's boundary discussion).
-    Measured at sf0.1 orders, 64 files, mean over five 10% slabs:
-    read fractions 0.24/0.24 (custkey/date) with 2066-2736 rows per
-    file, vs sampled-Morton 0.32/0.26 with the same balance and
-    grid-snapped Morton 0.22/0.23 with unbounded size skew."""
-    if len(cols) != 2:
-        raise ValueError("write_hilbert is 2-D; use write_zordered for other arities")
-    (
-        with_hilbert(df, cols, bits)
-        .repartitionByRange(num_files, F.col("_hvalue"))
-        .sortWithinPartitions("_hvalue")
-        .drop("_hvalue")
-        .write.mode("overwrite")
-        .parquet(path)
     )

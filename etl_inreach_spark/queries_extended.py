@@ -425,9 +425,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact re-rank in buckets), in the portable-Rademacher-plane
     rendering whose buckets AND scores DuckDB reproduces bit-for-bit
     — a FULL value-hash oracle of signature + probing + re-rank.
-    (The operator's production default stays the numpy Gaussian-plane
-    mapInPandas path — lsh_topk — whose recall pytest pins; see
-    operators/similarity.lsh_topk scaling note.)"""
+    (Recall on these near-orthogonal embeddings is about the scan
+    fraction; see operators/similarity.lsh_topk_portable.)"""
     tune(spark)
     from etl_inreach_spark.operators.similarity import lsh_topk_portable
 
@@ -570,9 +569,9 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors minimizing a portable affine hash of vec_id (deterministic
     sampling init), assignment/probing/re-rank are argmax of the
     sequential-fold cosine — every stage reproduces bit-for-bit in the
-    DuckDB oracle. (The k-means-trained quantizer stays the operator's
-    production default — ivf_topk — with pytest pinning recall at both
-    nprobe extremes.)"""
+    DuckDB oracle. (pytest pins recall at both nprobe extremes; the
+    integer k-means trainer in operators/clustering.py is the refined
+    quantizer.)"""
     tune(spark)
     from etl_inreach_spark.operators.similarity import ivf_topk_portable
 
@@ -1213,7 +1212,7 @@ def bm25_term_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.text_dedup import _materialize_enabled
 
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    if _materialize_enabled(True):
+    if _materialize_enabled():
         # LAZY (r11): the stats aggregate materializes it in-action
         dl = dl.localCheckpoint(eager=False)
     stats = dl.agg(
@@ -1952,9 +1951,9 @@ def kmeans_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative: because every compared/accumulated quantity in
     operators/clustering.py is a 64-bit integer, a DuckDB replay of 3
     unrolled Lloyd rounds lands on the bit-identical model — the
-    oracle proof that 'deterministic' is literal, not approximate (the
-    float trainers pq_train/train_ivf_centroids could never pass this
-    gate: their means depend on float-summation order). Fixed
+    oracle proof that 'deterministic' is literal, not approximate (a
+    float trainer such as pq_train could never pass this gate: its
+    means depend on float-summation order). Fixed
     iters=3 (no convergence early-exit divergence: the integer grid
     is a fixed point once converged, so extra oracle rounds are
     no-ops), k=8 on the embeddings table. Output: per cluster, the
@@ -2093,16 +2092,13 @@ def _lloyd_round_oracle(rounds: int = 1) -> str:
 
 @query("kmeans_lloyd_round_update", oracle=_lloyd_round_oracle())
 def kmeans_lloyd_round_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One round of the FLOAT spherical-Lloyd trainer
-    (operators/similarity.py kmeans_lloyd_distributed), value-oracled
-    via its sufficient statistics: portable-hash init (16 cells),
-    unit normalization, argmax-cosine assignment, and the update
-    step's per-(cell, dim) member count + fixed-point coordinate sum
-    — each element floored onto the 2^30 grid BEFORE aggregation, so
-    the sums are exact order-insensitive integers while the
-    production trainer's F.avg stays float (its multi-round
-    composition remains numpy-parity pytest, the documented
-    order-sensitivity caveat). mean_fp uses the remainder-subtraction
+    """One round of spherical Lloyd k-means, value-oracled via its
+    sufficient statistics: portable-hash init (16 cells), unit
+    normalization, argmax-cosine assignment, and the update step's
+    per-(cell, dim) member count + fixed-point coordinate sum — each
+    element floored onto the 2^30 grid BEFORE aggregation, so the
+    sums are exact order-insensitive integers (a float F.avg would
+    depend on summation order). mean_fp uses the remainder-subtraction
     floor form — sums can be negative, where Spark div truncates but
     DuckDB // floors.
 
@@ -2173,7 +2169,7 @@ def _lloyd_finalize(agg: DataFrame) -> DataFrame:
 
 @query("kmeans_lloyd_round2_update", oracle=_lloyd_round_oracle(rounds=2))
 def kmeans_lloyd_round2_update(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TWO composed rounds of the float spherical-Lloyd trainer,
+    """TWO composed rounds of spherical Lloyd k-means,
     value-oracled (VERDICT r8 item 4 — the unrolled-CTE pattern
     kmeans_cluster_sizes uses for the integer trainer, applied to the
     float one): round 1's exact fixed-point sufficient statistics
@@ -2182,11 +2178,8 @@ def kmeans_lloyd_round2_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark and DuckDB and the cross-round composition carries no float
     ambiguity at all. Round 2 then re-assigns every unit vector by
     argmax sequential-fold cosine (cell-asc ties) against the derived
-    centroids and emits the same exact statistics shape. This closes
-    the last numpy-only gap in the clustering/ANN story: one round AND
-    the round-to-round handoff are now both cross-engine value-pinned
-    (the production trainer's float-mean composition keeps its
-    numpy-parity pytest with the documented order-sensitivity caveat).
+    centroids and emits the same exact statistics shape. One round AND
+    the round-to-round handoff are both cross-engine value-pinned.
 
     Scale shape: per round, one broadcast assignment pass over the
     corpus and one (cell, dim)-keyed partial aggregation; the
@@ -2367,7 +2360,7 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    if _materialize_enabled(True):
+    if _materialize_enabled():
         # LAZY (r11): the stats aggregate materializes it in-action
         dl = dl.localCheckpoint(eager=False)
     stats = dl.agg(

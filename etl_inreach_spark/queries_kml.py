@@ -17,7 +17,6 @@ from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.plans.inreach import inreach_pipeline
 from etl_inreach_spark.queries import query
 from etl_inreach_spark.session import tune
-from etl_inreach_spark.sources.kml import build_kml
 
 
 def events_as_kml_feeds(ev: DataFrame) -> DataFrame:
@@ -26,13 +25,12 @@ def events_as_kml_feeds(ev: DataFrame) -> DataFrame:
     fine at test SF; production feeds arrive pre-built).
 
     r12 (§2.3/§4.1): each placemark's XML is rendered as a flat STRING
-    per event row — whole-stage-codegen concat, replacing the pre-r12
-    per-element transform() rendering inside build_kml, which ran
-    INTERPRETED over each user's placemark-struct array — and the
-    per-user aggregation collects sorted strings that one array_join
-    stitches into the document. Output parity with the struct form:
-    the row-wise concat is build_kml's inner lambda applied verbatim
-    to the same field expressions, and the sort key change
+    per event row — whole-stage-codegen concat, replacing an earlier
+    per-element transform() rendering that ran INTERPRETED over each
+    user's placemark-struct array — and the per-user aggregation
+    collects sorted strings that one array_join stitches into the
+    document. Output parity with the struct form: the row-wise concat
+    renders the same field expressions, and the sort key change
     (struct(event_id, pm_struct) -> struct(event_id, pm_xml)) orders
     identically — within an event_id tie the old key compared
     point_coordinates (equal: derived from the tied event_id + the
@@ -58,8 +56,8 @@ def events_as_kml_feeds(ev: DataFrame) -> DataFrame:
     )
     pm_xml = F.concat(
         F.lit("<Placemark>"),
-        # NULL-safe exactly like build_kml: a NULL `when`/coords drops
-        # its element, never the whole placemark
+        # NULL-safe: a NULL `when`/coords drops its element, never the
+        # whole placemark
         F.when(
             when_s.isNotNull(),
             F.concat(F.lit("<TimeStamp><when>"), when_s, F.lit("</when></TimeStamp>")),

@@ -16,7 +16,7 @@ scalar formulas written with identical structure on both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table

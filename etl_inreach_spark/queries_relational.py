@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.dedup import topk_by_key
 from etl_inreach_spark.operators.relational import asof_join, broadcast_dim_join
-from etl_inreach_spark.operators.windows import sessionize, tumbling_agg, tumbling_bucket
+from etl_inreach_spark.operators.windows import sessionize, tumbling_agg
 from etl_inreach_spark.queries import query
 from etl_inreach_spark.session import tune
 

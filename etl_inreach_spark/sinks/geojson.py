@@ -114,15 +114,3 @@ def parse_feature_collection(doc: str) -> list[dict]:
     if parsed["type"] != "FeatureCollection":
         raise ValueError(f"not a FeatureCollection: {parsed['type']!r}")
     return parsed["features"]
-
-
-def write_features_parquet(
-    features: DataFrame,
-    path: str,
-    partition_by: tuple[str, ...] = ("share_id",),
-    mode: str = "overwrite",
-) -> None:
-    """Silver-table sink: columnar parquet partitioned by source share
-    (SURVEY.md §2.2 sinks row). Partitioning by share keeps per-feed
-    reads pruned; at scale add a date partition from `time`."""
-    features.write.partitionBy(*partition_by).mode(mode).parquet(path)

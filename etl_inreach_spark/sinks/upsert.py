@@ -3,19 +3,14 @@ silver table across batches — the persistent generalization of the
 reference's per-run featuresmap upsert (task.ts:92,151-159), which
 rebuilds its dedup state every invocation and forgets it on exit.
 
-Two renderings:
-
-* ``upsert_latest`` — whole-table merge: read current, union the
-  update batch, keep the reference-semantics argmax per key, swap the
-  table directory atomically. Correct anywhere, rewrite cost O(table).
-
-* ``upsert_latest_partitioned`` — dynamic-partition merge: only the
-  partitions PRESENT IN THE BATCH are read (partition-pruned scan)
-  and rewritten (``partitionOverwriteMode=dynamic``). This is the
-  100 TB shape: cost scales with the touched slice, not the table.
-  The partition column must be a stable function of the KEY (e.g.
-  ``pmod(xxhash64(key), N)``) so a key's old and new versions land in
-  the same partition and merge locally.
+``upsert_latest_partitioned`` is a dynamic-partition merge: only the
+partitions PRESENT IN THE BATCH are read (partition-pruned scan) and
+rewritten (``partitionOverwriteMode=dynamic``). This is the 100 TB
+shape: cost scales with the touched slice, not the table. The
+partition column must be a stable function of the KEY (e.g.
+``pmod(xxhash64(key), N)``) so a key's old and new versions land in
+the same partition and merge locally. Existence checks go through the
+Hadoop FileSystem API, so any supported filesystem works.
 
 On a production deployment the same dataflow runs against a
 transactional table format (Delta/Iceberg MERGE INTO); plain parquet
@@ -26,9 +21,6 @@ prune untouched partitions) is the part that transfers.
 
 from __future__ import annotations
 
-import os
-import shutil
-import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,36 +72,6 @@ def _merge(
     else:
         merged = current.unionByName(updates)
     return latest_by_key(merged, key_cols, ts_col, arrival_col=arrival_col)
-
-
-def upsert_latest(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    arrival_col: str | None = None,
-) -> None:
-    """Whole-table keyed upsert with an atomic directory swap.
-
-    The merged result is written to a sibling temp dir first and
-    renamed over the table, so a failed job never leaves a
-    half-written table (rename is atomic on one filesystem).
-
-    LOCAL-FS ONLY: the swap uses os.rename, which sees the driver's
-    local disk. On object storage / HDFS use the partitioned variant
-    (Hadoop-FS-aware) or a transactional table format."""
-    current = spark.read.parquet(path) if os.path.exists(path) else None
-    merged = _merge(current, updates, key_cols, ts_col, arrival_col)
-    tmp = f"{path}__tmp_{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        old = f"{path}__old_{uuid.uuid4().hex}"
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
-    else:
-        os.rename(tmp, path)
 
 
 def upsert_latest_partitioned(

@@ -229,55 +229,3 @@ def kml_to_placemarks(
         F.col("_pm.TimeStamp.when").alias("timestamp_when"),
         eav_to_map(F.col("_pm.ExtendedData.Data"), "_name", "value").alias("extended"),
     )
-
-
-def build_kml(placemarks: Column) -> Column:
-    """Inverse of parse: render an array of placemark structs
-    (point_coordinates, timestamp_when, extended entries array) into a
-    KML document string. Used by fixtures and the roundtrip oracle —
-    built-in string/array expressions only."""
-    pm_xml = F.transform(
-        placemarks,
-        lambda p: F.concat(
-            F.lit("<Placemark>"),
-            # NULL-safe: concat null-propagates, so an unguarded NULL
-            # `when` would silently erase the ENTIRE placemark
-            F.when(
-                p["timestamp_when"].isNotNull(),
-                F.concat(
-                    F.lit("<TimeStamp><when>"),
-                    p["timestamp_when"],
-                    F.lit("</when></TimeStamp>"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                p["point_coordinates"].isNotNull(),
-                F.concat(
-                    F.lit("<Point><coordinates>"),
-                    p["point_coordinates"],
-                    F.lit("</coordinates></Point>"),
-                ),
-            ).otherwise(F.lit("")),
-            F.lit("<ExtendedData>"),
-            F.array_join(
-                F.transform(
-                    p["entries"],
-                    lambda e: F.concat(
-                        F.lit('<Data name="'),
-                        e["name"],
-                        F.lit('"><value>'),
-                        e["value"],
-                        F.lit("</value></Data>"),
-                    ),
-                ),
-                "",
-            ),
-            F.lit("</ExtendedData></Placemark>"),
-        ),
-    )
-    return F.concat(
-        F.lit('<?xml version="1.0" encoding="UTF-8"?>'
-              '<kml xmlns="http://www.opengis.net/kml/2.2"><Document><Folder>'),
-        F.array_join(pm_xml, ""),
-        F.lit("</Folder></Document></kml>"),
-    )

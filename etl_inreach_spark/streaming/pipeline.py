@@ -23,12 +23,12 @@ at-most-once emission per watermark period.
 
 Every transform below is the SAME code path the batch plan uses
 (plans/inreach.py) — narrow projections work identically on streaming
-DataFrames; only the dedup and sink stages differ.
+DataFrames; only the dedup stage differs. The sink is the batch one,
+applied per micro-batch: ``writeStream.foreachBatch`` over
+``sinks/geojson.features_to_json`` and ``post_feature_collections``.
 """
 
 from __future__ import annotations
-
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -60,41 +60,6 @@ def stream_features(
         features.filter(F.col("time").isNotNull())
         .withWatermark("time", watermark)
         .dropDuplicatesWithinWatermark(["id"])
-    )
-
-
-def write_feature_collections(
-    features: DataFrame,
-    post: Callable[[list[str]], None],
-    checkpoint_dir: str,
-    batch_size: int = 1000,
-) -> DataStreamWriter:
-    """foreachBatch sink: each micro-batch is rendered to GeoJSON
-    Feature lines and handed to ``post`` in FeatureCollection chunks of
-    ``batch_size`` — one POST per chunk per partition (the reference
-    POSTs once per run, task.ts:172-182; per-partition chunking is the
-    scale-safe equivalent)."""
-    from etl_inreach_spark.sinks.geojson import features_to_json
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        json_df = features_to_json(batch_df)
-
-        def handle_partition(rows) -> None:
-            chunk: list[str] = []
-            for row in rows:
-                chunk.append(row["feature_json"])
-                if len(chunk) >= batch_size:
-                    post(chunk)
-                    chunk = []
-            if chunk:
-                post(chunk)
-
-        json_df.foreachPartition(handle_partition)
-
-    return (
-        features.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(handle_batch)
     )
 
 

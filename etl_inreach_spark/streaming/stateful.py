@@ -1,10 +1,9 @@
 """Cross-run latest-position state (SURVEY.md §2.2 "Streaming:
 stateful ops"): the reference rebuilds its dedup map every scheduled
 run (task.ts:92), so a device's latest KNOWN position is forgotten
-between runs. This operator strengthens that: a
-``transformWithStateInPandas`` stateful processor keeps one row of
-state per device across micro-batches and emits a device's row only
-when its latest position CHANGES — the true streaming argmax, with the
+between runs. This operator strengthens that: per-device state is kept
+across micro-batches and a device's row is emitted only when its
+latest position CHANGES — the true streaming argmax, with the
 reference's exact comparison semantics (strict ``>``, NULL time ==
 epoch 0; SURVEY.md §2.3.1-2).
 
@@ -12,14 +11,11 @@ State size is one fixed-width row per device — the minimum possible —
 and the state store shuffles by device id, so a 100 TB feed history
 costs state proportional to the FLEET size, not the event count.
 
-Three renderings, same semantics:
-  * ``latest_position_stream`` — transformWithStateInPandas + RocksDB
-    state store (the preferred cluster path; needs google.protobuf on
-    the workers, absent in this container, so its test is skip-gated).
+Two renderings, same semantics:
   * ``latest_position_groupstate`` — applyInPandasWithState
-    (GroupState API): the same per-device argmax in the ENGINE's
-    state store, runnable in this environment (no protobuf
-    dependency); value-oracled via streaming_groupstate_latest.
+    (GroupState API): the per-device argmax in the ENGINE's state
+    store (no protobuf dependency, unlike transformWithStateInPandas);
+    value-oracled via streaming_groupstate_latest.
   * ``latest_position_foreachbatch`` — foreachBatch merging each
     micro-batch into a parquet state table with the SAME batch argmax
     operator; fully portable, value-oracled via
@@ -28,11 +24,8 @@ Three renderings, same semantics:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -69,50 +62,11 @@ def _ts_to_us(v) -> int:
     return int(pd.Timestamp(v).value // 1000)
 
 
-class LatestPositionProcessor(StatefulProcessor):
-    """Per-device argmax over (time, -arrival_idx) carried ACROSS
-    micro-batches. Emits one row per device per batch IF the latest
-    position changed; quiet devices emit nothing (delta stream)."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("latest", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame], timer_values) -> Iterator[pd.DataFrame]:
-        best = None  # (time_us, -arrival_idx) max under strict > replace
-        if self._state.exists():
-            t_us, arr, lon, lat = self._state.get()
-            best = {"time_us": t_us, "arrival_idx": arr, "lon": lon, "lat": lat}
-        # strict > vs state: equal timestamps keep the EARLIER-SEEN
-        # (stored) row (task.ts:154); within a batch ties break on the
-        # smaller arrival_idx (shared _merge_latest fold)
-        best, changed = _merge_latest(best, best is not None, rows)
-        if changed and best is not None:
-            self._state.update(
-                (best["time_us"], best["arrival_idx"], best["lon"], best["lat"])
-            )
-            yield pd.DataFrame(
-                {
-                    "id": [key[0]],
-                    "time": [
-                        pd.Timestamp(best["time_us"] * 1000)
-                        if best["time_us"] > 0
-                        else pd.NaT
-                    ],
-                    "lon": [best["lon"]],
-                    "lat": [best["lat"]],
-                }
-            )
-
-    def close(self) -> None:
-        pass
-
-
 def _merge_latest(best, from_state: bool, pdfs) -> tuple[dict | None, bool]:
     """Fold micro-batch rows into the carried best-position dict with
     the reference's exact semantics (strict ``>`` vs stored state,
     NULL time == epoch 0, within-batch ties to the smallest arrival
-    index). Shared by the transformWithState processor and the
-    GroupState renderer so the two paths cannot drift."""
+    index)."""
     changed = False
     for pdf in pdfs:
         for r in pdf.itertuples():
@@ -142,9 +96,8 @@ def _merge_latest(best, from_state: bool, pdfs) -> tuple[dict | None, bool]:
 def latest_position_groupstate(features: DataFrame) -> DataFrame:
     """applyInPandasWithState rendering: per-device argmax state in the
     engine's streaming state store, emitting a device's row only when
-    its latest position changes (update mode). Same state size story
-    as the processor path: one fixed-width row per device, shuffled by
-    device id."""
+    its latest position changes (update mode). State is one
+    fixed-width row per device, shuffled by device id."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     def fn(key, pdfs, state):
@@ -184,31 +137,16 @@ def latest_position_groupstate(features: DataFrame) -> DataFrame:
     )
 
 
-def latest_position_stream(features: DataFrame) -> DataFrame:
-    """Streaming (id, time, arrival_idx, lon, lat) -> delta stream of
-    per-device latest positions with cross-batch state."""
-    return (
-        features.select("id", "time", "arrival_idx", "lon", "lat")
-        .groupBy("id")
-        .transformWithStateInPandas(
-            statefulProcessor=LatestPositionProcessor(),
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="Append",
-            timeMode="None",
-        )
-    )
-
-
 def latest_position_foreachbatch(
     features: DataFrame,
     state_dir: str,
     emit,
 ) -> "DataStreamWriter":
-    """Portable cross-run state without transformWithState (which
-    needs protobuf on the workers): each micro-batch is merged with a
-    parquet state table via the same keyed-argmax used in batch, the
-    state is rewritten, and rows whose latest position CHANGED are
-    handed to ``emit``. Exactly the reference's dedup map made durable.
+    """Portable cross-run state without a streaming state store: each
+    micro-batch is merged with a parquet state table via the same
+    keyed-argmax used in batch, the state is rewritten, and rows whose
+    latest position CHANGED are handed to ``emit``. Exactly the
+    reference's dedup map made durable.
 
     The merge is the one-shuffle argmax (operators/dedup.py) over
     state ∪ batch — state size is one row per device, so the rewrite

@@ -1,8 +1,8 @@
 """Deterministic integer-grid k-means (operators/clustering.py).
 
 The operator's headline claim is bit-for-bit partition invariance of
-the TRAINED MODEL — the property the float trainers (pq_train,
-train_ivf_centroids) explicitly cannot offer. So the tests pin:
+the TRAINED MODEL — the property a float trainer (such as pq_train)
+cannot offer. So the tests pin:
 
   * exact parity with an INDEPENDENT pure-numpy replica of the
     integer Lloyd recurrence (same init, same grid rounding) — both
@@ -172,10 +172,11 @@ def test_empty_cluster_keeps_previous_centroid(spark):
 
 def test_kmeans_centroids_seed_ivf_cells(spark):
     """Composition with the ANN stack: centroids_float() drops into
-    ivf_assign as a trained coarse quantizer. On separated
-    axis-aligned blobs the cosine cell (IVF) and the Euclidean
-    cluster (k-means) agree exactly, and indices line up 1:1."""
-    from etl_inreach_spark.operators.similarity import ivf_assign
+    the IVF cell assignment as a trained coarse quantizer. On
+    separated axis-aligned blobs the cosine cell (IVF) and the
+    Euclidean cluster (k-means) agree exactly, and indices line up
+    1:1."""
+    from etl_inreach_spark.operators.similarity import _nearest_cells
 
     ids = list(range(60))
     vecs = []
@@ -187,7 +188,10 @@ def test_kmeans_centroids_seed_ivf_cells(spark):
         vecs.append([b + j for b, j in zip(base, jitter)])
     df = _to_df(spark, ids, vecs)
     model = kmeans_fit(df, k=3, max_iter=25)
-    cells = ivf_assign(df, np.asarray(model.centroids_float()), nprobe=1)
+    cent = spark.createDataFrame(
+        list(enumerate(model.centroids_float())), "cell int, _cvec array<double>"
+    )
+    cells = _nearest_cells(df, cent, 1, "vec_id", "embedding")
     got = {r["vec_id"]: r["cell"] for r in cells.collect()}
     assert got == _assignments(kmeans_assign(df, model))
 

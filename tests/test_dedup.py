@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import Row
 
 from etl_inreach_spark.operators.dedup import (
-    exact_dedup,
     latest_by_key,
     latest_by_key_window,
     topk_by_key,
@@ -89,14 +88,6 @@ def test_topk_by_key(spark, sf_dir):
     counts = top3.groupBy("user_id").count().collect()
     assert all(r["count"] <= 3 for r in counts)
     assert top3.filter("rnk = 1").count() == ev.select("user_id").distinct().count()
-
-
-def test_exact_dedup_deterministic_survivor(spark):
-    df = spark.createDataFrame(
-        [("x", 5), ("x", 2), ("y", 9)], schema="txt string, id long"
-    )
-    got = sorted(map(tuple, exact_dedup(df, ["txt"], keep_min_col="id").collect()))
-    assert got == [("x", 2), ("y", 9)]
 
 
 def test_connected_components_chain_and_islands(spark):

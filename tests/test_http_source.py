@@ -57,6 +57,24 @@ def test_source_feeds_the_pipeline(spark, feed_dir):
     assert ids == ["inreach-111", "inreach-222"]
 
 
+def test_fetch_logs_each_request_and_failure(feed_dir, caplog):
+    """Reference O23: one log line per share request and one per failed
+    share, while the failure itself comes back as an error row."""
+    import logging
+
+    from etl_inreach_spark.sources.http_kml import fetch_one
+
+    base = f"file://{feed_dir}/"
+    with caplog.at_level(logging.INFO, logger="etl_inreach_spark.feeds"):
+        ok = fetch_one("AAA", base, None, None)
+        bad = fetch_one("MISSING", base, None, None)
+    assert ok[1] == GOOD_FEED and ok[2] is None
+    assert bad[1] is None and bad[2]
+    msgs = [r.getMessage() for r in caplog.records]
+    assert msgs[:2] == ["ok - requesting AAA", "ok - requesting MISSING"]
+    assert msgs[2].startswith("feed MISSING failed: ")
+
+
 def test_d1_lookback_is_pushed_into_url():
     # percent-encoded: '+' in a query string decodes as a space
     url = build_feed_url("https://share.garmin.com/Feed/Share/", "XYZ", "2024-01-01T00:00:00.000Z")
@@ -98,21 +116,3 @@ def test_streaming_poll_source(spark, feed_dir, tmp_path_factory):
     rows = {r["share_id"]: r for r in spark.sql("SELECT * FROM feed_stream").collect()}
     assert rows["AAA"]["body"] == GOOD_FEED and rows["AAA"]["error"] is None
     assert rows["MISSING"]["body"] is None and rows["MISSING"]["error"]
-
-
-def test_feed_observation_metrics(spark, feed_dir):
-    from etl_inreach_spark.observability import observe_feed_metrics
-
-    spark.dataSource.register(KMLFeedDataSource)
-    shares = [{"share_id": "AAA"}, {"share_id": "MISSING"}]
-    feeds = (
-        spark.read.format("kml_feed")
-        .option("shares", json.dumps(shares))
-        .option("base_url", f"file://{feed_dir}/")
-        .option("lookback_minutes", "0")
-        .load()
-    )
-    observed, obs = observe_feed_metrics(feeds)
-    observed.write.format("noop").mode("overwrite").save()  # one action
-    m = obs.get
-    assert m["n_feeds"] == 2 and m["n_errors"] == 1 and m["n_empty_bodies"] == 0

@@ -289,27 +289,6 @@ def test_geojson_sink_shape(spark):
     assert g["properties"]["links"][0]["uid"] == "inreach-222"
 
 
-def test_parquet_sink_partitioned(spark, tmp_path):
-    import os
-
-    from etl_inreach_spark.plans.inreach import inreach_pipeline
-    from etl_inreach_spark.sinks.geojson import write_features_parquet
-    from pyspark.sql import Row
-
-    shares = spark.createDataFrame(
-        [Row(share_id="AAA", callsign="ALPHA", password=None)],
-        "share_id string, callsign string, password string",
-    )
-    feeds = spark.createDataFrame([Row(share_id="AAA", body=GOOD_FEED)])
-    out = inreach_pipeline(shares, feeds)
-    dest = str(tmp_path / "silver")
-    write_features_parquet(out, dest)
-    # partition directory layout + lossless read-back
-    assert any(d.startswith("share_id=") for d in os.listdir(dest))
-    back = spark.read.parquet(dest)
-    assert sorted(r["id"] for r in back.collect()) == ["inreach-111", "inreach-222"]
-
-
 def test_single_xml_parse_in_plan(spark):
     """The document must be parsed EXACTLY once: Catalyst inlines
     multiply-referenced aliases (CollapseProject) and substitutes them

@@ -190,48 +190,6 @@ def test_pq_train_encode_match_numpy(spark):
             assert codes[i][m] == int(np.argmin(d2)) + 1, (i, m)
 
 
-def test_pq_adc_topk_matches_numpy(spark):
-    from etl_inreach_spark.operators.pq import pq_adc_topk, pq_encode, pq_train
-
-    rng = np.random.RandomState(11)
-    vecs = rng.randn(30, 8)
-    ids = list(range(30))
-    num_sub, ksub = 2, 4
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>",
-    )
-    cent = pq_train(df, num_sub=num_sub, ksub=ksub, iters=2, dim=8)
-    cent_np = {(r["sub"], r["code"]): np.array(r["_cvec"]) for r in cent.collect()}
-    codes = pq_encode(df, cent, num_sub=num_sub, dim=8)
-    codes_np = {r["vec_id"]: list(r["codes"]) for r in codes.collect()}
-
-    qvecs = rng.randn(3, 8)
-    queries = spark.createDataFrame(
-        [(100 + i, [float(x) for x in qvecs[i]]) for i in range(3)],
-        "q_id long, embedding array<double>",
-    )
-    got = {}
-    for r in pq_adc_topk(codes, cent, queries, k=5, num_sub=num_sub, dim=8).collect():
-        got.setdefault(r["q_id"], []).append((r["rank"], r["vec_id"], r["adc_dist"]))
-
-    dsub = 8 // num_sub
-    for qi in range(3):
-        adc = {}
-        for i in ids:
-            d = 0.0
-            for m in range(num_sub):
-                qsv = qvecs[qi, m * dsub : (m + 1) * dsub]
-                cv = cent_np[(m, codes_np[i][m])]
-                d += float(((qsv - cv) ** 2).sum())
-            adc[i] = d
-        expect = sorted(adc, key=lambda i: (adc[i], i))[:5]
-        rows = sorted(got[100 + qi])
-        assert [i for _, i, _ in rows] == expect
-        for _, i, dist in rows:
-            assert abs(dist - adc[i]) < 1e-9
-
-
 def test_ivf_pq_build_and_search_match_numpy(spark):
     """End-to-end IVF-PQ parity with a straight-numpy replica:
     hash-picked coarse cells, L2 cell assignment (lowest-cell ties),
@@ -348,48 +306,3 @@ def test_priority_sample_property(spark, rows, k):
         for r in priority_sample(df, "id", "w", k).collect()
     }
     assert got == expected
-
-
-def test_ivf_pq_save_load_roundtrip(spark, tmp_path):
-    """Persisted index relations are a drop-in for the build's return
-    value: identical top-k (ids, ranks, distances) from the loaded
-    index, with the compressed corpus partitioned by cell on disk."""
-    import os
-
-    from etl_inreach_spark.operators.pq import (
-        ivf_pq_build,
-        ivf_pq_topk,
-        load_ivf_pq,
-        save_ivf_pq,
-    )
-
-    rng = np.random.RandomState(7)
-    n, dim, num_sub, ksub, nlist = 40, 8, 2, 4, 3
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(dim)]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    built = ivf_pq_build(df, nlist=nlist, num_sub=num_sub, ksub=ksub, iters=2, dim=dim)
-    p = str(tmp_path / "ivfpq")
-    save_ivf_pq(p, *built)
-    loaded = load_ivf_pq(spark, p)
-
-    queries = spark.createDataFrame(
-        [(100 + i, [float(x) for x in rng.randn(dim)]) for i in range(3)],
-        "q_id long, embedding array<double>",
-    )
-
-    def run(cells, books, index):
-        return sorted(
-            (r["q_id"], r["rank"], r["vec_id"], round(r["adc_dist"], 9))
-            for r in ivf_pq_topk(
-                index, cells, books, queries, k=5, nprobe=2, num_sub=num_sub, dim=dim
-            ).collect()
-        )
-
-    c0, b0, i0 = built
-    assert run(loaded[0], loaded[1], loaded[2]) == run(c0, b0, i0)
-    # the on-disk index is cell-partitioned (probe = pruned scan)
-    assert any(
-        d.startswith("cell=") for d in os.listdir(os.path.join(p, "index"))
-    )

@@ -176,54 +176,6 @@ def test_semantic_dedup_cells_min_id_survivor_rule(spark):
         assert kept == (not should_drop), (vid, cell, kept)
 
 
-def test_kmeans_lloyd_distributed_matches_numpy_reference(spark):
-    """The distributed Lloyd trainer reproduces a straight numpy
-    implementation of the same algorithm (portable hash init, argmax
-    cosine assignment with lowest-cell ties, member mean, renormalize,
-    empty cells keep previous) to float tolerance — the shuffle only
-    reorders float additions."""
-    import numpy as np
-
-    from etl_inreach_spark.operators.similarity import (
-        PORTABLE_A,
-        PORTABLE_B,
-        PORTABLE_M,
-        kmeans_lloyd_distributed,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(40, 6)
-    ids = list(range(40))
-    nlist, iters = 4, 3
-
-    # numpy reference
-    unit = vecs / np.maximum(np.linalg.norm(vecs, axis=1), 1e-12)[:, None]
-    order = sorted(ids, key=lambda i: ((PORTABLE_A * i + PORTABLE_B) % PORTABLE_M, i))
-    cent = unit[order[:nlist]].copy()
-    for _ in range(iters):
-        cos = unit @ cent.T / (
-            np.linalg.norm(unit, axis=1)[:, None] * np.linalg.norm(cent, axis=1)[None, :]
-        )
-        assign = np.argmax(cos, axis=1)  # ties -> lowest cell, matches argmax
-        for c in range(nlist):
-            members = unit[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                cent[c] = m / max(np.linalg.norm(m), 1e-12)
-
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        r["cell"]: np.array(r["_cvec"])
-        for r in kmeans_lloyd_distributed(df, nlist=nlist, iters=iters).collect()
-    }
-    assert set(got) == set(range(1, nlist + 1))
-    for c in range(nlist):
-        assert np.allclose(got[c + 1], cent[c], atol=1e-9), f"cell {c+1}"
-
-
 def test_kmeans_lloyd_round2_matches_python_fold_replica(spark, sf_dir):
     """The TWO-round composed Lloyd query (kmeans_lloyd_round2_update,
     VERDICT r8 item 4) against a pure-Python sequential-fold replica —

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql import Row
@@ -79,50 +80,46 @@ def test_stream_features_dedups_across_batches(spark, feed_dir, tmp_path):
 
 
 def test_foreachbatch_sink_posts_feature_collections(spark, feed_dir, tmp_path):
-    from etl_inreach_spark.streaming.pipeline import (
-        run_once,
-        stream_features,
-        write_feature_collections,
+    """The streaming sink is the batch sink applied per micro-batch:
+    foreachBatch -> features_to_json -> post_feature_collections."""
+    from etl_inreach_spark.sinks.geojson import (
+        features_to_json,
+        parse_feature_collection,
+        post_feature_collections,
     )
+    from etl_inreach_spark.streaming.pipeline import run_once, stream_features
 
     feeds = spark.readStream.schema("share_id string, body string").json(feed_dir)
     shares = spark.createDataFrame(SHARES, "share_id string, callsign string, password string")
     features = stream_features(feeds, shares)
 
-    out_dir = tmp_path / "posts"
-    out_dir.mkdir()
+    spool = tmp_path / "posts"
+    spool.mkdir()
 
-    def post(chunk: list[str]) -> None:
-        # executor-side capture: write each POSTed FeatureCollection to
-        # disk (the HTTP stand-in; same contract as sinks/geojson)
-        fc = {"type": "FeatureCollection",
-              "features": [json.loads(f) for f in chunk]}
-        path = out_dir / f"fc-{abs(hash(tuple(chunk)))}.json"
-        path.write_text(json.dumps(fc))
+    # runs in Python workers: each POSTed document becomes one file
+    def poster(doc: str) -> None:
+        (spool / f"{uuid.uuid4().hex}.json").write_text(doc)
 
-    writer = write_feature_collections(
-        features, post, checkpoint_dir=str(tmp_path / "ckpt2")
+    posted = []
+
+    def handle_batch(batch_df, batch_id: int) -> None:
+        posted.append(post_feature_collections(features_to_json(batch_df), poster))
+
+    writer = (
+        features.writeStream.outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "ckpt2"))
+        .foreachBatch(handle_batch)
     )
     q = run_once(writer)
     q.awaitTermination(120)
 
-    fcs = [json.loads(p.read_text()) for p in out_dir.glob("fc-*.json")]
-    feats = [f for fc in fcs for f in fc["features"]]
-    assert all(fc["type"] == "FeatureCollection" for fc in fcs)
+    feats = [f for p in spool.glob("*.json") for f in parse_feature_collection(p.read_text())]
+    assert sum(posted) == len(feats)
     ids = sorted(f["id"] for f in feats)
     assert ids == ["inreach-111", "inreach-222", "inreach-333"]
     geom = {f["id"]: f["geometry"] for f in feats}
     assert geom["inreach-222"]["type"] == "Point"
     assert geom["inreach-222"]["coordinates"][:2] == [10.0, 20.0]
-
-
-def _protobuf_available() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _write_position_batches(d):
@@ -142,49 +139,6 @@ def _write_position_batches(d):
         f = d / f"b{i}.json"
         f.write_text("\n".join(_json.dumps(r) for r in batch))
         os.utime(f, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf on workers",
-)
-def test_stateful_latest_position_across_batches(spark, tmp_path):
-    """transformWithStateInPandas: per-device latest position carried
-    ACROSS micro-batches; stale updates are suppressed, fresher ones
-    re-emit the device."""
-    from etl_inreach_spark.streaming.stateful import latest_position_stream
-
-    d = tmp_path / "posfeed"
-    d.mkdir()
-    _write_position_batches(d)
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    feeds = (
-        spark.readStream.schema(
-            "id string, time timestamp, arrival_idx long, lon double, lat double"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(d))
-    )
-    out = latest_position_stream(feeds)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("latest_pos")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ckpt_state"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    rows = spark.sql("SELECT * FROM latest_pos ORDER BY id, time").collect()
-    emitted = [(r["id"], r["lon"]) for r in rows]
-    # dev-1 emitted twice (initial + fresher update), dev-2 once (stale
-    # second report suppressed by cross-batch state)
-    assert emitted == [("dev-1", 1.0), ("dev-1", 9.0), ("dev-2", 2.0)]
 
 
 def test_foreachbatch_state_latest_position(spark, tmp_path):
@@ -225,10 +179,9 @@ def test_foreachbatch_state_latest_position(spark, tmp_path):
 
 
 def test_groupstate_latest_position_across_batches(spark, tmp_path):
-    """applyInPandasWithState (GroupState): the SAME cross-batch
-    semantics as the transformWithState path, runnable without
-    protobuf — per-device state carried across micro-batches, stale
-    updates suppressed, fresher ones re-emitted."""
+    """applyInPandasWithState (GroupState): per-device state carried
+    across micro-batches, stale updates suppressed, fresher ones
+    re-emitted."""
     from etl_inreach_spark.streaming.stateful import latest_position_groupstate
 
     d = tmp_path / "posfeed_gs"

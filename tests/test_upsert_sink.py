@@ -1,6 +1,6 @@
 """Keyed-upsert sink tests: reference argmax semantics across
-batches, atomicity layout, and partition pruning of the dynamic
-variant (untouched partitions are not rewritten)."""
+batches, and partition pruning of the dynamic merge (untouched
+partitions are not rewritten)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from etl_inreach_spark.sinks.upsert import upsert_latest, upsert_latest_partitioned
+from etl_inreach_spark.sinks.upsert import upsert_latest_partitioned
 
 
 def _mkdf(spark, rows):
@@ -17,6 +17,11 @@ def _mkdf(spark, rows):
         rows, "id string, time string, payload string, arrival long"
     )
     return df.withColumn("time", F.col("time").cast("timestamp"))
+
+
+def _with_part(df):
+    # the partition column is a function of the key, as the sink requires
+    return df.withColumn("part", F.pmod(F.xxhash64("id"), F.lit(4)))
 
 
 def _state(spark, path):
@@ -35,7 +40,9 @@ def test_upsert_latest_reference_semantics(spark, tmp_path):
             ("b", "2024-01-01 10:00:00", "b1", 2),
         ],
     )
-    upsert_latest(spark, path, b1, ["id"], "time", arrival_col="arrival")
+    upsert_latest_partitioned(
+        spark, path, _with_part(b1), ["id"], "time", "part", arrival_col="arrival"
+    )
     # newer a wins; EQUAL-time b must NOT replace (strict >, first-seen
     # wins — the existing row has the smaller arrival index); new key c
     b2 = _mkdf(
@@ -46,25 +53,26 @@ def test_upsert_latest_reference_semantics(spark, tmp_path):
             ("c", None, "c1", 5),
         ],
     )
-    upsert_latest(spark, path, b2, ["id"], "time", arrival_col="arrival")
+    upsert_latest_partitioned(
+        spark, path, _with_part(b2), ["id"], "time", "part", arrival_col="arrival"
+    )
     got = _state(spark, path)
     assert got["a"] == ("2024-01-01 11:00:00", "a2")
     assert got["b"] == ("2024-01-01 10:00:00", "b1")
     assert got["c"][1] == "c1"
     # a null-time row never replaces a timestamped one
     b3 = _mkdf(spark, [("a", None, "a3", 6)])
-    upsert_latest(spark, path, b3, ["id"], "time", arrival_col="arrival")
+    upsert_latest_partitioned(
+        spark, path, _with_part(b3), ["id"], "time", "part", arrival_col="arrival"
+    )
     assert _state(spark, path)["a"] == ("2024-01-01 11:00:00", "a2")
 
 
 def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
     path = str(tmp_path / "ptbl")
 
-    def with_part(df):
-        return df.withColumn("part", F.pmod(F.xxhash64("id"), F.lit(4)))
-
     ids = [f"k{i}" for i in range(16)]
-    b1 = with_part(
+    b1 = _with_part(
         _mkdf(spark, [(i, "2024-01-01 10:00:00", f"{i}-v1", n) for n, i in enumerate(ids)])
     )
     upsert_latest_partitioned(spark, path, b1, ["id"], "time", "part")
@@ -79,7 +87,7 @@ def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
         for f in glob.glob(f"{path}/part=*/*.parquet")
         if f"part={tpart}" not in f
     }
-    b2 = with_part(_mkdf(spark, [(target, "2024-01-01 12:00:00", "new", 99)]))
+    b2 = _with_part(_mkdf(spark, [(target, "2024-01-01 12:00:00", "new", 99)]))
     upsert_latest_partitioned(spark, path, b2, ["id"], "time", "part")
 
     got = _state(spark, path)
@@ -95,7 +103,7 @@ def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
 
 def test_upsert_survives_empty_and_creates(spark, tmp_path):
     path = str(tmp_path / "fresh")
-    empty = _mkdf(spark, []).withColumn("part", F.pmod(F.xxhash64("id"), F.lit(4)))
+    empty = _with_part(_mkdf(spark, []))
     # empty batch on a missing table is a no-op, not an error
     upsert_latest_partitioned(spark, path, empty, ["id"], "time", "part")
     assert not os.path.exists(path)
