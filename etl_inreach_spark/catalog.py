@@ -27,14 +27,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimension tables small enough to broadcast at any realistic scale
-# (region/nation are fixed-size; supplier/part/customer grow with SF but
-# stay far under executor memory at the SFs we target locally — at true
-# 100 TB scale the join helpers take an explicit ``broadcast=`` knob).
-SMALL_DIMS = ("region", "nation", "supplier")
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -167,7 +159,8 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     return {n: load_table(spark, sf_dir, n) for n in names}
 
 
-def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
-    """Register temp views so operators are usable from spark.sql too."""
-    for n in names:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
+    """Register the orders, customer and nation temp views so
+    operators are usable from spark.sql too."""
+    for n in ("orders", "customer", "nation"):
         load_table(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -22,7 +22,7 @@ def coord(arr: Column, i: int) -> Column:
     return F.try_element_at(arr, F.lit(i))
 
 
-def eav_to_map(entries: Column, key_field: str = "name", value_field: str = "value") -> Column:
+def eav_to_map(entries: Column, key_field: str = "name") -> Column:
     """O12 (task.ts:109-112) — fold array<struct<name,value>> EAV pairs
     into map<string,string> for by-name lookups.
 
@@ -39,7 +39,7 @@ def eav_to_map(entries: Column, key_field: str = "name", value_field: str = "val
     on a name-less Data element, task.ts:111)."""
     nonnull = F.filter(entries, lambda e: e[key_field].isNotNull())
     return F.map_from_entries(
-        F.transform(nonnull, lambda e: F.struct(e[key_field], e[value_field]))
+        F.transform(nonnull, lambda e: F.struct(e[key_field], e["value"]))
     )
 
 
@@ -49,12 +49,7 @@ def map_get(m: Column, key: str) -> Column:
     return F.try_element_at(m, F.lit(key))
 
 
-def point_geometry(
-    lon: Column,
-    lat: Column,
-    alt: Column | None = None,
-    ncomp: Column | None = None,
-) -> Column:
+def point_geometry(lon: Column, lat: Column) -> Column:
     """GeoJSON Point geometry struct (task.ts:145-148).
 
     Coordinates are POSITIONAL: a malformed lon/lat stays as NULL in
@@ -64,21 +59,13 @@ def point_geometry(
     (task.ts:105-107), so a 3-component string whose third part fails
     to parse yields ``[lon, lat, null]`` — the trailing null is KEPT;
     the altitude slot is absent only when the string had fewer than 3
-    components. Callers that know the original component count pass it
-    as ``ncomp`` to get that distinction; without it the approximation
-    drops the slot whenever alt is NULL (which conflates the two
-    cases). Components beyond the third are not represented in the
-    flat feature table and are capped at 3 here."""
-    if alt is None:
-        coords = F.array(lon, lat)
-    elif ncomp is not None:
-        coords = F.when(ncomp >= F.lit(3), F.array(lon, lat, alt)).otherwise(
-            F.array(lon, lat)
-        )
-    else:
-        coords = F.when(alt.isNotNull(), F.array(lon, lat, alt)).otherwise(
-            F.array(lon, lat)
-        )
+    components. The altitude and the original component count come
+    from the row's ``alt`` and ``n_coords`` columns. Components beyond
+    the third are not represented in the flat feature table and are
+    capped at 3 here."""
+    coords = F.when(
+        F.col("n_coords") >= F.lit(3), F.array(lon, lat, F.col("alt"))
+    ).otherwise(F.array(lon, lat))
     return F.struct(F.lit("Point").alias("type"), coords.alias("coordinates"))
 
 

@@ -49,7 +49,7 @@ def share_link_url(share_id: Column) -> Column:
     return F.concat(F.lit(GARMIN_SHARE_BASE), share_id)
 
 
-def surrogate_key(imei: Column, prefix: str = "inreach-") -> Column:
+def surrogate_key(imei: Column) -> Column:
     """O13 (task.ts:114) — device-identity surrogate key.
 
     IMEI, not message Id (reference CHANGELOG.md:122-124, v3.7.3).
@@ -57,7 +57,7 @@ def surrogate_key(imei: Column, prefix: str = "inreach-") -> Column:
     string concat with undefined, task.ts:114) — NOT NULL, which would
     both vanish from the GeoJSON id field and collapse with every
     other NULL under a dedup key."""
-    return F.concat(F.lit(prefix), F.coalesce(imei, F.lit("undefined")))
+    return F.concat(F.lit("inreach-"), F.coalesce(imei, F.lit("undefined")))
 
 
 def strip_unit(value: Column) -> Column:

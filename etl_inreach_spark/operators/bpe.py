@@ -63,11 +63,14 @@ def _adjacent_pairs(syms: Column) -> Column:
     )
 
 
+# bpe_train stops once the most frequent pair occurs fewer times than this.
+MIN_PAIR_COUNT = 2
+
+
 def bpe_train(
     docs: DataFrame,
     text_col: str,
     n_merges: int,
-    min_pair_count: int = 2,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
     """Learn up to ``n_merges`` BPE merges from a document corpus.
 
@@ -75,7 +78,7 @@ def bpe_train(
     [(rank, left, right, weighted_count), ...] in application order,
     and the final vocab DataFrame (word, wc, syms) with each distinct
     word's symbol array after all merges — the trained segmenter
-    state. Stops early when no pair reaches ``min_pair_count``.
+    state. Stops early when no pair reaches MIN_PAIR_COUNT.
     """
     spark = docs.sparkSession
     words = (
@@ -134,7 +137,7 @@ def bpe_train(
             .limit(k)
             .collect()  # K rows — still ONE bounded driver decision
         )
-        if not top or top[0]["c"] < min_pair_count:
+        if not top or top[0]["c"] < MIN_PAIR_COUNT:
             break
         batch: list[tuple[str, str, int]] = []
         used: set[str] = set()
@@ -151,7 +154,7 @@ def bpe_train(
                         break
                 elif len(top) == k:
                     break  # truncated list: unknown pairs could tie c
-                if c < min_pair_count:
+                if c < MIN_PAIR_COUNT:
                     # p_i IS the argmax here (A/C proven), and it is
                     # below the floor — training ends, exactly as the
                     # one-at-a-time loop would decide next round
@@ -189,13 +192,7 @@ def bpe_merges_df(spark: SparkSession, merges) -> DataFrame:
     )
 
 
-def bpe_segment(
-    docs: DataFrame,
-    text_col: str,
-    merges,
-    id_col: str,
-    out_col: str = "subwords",
-) -> DataFrame:
+def bpe_segment(docs: DataFrame, text_col: str, merges, id_col: str) -> DataFrame:
     """Apply a learned merge table to NEW text — the inference half of
     the trainer. Output: (id, subwords array<string>) with each
     document's whitespace words segmented by replaying the merges in
@@ -241,8 +238,8 @@ def bpe_segment(
                 [s for w in (t.split() if t else []) for s in seg_word(w, cache)]
                 for t in pdf[text_col]
             ]
-            yield pd.DataFrame({id_col: pdf[id_col], out_col: out})
+            yield pd.DataFrame({id_col: pdf[id_col], "subwords": out})
 
     return docs.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} long, {out_col} array<string>"
+        run, schema=f"{id_col} long, subwords array<string>"
     )

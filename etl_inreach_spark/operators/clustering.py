@@ -67,7 +67,7 @@ scale_bits`` and ``m = max |v_j|``, |q_j| <= m*2^b + 1; a dot product
 over d dims needs ``d * (m*2^b)^2 < 2^63`` — defaults (b=20, d=64,
 unit-ish embeddings m<=2) use < 2^49. Cluster component sums need
 ``n_cluster * m * 2^b < 2^63`` → fine below ~2^41 rows per cluster at
-the defaults; raise/lower ``scale_bits`` to trade precision for
+the defaults; raise/lower SCALE_BITS to trade precision for
 headroom.
 
 Scale: assignment is embarrassingly parallel over the corpus and the
@@ -128,16 +128,14 @@ class KMeansModel:
         return [[c / s for c in row] for row in self.qcentroids]
 
 
-def quantize_vectors(
-    df: DataFrame, vec_col: str = "embedding", scale_bits: int = 20
-) -> Column:
+def quantize_vectors(df: DataFrame, scale_bits: int = 20) -> Column:
     """array<bigint> column: round-half-up fixed-point quantization of
-    ``vec_col``. floor(x*2^b + 0.5) is exact float64 for the domains
+    the ``embedding`` column. floor(x*2^b + 0.5) is exact float64 for the domains
     documented in the module header; identical in numpy
     (np.floor(x*s + 0.5)) for the replica tests."""
     s = float(1 << scale_bits)
     return F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.floor(x.cast("double") * F.lit(s) + F.lit(0.5)).cast("bigint"),
     )
 
@@ -224,16 +222,18 @@ def _init_centroids(
     return tuple(tuple(int(x) for x in r["_qvec"]) for r in picked)
 
 
+# kmeans_fit's fixed-point grid: vectors are quantized to multiples of 2^-20.
+SCALE_BITS = 20
+
+
 def kmeans_fit(
     df: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale_bits: int = 20,
     max_iter: int = 25,
     use_arrow: bool = True,
 ) -> KMeansModel:
-    """Train the deterministic integer-grid k-means model. One job per
+    """Train the deterministic integer-grid k-means model over
+    (vec_id, embedding) rows on the 2^SCALE_BITS grid. One job per
     Lloyd iteration; the quantized relation is localCheckpointed once
     so upstream ETL runs exactly once regardless of max_iter. The two
     assignment paths (``use_arrow``, see module header) train the
@@ -243,9 +243,9 @@ def kmeans_fit(
     # first action and materializes the quantized relation in the
     # same job (2 jobs -> 1)
     qdf = df.select(
-        F.col(id_col), quantize_vectors(df, vec_col, scale_bits).alias("_qvec")
+        F.col("vec_id"), quantize_vectors(df, SCALE_BITS).alias("_qvec")
     ).localCheckpoint(eager=False)
-    cents = _init_centroids(qdf, k, id_col)
+    cents = _init_centroids(qdf, k, "vec_id")
     n_iter = 0
     converged = False
     sizes = [0] * k
@@ -281,7 +281,7 @@ def kmeans_fit(
         cents = new
     return KMeansModel(
         qcentroids=cents,
-        scale_bits=scale_bits,
+        scale_bits=SCALE_BITS,
         n_iter=n_iter,
         converged=converged,
         sizes=tuple(sizes),
@@ -291,18 +291,15 @@ def kmeans_fit(
 def kmeans_assign(
     df: DataFrame,
     model: KMeansModel,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cluster_col: str = "cluster",
     use_arrow: bool = True,
 ) -> DataFrame:
-    """(id_col, cluster): shuffle-free nearest-centroid assignment
+    """(vec_id, cluster): shuffle-free nearest-centroid assignment
     under the model — the same integer argmin the trainer used, so
     fit-time and serve-time assignments can never disagree.
     ``use_arrow`` picks the vectorized default or the pure-JVM
     expression path (module header); both produce identical values."""
-    qvec = quantize_vectors(df, vec_col, model.scale_bits)
+    qvec = quantize_vectors(df, model.scale_bits)
     assign = _assign_arrow if use_arrow else _assign_expr
     return df.select(
-        F.col(id_col), assign(qvec, model.qcentroids).alias(cluster_col)
+        F.col("vec_id"), assign(qvec, model.qcentroids).alias("cluster")
     )

@@ -52,7 +52,6 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    min_files_to_compact: int = 2,
 ) -> dict:
     """Rewrite ``path`` so files approach ``target_file_bytes``.
     No-op (and says so) when the directory already has fewer output
@@ -62,7 +61,7 @@ def compact_parquet(
     before = parquet_file_stats(spark, path)
     total = sum(b for _, b in before)
     n_out = max(1, math.ceil(total / target_file_bytes))
-    if len(before) <= n_out or len(before) < min_files_to_compact:
+    if len(before) <= n_out:
         return {
             "files_before": len(before),
             "files_after": len(before),

@@ -42,8 +42,6 @@ _PPM = 1_000_000
 
 def term_cooccurrence_lift(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     min_df: int = 2,
     min_pair_df: int = 2,
 ) -> DataFrame:
@@ -66,13 +64,13 @@ def term_cooccurrence_lift(
     decimal).
     """
     dt = (
-        docs.select(F.col(id_col).alias("_doc"), F.explode(tokens(F.col(text_col))).alias("term"))
+        docs.select(F.col("doc_id").alias("_doc"), F.explode(tokens(F.col("text"))).alias("term"))
         .distinct()
     )
     # consumed 3x below (df, join x2); LAZY (r11): the dfreq
     # broadcast build materializes it inside the action
     dt = dt.localCheckpoint(eager=False)
-    n_docs = docs.select(id_col).distinct().count()
+    n_docs = docs.select("doc_id").distinct().count()
     dfreq = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") >= min_df
     )
@@ -120,13 +118,11 @@ def _bigrams(text_col: str) -> "F.Column":
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
 
 
-def bigram_model(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def bigram_model(docs: DataFrame) -> DataFrame:
     """Corpus bigram MLE counts: (w1, w2, c_big, c_pre) where
     ``c_pre = sum_w c(w1, w)`` — p(w2|w1) = c_big / c_pre, kept as
     the exact count pair, never a float."""
-    big = docs.select(F.explode(_bigrams(text_col)).alias("b")).select(
+    big = docs.select(F.explode(_bigrams("text")).alias("b")).select(
         F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     cnt = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_big"))
@@ -134,12 +130,7 @@ def bigram_model(
     return cnt.join(pre, "w1").select("w1", "w2", "c_big", "c_pre")
 
 
-def bigram_lm_score(
-    docs: DataFrame,
-    model: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bigram_lm_score(docs: DataFrame, model: DataFrame | None = None) -> DataFrame:
     """Per-document LM quality score against a corpus bigram model
     (the CCNet/C4-style 'does this text look like the corpus' filter,
     with lift/probability in place of log-perplexity so values stay
@@ -159,14 +150,14 @@ def bigram_lm_score(
     a dirty corpus against clean statistics.
     """
     if model is None:
-        model = bigram_model(docs, text_col)
+        model = bigram_model(docs)
     doc_big = docs.select(
-        F.col(id_col), F.explode_outer(_bigrams(text_col)).alias("b")
+        F.col("doc_id"), F.explode_outer(_bigrams("text")).alias("b")
     ).select(
-        id_col, F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
+        "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     scored = doc_big.join(model, ["w1", "w2"], "left").select(
-        id_col,
+        "doc_id",
         F.when(F.col("w1").isNull(), F.lit(None)).otherwise(
             F.coalesce(
                 F.expr(f"({_PPM}L * c_big) DIV c_pre"), F.lit(0).cast("bigint")
@@ -174,13 +165,13 @@ def bigram_lm_score(
         ).alias("p_ppm"),
     )
     return (
-        scored.groupBy(id_col)
+        scored.groupBy("doc_id")
         .agg(
             F.count("p_ppm").alias("n_bigrams"),
             F.coalesce(F.sum("p_ppm"), F.lit(0)).cast("bigint").alias("score_ppm_sum"),
         )
         .select(
-            id_col,
+            "doc_id",
             F.col("n_bigrams").cast("bigint").alias("n_bigrams"),
             "score_ppm_sum",
             F.when(F.col("n_bigrams") > 0, F.expr("score_ppm_sum DIV n_bigrams"))

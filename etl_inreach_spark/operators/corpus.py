@@ -23,27 +23,26 @@ def contamination_ngrams(
     id_col: str,
     text_col: str,
     bench_pred: Column,
-    shingle_k: int = 9,
     gram_hash=None,
-    flag_threshold: float = 0.5,
 ) -> DataFrame:
     """Benchmark-contamination check: for every non-benchmark document,
-    the fraction of its distinct character ``shingle_k``-grams that
-    also appear anywhere in the benchmark set (``bench_pred`` selects
-    benchmark rows).
+    the fraction of its distinct character 9-grams that also appear
+    anywhere in the benchmark set (``bench_pred`` selects benchmark
+    rows).
 
     Output: (id, n_grams, n_contaminated, contamination, contaminated)
-    for corpus (non-benchmark) documents.
+    for corpus (non-benchmark) documents; ``contaminated`` is
+    contamination >= 0.5.
 
     Scale shape: the benchmark gram set is DISTINCT-reduced first and
     is small by construction (eval sets are fixed-size while the corpus
     grows), so the membership probe is a broadcast left-semi-style
     join — corpus grams stream past it with no shuffle of the corpus
     side beyond the per-doc distinct. Gram identity is an 8-byte hash,
-    never a string (pass ``gram_hash=poly_gram_hasher60(k)`` for a
+    never a string (pass ``gram_hash=poly_gram_hasher60(9)`` for a
     SQL-reproducible 60-bit hash whose collision odds are negligible).
     """
-    sh = shingles_exploded(df, id_col, text_col, shingle_k, gram_hash=gram_hash)
+    sh = shingles_exploded(df, id_col, text_col, 9, gram_hash=gram_hash)
     ids = df.select(F.col(id_col).alias("_id"), bench_pred.alias("_is_bench"))
     sh = sh.join(ids, "_id")
 
@@ -66,7 +65,7 @@ def contamination_ngrams(
         "n_grams",
         "n_contaminated",
         ratio.alias("contamination"),
-        (ratio >= flag_threshold).alias("contaminated"),
+        (ratio >= 0.5).alias("contaminated"),
     )
 
 

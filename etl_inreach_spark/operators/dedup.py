@@ -105,12 +105,12 @@ def topk_by_key(
     return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-) -> DataFrame:
+# Round bounds of the two label-propagation loops; exceeding one raises.
+CC_MAX_ROUNDS = 25
+STAR_MAX_ROUNDS = 40
+
+
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components over an undirected pair relation —
     the pairs -> clusters step every dedup pipeline ends with
     (canonical representative = min id reachable from each node).
@@ -137,8 +137,10 @@ def connected_components(
     small-star (alternating min to root), which contracts diameter
     logarithmically — same dataflow shape per round.
 
-    Returns (id, component) — every node that appears in ``edges``,
-    labeled with the smallest id in its component.
+    ``edges`` holds the pairs as (id_a, id_b). Returns (id, component)
+    — every node that appears in ``edges``, labeled with the smallest
+    id in its component. Raises after CC_MAX_ROUNDS rounds without a
+    fixpoint.
     """
     # The (possibly expensive) edge relation is still computed ONCE —
     # the union references the edge subtree twice, and an
@@ -149,7 +151,7 @@ def connected_components(
     # link en route (BlockManager block locks dedupe the union's two
     # concurrent scans of ``e``). Every round then reads the sym
     # checkpoint. Was 3 eager jobs (e, sym, labels) for the same passes.
-    e = edges.select(F.col(src).alias("_n"), F.col(dst).alias("_m")).localCheckpoint(
+    e = edges.select(F.col("id_a").alias("_n"), F.col("id_b").alias("_m")).localCheckpoint(
         eager=False
     )
     sym = e.unionByName(
@@ -162,14 +164,14 @@ def connected_components(
     # entire join round (near-clique duplicate graphs converge in 1-2
     # rounds, so this is a third of the loop's actions). The loop below
     # therefore runs rounds 1..; with its quiet confirmation round the
-    # accepted diameter stays exactly max_iter, as before.
+    # accepted diameter stays exactly CC_MAX_ROUNDS, as before.
     labels = (
         sym.groupBy("_n")
         .agg(F.least(F.min("_m"), F.col("_n")).alias("component"))
         .select(F.col("_n").alias("id"), "component")
     ).localCheckpoint(eager=True)
     converged = False
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         nb = (
             sym.join(labels, sym["_m"] == labels["id"])
             .select(F.col("_n").alias("id"), F.col("component"))
@@ -202,23 +204,18 @@ def connected_components(
             break
     if not converged:
         # Partially-propagated labels are silently WRONG component ids —
-        # a graph whose diameter exceeds max_iter (long duplicate
+        # a graph whose diameter exceeds CC_MAX_ROUNDS (long duplicate
         # chains) must fail loudly, not dedup against bogus canonicals.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "(labels were still changing); the edge graph has diameter "
-            "> max_iter — raise max_iter or use "
-            "connected_components_star for log-diameter convergence"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds "
+            "(labels were still changing); the edge graph's diameter exceeds "
+            "that fixed bound — use connected_components_star, which "
+            "converges in O(log^2 n) rounds"
         )
     return labels
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 40,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """Connected components by alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce
     and Beyond") — the log-diameter escalation for graphs where plain
@@ -258,7 +255,7 @@ def connected_components_star(
     # cur's eager seed job scans it fully and persists it en route,
     # one job instead of two for the same pass.
     e0 = edges.select(
-        F.col(src).alias("_a"), F.col(dst).alias("_b")
+        F.col("id_a").alias("_a"), F.col("id_b").alias("_b")
     ).localCheckpoint(eager=False)
     cur = (
         e0.filter(F.col("_a") != F.col("_b"))
@@ -271,7 +268,7 @@ def connected_components_star(
     isolated = None  # star rounds drop nothing: every node keeps an edge
     prev_fp = None
     wn = Window.partitionBy("_n")
-    for _ in range(max_iter):
+    for _ in range(STAR_MAX_ROUNDS):
         # large-star: rewire every strictly-larger neighbor to
         # m(u) = least(min N(u), u), attached by a window min (one
         # exchange, no join-back).
@@ -384,9 +381,9 @@ def connected_components_star(
         prev_fp = (chk["n"], chk["h"])
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds — pathological input (should not happen: star "
-            "contraction converges in O(log^2 n))"
+            f"connected_components_star did not converge in its fixed bound "
+            f"of {STAR_MAX_ROUNDS} rounds — pathological input (should not "
+            "happen: star contraction converges in O(log^2 n))"
         )
     # cur is now a star forest (root=_a < leaf=_b). Labels: leaves map
     # to their root, roots (and any node present only as a root) to

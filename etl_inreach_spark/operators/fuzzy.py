@@ -326,10 +326,9 @@ def edit2_pairs(
     id_col: str,
     s_col: str,
     max_bucket_rows: int | None = None,
-    max_len: int | None = 64,
 ) -> DataFrame:
     """Edit-distance <= 2 pairs — FastSS proper (see ``editk_pairs``).
-    |D_2(s)| ~ |s|^2/2 variants per string, so ``max_len`` defaults ON
-    (64): this is a KEY-column operator (callsigns two typos apart),
-    not a document-text one."""
-    return editk_pairs(df, id_col, s_col, 2, max_bucket_rows, max_len)
+    |D_2(s)| ~ |s|^2/2 variants per string, so strings are capped at
+    64 chars (``editk_pairs``' ``max_len``): this is a KEY-column
+    operator (callsigns two typos apart), not a document-text one."""
+    return editk_pairs(df, id_col, s_col, 2, max_bucket_rows, 64)

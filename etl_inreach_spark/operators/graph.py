@@ -118,13 +118,11 @@ def triangles(edges: DataFrame, orient_by_degree: bool = True) -> DataFrame:
     )
 
 
-def triangle_counts(
-    edges: DataFrame, node_alias: str = "node", orient_by_degree: bool = True
-) -> DataFrame:
+def triangle_counts(edges: DataFrame, node_alias: str = "node") -> DataFrame:
     """(node, n_triangles): how many triangles each node participates
     in. Nodes in no triangle are absent (join back against the node
     set for a dense output)."""
-    tri = triangles(edges, orient_by_degree)
+    tri = triangles(edges)
     # ONE pass over the triangle stream: explode each triangle into its
     # three member rows inside the same stage. (A union of three
     # selects of ``tri`` re-executes the whole triangle pipeline three
@@ -180,17 +178,20 @@ def walk_counts(edges: DataFrame, length: int, node_alias: str = "node") -> Data
     return w
 
 
+# Integer PageRank: ranks on a 2^20 fixed-point grid, damping 17/20 = 0.85.
+PR_SCALE = 1 << 20
+PR_D_NUM = 17
+PR_D_DEN = 20
+
+
 def pagerank_integer(
     edges: DataFrame,
     iters: int = 3,
     node_alias: str = "node",
-    scale: int = 1 << 20,
-    d_num: int = 17,
-    d_den: int = 20,
 ) -> DataFrame:
     """Damped PageRank in EXACT integer arithmetic: ranks live on the
-    ``scale`` fixed-point grid, the damping factor is the rational
-    d_num/d_den (default 17/20 = 0.85), and every division is an
+    PR_SCALE = 2^20 fixed-point grid, the damping factor is the rational
+    PR_D_NUM/PR_D_DEN = 17/20 = 0.85, and every division is an
     explicit floor — so the result is bit-identical on any
     partitioning/schedule AND renderable verbatim in a DuckDB oracle
     (`div` here == `//` there; all operands non-negative, so
@@ -200,6 +201,7 @@ def pagerank_integer(
 
     Per iteration: r'(v) = (d_den-d_num)*scale // (d_den*N)
                           + d_num * SUM_{u->v}(r(u) // deg(u)) // d_den
+    with scale = PR_SCALE, d_num = PR_D_NUM, d_den = PR_D_DEN
     — exactly ONE |E|-edge equi-join against the |V|-row rank vector
     plus ONE partial-agg groupBy per iteration (the walk_counts loop
     with the damping added). Two lineage/plan rules make that true:
@@ -254,8 +256,8 @@ def pagerank_integer(
     # so every downstream relation) has zero rows then, the literals
     # are never observed, and the result is empty either way.
     n = max(deg.count(), 1)
-    base = (d_den - d_num) * scale // (d_den * n)
-    state = deg.select("u", F.lit(scale // n).cast("bigint").alias("_rank"))
+    base = (PR_D_DEN - PR_D_NUM) * PR_SCALE // (PR_D_DEN * n)
+    state = deg.select("u", F.lit(PR_SCALE // n).cast("bigint").alias("_rank"))
     for _ in range(iters):
         sums = (
             sym_deg.join(state, "u")
@@ -264,7 +266,7 @@ def pagerank_integer(
         )
         state = sums.select(
             "u",
-            F.expr(f"{base}L + ({d_num}L * _s) div {d_den}L").alias("_rank"),
+            F.expr(f"{base}L + ({PR_D_NUM}L * _s) div {PR_D_DEN}L").alias("_rank"),
         )
     return state.select(
         F.col("u").alias(node_alias), F.col("_rank").alias("rank_scaled")

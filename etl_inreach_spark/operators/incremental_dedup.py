@@ -16,9 +16,8 @@ one-shot ``minhash_lsh_pairs``:
 * Verification is by SIGNATURE AGREEMENT (fraction of equal minhash
   slots — an unbiased Jaccard estimator, +-1/sqrt(k) noise), not exact
   shingle Jaccard: storing shingles would make state ~the corpus
-  itself, defeating the point. k=64 default tightens the estimate to
-  ~0.12 std; thresholds are on the ESTIMATE (pick with the noise in
-  mind).
+  itself, defeating the point. k=64 tightens the estimate to ~0.12
+  std; the DUP_AGREEMENT threshold is on the ESTIMATE.
 * First-wins canonicalization: a new doc matching history is dropped
   in favor of the EARLIER doc (dup_of = historical id); within a
   batch, components collapse to their min id (same exact
@@ -63,20 +62,13 @@ from etl_inreach_spark.sinks.upsert import (
 )
 
 
-def batch_signatures(
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """Flat banded signature relation for a batch:
-    (doc_id, band_id, band_hash, sig array<bigint>) — ``bands`` rows
-    per document, bit-identical to the one-shot operator's signatures
-    for the same text."""
-    sh = shingles_exploded(batch, id_col, text_col, shingle_k)
-    return banded_minhash(sh, num_hashes, bands).select(
+def batch_signatures(batch: DataFrame, shingle_k: int = 5) -> DataFrame:
+    """Flat banded signature relation for a (doc_id, text) batch:
+    (doc_id, band_id, band_hash, sig array<bigint>) — MINHASH_BANDS
+    rows per document, bit-identical to the one-shot operator's
+    signatures for the same text."""
+    sh = shingles_exploded(batch, "doc_id", "text", shingle_k)
+    return banded_minhash(sh).select(
         F.col("_id").alias("doc_id"),
         F.col("_band.band_id").alias("band_id"),
         F.col("_band.band_hash").alias("band_hash"),
@@ -90,21 +82,22 @@ def _sig_agreement(a, b) -> "F.Column":
     ).cast("double") / F.size(a)
 
 
+# Signature agreement (estimated Jaccard) at which a document is a duplicate.
+DUP_AGREEMENT = 0.8
+
+
 def incremental_dedup(
     spark: SparkSession,
     batch: DataFrame,
     state_path: str,
     batch_id: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    num_hashes: int = 64,
-    bands: int = 16,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """Label ``batch`` against the persisted corpus state and append
-    the survivors' signatures. Returns the labeled batch:
-    (id_col, keep boolean, dup_of nullable) where ``dup_of`` is the
+    """Label ``batch`` (doc_id, text) against the persisted corpus
+    state and append the survivors' signatures. A document is a
+    duplicate when its signature agreement with another reaches
+    DUP_AGREEMENT. Returns the labeled batch:
+    (doc_id, keep boolean, dup_of nullable) where ``dup_of`` is the
     historical or batch-internal canonical the document duplicated.
     Re-running the same ``batch_id`` is a no-op for state (marker
     protocol) and recomputes the same labels.
@@ -116,9 +109,7 @@ def incremental_dedup(
     """
     # LAZY (r11): materialized by the first consuming action of
     # the increment (history-probe checkpoint or label checkpoint)
-    sigs = batch_signatures(
-        batch, id_col, text_col, num_hashes, bands, shingle_k
-    ).localCheckpoint(eager=False)
+    sigs = batch_signatures(batch, shingle_k).localCheckpoint(eager=False)
 
     # --- vs history -------------------------------------------------
     if _path_exists(spark, state_path):
@@ -136,7 +127,7 @@ def incremental_dedup(
             # its label from keep to dup-of-self (label idempotence is
             # part of the replay contract, pinned in tests)
             .filter(F.col("n.doc_id") != F.col("h.doc_id"))
-            .filter(_sig_agreement(F.col("n.sig"), F.col("h.sig")) >= threshold)
+            .filter(_sig_agreement(F.col("n.sig"), F.col("h.sig")) >= DUP_AGREEMENT)
             .groupBy(F.col("n.doc_id").alias("doc_id"))
             .agg(F.min(F.col("h.doc_id")).alias("dup_of"))
         )
@@ -152,21 +143,21 @@ def incremental_dedup(
     internal_pairs = (
         a.join(b, ["band_id", "band_hash"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .filter(_sig_agreement(F.col("sig_a"), F.col("sig_b")) >= threshold)
+        .filter(_sig_agreement(F.col("sig_a"), F.col("sig_b")) >= DUP_AGREEMENT)
         .select("id_a", "id_b")
         .distinct()
     )
-    comp = connected_components(internal_pairs, "id_a", "id_b")
+    comp = connected_components(internal_pairs)
     internal_dups = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias("doc_id"), F.col("component").alias("dup_of_batch")
     )
 
     labeled = (
-        batch.select(F.col(id_col).alias("doc_id"))
+        batch.select("doc_id")
         .join(hist_dups, "doc_id", "left")
         .join(internal_dups, "doc_id", "left")
         .select(
-            F.col("doc_id").alias(id_col),
+            "doc_id",
             (F.col("dup_of").isNull() & F.col("dup_of_batch").isNull()).alias(
                 "keep"
             ),
@@ -177,7 +168,7 @@ def incremental_dedup(
 
     # --- append survivors' signatures (idempotent) -------------------
     if not _batch_applied(spark, state_path, batch_id):
-        survivors = labeled.filter(F.col("keep")).select(F.col(id_col).alias("doc_id"))
+        survivors = labeled.filter(F.col("keep")).select("doc_id")
         (
             sigs.join(survivors, "doc_id", "left_semi")
             .write.mode("append")

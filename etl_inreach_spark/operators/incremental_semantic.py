@@ -92,13 +92,11 @@ def incremental_semantic_dedup(
     state_path: str,
     batch_id: str,
     tau: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell_rows: int | None = None,
 ) -> DataFrame:
     """Label ``batch`` against the persisted corpus state under the
     frozen ``centroids`` (cell, _cvec) and append the batch's rows.
-    Returns (id_col, cell, kept boolean, dup_of nullable) where
+    Returns (vec_id, cell, kept boolean, dup_of nullable) where
     ``dup_of`` is the SMALLEST id among the smaller-id in-cell
     neighbors at cosine >= tau (historical or batch-internal).
     Re-running the same ``batch_id`` is a no-op for state (marker
@@ -112,7 +110,7 @@ def incremental_semantic_dedup(
     ``max_cell_rows`` bounds the per-task pair work of the history
     probe when a state cell has gone hot — bipartite salting, output
     identical; see the module docstring."""
-    asg = _nearest_cells(batch, centroids, 1, id_col, vec_col)
+    asg = _nearest_cells(batch, centroids, 1, "vec_id", "embedding")
     # LAZY checkpoint (r11): the state-append write below is the
     # increment's first action over the assignment and scans every
     # partition, so that one write job also materializes/truncates
@@ -120,10 +118,10 @@ def incremental_semantic_dedup(
     # per increment for the same pass. The later consumers (history
     # probe, in-batch join, label seed) read the persisted partitions.
     withn = asg.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_vec"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_vec"),
         "cell",
-        l2_norm(F.col(vec_col)).alias("_nrm"),
+        l2_norm(F.col("embedding")).alias("_nrm"),
     ).localCheckpoint(eager=False)
 
     pair_cos = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
@@ -305,7 +303,7 @@ def incremental_semantic_dedup(
         .groupBy("_idb")
         .agg(F.min("_ida").alias("dup_of"), F.max("cell").alias("cell"))
         .select(
-            F.col("_idb").alias(id_col),
+            F.col("_idb").alias("vec_id"),
             "cell",
             F.col("dup_of").isNull().alias("kept"),
             "dup_of",

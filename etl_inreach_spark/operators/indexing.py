@@ -38,12 +38,11 @@ def global_row_index(
     df: DataFrame,
     order_col: str,
     num_buckets: int = 256,
-    index_col: str = "row_index",
 ) -> DataFrame:
     """Exact dense 0-based index in ascending ``order_col`` order
     (ties impossible: the column must be unique — ids; values must be
     non-negative and far from bigint range so key * num_buckets
-    cannot overflow). Output = the input plus ``index_col``.
+    cannot overflow). Output = the input plus ``row_index``.
 
     Scale shape: bucket = floor(key * B / (max_key + 1)) is monotone
     in the key, so bucket order IS key order; per-bucket counts give
@@ -70,7 +69,7 @@ def global_row_index(
     w = Window.partitionBy("_bucket").orderBy(order_col)
     return (
         b.join(F.broadcast(base), "_bucket")
-        .withColumn(index_col, F.col("_base") + F.row_number().over(w) - 1)
+        .withColumn("row_index", F.col("_base") + F.row_number().over(w) - 1)
         .drop("_bucket", "_hi")
     )
 
@@ -80,7 +79,6 @@ def negative_sample(
     id_col: str,
     k: int,
     group_cols: Sequence[str] = (),
-    num_buckets: int = 256,
 ) -> DataFrame:
     """(anchor_id, slot, neg_id [, anchor/neg group cols]): up to ``k``
     deterministic negatives per corpus row, excluding the anchor
@@ -105,7 +103,7 @@ def negative_sample(
     # (BlockManager block locks) — without the extra build job an eager
     # checkpoint would pay.
     indexed = global_row_index(
-        corpus.select(id_col, *gcols), id_col, num_buckets=num_buckets
+        corpus.select(id_col, *gcols), id_col
     ).localCheckpoint(eager=False)
     n_rel = indexed.agg(F.count(F.lit(1)).alias("_n"))
 

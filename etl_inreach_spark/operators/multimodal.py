@@ -47,23 +47,20 @@ def decode_stub(payload: bytes, mime: str, fake: bool = True) -> dict:
     }
 
 
-def extract_features(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """mapInPandas feature extraction over the media struct column.
+def extract_features(df: DataFrame) -> DataFrame:
+    """mapInPandas feature extraction over the ``media`` struct column
+    of (doc_id, media) rows.
 
     Arrow ships (id, mime, bytes) batches to Python; output schema is
     fixed and engine-friendly. This is THE pattern for any real
     decode: batch-wise, columnar in/out, no per-row UDF calls.
     """
-    out_schema = f"{id_col} bigint, mime string, n_bytes int, first_byte int, byte_sum_mod int"
+    out_schema = "doc_id bigint, mime string, n_bytes int, first_byte int, byte_sum_mod int"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         null_feats = {"n_bytes": None, "first_byte": None, "byte_sum_mod": None}
         for pdf in batches:
-            media = pdf[media_col]
+            media = pdf["media"]
             # a NULL media struct (left joins, missing uploads) yields a
             # NULL feature row rather than a TypeError on the executor
             feats = [
@@ -74,7 +71,7 @@ def extract_features(
             ]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "mime": [None if m is None else m["mime"] for m in media],
                     "n_bytes": [f["n_bytes"] for f in feats],
                     "first_byte": [f["first_byte"] for f in feats],
@@ -82,7 +79,7 @@ def extract_features(
                 }
             )
 
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
+    return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
 _PIL_IMAGE = None  # resolved once per process; resize_stub runs per ROW
@@ -129,64 +126,61 @@ def resize_stub(payload: bytes, width: int, height: int, fake: bool = True) -> b
     return (payload * reps)[: width * height]
 
 
-def sample_frames(
-    df: DataFrame,
-    frame_bytes: int = 32,
-    stride: int = 2,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Frame sampling over opaque media bytes: every ``stride``-th
-    chunk of ``frame_bytes`` becomes one output row (doc_id,
+# sample_frames: bytes per frame chunk, and keep every FRAME_STRIDE-th chunk.
+FRAME_BYTES = 32
+FRAME_STRIDE = 2
+
+
+def sample_frames(df: DataFrame) -> DataFrame:
+    """Frame sampling over opaque media bytes: every FRAME_STRIDE-th
+    chunk of FRAME_BYTES becomes one output row (doc_id,
     frame_idx, n_bytes, checksum). The 1->N batch shape is the real
     pattern for video decode (one input row yields many frame rows,
     still columnar through Arrow); the chunking stands in for an
     ffmpeg keyframe iterator."""
-    out_schema = f"{id_col} bigint, frame_idx int, n_bytes int, checksum int"
+    out_schema = "doc_id bigint, frame_idx int, n_bytes int, checksum int"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, sizes, sums = [], [], [], []
-            for rid, m in zip(pdf[id_col], pdf[media_col]):
+            for rid, m in zip(pdf["doc_id"], pdf["media"]):
                 if m is None:  # NULL media struct -> no frames
                     continue
                 payload = m["bytes"] if m["bytes"] is not None else b""
-                n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
-                for fi in range(0, n_frames, stride):
-                    chunk = payload[fi * frame_bytes : (fi + 1) * frame_bytes]
+                n_frames = (len(payload) + FRAME_BYTES - 1) // FRAME_BYTES
+                for fi in range(0, n_frames, FRAME_STRIDE):
+                    chunk = payload[fi * FRAME_BYTES : (fi + 1) * FRAME_BYTES]
                     ids.append(rid)
                     idxs.append(fi)
                     sizes.append(len(chunk))
                     sums.append(sum(chunk) % 997)
             yield pd.DataFrame(
-                {id_col: pd.Series(ids, dtype="int64"),
+                {"doc_id": pd.Series(ids, dtype="int64"),
                  "frame_idx": pd.Series(idxs, dtype="int32"),
                  "n_bytes": pd.Series(sizes, dtype="int32"),
                  "checksum": pd.Series(sums, dtype="int32")}
             )
 
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
+    return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
 def resize_images(
     df: DataFrame,
     width: int,
     height: int,
-    media_col: str = "media",
-    id_col: str = "doc_id",
     fake: bool = True,
 ) -> DataFrame:
-    """Batch image resize over the media struct column — the same
+    """Batch image resize over the ``media`` struct column — the same
     Arrow mapInPandas plumbing a real PIL/opencv resize drops into
     (swap resize_stub for the library call; schema, batching and
     NULL handling are already production-shaped). Output carries the
     resized payload plus its dimensions; NULL media yields NULL bytes.
     """
-    out_schema = f"{id_col} bigint, width int, height int, resized binary"
+    out_schema = "doc_id bigint, width int, height int, resized binary"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            media = pdf[media_col]
+            media = pdf["media"]
             resized = [
                 None
                 if m is None
@@ -198,11 +192,11 @@ def resize_images(
             ]
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col],
+                    "doc_id": pdf["doc_id"],
                     "width": pd.Series([width] * len(pdf), dtype="int32"),
                     "height": pd.Series([height] * len(pdf), dtype="int32"),
                     "resized": resized,
                 }
             )
 
-    return df.select(id_col, media_col).mapInPandas(run, out_schema)
+    return df.select("doc_id", "media").mapInPandas(run, out_schema)

@@ -63,7 +63,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ILOG2_FRAC_BITS = 20
-_G = 1 << ILOG2_FRAC_BITS
 
 
 def ilog2_fp_py(x: int, frac_bits: int = ILOG2_FRAC_BITS) -> int:
@@ -84,14 +83,12 @@ def ilog2_fp_py(x: int, frac_bits: int = ILOG2_FRAC_BITS) -> int:
     return m * g + a
 
 
-def with_ilog2_fp(
-    df: DataFrame, x_col: str, out_col: str, frac_bits: int = ILOG2_FRAC_BITS
-) -> DataFrame:
+def with_ilog2_fp(df: DataFrame, x_col: str, out_col: str) -> DataFrame:
     """Append ``out_col = ilog2_fp(x_col)`` via an unrolled chain of
     pure-integer Catalyst projections (one per fraction bit). Meant
     for vocabulary-sized relations; every step is exact int64 (the
-    squared normalized mantissa is < 2^(2*frac_bits+2))."""
-    g = 1 << frac_bits
+    squared normalized mantissa is < 2^(2*ILOG2_FRAC_BITS+2))."""
+    g = 1 << ILOG2_FRAC_BITS
     # pin the input to BIGINT up front: on an INT column the first
     # shiftleft would stay int32 and the chain would silently rely on
     # later div-by-bigint promotion (ADVICE r8) — cast once, here.
@@ -117,15 +114,15 @@ def with_ilog2_fp(
             # the dead branch intermittently overflowed int64)
             "_il_y",
             F.expr(
-                f"shiftleft({x_col}, greatest({frac_bits} - _il_m, 0))"
+                f"shiftleft({x_col}, greatest({ILOG2_FRAC_BITS} - _il_m, 0))"
                 f" div shiftleft(cast(1 as bigint),"
-                f" greatest(_il_m - {frac_bits}, 0))"
+                f" greatest(_il_m - {ILOG2_FRAC_BITS}, 0))"
             ),
         )
     )
 
-    # The frac_bits squaring steps run as ONE aggregate-fold
-    # expression over sequence(1, frac_bits), not as 3*frac_bits
+    # The ILOG2_FRAC_BITS squaring steps run as ONE aggregate-fold
+    # expression over sequence(1, ILOG2_FRAC_BITS), not as 3*ILOG2_FRAC_BITS
     # chained withColumn projections (r11 optimization): the unrolled
     # chain cost ~1.5-2 s of DRIVER time per trained model — each
     # withColumn re-analyzes the growing plan, and the ~80-node
@@ -139,7 +136,7 @@ def with_ilog2_fp(
     # chain — shiftright(v, k) == v div 2^k for the always-nonnegative
     # mantissa/square values, so the emitted bits cannot differ.
     def _step(acc: Column, _i: Column) -> Column:
-        y2 = F.shiftright(acc["y"] * acc["y"], frac_bits)
+        y2 = F.shiftright(acc["y"] * acc["y"], ILOG2_FRAC_BITS)
         hi = y2 >= F.lit(2 * g)
         return F.struct(
             F.when(hi, F.shiftright(y2, 1)).otherwise(y2).alias("y"),
@@ -147,7 +144,7 @@ def with_ilog2_fp(
         )
 
     frac = F.aggregate(
-        F.sequence(F.lit(1), F.lit(frac_bits)),
+        F.sequence(F.lit(1), F.lit(ILOG2_FRAC_BITS)),
         F.struct(
             F.col("_il_y").alias("y"), F.lit(0).cast("bigint").alias("a")
         ),
@@ -168,7 +165,6 @@ def ilog2_sql_cte_chain(
     src: str,
     exprs: dict[str, str],
     prefix: str,
-    frac_bits: int = ILOG2_FRAC_BITS,
 ) -> tuple[str, str]:
     """DuckDB rendering of the same algorithm as UNROLLED chained CTE
     steps (one per fraction bit) over the ``src`` relation — the same
@@ -185,7 +181,7 @@ def ilog2_sql_cte_chain(
     projections have no such hazard. The normalization is branch-free
     (both shift amounts clamped to >= 0) because DuckDB's vectorized
     CASE evaluates both branches on a chunk."""
-    g = 1 << frac_bits
+    g = 1 << ILOG2_FRAC_BITS
     parts = []
     cols = []
     for sfx, x in exprs.items():
@@ -193,13 +189,13 @@ def ilog2_sql_cte_chain(
         cols.append(f"({x}) AS x_{sfx}")
         cols.append(f"{m} AS m_{sfx}")
         cols.append(
-            f"((({x}) << greatest({frac_bits} - {m}, 0))"
-            f" // (CAST(1 AS BIGINT) << greatest({m} - {frac_bits}, 0)))"
+            f"((({x}) << greatest({ILOG2_FRAC_BITS} - {m}, 0))"
+            f" // (CAST(1 AS BIGINT) << greatest({m} - {ILOG2_FRAC_BITS}, 0)))"
             f" AS y_{sfx}"
         )
         cols.append(f"CAST(0 AS BIGINT) AS a_{sfx}")
     parts.append(f"{prefix}0 AS (SELECT *, {', '.join(cols)} FROM {src})")
-    for i in range(1, frac_bits + 1):
+    for i in range(1, ILOG2_FRAC_BITS + 1):
         cols = []
         for sfx in exprs:
             y2 = f"((y_{sfx} * y_{sfx}) // {g})"
@@ -224,7 +220,7 @@ def ilog2_sql_cte_chain(
         for s in exprs
     )
     parts.append(
-        f"{prefix}fin AS (SELECT *, {lcols} FROM {prefix}{frac_bits})"
+        f"{prefix}fin AS (SELECT *, {lcols} FROM {prefix}{ILOG2_FRAC_BITS})"
     )
     return ",\n    ".join(parts), f"{prefix}fin"
 
@@ -232,8 +228,6 @@ def ilog2_sql_cte_chain(
 def nb_train(
     toks: DataFrame,
     doc_labels: DataFrame | None = None,
-    label_col: str = "y",
-    term_col: str = "term",
     max_vocab: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Train the classifier from labeled token OCCURRENCES
@@ -259,14 +253,14 @@ def nb_train(
     Returns ``(weights, priors)``: weights = (term, w_fp) — the
     vocabulary-sized model relation (broadcast it when scoring);
     priors = ONE row (prior_fp, n1_docs, n0_docs)."""
-    y = F.col(label_col)
-    cnt = toks.groupBy(term_col).agg(
+    y = F.col("y")
+    cnt = toks.groupBy("term").agg(
         F.sum(y).alias("c1"),
         F.sum(1 - y).alias("c0"),
     )
     if max_vocab is not None:
         cnt = cnt.orderBy(
-            F.expr("c1 + c0").desc(), F.col(term_col)
+            F.expr("c1 + c0").desc(), F.col("term")
         ).limit(max_vocab)
     tot = cnt.agg(
         F.sum("c1").alias("n1"),
@@ -302,13 +296,13 @@ def nb_train(
         with_ilog2_fp(ab, "_a", "_la"), "_b", "_lb"
     ).select("c1", "c0", F.expr("_la - _lb").alias("w_fp"))
     w = cnt.join(F.broadcast(pair_w), ["c1", "c0"]).select(
-        term_col, "w_fp"
+        "term", "w_fp"
     )
     if doc_labels is None:
-        doc_labels = toks.groupBy("doc_id").agg(F.max(y).alias(label_col))
+        doc_labels = toks.groupBy("doc_id").agg(F.max(y).alias("y"))
     dcnt = doc_labels.agg(
-        F.sum(label_col).alias("_d1"),
-        F.sum(1 - F.col(label_col)).alias("_d0"),
+        F.sum("y").alias("_d1"),
+        F.sum(1 - F.col("y")).alias("_d0"),
     )
     priors = with_ilog2_fp(
         with_ilog2_fp(dcnt, "_d1", "_l1"), "_d0", "_l0"
@@ -320,18 +314,13 @@ def nb_train(
     return w, priors
 
 
-def nb_score(
-    toks: DataFrame,
-    weights: DataFrame,
-    priors: DataFrame,
-    term_col: str = "term",
-) -> DataFrame:
+def nb_score(toks: DataFrame, weights: DataFrame, priors: DataFrame) -> DataFrame:
     """Score token occurrences ``(doc_id, term, ...)`` against the
     trained model: per document, the exact-integer log-odds score and
     the thresholded prediction. Documents with zero in-vocabulary
     tokens are absent (OOV terms carry no defined likelihood)."""
     scored = (
-        toks.join(F.broadcast(weights), term_col)
+        toks.join(F.broadcast(weights), "term")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_toks"),

@@ -109,7 +109,6 @@ def pq_train(
     ksub: int = 16,
     iters: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     init_offset: int = 0,
 ) -> DataFrame:
@@ -122,7 +121,7 @@ def pq_train(
     coarse cells: training on RESIDUALS with offset 0 seeds
     codebooks with the cell centroids' own all-zero residuals — a
     degenerate init that tie-breaks every point into code 1."""
-    subs = subvectors(corpus, num_sub, dim, id_col, vec_col).localCheckpoint(
+    subs = subvectors(corpus, num_sub, dim, "vec_id", vec_col).localCheckpoint(
         eager=True
     )
     h = (F.lit(PORTABLE_A) * F.col("_pid") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
@@ -182,7 +181,6 @@ def pq_encode(
     cent: DataFrame,
     num_sub: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, codes): each vector as its array of per-subspace nearest
@@ -190,12 +188,12 @@ def pq_encode(
     hash aggregations; the output is the compressed corpus
     representation downstream ADC search reads INSTEAD of the
     embeddings."""
-    asg = _assign(subvectors(corpus, num_sub, dim, id_col, vec_col), cent)
+    asg = _assign(subvectors(corpus, num_sub, dim, "vec_id", vec_col), cent)
     return (
         asg.groupBy("_pid")
         .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("_sc"))
         .select(
-            F.col("_pid").alias(id_col),
+            F.col("_pid").alias("vec_id"),
             F.transform(F.col("_sc"), lambda s: s["code"]).alias("codes"),
         )
     )
@@ -314,8 +312,6 @@ def ivf_pq_build(
     ksub: int = 16,
     iters: int = 3,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The Faiss-style IVF-PQ index as three relations:
 
@@ -334,10 +330,10 @@ def ivf_pq_build(
     counterpart: one broadcast coarse assignment pass, then pq_train /
     pq_encode on the residual column. The returned relations are
     eagerly checkpointed — build once, search many."""
-    h = (F.lit(PORTABLE_A) * F.col(id_col) + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
+    h = (F.lit(PORTABLE_A) * F.col("vec_id") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
     picked = (
         corpus.select(
-            h.alias("_h"), F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cv")
+            h.alias("_h"), F.col("vec_id").alias("_cid"), F.col("embedding").alias("_cv")
         )
         .orderBy("_h", "_cid")
         .limit(nlist)
@@ -351,11 +347,11 @@ def ivf_pq_build(
     ).localCheckpoint(eager=False)
 
     assigned = (
-        _l2_nearest_cells(corpus, cells, 1, id_col, vec_col)
+        _l2_nearest_cells(corpus, cells, 1, "vec_id", "embedding")
         .select(
-            id_col,
+            "vec_id",
             "cell",
-            _residual(F.col(vec_col), F.col("_cellvec")).alias("_res"),
+            _residual(F.col("embedding"), F.col("_cellvec")).alias("_res"),
         )
         .localCheckpoint(eager=False)
     )
@@ -369,13 +365,12 @@ def ivf_pq_build(
         ksub=ksub,
         iters=iters,
         dim=dim,
-        id_col=id_col,
         vec_col="_res",
         init_offset=nlist,
     )
     index = (
-        pq_encode(assigned, books, num_sub=num_sub, dim=dim, id_col=id_col, vec_col="_res")
-        .join(assigned.select(id_col, "cell"), id_col)
+        pq_encode(assigned, books, num_sub=num_sub, dim=dim, vec_col="_res")
+        .join(assigned.select("vec_id", "cell"), "vec_id")
         .localCheckpoint(eager=True)
     )
     return cells, books, index
@@ -390,9 +385,6 @@ def ivf_pq_topk(
     nprobe: int = 2,
     num_sub: int = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "embedding",
     fp_bits: int | None = None,
 ) -> DataFrame:
     """Approximate top-k per query over the IVF-PQ index: probe the
@@ -414,10 +406,10 @@ def ivf_pq_topk(
     cells are touched (the 1/nlist * nprobe pruning), and the SUM per
     (query, id) is map-side combined. No raw corpus vector is read at
     search time."""
-    probed = _l2_nearest_cells(queries, cells, nprobe, q_id_col, q_vec_col).select(
-        F.col(q_id_col).alias("_qid"),
+    probed = _l2_nearest_cells(queries, cells, nprobe, "q_id", "embedding").select(
+        F.col("q_id").alias("_qid"),
         "cell",
-        _residual(F.col(q_vec_col), F.col("_cellvec")).alias("_qres"),
+        _residual(F.col("embedding"), F.col("_cellvec")).alias("_qres"),
     )
     # slice inline (not via subvectors()) so each residual's subrows
     # stay attached to THEIR (query, cell) pair — a query probing two
@@ -441,7 +433,7 @@ def ivf_pq_topk(
         )
     )
     code_rows = index.select(
-        F.col(id_col).alias("_pid"),
+        F.col("vec_id").alias("_pid"),
         "cell",
         F.posexplode("codes").alias("sub", "code"),
     )
@@ -457,8 +449,8 @@ def ivf_pq_topk(
         k,
         rank_col="rank",
     ).select(
-        F.col("_qid").alias(q_id_col),
-        F.col("_pid").alias(id_col),
+        F.col("_qid").alias("q_id"),
+        F.col("_pid").alias("vec_id"),
         "adc_dist",
         "rank",
     )

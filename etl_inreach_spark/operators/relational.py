@@ -18,42 +18,32 @@ def broadcast_dim_join(
     dim: DataFrame,
     on: Sequence[str] | Column,
     how: str = "inner",
-    broadcast: bool = True,
 ) -> DataFrame:
-    """Fact-to-dimension join, broadcasting the dim side by default.
+    """Fact-to-dimension join, broadcasting the dim side.
 
     The idiomatic rendering of the reference's closure-captured config
     (task.ts:68,121,128): config rows are KBs, so they ship to every
-    executor and the join is shuffle-free. Set ``broadcast=False`` for
-    dims too large for executor memory — Catalyst then picks
-    sort-merge/shuffled-hash (AQE may still convert back to broadcast
-    if runtime stats allow).
+    executor and the join is shuffle-free. Dims too large for executor
+    memory belong in a plain ``join``, where Catalyst picks
+    sort-merge/shuffled-hash.
     """
-    d = F.broadcast(dim) if broadcast else dim
-    return fact.join(d, on=on, how=how)
+    return fact.join(F.broadcast(dim), on=on, how=how)
 
 
-def filter_recent(
-    df: DataFrame,
-    ts_col: str,
-    lookback: str = "30 minutes",
-    anchor: Column | None = None,
-) -> DataFrame:
-    """O5 (task.ts:80-82) — keep rows within ``lookback`` of an anchor.
+def filter_recent(df: DataFrame, ts_col: str) -> DataFrame:
+    """O5 (task.ts:80-82) — keep rows within 30 minutes of an anchor.
 
     The reference pushes ``d1 = now - 30min`` to the server; the batch
     analog anchors on max(ts) for determinism (FIXTURES.md §5). The
     anchor aggregate is a 1-row DataFrame broadcast-joined in — at any
     scale this is one cheap pre-pass (min/max come from parquet
     footer stats) plus a shuffle-free join; the comparison itself is
-    codegen'd and, when the anchor is a literal, pushed to the scan.
+    codegen'd.
     """
-    if anchor is not None:
-        return df.filter(F.col(ts_col) >= anchor - F.expr(f"INTERVAL {lookback}"))
     anchor_df = df.agg(F.max(F.col(ts_col)).alias("_anchor"))
     return (
         df.join(F.broadcast(anchor_df))
-        .filter(F.col(ts_col) >= F.col("_anchor") - F.expr(f"INTERVAL {lookback}"))
+        .filter(F.col(ts_col) >= F.col("_anchor") - F.expr("INTERVAL 30 minutes"))
         .drop("_anchor")
     )
 
@@ -143,14 +133,11 @@ def salted_agg(
     df: DataFrame,
     keys: Sequence[str],
     aggs: dict[str, tuple[Column, str]],
-    salt_buckets: int = 16,
-    salt_col: str = "_salt",
 ) -> DataFrame:
-    """Two-stage skew-safe aggregation: rows are salted into
-    ``salt_buckets`` sub-keys, partially aggregated per (key, salt),
-    then merged per key. The first shuffle spreads a hot key over
-    ``salt_buckets`` reducers; the second handles one row per (key,
-    salt) — negligible.
+    """Two-stage skew-safe aggregation: rows are salted into 16
+    sub-keys, partially aggregated per (key, salt), then merged per
+    key. The first shuffle spreads a hot key over 16 reducers; the
+    second handles one row per (key, salt) — negligible.
 
     ``aggs`` maps output column name -> (stage1_expr, merge) where
     ``merge`` names the stage-2 re-aggregation: 'sum' (for sum/count),
@@ -166,10 +153,8 @@ def salted_agg(
     (e.g., count per event_type with one type at 99%).
     """
     merge_fn = {"sum": F.sum, "min": F.min, "max": F.max}
-    salted = df.withColumn(
-        salt_col, (F.rand(seed=7) * salt_buckets).cast("int")
-    )
-    stage1 = salted.groupBy(*keys, salt_col).agg(
+    salted = df.withColumn("_salt", (F.rand(seed=7) * 16).cast("int"))
+    stage1 = salted.groupBy(*keys, "_salt").agg(
         *[expr.alias(f"_s1_{name}") for name, (expr, _) in aggs.items()]
     )
     return stage1.groupBy(*keys).agg(
@@ -185,7 +170,6 @@ def salted_join(
     small: DataFrame,
     key_cols: Sequence[str],
     salt_buckets: int = 8,
-    salt_col: str = "_salt",
     how: str = "inner",
 ) -> DataFrame:
     """Skew-safe equi-join by salting: the big side gets a
@@ -210,13 +194,13 @@ def salted_join(
     if how not in ("inner", "left"):
         raise ValueError(f"salted_join supports inner/left, got {how!r}")
     big_s = big.withColumn(
-        salt_col, F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets))
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets))
     )
     small_r = small.withColumn(
-        salt_col, F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
     )
-    on = [*key_cols, salt_col]
-    return big_s.join(small_r, on=on, how=how).drop(salt_col)
+    on = [*key_cols, "_salt"]
+    return big_s.join(small_r, on=on, how=how).drop("_salt")
 
 
 def interval_overlap_join(

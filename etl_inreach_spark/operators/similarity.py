@@ -35,31 +35,24 @@ from etl_inreach_spark.functions.vectors import cosine, l2_norm
 from etl_inreach_spark.operators.dedup import topk_by_key
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
-) -> DataFrame:
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact top-k cosine neighbors per query vector.
 
     Output: (q_id, vec_id, rank, cos). Self-matches (same id) are
     excluded. Deterministic: ties broken by neighbor id.
     """
     q = queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("_qvec")
     )
-    scored = corpus.join(F.broadcast(q), F.col(query_id_col) != F.col(id_col)).select(
-        query_id_col,
-        id_col,
-        cosine(F.col("_qvec"), F.col(vec_col)).alias("cos"),
+    scored = corpus.join(F.broadcast(q), F.col("q_id") != F.col("vec_id")).select(
+        "q_id",
+        "vec_id",
+        cosine(F.col("_qvec"), F.col("embedding")).alias("cos"),
     )
     top = topk_by_key(
-        scored, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
     )
-    return top.select(query_id_col, id_col, "rank", "cos")
+    return top.select("q_id", "vec_id", "rank", "cos")
 
 
 def _probe_buckets(bucket, num_planes: int):
@@ -126,15 +119,15 @@ def portable_lsh_bucket_sql(vec_expr: str, dim: int, num_planes: int) -> str:
     return "(" + "\n         + ".join(terms) + ")"
 
 
+# lsh_topk_portable's hyperplane count: 2^4 buckets.
+LSH_PLANES = 4
+
+
 def lsh_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
     dim: int,
-    num_planes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
 ) -> DataFrame:
     """Approximate top-k: bucket join on the portable Rademacher LSH
     signature (multi-probe radius 1), exact cosine re-rank inside
@@ -146,31 +139,26 @@ def lsh_topk_portable(
     No candidate dedup is needed: each corpus vector owns exactly ONE
     bucket and a query's probe set {b, b^1, b^2, ...} is distinct
     values, so a (query, corpus) pair matches at most once."""
-    b = portable_lsh_bucket(F.col(vec_col), dim, num_planes)
-    c_sig = corpus.select(F.col(id_col), F.col(vec_col), b.alias("bucket"))
+    b = portable_lsh_bucket(F.col("embedding"), dim, LSH_PLANES)
+    c_sig = corpus.select(F.col("vec_id"), F.col("embedding"), b.alias("bucket"))
     q_sig = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("_qvec"),
-        F.explode(_probe_buckets(b, num_planes)).alias("bucket"),
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("_qvec"),
+        F.explode(_probe_buckets(b, LSH_PLANES)).alias("bucket"),
     )
     cand = c_sig.join(F.broadcast(q_sig), on="bucket").filter(
-        F.col(query_id_col) != F.col(id_col)
+        F.col("q_id") != F.col("vec_id")
     )
     scored = cand.select(
-        query_id_col, id_col, cosine(F.col("_qvec"), F.col(vec_col)).alias("cos")
+        "q_id", "vec_id", cosine(F.col("_qvec"), F.col("embedding")).alias("cos")
     )
     top = topk_by_key(
-        scored, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
     )
-    return top.select(query_id_col, id_col, "rank", "cos")
+    return top.select("q_id", "vec_id", "rank", "cos")
 
 
-def portable_centroids(
-    corpus: DataFrame,
-    nlist: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def portable_centroids(corpus: DataFrame, nlist: int) -> DataFrame:
     """(cell, _cvec): the ``nlist`` corpus vectors minimizing the
     portable hash of their id — a deterministic, SQL-expressible
     pseudo-random sample serving as IVF coarse centroids (k-means
@@ -180,10 +168,10 @@ def portable_centroids(
     The hash sort is a global top-nlist: at scale this is a partial
     per-partition top-k + tiny driver merge (Spark's TakeOrdered),
     not a full sort."""
-    h = (F.lit(PORTABLE_A) * F.col(id_col) + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
+    h = (F.lit(PORTABLE_A) * F.col("vec_id") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
     picked = (
         corpus.select(
-            h.alias("_h"), F.col(id_col).alias("_cid"), F.col(vec_col).alias("_cvec")
+            h.alias("_h"), F.col("vec_id").alias("_cid"), F.col("embedding").alias("_cvec")
         )
         .orderBy("_h", "_cid")
         .limit(nlist)
@@ -344,50 +332,44 @@ def ivf_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    nlist: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "q_id",
 ) -> DataFrame:
     """Approximate top-k via IVF with the portable hash-sampled coarse
     quantizer: corpus partitioned by nearest centroid, each query scans
     only its ``nprobe`` nearest cells with exact cosine re-rank. Scan
-    fraction ~ nprobe/nlist on balanced cells; probing every cell
+    fraction ~ nprobe/16 on balanced cells (16 cells); probing every cell
     reproduces brute force. Fully value-oracle-able: centroid choice,
     cell assignment (argmax of the sequential-fold cosine), probing,
     and re-rank all reproduce bit-for-bit in portable SQL.
 
     A corpus vector owns exactly one cell and a query probes nprobe
     DISTINCT cells, so no candidate dedup is needed."""
-    cent = portable_centroids(corpus, nlist, id_col, vec_col)
-    c_cells = _nearest_cells(corpus, cent, 1, id_col, vec_col)
-    q_cells = _nearest_cells(queries, cent, nprobe, id_col, vec_col).select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec"), "cell"
+    cent = portable_centroids(corpus, 16)
+    c_cells = _nearest_cells(corpus, cent, 1, "vec_id", "embedding")
+    q_cells = _nearest_cells(queries, cent, nprobe, "vec_id", "embedding").select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("_qvec"), "cell"
     )
     cand = c_cells.join(F.broadcast(q_cells), on="cell").filter(
-        F.col(query_id_col) != F.col(id_col)
+        F.col("q_id") != F.col("vec_id")
     )
     scored = cand.select(
-        query_id_col, id_col, cosine(F.col("_qvec"), F.col(vec_col)).alias("cos")
+        "q_id", "vec_id", cosine(F.col("_qvec"), F.col("embedding")).alias("cos")
     )
     top = topk_by_key(
-        scored, [query_id_col], [F.col("cos").desc(), F.col(id_col).asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
     )
-    return top.select(query_id_col, id_col, "rank", "cos")
+    return top.select("q_id", "vec_id", "rank", "cos")
 
 
-def cosine_pairs_exact(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    num_blocks: int = 8,
-) -> DataFrame:
+# cosine_pairs_exact's block count B.
+PAIR_BLOCKS = 8
+
+
+def cosine_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
     """EXACT all-pairs cosine join: (id_a < id_b, cos >= threshold).
 
     Block-grid candidate generation: each vector lands in one of
-    ``num_blocks`` hash blocks; every grid cell (i, j), i <= j, pairs
+    PAIR_BLOCKS hash blocks; every grid cell (i, j), i <= j, pairs
     block i against block j with one numpy float64 GEMM inside
     applyInPandas. A pair of blocks appears in exactly one cell, so no
     pair is scored twice. The GEMM keeps pairs with estimated cos >=
@@ -397,15 +379,15 @@ def cosine_pairs_exact(
     list_cosine_similarity — the margin pre-filter never leaks into
     the output values.
 
-    Scale: rows are replicated ``num_blocks`` times (each block meets
+    Scale: rows are replicated B = PAIR_BLOCKS times (each block meets
     every other once); per-cell work is (n/B)^2 * d flops vectorized.
-    Choose B ~ sqrt(desired parallelism). For corpora with cluster
+    B ~ sqrt(desired parallelism) is the right size. For corpora with cluster
     structure prefer LSH/IVF candidates + this verify step.
     """
     b = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(num_blocks)).alias("_blk"),
+        F.col("vec_id").alias("_id"),
+        F.col("embedding").alias("_v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(PAIR_BLOCKS)).alias("_blk"),
     )
     # row in block k participates in every cell {min(k,m), max(k,m)}
     cells = F.array_distinct(
@@ -415,7 +397,7 @@ def cosine_pairs_exact(
                     F.least(F.col("_blk"), F.lit(m)).alias("i"),
                     F.greatest(F.col("_blk"), F.lit(m)).alias("j"),
                 )
-                for m in range(num_blocks)
+                for m in range(PAIR_BLOCKS)
             ]
         )
     )
@@ -448,8 +430,8 @@ def cosine_pairs_exact(
     cand = replicated.groupBy("_cell").applyInPandas(
         score_cell, "id_a long, id_b long"
     )
-    va = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
-    vb = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+    va = df.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("_va"))
+    vb = df.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("_vb"))
     return (
         cand.join(va, "id_a")
         .join(vb, "id_b")
@@ -462,8 +444,6 @@ def semantic_dedup_cells(
     corpus: DataFrame,
     tau: float,
     nlist: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     max_cell_rows: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style cluster-scoped semantic dedup: assign every
@@ -505,8 +485,8 @@ def semantic_dedup_cells(
     balanced corpus (every cell under the cap) then runs the plain
     cell join over the checkpointed assignment — the cap costs the
     one sizing reduction and nothing else until a hot cell exists."""
-    cent = portable_centroids(corpus, nlist, id_col, vec_col)
-    asg = _nearest_cells(corpus, cent, 1, id_col, vec_col)
+    cent = portable_centroids(corpus, nlist)
+    asg = _nearest_cells(corpus, cent, 1, "vec_id", "embedding")
     # Precompute each vector's norm ONCE: cosine(a,b) recomputes both
     # norms per pair (3 sequential folds); dot/(na*nb) with carried
     # norms is the IDENTICAL float expression tree — l2_norm(a) =
@@ -515,8 +495,8 @@ def semantic_dedup_cells(
     from etl_inreach_spark.functions.vectors import dot
 
     withn = asg.select(
-        F.col(id_col), F.col(vec_col), "cell",
-        l2_norm(F.col(vec_col)).alias("_nrm"),
+        F.col("vec_id"), F.col("embedding"), "cell",
+        l2_norm(F.col("embedding")).alias("_nrm"),
     )
     pair_cos = dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
     # Block counts for the hot-cell grid come from a bounded
@@ -547,18 +527,18 @@ def semantic_dedup_cells(
             grid_sizes = sizes
     if grid_sizes is None:
         a = withn.select(
-            F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"),
+            F.col("vec_id").alias("_ida"), F.col("embedding").alias("_va"),
             F.col("_nrm").alias("_na"), "cell",
         )
         b = withn.select(
-            F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"),
+            F.col("vec_id").alias("_idb"), F.col("embedding").alias("_vb"),
             F.col("_nrm").alias("_nb"), "cell",
         )
         dropped = (
             a.join(b, "cell")
             .filter(F.col("_ida") < F.col("_idb"))
             .filter(pair_cos >= F.lit(tau))
-            .select(F.col("_idb").alias(id_col))
+            .select(F.col("_idb").alias("vec_id"))
             .distinct()
         )
     else:
@@ -586,7 +566,7 @@ def semantic_dedup_cells(
         wb = withn.withColumn(
             "_nb_blk", F.coalesce(nb_map[F.col("cell")].cast("int"), F.lit(1))
         ).withColumn(
-            "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.col("_nb_blk")).cast("int")
+            "_blk", F.pmod(F.xxhash64(F.col("vec_id")), F.col("_nb_blk")).cast("int")
         )
         # The grid join's shuffle must be PINNED (explicit-N
         # repartition on the join keys -> REPARTITION_BY_NUM, which
@@ -615,7 +595,7 @@ def semantic_dedup_cells(
         except ValueError:
             n_shuffle = withn.sparkSession.sparkContext.defaultParallelism
         a = wb.select(
-            F.col(id_col).alias("_ida"), F.col(vec_col).alias("_va"),
+            F.col("vec_id").alias("_ida"), F.col("embedding").alias("_va"),
             F.col("_nrm").alias("_na"), "cell",
             F.col("_blk").alias("_gi"),
             F.explode(
@@ -623,7 +603,7 @@ def semantic_dedup_cells(
             ).alias("_gj"),
         )
         b = wb.select(
-            F.col(id_col).alias("_idb"), F.col(vec_col).alias("_vb"),
+            F.col("vec_id").alias("_idb"), F.col("embedding").alias("_vb"),
             F.col("_nrm").alias("_nb"), "cell",
             F.explode(
                 F.sequence(F.lit(0), F.col("_blk"))
@@ -645,14 +625,14 @@ def semantic_dedup_cells(
                 )
             )
             .filter(pair_cos >= F.lit(tau))
-            .select(F.greatest("_ida", "_idb").alias(id_col))
+            .select(F.greatest("_ida", "_idb").alias("vec_id"))
             .distinct()
         )
     # verdict base is withn, not asg: under the cap withn is the
     # checkpointed assignment, so this join reuses it rather than
     # re-deriving the assignment from asg's lineage a second time
     return withn.join(
-        dropped.withColumn("_drop", F.lit(True)), id_col, "left"
+        dropped.withColumn("_drop", F.lit(True)), "vec_id", "left"
     ).select(
-        id_col, "cell", F.coalesce(~F.col("_drop"), F.lit(True)).alias("kept")
+        "vec_id", "cell", F.coalesce(~F.col("_drop"), F.lit(True)).alias("kept")
     )

@@ -79,21 +79,24 @@ def _materialize_enabled() -> bool:
     return not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
 
 
-def poly_gram_hash(g: Column, k: int, p: int = POLY_P, m: int = MERSENNE31) -> Column:
+def poly_gram_hash(g: Column, k: int) -> Column:
     """Portable polynomial hash of a fixed-length k-gram Column —
     k scalar ascii/substring ops, fully whole-stage-codegen."""
-    h = F.ascii(F.substring(g, 1, 1)).cast("bigint") % m
+    h = F.ascii(F.substring(g, 1, 1)).cast("bigint") % MERSENNE31
     for j in range(2, k + 1):
-        h = (h * p + F.ascii(F.substring(g, j, 1)).cast("bigint")) % m
+        h = (h * POLY_P + F.ascii(F.substring(g, j, 1)).cast("bigint")) % MERSENNE31
     return h
 
 
-def poly_gram_hash_sql(g: str, k: int, p: int = POLY_P, m: int = MERSENNE31) -> str:
+def poly_gram_hash_sql(g: str, k: int) -> str:
     """The identical hash as ANSI SQL text (for DuckDB oracles) —
     generated by the same loop so the two renderings cannot drift."""
-    h = f"(CAST(ascii(substring({g}, 1, 1)) AS BIGINT) % {m})"
+    h = f"(CAST(ascii(substring({g}, 1, 1)) AS BIGINT) % {MERSENNE31})"
     for j in range(2, k + 1):
-        h = f"(({h} * {p} + CAST(ascii(substring({g}, {j}, 1)) AS BIGINT)) % {m})"
+        h = (
+            f"(({h} * {POLY_P} + CAST(ascii(substring({g}, {j}, 1)) AS BIGINT))"
+            f" % {MERSENNE31})"
+        )
     return h
 
 
@@ -148,17 +151,15 @@ def shingles_exploded(
     id_col: str,
     text_col: str,
     k: int,
-    extra_cols: tuple[str, ...] = (),
     gram_hash=None,
     distinct: bool = True,
     keep_pos: bool = False,
 ) -> DataFrame:
     """Distinct (doc, k-gram-hash) pairs as a tall narrow relation —
-    the shared foundation of every dedup variant: (_id, _len, _h,
-    *extra_cols). Shingling is a scalar substring over an exploded
-    position sequence and a hash (all codegen); the distinct is a
-    partial-aggregated groupBy. ``extra_cols`` must be functionally
-    dependent on the id (they ride along in the distinct key).
+    the shared foundation of every dedup variant: (_id, _len, _h).
+    Shingling is a scalar substring over an exploded position sequence
+    and a hash (all codegen); the distinct is a partial-aggregated
+    groupBy.
 
     ``gram_hash``: optional Column -> Column hash of the k-gram string.
     The DEFAULT (None, or a ``poly_gram_hasher60`` hasher) is the
@@ -203,11 +204,10 @@ def shingles_exploded(
             F.col(id_col).alias("_id"),
             F.col(text_col).alias("_t"),
             F.length(F.col(text_col)).alias("_len"),
-            *[F.col(c) for c in extra_cols],
         ).filter(F.length("_t") >= k)
 
         # distinct=True folds the (doc, hash) DISTINCT into the UDF:
-        # _len/extra_cols are functionally dependent on _id, so the
+        # _len is functionally dependent on _id, so the
         # relation-level distinct equals a per-document np.unique of
         # the hash array — the second shuffle (|corpus shingles| rows
         # hashed on every output column) disappears along with the
@@ -255,21 +255,19 @@ def shingles_exploded(
             if keep_pos
             else F.explode(_gram60(F.col("_t"))).alias("_h")
         )
-        return t.select("_id", "_len", *extra_cols, gram_col).select(
-            "_id", "_len", *extra_cols, *pos_cols, "_h"
+        return t.select("_id", "_len", gram_col).select(
+            "_id", "_len", *pos_cols, "_h"
         )
 
     t = df.select(
         F.col(id_col).alias("_id"),
         F.col(text_col).alias("_t"),
         F.length(F.col(text_col)).alias("_len"),
-        *[F.col(c) for c in extra_cols],
     ).filter(F.length("_t") >= k)
     out = (
         t.select(
             "_id",
             "_len",
-            *extra_cols,
             F.explode(F.sequence(F.lit(1), F.col("_len") - (k - 1))).alias("_p"),
             "_t",
         )
@@ -280,12 +278,12 @@ def shingles_exploded(
         # (~40% slower end-to-end; Catalyst keeps the split because it
         # does not duplicate expensive multiply-referenced expressions)
         .select(
-            "_id", "_len", *extra_cols,
+            "_id", "_len",
             # normalize to the fast path's 0-based gram position
             *((F.col("_p") - 1).alias("_p"),) if keep_pos else (),
             F.expr(f"substring(_t, _p, {k})").alias("_g"),
         )
-        .select("_id", "_len", *extra_cols, *pos_cols, gram_hash(F.col("_g")).alias("_h"))
+        .select("_id", "_len", *pos_cols, gram_hash(F.col("_g")).alias("_h"))
     )
     return out.distinct() if distinct else out
 
@@ -367,13 +365,11 @@ def ngram_jaccard_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    block_cols: tuple[str, ...] = (),
     length_block: int | None = None,
     shingle_k: int = 5,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs (id_a < id_b, jaccard >= threshold),
-    optionally restricted to equal ``block_cols`` and
-    |len_a - len_b| <= ``length_block``.
+    optionally restricted to |len_a - len_b| <= ``length_block``.
 
     The (doc, shingle-hash) relation is localCheckpointed: THREE
     consumers read it (document frequency, the ranked prefix join,
@@ -402,7 +398,7 @@ def ngram_jaccard_pairs(
 
     Both filters are exact-recall; all join keys are 8-byte hashes.
     """
-    sh = shingles_exploded(df, id_col, text_col, shingle_k, extra_cols=block_cols)
+    sh = shingles_exploded(df, id_col, text_col, shingle_k)
     if _materialize_enabled():
         # LAZY (r11): the first consuming stage materializes the
         # shingle pass; concurrent consumers dedupe via block locks.
@@ -423,7 +419,7 @@ def ngram_jaccard_pairs(
     )
     prefix_len = F.col("_n") - F.ceil(F.lit(threshold) * F.col("_n")) + 1
     pre = ranked.filter(F.col("_rn") <= prefix_len).select(
-        "_h", "_id", "_len", "_n", "_rn", *block_cols
+        "_h", "_id", "_len", "_n", "_rn"
     )
 
     a, b = pre.alias("a"), pre.alias("b")
@@ -450,8 +446,6 @@ def ngram_jaccard_pairs(
         & (overlap_bound >= min_overlap)
         & size_ok
     )
-    for c in block_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
     if length_block is not None:
         cond = cond & (F.abs(F.col("a._len") - F.col("b._len")) <= length_block)
     cand = (
@@ -462,40 +456,44 @@ def ngram_jaccard_pairs(
     return _verify_pairs(cand, sh, threshold)
 
 
-def _minhash_coeffs(num_hashes: int, seed: int = 0x5EED) -> list[tuple[int, int]]:
+def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     """Deterministic universal-hash coefficients (a, b) in [1, p) x
     [0, p) for the mod-(2^31-1) Carter-Wegman family."""
-    rng = random.Random(seed)
+    rng = random.Random(0x5EED)
     return [
         (rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31))
         for _ in range(num_hashes)
     ]
 
 
-def banded_minhash(
-    sh: DataFrame, num_hashes: int = 32, bands: int = 8
-) -> DataFrame:
+# MinHash signature width and LSH band count (4 rows per band).
+MINHASH_HASHES = 64
+MINHASH_BANDS = 16
+
+
+def banded_minhash(sh: DataFrame) -> DataFrame:
     """(_id, _sig array<bigint>, _band struct<band_id, band_hash>)
-    from the exploded-shingle relation: the k-lane min aggregate over
+    from the exploded-shingle relation: the MINHASH_HASHES-lane min
+    aggregate over
     Carter-Wegman re-hashes of the portable shingle hash, banded for
     LSH. Shared by the one-shot pair finder (minhash_lsh_pairs) and
     the incremental corpus dedup (operators/incremental_dedup), so
     both produce bit-identical signatures for the same text — the
     property that lets a batch be compared against signatures
     persisted by earlier batches."""
-    rows = num_hashes // bands
+    rows = MINHASH_HASHES // MINHASH_BANDS
     h = sh.select("_id", F.pmod(F.col("_h"), F.lit(MERSENNE31)).alias("_hp"))
     sig = h.groupBy("_id").agg(
         *[
             F.min((F.lit(a) * F.col("_hp") + F.lit(b)) % F.lit(MERSENNE31)).alias(
                 f"_m{i}"
             )
-            for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+            for i, (a, b) in enumerate(_minhash_coeffs(MINHASH_HASHES))
         ]
     )
     return sig.select(
         "_id",
-        F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("_sig"),
+        F.array(*[F.col(f"_m{i}") for i in range(MINHASH_HASHES)]).alias("_sig"),
         F.explode(
             F.array(
                 *[
@@ -505,7 +503,7 @@ def banded_minhash(
                             *[F.col(f"_m{bi * rows + r}") for r in range(rows)]
                         ).alias("band_hash"),
                     )
-                    for bi in range(bands)
+                    for bi in range(MINHASH_BANDS)
                 ]
             )
         ).alias("_band"),
@@ -517,17 +515,15 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     threshold: float,
-    num_hashes: int = 32,
-    bands: int = 8,
     shingle_k: int = 5,
 ) -> DataFrame:
     """MinHash + LSH banding + exact-Jaccard verification.
 
-    With k=32, b=8 (r=4): P(candidate | j) = 1-(1-j^4)^8 — ~1.0 at
-    j=0.9, ~0.06 at j=0.3, so candidates are few and verification
-    exact. Returns (id_a, id_b, jaccard >= threshold), same contract
-    as ngram_jaccard_pairs but probabilistic recall (miss probability
-    ~1e-9 at j>=0.9 for k=64/b=16).
+    With k=64, b=16 (r=4): P(candidate | j) = 1-(1-j^4)^16 — ~1.0 at
+    j=0.9 (miss probability ~4e-8), ~0.12 at j=0.3, so candidates are
+    few and verification exact. Returns (id_a, id_b, jaccard >=
+    threshold), same contract as ngram_jaccard_pairs but probabilistic
+    recall.
 
     The signature is k simultaneous MIN aggregates over per-shingle
     affine re-hashes of ONE portable 60-bit hash per shingle — scalar
@@ -548,7 +544,7 @@ def minhash_lsh_pairs(
         # recompute-vs-store trade as ngram_jaccard_pairs; LAZY (r11)
         # so the signature stage materializes it (no separate job)
         sh = sh.localCheckpoint(eager=False)
-    banded = banded_minhash(sh, num_hashes, bands)
+    banded = banded_minhash(sh)
     est = (
         F.size(
             F.filter(
@@ -556,7 +552,7 @@ def minhash_lsh_pairs(
                 lambda eq: eq,
             )
         ).cast("double")
-        / num_hashes
+        / MINHASH_HASHES
     )
     cand = (
         _bucket_pairs(banded, F.struct(F.col("_id"), F.col("_sig")))
@@ -699,21 +695,24 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
+# simhash_pairs' band count; pairs within Hamming SIMHASH_BANDS - 1 are kept.
+SIMHASH_BANDS = 4
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    max_hamming: int = 3,
     shingle_k: int = 5,
     bits: int = 64,
-    bands: int = 4,
     gram_hash=None,
 ) -> DataFrame:
-    """SimHash near-dup pairs with banded blocking: ``bands`` bands of
-    ``bits // bands`` bits; by pigeonhole any pair within Hamming
-    distance ``bands - 1`` shares at least one exact band, so the
-    blocked join loses nothing for ``max_hamming <= bands - 1``; the
-    Hamming filter then prunes collisions. The sketch replaces the
+    """SimHash near-dup pairs (Hamming distance <= SIMHASH_BANDS - 1 = 3)
+    with banded blocking: SIMHASH_BANDS bands of ``bits //
+    SIMHASH_BANDS`` bits; by pigeonhole any pair within Hamming
+    distance SIMHASH_BANDS - 1 shares at least one exact band, so the
+    blocked join loses nothing; the Hamming filter then prunes
+    collisions. The sketch replaces the
     document entirely — every post-sketch row is ~24 bytes.
 
     Votes are FREQUENCY-WEIGHTED (gram multiset, the classic Charikar
@@ -727,13 +726,11 @@ def simhash_pairs(
     gets 64 genuinely-informative hash bits — a 60-bit hash under a
     64-bit sketch would fix 4 sketch bits at 0, silently loosening
     every Hamming distance by up to 4."""
-    # explicit raises, not asserts: these guard the LOSSLESS-banding
+    # explicit raise, not assert: this guards the LOSSLESS-banding
     # correctness contract and must survive `python -O`
-    if bits % bands != 0:
+    if bits % SIMHASH_BANDS != 0:
         raise ValueError("bits must divide evenly into bands")
-    if max_hamming > bands - 1:
-        raise ValueError("banding is only lossless for d <= bands-1")
-    width = bits // bands
+    width = bits // SIMHASH_BANDS
     mask = (1 << width) - 1
     sk = simhash_sketch(
         shingles_exploded(
@@ -761,7 +758,7 @@ def simhash_pairs(
                         .bitwiseAND(F.lit(mask))
                         .alias("band_val"),
                     )
-                    for i in range(bands)
+                    for i in range(SIMHASH_BANDS)
                 ]
             )
         ).alias("_band"),
@@ -774,17 +771,11 @@ def simhash_pairs(
             hamming64(F.col("_a._sim"), F.col("_b._sim")).alias("hamming"),
         )
         .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_BANDS - 1)
     )
 
 
-def duplicated_spans(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    min_count: int = 2,
-) -> DataFrame:
+def duplicated_spans(df: DataFrame, k: int = 8, min_count: int = 2) -> DataFrame:
     """Maximal duplicated token spans (suffix-array-style substring
     dedup, approximated at k-token granularity): every maximal
     contiguous run of whitespace tokens in which every TOKEN is
@@ -819,11 +810,11 @@ def duplicated_spans(
     partitions are bounded by document length, never corpus size, so
     stage 3 cannot skew.
 
-    Returns (id_col, span_start, span_end, span_tokens) — token
+    Input (doc_id, text); returns (doc_id, span_start, span_end, span_tokens) — token
     indices, 0-based, end-inclusive; all BIGINT.
     """
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda t: t != "")
-    base = df.select(F.col(id_col).alias("_id"), toks.alias("_t")).where(
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != "")
+    base = df.select(F.col("doc_id").alias("_id"), toks.alias("_t")).where(
         F.size("_t") >= k
     )
     grams = base.select(
@@ -856,4 +847,4 @@ def duplicated_spans(
         (F.max("_pos") + F.lit(k) - F.min("_pos")).cast("bigint").alias(
             "span_tokens"
         ),
-    ).select(F.col("_id").alias(id_col), "span_start", "span_end", "span_tokens")
+    ).select(F.col("_id").alias("doc_id"), "span_start", "span_end", "span_tokens")

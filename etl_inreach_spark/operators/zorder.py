@@ -80,13 +80,13 @@ def minmax_bucket(col: Column, lo: Column, hi: Column, bits: int = 16) -> Column
     ).cast("bigint")
 
 
-def with_zvalue(
-    df: DataFrame,
-    cols: Sequence[str],
-    bits: int = 16,
-    z_col: str = "_zvalue",
-) -> DataFrame:
-    """Append the Morton code of ``cols`` as ``z_col``: one 1-row
+# Bits per column of with_zvalue's Morton code.
+ZORDER_BITS = 16
+
+
+def with_zvalue(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Append the ZORDER_BITS-per-column Morton code of ``cols`` as
+    ``_zvalue``: one 1-row
     aggregate (broadcast) for the global min-max bounds, then pure
     scalar bit arithmetic — no shuffle of ``df`` itself."""
     bounds = df.agg(
@@ -97,13 +97,13 @@ def with_zvalue(
     z = zvalue(
         [
             minmax_bucket(
-                F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits
+                F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), ZORDER_BITS
             )
             for c in cols
         ],
-        bits,
+        ZORDER_BITS,
     )
-    return b.withColumn(z_col, z).drop(
+    return b.withColumn("_zvalue", z).drop(
         *[f"_lo_{c}" for c in cols], *[f"_hi_{c}" for c in cols]
     )
 
@@ -111,28 +111,26 @@ def with_zvalue(
 def zorder_repartition(
     df: DataFrame,
     cols: Sequence[str],
-    bits: int = 16,
     num_partitions: int | None = None,
-    z_col: str = "_zvalue",
 ) -> DataFrame:
     """``df`` range-partitioned by the Morton code of ``cols`` (the
     OPTIMIZE ZORDER layout pass, minus the file writer). Appends the
-    code as ``z_col`` so callers can sortWithinPartitions / write and
+    code as ``_zvalue`` so callers can sortWithinPartitions / write and
     tests can audit locality. One 1-row aggregate (broadcast) for the
     min-max bounds + one range shuffle; no other passes. Sampled
     range boundaries -> evenly SIZED partitions (what you want for
     shuffle/compute); ``write_zordered`` snaps boundaries to the
     z-grid instead (what you want for tight file zonemaps)."""
-    b = with_zvalue(df, cols, bits, z_col)
+    b = with_zvalue(df, cols)
     if num_partitions:
-        return b.repartitionByRange(num_partitions, F.col(z_col))
-    return b.repartitionByRange(F.col(z_col))
+        return b.repartitionByRange(num_partitions, F.col("_zvalue"))
+    return b.repartitionByRange(F.col("_zvalue"))
+
 
 def write_zordered(
     df: DataFrame,
     path: str,
     cols: Sequence[str],
-    bits: int = 16,
     num_files: int = 16,
 ) -> None:
     """Write ``df`` as parquet laid out by the Morton code of
@@ -155,8 +153,8 @@ def write_zordered(
     scaling down with file count. num_files is rounded down to a
     power of two; empty cells write no file."""
     k = max(1, (num_files).bit_length() - 1)  # floor(log2)
-    total = bits * len(cols)
-    z = with_zvalue(df, cols, bits=bits)
+    total = ZORDER_BITS * len(cols)
+    z = with_zvalue(df, cols)
     zq = F.shiftright(F.col("_zvalue"), total - k)
     (
         z.withColumn("_zcell", zq)
@@ -268,15 +266,14 @@ def hilbert_lookup(spark, bits: int = 8) -> DataFrame:
     return spark.createDataFrame(rows, "_hx bigint, _hy bigint, _hvalue bigint")
 
 
-def with_hilbert(
-    df: DataFrame,
-    cols: Sequence[str],
-    bits: int = 8,
-    h_col: str = "_hvalue",
-) -> DataFrame:
-    """Append the 2-D Hilbert code of ``cols`` as ``h_col``: one 1-row
+# with_hilbert's grid: 2^8 x 2^8 cells.
+HILBERT_BITS = 8
+
+
+def with_hilbert(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """Append the 2-D Hilbert code of ``cols`` as ``_hvalue``: one 1-row
     bounds aggregate (broadcast), min-max bucketize both columns to
-    the 2^bits grid, then broadcast-hash-join the driver-built
+    the 2^HILBERT_BITS grid, then broadcast-hash-join the driver-built
     (bx, by) -> code lookup — no UDF, no shuffle of ``df`` itself.
     The Hilbert layout key, exposed for querying and oracle replay (a
     DuckDB recursive CTE runs the same 8-level rotation recurrence per
@@ -291,10 +288,10 @@ def with_hilbert(
     )
     b = df.crossJoin(F.broadcast(bounds))
     bx, by = (
-        minmax_bucket(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), bits)
+        minmax_bucket(F.col(c), F.col(f"_lo_{c}"), F.col(f"_hi_{c}"), HILBERT_BITS)
         for c in cols
     )
-    lut = hilbert_lookup(spark, bits).withColumnRenamed("_hvalue", h_col)
+    lut = hilbert_lookup(spark, HILBERT_BITS)
     return (
         b.withColumn("_hx", bx)
         .withColumn("_hy", by)

@@ -1492,11 +1492,11 @@ def cms_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _drev(price="l_extendedprice", disc="l_discount"):
+def _drev():
     """Decimal-fold TPC-H revenue term extprice*(1-discount) — exact
     and order-insensitive on both engines (SURVEY §7 hard-parts #4)."""
-    return F.col(price).cast("decimal(18,4)") * (
-        F.lit(1) - F.col(disc).cast("decimal(18,4)")
+    return F.col("l_extendedprice").cast("decimal(18,4)") * (
+        F.lit(1) - F.col("l_discount").cast("decimal(18,4)")
     )
 
 

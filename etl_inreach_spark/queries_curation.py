@@ -775,7 +775,7 @@ def dup_span_maximal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.text_dedup import duplicated_spans
 
     d = load_table(spark, sf_dir, "documents")
-    return duplicated_spans(d, "doc_id", "text", k=_SPAN_K, min_count=2)
+    return duplicated_spans(d, k=_SPAN_K, min_count=2)
 
 
 def temperature_resample(d: DataFrame) -> DataFrame:

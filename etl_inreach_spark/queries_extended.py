@@ -231,7 +231,7 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
-        d, "doc_id", "text", 0.8, num_hashes=64, bands=16, shingle_k=9
+        d, "doc_id", "text", 0.8, shingle_k=9
     )
 
 
@@ -285,7 +285,7 @@ def minhash_after_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     surv = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     docs = d.select("doc_id", "text").join(surv.select("doc_id"), "doc_id")
     return minhash_lsh_pairs(
-        docs, "doc_id", "text", 0.8, num_hashes=64, bands=16, shingle_k=9
+        docs, "doc_id", "text", 0.8, shingle_k=9
     )
 
 
@@ -348,10 +348,8 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         d,
         "doc_id",
         "text",
-        max_hamming=3,
         shingle_k=9,
         bits=60,
-        bands=4,
         gram_hash=poly_gram_hasher60(9),
     ).withColumn("hamming", F.col("hamming").cast("bigint"))
 
@@ -514,7 +512,7 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.similarity import cosine_pairs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_pairs_exact(emb, 0.4, num_blocks=8)
+    return cosine_pairs_exact(emb, 0.4)
 
 
 def _ann_ivf_oracle() -> str:
@@ -576,7 +574,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.similarity import ivf_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_portable(emb, emb.filter(F.col("vec_id") < 8), 5, nlist=16, nprobe=4)
+    return ivf_topk_portable(emb, emb.filter(F.col("vec_id") < 8), 5, nprobe=4)
 
 
 def _ivf_pq_oracle() -> str:
@@ -765,7 +763,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.encode(F.col("text"), "UTF-8"),
         ).alias("media"),
     )
-    return sample_frames(with_media, frame_bytes=32, stride=2)
+    return sample_frames(with_media)
 
 
 @query(
@@ -874,7 +872,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.8, length_block=32, shingle_k=9)
-    comp = connected_components(pairs, "id_a", "id_b")
+    comp = connected_components(pairs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "component").select(
         F.col("id").alias("doc_id"), "component", "cluster_size"
@@ -900,7 +898,7 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.8, length_block=32, shingle_k=9)
-    comp = connected_components_star(pairs, "id_a", "id_b")
+    comp = connected_components_star(pairs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "component").select(
         F.col("id").alias("doc_id"), "component", "cluster_size"
@@ -1002,7 +1000,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = cooccurrence_edges(m, "l_partkey", ("l_orderkey",)).localCheckpoint(
         eager=True
     )
-    return triangle_counts(edges, node_alias="part_id", orient_by_degree=True)
+    return triangle_counts(edges, node_alias="part_id")
 
 
 @query(
@@ -1710,15 +1708,15 @@ def kmv_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_set_estimates(sa, sb, _KMVO_K)
 
 
-# Morton interleave rendered as ANSI SQL: bucket column j of n
-# contributes bit i at output position i*n + j (must mirror
-# operators/zorder.zvalue exactly).
-def _zorder_sql_terms(bucket_exprs: "list[str]", bits: int = 16) -> str:
+# Morton interleave rendered as ANSI SQL: bit i (of 16) of bucket
+# column j of n lands at output position i*n + j (must mirror
+# operators/zorder.zvalue at ZORDER_BITS = 16 exactly).
+def _zorder_sql_terms(bucket_exprs: "list[str]") -> str:
     n = len(bucket_exprs)
     terms = [
         f"((({b} >> {i}) & 1) << {i * n + j})"
         for j, b in enumerate(bucket_exprs)
-        for i in range(bits)
+        for i in range(16)
     ]
     return " + ".join(terms)
 
@@ -1772,7 +1770,7 @@ def zorder_locality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_orderdate").cast("bigint").alias("o_secs"),
     )
-    z = zorder_repartition(o, ["o_custkey", "o_secs"], bits=16)
+    z = zorder_repartition(o, ["o_custkey", "o_secs"])
     return z.select("o_orderkey", F.col("_zvalue").alias("zkey"))
 
 
@@ -2268,7 +2266,7 @@ def hilbert_key_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_orderdate").cast("bigint").alias("o_secs"),
     )
-    return with_hilbert(o, ["o_custkey", "o_secs"], bits=8).select(
+    return with_hilbert(o, ["o_custkey", "o_secs"]).select(
         "o_orderkey", F.col("_hvalue").alias("hkey")
     )
 
@@ -2397,7 +2395,7 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qq = [int(_math.floor(float(x) * 1048576.0 + 0.5)) for x in qvec]
     qlit = F.from_json(F.lit(_json.dumps(qq)), "array<bigint>")
     dot = F.aggregate(
-        F.zip_with(quantize_vectors(e, "embedding", 20), qlit, lambda a, b: a * b),
+        F.zip_with(quantize_vectors(e, 20), qlit, lambda a, b: a * b),
         F.lit(0).cast("bigint"),
         lambda acc, x: acc + x,
     )
@@ -2425,12 +2423,12 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pagerank_oracle(iters: int = 3, scale: int = 1 << 20) -> str:
+def _pagerank_oracle() -> str:
     """Unrolled integer-PageRank oracle (the kmeans_cluster_sizes
     pattern: the DuckDB CTE chain replays every fixed-point iteration
     bit-for-bit; `//` == Spark `div` because all operands are
     non-negative)."""
-    head = f"""
+    head = """
     WITH m AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ), e AS (
@@ -2444,12 +2442,12 @@ def _pagerank_oracle(iters: int = 3, scale: int = 1 << 20) -> str:
     ), n AS (
         SELECT CAST(COUNT(*) AS BIGINT) AS n FROM deg
     ), r0 AS (
-        SELECT d.u, CAST({scale} AS BIGINT) // n.n AS rank FROM deg d, n
+        SELECT d.u, CAST(1048576 AS BIGINT) // n.n AS rank FROM deg d, n
     )"""
     steps = "".join(
         f""", r{i + 1} AS (
         SELECT s.v AS u,
-               CAST((CAST(3 AS BIGINT) * {scale}) // (20 * n.n)
+               CAST((CAST(3 AS BIGINT) * 1048576) // (20 * n.n)
                     + (17 * SUM(r.rank // d.deg)) // 20 AS BIGINT) AS rank
         FROM sym s
         JOIN r{i} r ON r.u = s.u
@@ -2457,12 +2455,12 @@ def _pagerank_oracle(iters: int = 3, scale: int = 1 << 20) -> str:
         CROSS JOIN n
         GROUP BY s.v, n.n
     )"""
-        for i in range(iters)
+        for i in range(3)
     )
-    return head + steps + f"\n    SELECT u AS part_id, CAST(rank AS BIGINT) AS rank_scaled FROM r{iters}"
+    return head + steps + "\n    SELECT u AS part_id, CAST(rank AS BIGINT) AS rank_scaled FROM r3"
 
 
-@query("pagerank3_copurchase", oracle=_pagerank_oracle(3))
+@query("pagerank3_copurchase", oracle=_pagerank_oracle())
 def pagerank3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Damped PageRank (d = 17/20) after 3 power iterations on the
     part co-purchase graph, in exact fixed-point integer arithmetic —

@@ -218,9 +218,6 @@ def incremental_dedup_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
             batch,
             state,
             batch_id=f"b{k}",
-            threshold=0.8,
-            num_hashes=64,
-            bands=16,
             shingle_k=9,
         )
         parts.append(lab.withColumn("batch", F.lit(k)))

@@ -345,7 +345,7 @@ def time_window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.relational import filter_recent
 
     ev = load_table(spark, sf_dir, "events")
-    return filter_recent(ev, "ts", "30 minutes").select(
+    return filter_recent(ev, "ts").select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 

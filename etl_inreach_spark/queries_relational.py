@@ -20,9 +20,10 @@ from etl_inreach_spark.queries import query
 from etl_inreach_spark.session import tune
 
 
-def dsum(col, prec: str = "decimal(18,4)"):
+def dsum(col):
     """Exact order-insensitive sum: decimal accumulate, double out."""
-    return F.sum(F.col(col).cast(prec) if isinstance(col, str) else col.cast(prec)).cast("double")
+    c = F.col(col) if isinstance(col, str) else col
+    return F.sum(c.cast("decimal(18,4)")).cast("double")
 
 
 @query(
@@ -781,7 +782,7 @@ def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune(spark)
     from etl_inreach_spark.catalog import register_views
 
-    register_views(spark, sf_dir, ("orders", "customer", "nation"))
+    register_views(spark, sf_dir)
     return spark.sql(_ANSI_REVENUE_SQL)
 
 

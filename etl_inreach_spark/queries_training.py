@@ -194,9 +194,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "text",
         bench_pred=F.pmod(F.col("doc_id"), F.lit(50)) == 0,
-        shingle_k=9,
         gram_hash=poly_gram_hasher60(9),
-        flag_threshold=0.5,
     )
 
 
@@ -250,8 +248,8 @@ def repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BPE_MERGES = 8  # unrolled oracle rounds (kmeans-oracle precedent)
 
 
-def _bpe_oracle(n: int = _BPE_MERGES) -> str:
-    """DuckDB replay of bpe_train's first ``n`` merge rounds
+def _bpe_oracle() -> str:
+    """DuckDB replay of bpe_train's first _BPE_MERGES merge rounds
     (operators/bpe.py), unrolled one CTE pair per round.
 
     The only non-trivial translation is merge APPLICATION. Spark runs
@@ -271,10 +269,11 @@ def _bpe_oracle(n: int = _BPE_MERGES) -> str:
     back into symbols and zips adjacent slices, exactly the Spark
     side's zip_with; ties break on (pa, pb) binary string order in
     both engines."""
-    return "WITH " + ",".join(_bpe_round_ctes(n)) + "\n    " + " UNION ALL ".join(
+    ctes = ",".join(_bpe_round_ctes(_BPE_MERGES))
+    return "WITH " + ctes + "\n    " + " UNION ALL ".join(
         f"SELECT {r} AS rank, pa AS \"left\", pb AS \"right\", "
         f"c AS weighted_count FROM b{r}"
-        for r in range(n)
+        for r in range(_BPE_MERGES)
     )
 
 
@@ -344,14 +343,14 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     is scanned once for the weighted word vocabulary; every round
     after that touches only the Heaps-law-bounded vocab relation,
     with ONE 1-row driver collect per round — the scale shape that
-    makes the trainer viable at 100 TB. min_pair_count=2 cannot bind
+    makes the trainer viable at 100 TB. MIN_PAIR_COUNT = 2 cannot bind
     at these SFs (top-8 pair counts are thousands), so the unrolled
     oracle always yields exactly 8 rows."""
     tune(spark)
     from etl_inreach_spark.operators.bpe import bpe_merges_df, bpe_train
 
     d = load_table(spark, sf_dir, "documents")
-    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES, min_pair_count=2)
+    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES)
     return bpe_merges_df(spark, merges).select(
         "rank",
         "left",
@@ -360,20 +359,20 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bpe_segment_oracle(n: int = _BPE_MERGES) -> str:
-    """Inference-half oracle: the final merged vocab v{n} from the
-    SAME round chain is exactly the word -> subwords dictionary
+def _bpe_segment_oracle() -> str:
+    """Inference-half oracle: the final merged vocab (the CTE after
+    _BPE_MERGES rounds) from the SAME round chain is exactly the word -> subwords dictionary
     (training applies merges cumulatively; bpe_segment replays them in
     rank order per word — pinned equal in tests/test_bpe.py), so
     segmentation = tokenize each document in order, look every token
-    up in v{n}, and splice the sub-symbol lists back together."""
+    up in that vocab, and splice the sub-symbol lists back together."""
     t = "chr(9)"
-    ctes = ",".join(_bpe_round_ctes(n))
+    ctes = ",".join(_bpe_round_ctes(_BPE_MERGES))
     return f"""WITH {ctes},
     dict AS MATERIALIZED (
         SELECT word,
                string_split(substr(s, 2, length(s) - 2), {t} || {t}) AS subs
-        FROM v{n}
+        FROM v{_BPE_MERGES}
     ), toks AS (
         SELECT doc_id, tl[i] AS word, i
         FROM (
@@ -416,7 +415,7 @@ def bpe_segment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.bpe import bpe_segment, bpe_train
 
     d = load_table(spark, sf_dir, "documents")
-    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES, min_pair_count=2)
+    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES)
     seg = bpe_segment(d, "text", merges, id_col="doc_id")
     return seg.select(
         "doc_id",

@@ -62,10 +62,9 @@ def bucketed_equijoin(
     left_table: str,
     right_table: str,
     keys: Sequence[str],
-    how: str = "inner",
 ) -> DataFrame:
     """Join two co-bucketed catalog tables on their bucket keys. The
     plan this produces is the point: with both tables bucketed to the
     same count on ``keys``, the executed plan contains no
     ShuffleExchange (asserted in tests/test_bucketed.py)."""
-    return spark.table(left_table).join(spark.table(right_table), list(keys), how)
+    return spark.table(left_table).join(spark.table(right_table), list(keys))

@@ -26,7 +26,7 @@ def _drop_null_fields(c: Column) -> Column:
     return F.to_json(c, {"ignoreNullFields": "true"})
 
 
-def features_to_json(features: DataFrame, id_col: str = "id") -> DataFrame:
+def features_to_json(features: DataFrame) -> DataFrame:
     """Flat silver feature rows -> (id, feature_json string).
 
     Mirrors the reference's Feature shape (task.ts:115-149): properties
@@ -48,7 +48,7 @@ def features_to_json(features: DataFrame, id_col: str = "id") -> DataFrame:
         F.struct(
             # the self-link uid is the FEATURE's own id ('inreach-<IMEI>',
             # task.ts:114,125: `uid: id`), not the inReach message id
-            F.col(id_col).alias("uid"),
+            F.col("id").alias("uid"),
             F.lit("r-u").alias("relation"),
             F.lit("text/html").alias("mime"),
             F.col("link_url").alias("url"),
@@ -65,11 +65,11 @@ def features_to_json(features: DataFrame, id_col: str = "id") -> DataFrame:
         metadata.alias("metadata"),
     )
     feature = feature_struct(
-        F.col(id_col),
+        F.col("id"),
         properties,
-        point_geometry(F.col("lon"), F.col("lat"), F.col("alt"), F.col("n_coords")),
+        point_geometry(F.col("lon"), F.col("lat")),
     )
-    return features.select(F.col(id_col), _drop_null_fields(feature).alias("feature_json"))
+    return features.select(F.col("id"), _drop_null_fields(feature).alias("feature_json"))
 
 
 def post_feature_collections(

@@ -58,11 +58,10 @@ def read_binary_media(
     glob: str | None = None,
     recursive: bool = False,
     max_bytes: int | None = None,
-    media_col: str = "media",
 ) -> DataFrame:
     """Load a directory of media blobs as
     ``(doc_id bigint, path string, length bigint, modified timestamp,
-    <media_col> MEDIA_SCHEMA)``.
+    media MEDIA_SCHEMA)``.
 
     ``doc_id`` is ``xxhash64(path)`` — stable across re-ingests and
     partitionings, joinable against downstream feature/embedding
@@ -96,5 +95,5 @@ def read_binary_media(
         "path",
         "length",
         F.col("modificationTime").alias("modified"),
-        media_struct(F.col("path"), mime, F.col("content"), meta).alias(media_col),
+        media_struct(F.col("path"), mime, F.col("content"), meta).alias("media"),
     )

@@ -73,7 +73,6 @@ def fetch_one(
     base: str,
     password: str | None,
     d1_iso: str | None,
-    timeout_s: float = 30.0,
 ) -> tuple[str, str | None, str | None, str]:
     """Fetch a single share feed. Never raises — errors come back as
     data (feed-granular isolation). Logs one line per request and per
@@ -92,7 +91,7 @@ def fetch_one(
         req.add_header("Authorization", f"Basic {token}")
     now = datetime.now(timezone.utc).isoformat()
     try:
-        with urllib.request.urlopen(req, timeout=timeout_s) as resp:
+        with urllib.request.urlopen(req, timeout=30.0) as resp:
             return share_id, resp.read().decode("utf-8", errors="replace"), None, now
     except Exception as e:  # noqa: BLE001 — isolation is the contract
         log.warning("feed %s failed: %s", share_id, e)

@@ -51,22 +51,6 @@ KML_SCHEMA = (
     ">>>>>>"
 )
 
-# ExtendedData keys the reference projects (task.ts:114-141).
-EXTENDED_KEYS = (
-    "Id",
-    "Name",
-    "Device Type",
-    "IMEI",
-    "Incident Id",
-    "Valid GPS Fix",
-    "Text",
-    "Event",
-    "Device Identifier",
-    "Course",
-    "Velocity",
-)
-
-
 def parse_kml(body: Column) -> Column:
     """XML text -> nested KML struct; NULL on malformed input."""
     return F.from_xml(body, KML_SCHEMA)
@@ -158,14 +142,10 @@ def placemark_feed_error(placemarks_arr: Column) -> Column:
     return F.coalesce(F.exists(placemarks_arr, throws), F.lit(False))
 
 
-def kml_to_placemarks(
-    feeds: DataFrame,
-    body_col: str = "body",
-    keep_cols: tuple[str, ...] = ("share_id",),
-) -> DataFrame:
+def kml_to_placemarks(feeds: DataFrame) -> DataFrame:
     """(share_id, body) -> one row per placemark.
 
-    Output: keep_cols + arrival_idx (document order within the feed —
+    Output: share_id + arrival_idx (document order within the feed —
     required for the dedup tie-break, SURVEY.md §2.3.1),
     point_coordinates, timestamp_when, extended map.
 
@@ -195,7 +175,7 @@ def kml_to_placemarks(
     pipeline where a per-feed window verdict would be unsupported.
     Pinned by tests/test_kml_pipeline.py::test_single_xml_parse_in_plan.
     """
-    nonempty = feeds.filter(F.trim(F.col(body_col)) != "")
+    nonempty = feeds.filter(F.trim(F.col("body")) != "")
 
     def validated_placemarks(kml: Column) -> Column:
         # first folder only (Document[0].Folder[0], task.ts:101);
@@ -206,9 +186,9 @@ def kml_to_placemarks(
         )
 
     staged = nonempty.select(
-        *[F.col(c) for c in keep_cols],
+        F.col("share_id"),
         F.element_at(
-            F.transform(F.array(parse_kml(F.col(body_col))), validated_placemarks),
+            F.transform(F.array(parse_kml(F.col("body"))), validated_placemarks),
             1,
         ).alias("_pms"),
     )
@@ -219,13 +199,13 @@ def kml_to_placemarks(
     # null-row filter below reads only GENERATED columns, so it cannot
     # be pushed past the parse.
     placemarks = staged.select(
-        *[F.col(c) for c in keep_cols],
+        F.col("share_id"),
         F.posexplode_outer(F.col("_pms")).alias("arrival_idx", "_pm"),
     ).filter(F.col("arrival_idx").isNotNull())
     return placemarks.select(
-        *[F.col(c) for c in keep_cols],
+        F.col("share_id"),
         F.col("arrival_idx").cast("long").alias("arrival_idx"),
         F.col("_pm.Point.coordinates").alias("point_coordinates"),
         F.col("_pm.TimeStamp.when").alias("timestamp_when"),
-        eav_to_map(F.col("_pm.ExtendedData.Data"), "_name", "value").alias("extended"),
+        eav_to_map(F.col("_pm.ExtendedData.Data"), "_name").alias("extended"),
     )

@@ -62,7 +62,7 @@ def test_bpe_early_stop_and_tiny_corpus(spark):
     merges, vocab = bpe_train(df, "text", 50)
     # ('a','a') appears in aa(x3 words? aa,aa,aa? -> words: aa:3, ab:1, xy:1)
     # pair (a,a) weighted 3 wins round 0; after that the only adjacent
-    # pairs are (a,b) and (x,y) at count 1 < min_pair_count=2 -> stop.
+    # pairs are (a,b) and (x,y) at count 1 < MIN_PAIR_COUNT = 2 -> stop.
     assert merges == [(0, "a", "a", 3)]
     got = {r["word"]: list(r["syms"]) for r in vocab.collect()}
     assert got == {"aa": ["aa"], "ab": ["a", "b"], "xy": ["x", "y"]}

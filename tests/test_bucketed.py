@@ -7,7 +7,6 @@ from __future__ import annotations
 import contextlib
 import uuid
 
-import pytest
 from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table

@@ -22,7 +22,6 @@ import numpy as np
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_inreach_spark.operators.clustering import (

@@ -8,7 +8,6 @@ import re
 from collections import Counter
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 

@@ -9,8 +9,6 @@ from __future__ import annotations
 
 from datetime import datetime
 
-import pytest
-
 from etl_inreach_spark.queries import all_queries
 
 

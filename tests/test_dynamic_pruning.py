@@ -9,8 +9,6 @@ is caught."""
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table

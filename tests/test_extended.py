@@ -32,14 +32,14 @@ def test_planted_near_dups_exist(exact_pairs):
 def test_minhash_lsh_equals_exact_on_testdata(docs, exact_pairs):
     from etl_inreach_spark.operators.text_dedup import minhash_lsh_pairs
 
-    got = pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.8, num_hashes=64, bands=16))
+    got = pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.8))
     assert got == exact_pairs  # miss prob ~1e-9 at j>=0.9 on this data
 
 
 def test_simhash_finds_planted_dups(docs, exact_pairs):
     from etl_inreach_spark.operators.text_dedup import simhash_pairs
 
-    got = pairs(simhash_pairs(docs, "doc_id", "text", max_hamming=3))
+    got = pairs(simhash_pairs(docs, "doc_id", "text"))
     # SimHash(hamming<=3) is a different (stricter) measure; it must
     # still find a solid majority of the planted j>=0.8 pairs and
     # nothing outside them on this clean-gap corpus.
@@ -55,8 +55,8 @@ def test_simhash_portable_hash_variant(docs, exact_pairs):
 
     got = pairs(
         simhash_pairs(
-            docs, "doc_id", "text", max_hamming=3, shingle_k=9,
-            bits=60, bands=4, gram_hash=poly_gram_hasher60(9),
+            docs, "doc_id", "text", shingle_k=9,
+            bits=60, gram_hash=poly_gram_hasher60(9),
         )
     )
     assert len(got & exact_pairs) >= len(exact_pairs) * 0.5
@@ -97,13 +97,13 @@ def test_ann_portable_variants_recall(spark, sf_dir):
     assert len(lsh & exact) / len(exact) >= 0.2
     ivf = {
         (r["q_id"], r["vec_id"])
-        for r in ivf_topk_portable(emb, q, 5, nlist=16, nprobe=4).collect()
+        for r in ivf_topk_portable(emb, q, 5, nprobe=4).collect()
     }
     assert len(ivf & exact) / len(exact) >= 0.2
     # probing every cell must reproduce brute force exactly
     full = {
         (r["q_id"], r["vec_id"])
-        for r in ivf_topk_portable(emb, q, 5, nlist=16, nprobe=16).collect()
+        for r in ivf_topk_portable(emb, q, 5, nprobe=16).collect()
     }
     assert full == exact
 
@@ -191,7 +191,7 @@ def test_resize_stub_and_frame_sampler(spark):
             F.lit("mem://x"), F.lit("video/fake"), F.encode(F.col("payload"), "UTF-8")
         ).alias("media"),
     )
-    rows = sample_frames(media, frame_bytes=32, stride=2).collect()
+    rows = sample_frames(media).collect()
     got = {(r["doc_id"], r["frame_idx"]): (r["n_bytes"], r["checksum"]) for r in rows}
     # 70 bytes -> frames 0,1,2 -> stride 2 keeps 0 and 2
     assert set(got) == {(1, 0), (1, 2)}
@@ -430,8 +430,6 @@ def test_arrow_argmax_skips_empty_and_null_embeddings(spark):
     """NULL/empty embeddings have no argmax: the op must OMIT those
     rows (the oracle's unnest semantics), not crash np.argmax, and the
     row drop must not corrupt the vectorized path's slicing."""
-    import pandas as pd
-
     rows = [
         (1, [1.0, 5.0, 3.0]),
         (2, None),

@@ -5,7 +5,6 @@ schemas — no inference jobs, scan-ready at scale."""
 from __future__ import annotations
 
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from etl_inreach_spark.plans.inreach import inreach_pipeline
 from tests.test_kml_pipeline import GOOD_FEED

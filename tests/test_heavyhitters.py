@@ -9,7 +9,6 @@ from collections import Counter
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.heavyhitters import heavy_hitters

@@ -5,7 +5,6 @@ one-shot operator."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 BASE = (
@@ -102,7 +101,7 @@ def test_incremental_signatures_match_one_shot_operator(spark, tmp_path):
     lab = {
         r["doc_id"]: r
         for r in incremental_dedup(
-            spark, d, str(tmp_path / "s"), "b", threshold=0.8
+            spark, d, str(tmp_path / "s"), "b"
         ).collect()
     }
     assert lab[2]["dup_of"] == 1 and lab[4]["dup_of"] == 3
@@ -127,8 +126,6 @@ def test_incremental_dedup_as_streaming_foreachbatch(spark, tmp_path):
     (batch_id comes from the engine, so a replayed micro-batch cannot
     double-append state)."""
     import json
-    import os
-    import time
 
     from etl_inreach_spark.operators.incremental_dedup import incremental_dedup
 

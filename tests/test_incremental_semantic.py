@@ -176,8 +176,6 @@ def test_hot_history_cap_with_string_ids(spark, tmp_path):
     """The salt hashes the HISTORY id column (xxhash64) — must work
     for string ids, and a batch cell absent from state must coalesce
     to one block instead of null-crashing the sequence explode."""
-    from pyspark.sql.types import StringType
-
     from etl_inreach_spark.operators.incremental_semantic import (
         incremental_semantic_dedup,
     )

@@ -5,7 +5,6 @@ match a straight-Python replica of its hash arithmetic."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.indexing import (

@@ -3,8 +3,6 @@ replica, plus the invariants that make the fixed-point form safe."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from etl_inreach_spark.operators.graph import pagerank_integer
 
 SCALE = 1 << 20

@@ -6,8 +6,6 @@ rather than a benchmark."""
 
 from __future__ import annotations
 
-import pytest
-
 from etl_inreach_spark.queries import all_queries
 
 SF_DIR = "/root/testdata/sf0.001"

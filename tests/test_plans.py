@@ -6,8 +6,6 @@ CI — not a 100 TB run.
 
 from __future__ import annotations
 
-import pytest
-
 from etl_inreach_spark.queries import all_queries
 
 

@@ -1,18 +1,24 @@
-"""Reachability census: every top-level engine definition must be reached
-from production code, so code that only tests call cannot grow back.
+"""Two static censuses of the engine, so that code and options that
+production never uses cannot grow back. Stdlib ``ast`` only; no Spark
+session.
 
-Static, stdlib ``ast`` only; no Spark session.
+Reachability: every top-level engine definition must be reached from
+production code.
 
-* Nodes: top-level ``def``/``class`` statements in ``etl_inreach_spark/``.
-* Roots: ``@query``-decorated functions; module-level statements other than
-  def, class or import, plus the re-exports in ``__init__.py``; every name
-  used in ``bench.py``, ``__spark_entry__.py``, ``tools/*.py`` and non-test
+* Nodes: top-level ``def``/``class`` statements in ``etl_inreach_spark/``,
+  and module-level assignments to plain names (one node per name).
+* Roots: ``@query``-decorated functions; the other module-level statements
+  except imports, plus the re-exports in ``__init__.py``; every name used
+  in ``bench.py``, ``__spark_entry__.py``, ``tools/*.py`` and non-test
   ``perfbench/*.py``.
 * Edges: a ``Name``, ``Attribute`` or import alias inside a reached node
   reaches every engine definition with that name.
 
 Matching by name over-approximates reachability, so it can only miss dead
 code; it never flags live code.
+
+Options: every defaulted parameter of an engine function must receive at
+least two values across its call sites (see ``single_valued_options``).
 """
 
 from __future__ import annotations
@@ -36,6 +42,9 @@ KEPT_REFERENCES = {
     # tests/test_dedup.py::test_agg_and_window_agree_on_events checks the
     # max_by aggregation form against this window form.
     ("etl_inreach_spark/operators/dedup.py", "latest_by_key_window"),
+    # tests/test_binary_media.py pins the binary-file scan's media struct
+    # schema against it.
+    ("etl_inreach_spark/operators/multimodal.py", "MEDIA_SCHEMA"),
 }
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
@@ -69,19 +78,46 @@ def _parse(path: str) -> ast.Module:
         return ast.parse(fh.read(), filename=path)
 
 
+def _engine_modules() -> list[tuple[str, ast.Module]]:
+    """``(relpath, tree)`` of every engine module, in path order."""
+    paths = sorted(glob.glob(os.path.join(REPO, ENGINE, "**", "*.py"), recursive=True))
+    return [(os.path.relpath(p, REPO).replace(os.sep, "/"), _parse(p)) for p in paths]
+
+
+def _assigned_names(stmt: ast.stmt) -> list[str]:
+    """Plain names a module-level assignment binds; [] for anything else."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        targets = [stmt.target]
+    else:
+        return []
+    names = []
+    for t in targets:
+        elts = t.elts if isinstance(t, ast.Tuple) else [t]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    return names
+
+
 def unreached() -> list[tuple[str, int, str]]:
     """``(relpath, line, name)`` of every engine definition no root reaches."""
     by_name: dict[str, list[tuple[str, int, str]]] = {}
     nodes: dict[tuple[str, int, str], ast.AST] = {}
     frontier: list[ast.AST] = []
-    for path in sorted(glob.glob(os.path.join(REPO, ENGINE, "**", "*.py"), recursive=True)):
-        rel = os.path.relpath(path, REPO).replace(os.sep, "/")
-        for stmt in _parse(path).body:
+    for rel, tree in _engine_modules():
+        init = rel.endswith("__init__.py")
+        for stmt in tree.body:
             if isinstance(stmt, _DEFS):
-                key = (rel, stmt.lineno, stmt.name)
+                names = [stmt.name]
+            else:
+                names = [] if init else _assigned_names(stmt)
+            for name in names:
+                key = (rel, stmt.lineno, name)
                 nodes[key] = stmt
-                by_name.setdefault(stmt.name, []).append(key)
-            elif not isinstance(stmt, _IMPORTS) or rel.endswith("__init__.py"):
+                by_name.setdefault(name, []).append(key)
+            if not names and (not isinstance(stmt, _IMPORTS) or init):
                 frontier.append(stmt)
     reached = {key for key, stmt in nodes.items() if _is_query(stmt)}
     frontier += [nodes[key] for key in reached]
@@ -103,3 +139,94 @@ def test_only_kept_references_are_unreached():
     assert not new, "engine definitions only tests reach:\n" + "\n".join(new)
     # a kept reference that production now reaches leaves the allow-list
     assert {(rel, name) for rel, _, name in found} == KEPT_REFERENCES
+
+
+# Files whose calls count as call sites of an engine function.
+CALLERS = (
+    "bench.py",
+    "__spark_entry__.py",
+    "tools/*.py",
+    "perfbench/*.py",
+    "perfbench/tests/*.py",
+    "tests/*.py",
+)
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
+    """Defaulted parameter name -> default expression."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = {arg.arg: d for arg, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)}
+    out.update({arg.arg: d for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    return out
+
+
+def _value(call: ast.Call, positions: list[str], param: str, default: ast.expr) -> str | None:
+    """Source text of the value ``param`` takes at ``call``; None if dynamic
+    (a bare name, or an argument that ``*args``/``**kwargs`` may supply)."""
+    for kw in call.keywords:
+        if kw.arg == param:
+            return None if isinstance(kw.value, ast.Name) else ast.unparse(kw.value)
+    idx = positions.index(param) if param in positions else None
+    star = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)
+    if idx is not None and idx < len(call.args) and (star is None or idx < star):
+        arg = call.args[idx]
+        return None if isinstance(arg, ast.Name) else ast.unparse(arg)
+    if (idx is not None and star is not None) or any(kw.arg is None for kw in call.keywords):
+        return None
+    return ast.unparse(default)
+
+
+def single_valued_options() -> list[tuple[str, int, str, str, str]]:
+    """``(relpath, line, function, param, value)`` for every defaulted
+    parameter that takes exactly one value over all its call sites.
+
+    * Nodes: defaulted parameters of top-level engine functions whose name
+      no other top-level engine definition shares; kept references and
+      functions never called directly are skipped.
+    * Call sites: every call whose callee name or attribute matches, in the
+      engine and in ``CALLERS``.
+    * Value at a call: an omitted argument counts as the default's source
+      text, a passed one as its ``ast.unparse``; a bare name, ``*args`` or
+      ``**kwargs`` is dynamic and counts as distinct from every other value.
+    """
+    fns: dict[str, tuple[str, ast.FunctionDef]] = {}
+    counts: dict[str, int] = {}
+    modules = _engine_modules()
+    trees = [tree for _, tree in modules]
+    for rel, tree in modules:
+        for stmt in tree.body:
+            if isinstance(stmt, _DEFS):
+                counts[stmt.name] = counts.get(stmt.name, 0) + 1
+                if isinstance(stmt, ast.FunctionDef) and (rel, stmt.name) not in KEPT_REFERENCES:
+                    fns[stmt.name] = (rel, stmt)
+    for pattern in CALLERS:
+        trees += [_parse(path) for path in sorted(glob.glob(os.path.join(REPO, pattern)))]
+    calls: dict[str, list[ast.Call]] = {}
+    for tree in trees:
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _callee(node) in fns:
+                calls.setdefault(_callee(node), []).append(node)
+
+    found = []
+    for name, (rel, fn) in sorted(fns.items()):
+        if counts[name] > 1 or name not in calls:
+            continue
+        positions = [a.arg for a in fn.args.posonlyargs + fn.args.args]
+        for param, default in _defaults(fn).items():
+            values = {_value(c, positions, param, default) for c in calls[name]}
+            if len(values) == 1 and None not in values:
+                found.append((rel, fn.lineno, name, param, values.pop()))
+    return found
+
+
+def test_every_engine_option_takes_two_values():
+    found = single_valued_options()
+    assert not found, "engine options that only ever take one value:\n" + "\n".join(
+        f"{rel}:{line} {fn}.{param} = {value}" for rel, line, fn, param, value in found
+    )

@@ -64,7 +64,7 @@ def test_filter_recent_anchored(spark):
     df = spark.createDataFrame(
         [(1, ts(0)), (2, ts(50)), (3, ts(69)), (4, ts(80))], "id long, ts timestamp"
     )
-    kept = sorted(r["id"] for r in filter_recent(df, "ts", "30 minutes").collect())
+    kept = sorted(r["id"] for r in filter_recent(df, "ts").collect())
     assert kept == [2, 3, 4]  # anchor = ts(80), cutoff = ts(50) inclusive
 
 

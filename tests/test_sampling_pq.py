@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.sampling import (

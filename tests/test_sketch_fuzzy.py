@@ -353,7 +353,7 @@ def test_edit2_max_len_guard_raises(spark):
         [(1, "x" * 100), (2, "y")], "id long, s string"
     )
     with pytest.raises(Exception) as ei:
-        edit2_pairs(df, "id", "s", max_len=64).collect()
+        edit2_pairs(df, "id", "s").collect()
     assert "max_len" in str(ei.value)
 
 

@@ -9,8 +9,6 @@ relies on."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.fuzzy import edit1_pairs
 from etl_inreach_spark.operators.similarity import semantic_dedup_cells

@@ -11,7 +11,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _spans(spark, rows, k=3, min_count=2):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    out = duplicated_spans(df, "doc_id", "text", k=k, min_count=min_count)
+    out = duplicated_spans(df, k=k, min_count=min_count)
     return sorted(
         (r.doc_id, r.span_start, r.span_end, r.span_tokens) for r in out.collect()
     )
@@ -170,7 +170,7 @@ def test_duplicated_spans_matches_replica(spark, docs):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = sorted(
         (r.doc_id, r.span_start, r.span_end, r.span_tokens)
-        for r in duplicated_spans(df, "doc_id", "text", k=3, min_count=2).collect()
+        for r in duplicated_spans(df, k=3, min_count=2).collect()
     )
     assert got == _replica_spans(docs)
 

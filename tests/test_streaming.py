@@ -10,7 +10,6 @@ import uuid
 
 import pytest
 from pyspark.sql import Row
-from pyspark.sql import functions as F
 
 from tests.test_kml_pipeline import kml_doc, pm
 

@@ -125,7 +125,7 @@ class TestContamination:
         out = {
             r.doc_id: r
             for r in contamination_ngrams(
-                df, "doc_id", "text", bench_pred=F.col("doc_id") == 0, shingle_k=9
+                df, "doc_id", "text", bench_pred=F.col("doc_id") == 0
             ).collect()
         }
         assert set(out) == {1, 2}
@@ -143,7 +143,7 @@ class TestContamination:
             ],
         )
         out = contamination_ngrams(
-            df, "doc_id", "text", bench_pred=F.col("doc_id") == 0, shingle_k=9
+            df, "doc_id", "text", bench_pred=F.col("doc_id") == 0
         ).collect()
         (r,) = out
         assert 0.0 < r.contamination < 1.0

@@ -2,8 +2,11 @@
 plans/<tag>/<query>_<suffix>.txt (the optimization-round evidence
 artifact: the judge checks plan claims against these files).
 
-Planning only — no job is executed, so this is safe to run alongside
-other work. The session is the library session (same confs as bench).
+Each query is BUILT, which runs its build-time jobs (eager
+localCheckpoints, bounded collects, iterative rounds; a full capture at
+sf0.001 launches more than 500 stages), but its final action is never
+run: the plan is explained, not executed. The session is the library
+session (same confs as bench).
 
 Usage:
   python tools/plan_capture.py --tag r11 --suffix before [sf_dir] [name ...]

@@ -819,7 +819,7 @@ def _probe_graph(spark, sf_dir: str, repl: int) -> dict:
                 spark,
                 f"cc:{label}",
                 lambda s, _d, mk=mk: connected_components(
-                    mk(s), "id_a", "id_b"
+                    mk(s)
                 ),
                 sf_dir,
             ),
@@ -827,7 +827,7 @@ def _probe_graph(spark, sf_dir: str, repl: int) -> dict:
                 spark,
                 f"ccstar:{label}",
                 lambda s, _d, mk=mk: connected_components_star(
-                    mk(s), "id_a", "id_b"
+                    mk(s)
                 ),
                 sf_dir,
             ),
