@@ -143,8 +143,9 @@ def _normalize_ntz(df: DataFrame) -> DataFrame:
     conf is read at scan planning) resolves them as TIMESTAMP_NTZ,
     which breaks ``unix_micros``-style arithmetic downstream (round-2
     driver failure: sessionize_events / sliding_1h_user_activity).
-    Every query pins session tz to UTC via ``tune()`` before loading,
-    so the cast is value-exact; for sessions already reading TIMESTAMP
+    The registry's ``query`` wrapper pins session tz to UTC via
+    ``tune()`` before any query body loads a table, so the cast is
+    value-exact; for sessions already reading TIMESTAMP
     this is a no-op projection fused into the scan.
     """
     from pyspark.sql.types import TimestampNTZType

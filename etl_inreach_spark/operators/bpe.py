@@ -69,10 +69,10 @@ MIN_PAIR_COUNT = 2
 
 def bpe_train(
     docs: DataFrame,
-    text_col: str,
     n_merges: int,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Learn up to ``n_merges`` BPE merges from a document corpus.
+    """Learn up to ``n_merges`` BPE merges from a document corpus's
+    ``text`` column.
 
     Returns ``(merges, vocab)``: merges as
     [(rank, left, right, weighted_count), ...] in application order,
@@ -85,7 +85,7 @@ def bpe_train(
         docs.select(
             F.explode(
                 F.filter(
-                    F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
+                    F.split(F.col("text"), r"\s+"), lambda t: t != F.lit("")
                 )
             ).alias("word")
         )
@@ -192,9 +192,10 @@ def bpe_merges_df(spark: SparkSession, merges) -> DataFrame:
     )
 
 
-def bpe_segment(docs: DataFrame, text_col: str, merges, id_col: str) -> DataFrame:
-    """Apply a learned merge table to NEW text — the inference half of
-    the trainer. Output: (id, subwords array<string>) with each
+def bpe_segment(docs: DataFrame, merges) -> DataFrame:
+    """Apply a learned merge table to NEW (doc_id, text) documents — the
+    inference half of the trainer. Output: (doc_id, subwords
+    array<string>) with each
     document's whitespace words segmented by replaying the merges in
     rank order.
 
@@ -236,10 +237,10 @@ def bpe_segment(docs: DataFrame, text_col: str, merges, id_col: str) -> DataFram
             cache: dict = {}
             out = [
                 [s for w in (t.split() if t else []) for s in seg_word(w, cache)]
-                for t in pdf[text_col]
+                for t in pdf["text"]
             ]
-            yield pd.DataFrame({id_col: pdf[id_col], "subwords": out})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "subwords": out})
 
-    return docs.select(id_col, text_col).mapInPandas(
-        run, schema=f"{id_col} long, subwords array<string>"
+    return docs.select("doc_id", "text").mapInPandas(
+        run, schema="doc_id long, subwords array<string>"
     )

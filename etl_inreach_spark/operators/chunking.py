@@ -39,16 +39,14 @@ from etl_inreach_spark.functions.text import tokens
 
 def chunk_tokens(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     capacity: int = 128,
     stride: int = 96,
 ) -> DataFrame:
-    """(id, chunk_idx, start_tok, n_tokens, chunk_text): whitespace
-    tokens split into windows of ``capacity`` tokens starting every
+    """(doc_id, chunk_idx, start_tok, n_tokens, chunk_text): ``text``'s
+    whitespace tokens split into windows of ``capacity`` tokens starting every
     ``stride`` tokens (trailing windows may be short; zero-token docs
     emit no chunks). chunk_idx is 0-based; start_tok = chunk_idx *
-    stride. Deterministic pure function of (id, text)."""
+    stride. Deterministic pure function of (doc_id, text)."""
     if stride <= 0 or capacity <= 0:
         raise ValueError("capacity and stride must be positive")
 
@@ -73,15 +71,15 @@ def chunk_tokens(
         )
 
     bound = F.element_at(
-        F.transform(F.array(tokens(F.col(text_col))), chunk_array), 1
+        F.transform(F.array(tokens(F.col("text"))), chunk_array), 1
     )
-    staged = df.select(F.col(id_col), bound.alias("_chunks"))
+    staged = df.select(F.col("doc_id"), bound.alias("_chunks"))
     exploded = staged.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode_outer(F.col("_chunks")).alias("chunk_idx", "_c"),
     ).filter(F.col("chunk_idx").isNotNull())
     return exploded.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.col("chunk_idx").cast("bigint").alias("chunk_idx"),
         F.col("_c.start_tok").alias("start_tok"),
         F.col("_c.n_tokens").alias("n_tokens"),

@@ -205,15 +205,13 @@ def _round_div_half_up(s: int, n: int) -> int:
     return (2 * s + n) // (2 * n)
 
 
-def _init_centroids(
-    qdf: DataFrame, k: int, id_col: str
-) -> tuple[tuple[int, ...], ...]:
-    """The k corpus rows minimizing the portable hash of their id —
+def _init_centroids(qdf: DataFrame, k: int) -> tuple[tuple[int, ...], ...]:
+    """The k corpus rows minimizing the portable hash of their vec_id —
     global TakeOrdered (bounded heaps), deterministic, RNG-free."""
-    h = (F.lit(PORTABLE_A) * F.col(id_col) + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
+    h = (F.lit(PORTABLE_A) * F.col("vec_id") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
     picked = (
-        qdf.select(F.col(id_col), F.col("_qvec"), h.alias("_h"))
-        .orderBy("_h", id_col)
+        qdf.select(F.col("vec_id"), F.col("_qvec"), h.alias("_h"))
+        .orderBy("_h", "vec_id")
         .limit(k)
         .collect()
     )
@@ -245,7 +243,7 @@ def kmeans_fit(
     qdf = df.select(
         F.col("vec_id"), quantize_vectors(df, SCALE_BITS).alias("_qvec")
     ).localCheckpoint(eager=False)
-    cents = _init_centroids(qdf, k, "vec_id")
+    cents = _init_centroids(qdf, k)
     n_iter = 0
     converged = False
     sizes = [0] * k

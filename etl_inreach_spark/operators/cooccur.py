@@ -104,10 +104,11 @@ def term_cooccurrence_lift(
     )
 
 
-def _bigrams(text_col: str) -> "F.Column":
-    """Adjacent-token bigram array, built narrowly inside the row (no
-    shuffle, no UDF): zip the token array with itself shifted by one."""
-    t = tokens(F.col(text_col))
+def _bigrams() -> "F.Column":
+    """Adjacent-token bigram array of ``text``, built narrowly inside the
+    row (no shuffle, no UDF): zip the token array with itself shifted by
+    one."""
+    t = tokens(F.col("text"))
     return F.when(
         F.size(t) >= 2,
         F.zip_with(
@@ -122,7 +123,7 @@ def bigram_model(docs: DataFrame) -> DataFrame:
     """Corpus bigram MLE counts: (w1, w2, c_big, c_pre) where
     ``c_pre = sum_w c(w1, w)`` — p(w2|w1) = c_big / c_pre, kept as
     the exact count pair, never a float."""
-    big = docs.select(F.explode(_bigrams("text")).alias("b")).select(
+    big = docs.select(F.explode(_bigrams()).alias("b")).select(
         F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )
     cnt = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_big"))
@@ -152,7 +153,7 @@ def bigram_lm_score(docs: DataFrame, model: DataFrame | None = None) -> DataFram
     if model is None:
         model = bigram_model(docs)
     doc_big = docs.select(
-        F.col("doc_id"), F.explode_outer(_bigrams("text")).alias("b")
+        F.col("doc_id"), F.explode_outer(_bigrams()).alias("b")
     ).select(
         "doc_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2")
     )

@@ -18,19 +18,13 @@ from etl_inreach_spark.functions.text import tokens
 from etl_inreach_spark.operators.text_dedup import shingles_exploded
 
 
-def contamination_ngrams(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bench_pred: Column,
-    gram_hash=None,
-) -> DataFrame:
-    """Benchmark-contamination check: for every non-benchmark document,
-    the fraction of its distinct character 9-grams that also appear
+def contamination_ngrams(df: DataFrame, bench_pred: Column, gram_hash=None) -> DataFrame:
+    """Benchmark-contamination check: for every non-benchmark document
+    of a (doc_id, text) corpus, the fraction of its distinct character 9-grams that also appear
     anywhere in the benchmark set (``bench_pred`` selects benchmark
     rows).
 
-    Output: (id, n_grams, n_contaminated, contamination, contaminated)
+    Output: (doc_id, n_grams, n_contaminated, contamination, contaminated)
     for corpus (non-benchmark) documents; ``contaminated`` is
     contamination >= 0.5.
 
@@ -42,8 +36,8 @@ def contamination_ngrams(
     never a string (pass ``gram_hash=poly_gram_hasher60(9)`` for a
     SQL-reproducible 60-bit hash whose collision odds are negligible).
     """
-    sh = shingles_exploded(df, id_col, text_col, 9, gram_hash=gram_hash)
-    ids = df.select(F.col(id_col).alias("_id"), bench_pred.alias("_is_bench"))
+    sh = shingles_exploded(df, 9, gram_hash=gram_hash)
+    ids = df.select(F.col("doc_id").alias("_id"), bench_pred.alias("_is_bench"))
     sh = sh.join(ids, "_id")
 
     bench_grams = (
@@ -61,7 +55,7 @@ def contamination_ngrams(
     )
     ratio = F.col("n_contaminated").cast("double") / F.col("n_grams")
     return scored.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         "n_grams",
         "n_contaminated",
         ratio.alias("contamination"),

@@ -61,21 +61,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _delete1(s: str, i: str) -> str:
-    """SQL fragment: ``s`` with 1-based position ``i`` deleted."""
-    return (
-        f"concat(substring({s}, 1, {i} - 1), "
-        f"substring({s}, {i} + 1, length({s}) - {i}))"
-    )
+def _delete1(s: str) -> str:
+    """SQL fragment: ``s`` with the 1-based position in lambda variable
+    ``i`` deleted."""
+    return f"concat(substring({s}, 1, i - 1), substring({s}, i + 1, length({s}) - i))"
 
 
-def _delete2(s: str, i: str, j: str) -> str:
-    """SQL fragment: ``s`` with 1-based positions ``i`` < ``j`` both
-    deleted."""
+def _delete2(s: str) -> str:
+    """SQL fragment: ``s`` with the 1-based positions in lambda variables
+    ``i`` < ``j`` both deleted."""
     return (
-        f"concat(substring({s}, 1, {i} - 1), "
-        f"substring({s}, {i} + 1, {j} - {i} - 1), "
-        f"substring({s}, {j} + 1, length({s}) - {j}))"
+        f"concat(substring({s}, 1, i - 1), "
+        f"substring({s}, i + 1, j - i - 1), "
+        f"substring({s}, j + 1, length({s}) - j))"
     )
 
 
@@ -92,7 +90,7 @@ def deletion_variants(
         raise ValueError(f"deletion_variants: k must be 1 or 2, got {k}")
     d1 = (
         f"transform(sequence(1, length({s_col})), "
-        f"i -> {_delete1(s_col, 'i')})"
+        f"i -> {_delete1(s_col)})"
     )
     if k == 1:
         variants = F.expr(f"concat(array({s_col}), {d1})")
@@ -104,7 +102,7 @@ def deletion_variants(
             f"flatten(transform(sequence(1, length({s_col})), i -> "
             f"case when i < length({s_col}) then "
             f"transform(sequence(i + 1, length({s_col})), "
-            f"j -> {_delete2(s_col, 'i', 'j')}) "
+            f"j -> {_delete2(s_col)}) "
             f"else array() end))"
         )
         variants = F.expr(f"concat(array({s_col}), {d1}, {d2})")

@@ -35,7 +35,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def _mg_partition(k: int, col: str):
+def _mg_partition(k: int):
+    """mapInPandas body: one Misra–Gries k-summary of column ``_v``."""
     import pandas as pd
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -49,7 +50,7 @@ def _mg_partition(k: int, col: str):
         # cross-partition merge.
         counters: dict = {}
         for pdf in batches:
-            for item, c in pdf[col].dropna().value_counts().items():
+            for item, c in pdf["_v"].dropna().value_counts().items():
                 counters[item] = counters.get(item, 0) + int(c)
             if len(counters) > k:
                 kth = sorted(counters.values(), reverse=True)[k]
@@ -83,7 +84,7 @@ def heavy_hitters(df: DataFrame, col: str, k: int = 64) -> DataFrame:
         raise ValueError(f"k must be >= 1, got {k}")
     field = df.schema[col].dataType.simpleString()
     summaries = df.select(F.col(col).alias("_v")).mapInPandas(
-        _mg_partition(k, "_v"),
+        _mg_partition(k),
         schema=f"item {field}, cnt bigint",
     )
     # Exact total non-null count for the error bound — one cheap

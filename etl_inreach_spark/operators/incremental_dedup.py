@@ -67,7 +67,7 @@ def batch_signatures(batch: DataFrame, shingle_k: int = 5) -> DataFrame:
     (doc_id, band_id, band_hash, sig array<bigint>) — MINHASH_BANDS
     rows per document, bit-identical to the one-shot operator's
     signatures for the same text."""
-    sh = shingles_exploded(batch, "doc_id", "text", shingle_k)
+    sh = shingles_exploded(batch, shingle_k)
     return banded_minhash(sh).select(
         F.col("_id").alias("doc_id"),
         F.col("_band.band_id").alias("band_id"),

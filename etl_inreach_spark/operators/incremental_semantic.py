@@ -110,7 +110,7 @@ def incremental_semantic_dedup(
     ``max_cell_rows`` bounds the per-task pair work of the history
     probe when a state cell has gone hot — bipartite salting, output
     identical; see the module docstring."""
-    asg = _nearest_cells(batch, centroids, 1, "vec_id", "embedding")
+    asg = _nearest_cells(batch, centroids, 1, "embedding")
     # LAZY checkpoint (r11): the state-append write below is the
     # increment's first action over the assignment and scans every
     # partition, so that one write job also materializes/truncates

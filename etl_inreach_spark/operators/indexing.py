@@ -76,12 +76,11 @@ def global_row_index(
 
 def negative_sample(
     corpus: DataFrame,
-    id_col: str,
     k: int,
     group_cols: Sequence[str] = (),
 ) -> DataFrame:
     """(anchor_id, slot, neg_id [, anchor/neg group cols]): up to ``k``
-    deterministic negatives per corpus row, excluding the anchor
+    deterministic negatives per corpus ``doc_id``, excluding the anchor
     itself and any row sharing its ``group_cols`` values.
 
     Slot j of anchor a targets corpus position
@@ -103,12 +102,12 @@ def negative_sample(
     # (BlockManager block locks) — without the extra build job an eager
     # checkpoint would pay.
     indexed = global_row_index(
-        corpus.select(id_col, *gcols), id_col
+        corpus.select("doc_id", *gcols), "doc_id"
     ).localCheckpoint(eager=False)
     n_rel = indexed.agg(F.count(F.lit(1)).alias("_n"))
 
     anchors = indexed.select(
-        F.col(id_col).alias("anchor_id"),
+        F.col("doc_id").alias("anchor_id"),
         F.col("row_index").alias("_arow"),
         *[F.col(c).alias(f"anchor_{c}") for c in gcols],
     )
@@ -127,7 +126,7 @@ def negative_sample(
     probes = slots.withColumn("_trow", target)
 
     neg = indexed.select(
-        F.col(id_col).alias("neg_id"),
+        F.col("doc_id").alias("neg_id"),
         F.col("row_index").alias("_trow"),
         *[F.col(c).alias(f"neg_{c}") for c in gcols],
     )

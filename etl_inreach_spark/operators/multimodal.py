@@ -164,13 +164,13 @@ def sample_frames(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    fake: bool = True,
-) -> DataFrame:
-    """Batch image resize over the ``media`` struct column — the same
+# Side of resize_images' square output, in pixels.
+RESIZE_PX = 4
+
+
+def resize_images(df: DataFrame, fake: bool = True) -> DataFrame:
+    """Batch ``RESIZE_PX`` x ``RESIZE_PX`` image resize over the
+    ``media`` struct column — the same
     Arrow mapInPandas plumbing a real PIL/opencv resize drops into
     (swap resize_stub for the library call; schema, batching and
     NULL handling are already production-shaped). Output carries the
@@ -185,7 +185,7 @@ def resize_images(
                 None
                 if m is None
                 else resize_stub(
-                    m["bytes"] if m["bytes"] is not None else b"", width, height,
+                    m["bytes"] if m["bytes"] is not None else b"", RESIZE_PX, RESIZE_PX,
                     fake=fake,
                 )
                 for m in media
@@ -193,8 +193,8 @@ def resize_images(
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "width": pd.Series([width] * len(pdf), dtype="int32"),
-                    "height": pd.Series([height] * len(pdf), dtype="int32"),
+                    "width": pd.Series([RESIZE_PX] * len(pdf), dtype="int32"),
+                    "height": pd.Series([RESIZE_PX] * len(pdf), dtype="int32"),
                     "resized": resized,
                 }
             )

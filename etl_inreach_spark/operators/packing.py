@@ -41,16 +41,15 @@ from pyspark.sql import functions as F
 
 def pack_chunks(
     df: DataFrame,
-    id_col: str,
     tok_col: str,
     capacity: int,
     num_buckets: int = 256,
 ) -> DataFrame:
     """Concat-and-chunk packing: global token offset per document (in
-    ``id_col`` order) and the [chunk_start, chunk_end] range of
+    ``doc_id`` order) and the [chunk_start, chunk_end] range of
     ``capacity``-token windows the document occupies.
 
-    Output: (id, n_tokens, tok_offset, chunk_start, chunk_end,
+    Output: (doc_id, n_tokens, tok_offset, chunk_start, chunk_end,
     n_chunks). Documents with zero tokens are dropped (they occupy no
     window).
 
@@ -62,7 +61,7 @@ def pack_chunks(
     pass over the corpus anywhere.
     """
     d = df.select(
-        F.col(id_col).alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
+        F.col("doc_id").alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
     ).filter(F.col("_tok") > 0)
 
     # id-range bucketing via a lazily-joined bound (no driver collect):
@@ -97,7 +96,7 @@ def pack_chunks(
     chunk_start = F.floor(F.col("tok_offset") / capacity)
     chunk_end = F.floor((F.col("tok_offset") + F.col("_tok") - 1) / capacity)
     return out.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("_tok").alias("n_tokens"),
         "tok_offset",
         chunk_start.alias("chunk_start"),
@@ -108,15 +107,14 @@ def pack_chunks(
 
 def pack_bins_nextfit(
     df: DataFrame,
-    id_col: str,
     tok_col: str,
     capacity: int,
     num_buckets: int = 16,
 ) -> DataFrame:
-    """Next-fit bin packing per hash bucket (bucket = id % num_buckets,
-    documents in id order within the bucket).
+    """Next-fit bin packing per hash bucket (bucket = doc_id %
+    num_buckets, documents in doc_id order within the bucket).
 
-    Output: (id, bucket, n_tokens, bin_seq, bin_fill) where bin_seq is
+    Output: (doc_id, bucket, n_tokens, bin_seq, bin_fill) where bin_seq is
     1-based within the bucket and bin_fill is the bin's running token
     count after placing this document. Zero-token documents are
     dropped. A document larger than ``capacity`` always opens (and
@@ -128,7 +126,7 @@ def pack_bins_nextfit(
     applyInPandas stays relational.
     """
     d = df.select(
-        F.col(id_col).alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
+        F.col("doc_id").alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
     ).filter(F.col("_tok") > 0)
     d = d.withColumn("_bucket", F.pmod(F.col("_id"), F.lit(num_buckets)))
 
@@ -156,7 +154,7 @@ def pack_bins_nextfit(
         ),
     )
     return out.select(
-        F.col("_id").alias(id_col),
+        F.col("_id").alias("doc_id"),
         F.col("_bucket").alias("bucket"),
         F.col("_tok").alias("n_tokens"),
         "bin_seq",

@@ -65,11 +65,10 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def subvectors(
-    df: DataFrame, num_sub: int, dim: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """(id, sub, _sv): the corpus exploded into per-subspace slices,
-    elements cast to double. dim must divide evenly by num_sub."""
+def subvectors(df: DataFrame, num_sub: int, dim: int, vec_col: str) -> DataFrame:
+    """(_pid, sub, _sv): the corpus exploded by ``vec_id`` into
+    per-subspace slices, elements cast to double. dim must divide
+    evenly by num_sub."""
     if dim % num_sub:
         raise ValueError(f"dim {dim} not divisible by num_sub {num_sub}")
     dsub = dim // num_sub
@@ -83,7 +82,7 @@ def subvectors(
         ]
     )
     return df.select(
-        F.col(id_col).alias("_pid"), F.posexplode(slices).alias("sub", "_sv")
+        F.col("vec_id").alias("_pid"), F.posexplode(slices).alias("sub", "_sv")
     )
 
 
@@ -121,7 +120,7 @@ def pq_train(
     coarse cells: training on RESIDUALS with offset 0 seeds
     codebooks with the cell centroids' own all-zero residuals — a
     degenerate init that tie-breaks every point into code 1."""
-    subs = subvectors(corpus, num_sub, dim, "vec_id", vec_col).localCheckpoint(
+    subs = subvectors(corpus, num_sub, dim, vec_col).localCheckpoint(
         eager=True
     )
     h = (F.lit(PORTABLE_A) * F.col("_pid") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
@@ -188,7 +187,7 @@ def pq_encode(
     hash aggregations; the output is the compressed corpus
     representation downstream ADC search reads INSTEAD of the
     embeddings."""
-    asg = _assign(subvectors(corpus, num_sub, dim, "vec_id", vec_col), cent)
+    asg = _assign(subvectors(corpus, num_sub, dim, vec_col), cent)
     return (
         asg.groupBy("_pid")
         .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("_sc"))
@@ -202,9 +201,7 @@ def pq_encode(
 # ------------------------------------------------------------ IVF-PQ
 
 
-def _l2_nearest_cells(
-    df: DataFrame, cells: DataFrame, n: int, id_col: str, vec_col: str
-) -> DataFrame:
+def _l2_nearest_cells(df: DataFrame, cells: DataFrame, n: int, id_col: str) -> DataFrame:
     """Top-n EUCLIDEAN-nearest coarse cells per vector (the L2
     counterpart of similarity._nearest_cells, which ranks by cosine —
     PQ distances are L2, so the coarse stage must rank in the same
@@ -222,11 +219,11 @@ def _l2_nearest_cells(
     order with cells sorted by cell. ``_cellvec`` is re-attached by a
     broadcast join on the cell id (the residual computation downstream
     needs it); the crossJoin + per-vector window over nlist copies of
-    every input row is gone. Returns (cell, id, vec, _cellvec); the
+    every input row is gone. Returns (cell, id, embedding, _cellvec); the
     empty-cells edge falls through to the window path projected to the
     same columns.
 
-    Vector contract (ADVICE r11): ``vec_col`` must be non-NULL,
+    Vector contract (ADVICE r11): ``embedding`` must be non-NULL,
     equal-length arrays with non-NULL elements — the repo-wide
     embedding-column invariant. The Arrow path's np.vstack fails the
     TASK on a violation, where the old window path would have
@@ -272,7 +269,7 @@ def _l2_nearest_cells(
                 )
 
             return df.select(
-                id_col, vec_col, _argmin_cell(F.col(vec_col)).alias("cell")
+                id_col, "embedding", _argmin_cell(F.col("embedding")).alias("cell")
             ).join(F.broadcast(cells), "cell")
 
         @F.pandas_udf(f"array<{cell_type}>")
@@ -283,22 +280,22 @@ def _l2_nearest_cells(
             return pd.Series([cells_arr[row].tolist() for row in idx])
 
         return df.select(
-            id_col, vec_col, F.explode(_topn_cells(F.col(vec_col))).alias("cell")
+            id_col, "embedding", F.explode(_topn_cells(F.col("embedding"))).alias("cell")
         ).join(F.broadcast(cells), "cell")
 
     scored = df.crossJoin(F.broadcast(cells)).select(
         id_col,
-        vec_col,
+        "embedding",
         "cell",
         "_cellvec",
         _l2sq(
-            F.transform(F.col(vec_col), lambda x: x.cast("double")),
+            F.transform(F.col("embedding"), lambda x: x.cast("double")),
             F.col("_cellvec"),
         ).alias("_cd"),
     )
     return topk_by_key(
         scored, [id_col], [F.col("_cd").asc(), F.col("cell").asc()], n, rank_col="_crn"
-    ).select("cell", id_col, vec_col, "_cellvec")
+    ).select("cell", id_col, "embedding", "_cellvec")
 
 
 def _residual(vec_col: Column, cell_col: Column) -> Column:
@@ -347,7 +344,7 @@ def ivf_pq_build(
     ).localCheckpoint(eager=False)
 
     assigned = (
-        _l2_nearest_cells(corpus, cells, 1, "vec_id", "embedding")
+        _l2_nearest_cells(corpus, cells, 1, "vec_id")
         .select(
             "vec_id",
             "cell",
@@ -406,7 +403,7 @@ def ivf_pq_topk(
     cells are touched (the 1/nlist * nprobe pruning), and the SUM per
     (query, id) is map-side combined. No raw corpus vector is read at
     search time."""
-    probed = _l2_nearest_cells(queries, cells, nprobe, "q_id", "embedding").select(
+    probed = _l2_nearest_cells(queries, cells, nprobe, "q_id").select(
         F.col("q_id").alias("_qid"),
         "cell",
         _residual(F.col("embedding"), F.col("_cellvec")).alias("_qres"),

@@ -30,8 +30,9 @@ def broadcast_dim_join(
     return fact.join(F.broadcast(dim), on=on, how=how)
 
 
-def filter_recent(df: DataFrame, ts_col: str) -> DataFrame:
-    """O5 (task.ts:80-82) — keep rows within 30 minutes of an anchor.
+def filter_recent(df: DataFrame) -> DataFrame:
+    """O5 (task.ts:80-82) — keep rows whose ``ts`` is within 30 minutes of
+    an anchor.
 
     The reference pushes ``d1 = now - 30min`` to the server; the batch
     analog anchors on max(ts) for determinism (FIXTURES.md §5). The
@@ -40,10 +41,10 @@ def filter_recent(df: DataFrame, ts_col: str) -> DataFrame:
     footer stats) plus a shuffle-free join; the comparison itself is
     codegen'd.
     """
-    anchor_df = df.agg(F.max(F.col(ts_col)).alias("_anchor"))
+    anchor_df = df.agg(F.max(F.col("ts")).alias("_anchor"))
     return (
         df.join(F.broadcast(anchor_df))
-        .filter(F.col(ts_col) >= F.col("_anchor") - F.expr("INTERVAL 30 minutes"))
+        .filter(F.col("ts") >= F.col("_anchor") - F.expr("INTERVAL 30 minutes"))
         .drop("_anchor")
     )
 
@@ -129,14 +130,10 @@ def asof_join(
     )
 
 
-def salted_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: dict[str, tuple[Column, str]],
-) -> DataFrame:
-    """Two-stage skew-safe aggregation: rows are salted into 16
-    sub-keys, partially aggregated per (key, salt), then merged per
-    key. The first shuffle spreads a hot key over 16 reducers; the
+def salted_agg(df: DataFrame, aggs: dict[str, tuple[Column, str]]) -> DataFrame:
+    """Two-stage skew-safe aggregation per ``event_type``: rows are
+    salted into 16 sub-keys, partially aggregated per (key, salt), then
+    merged per key. The first shuffle spreads a hot key over 16 reducers; the
     second handles one row per (key, salt) — negligible.
 
     ``aggs`` maps output column name -> (stage1_expr, merge) where
@@ -154,10 +151,10 @@ def salted_agg(
     """
     merge_fn = {"sum": F.sum, "min": F.min, "max": F.max}
     salted = df.withColumn("_salt", (F.rand(seed=7) * 16).cast("int"))
-    stage1 = salted.groupBy(*keys, "_salt").agg(
+    stage1 = salted.groupBy("event_type", "_salt").agg(
         *[expr.alias(f"_s1_{name}") for name, (expr, _) in aggs.items()]
     )
-    return stage1.groupBy(*keys).agg(
+    return stage1.groupBy("event_type").agg(
         *[
             merge_fn[merge](F.col(f"_s1_{name}")).alias(name)
             for name, (_, merge) in aggs.items()
@@ -168,11 +165,10 @@ def salted_agg(
 def salted_join(
     big: DataFrame,
     small: DataFrame,
-    key_cols: Sequence[str],
     salt_buckets: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Skew-safe equi-join by salting: the big side gets a
+    """Skew-safe equi-join on ``user_id`` by salting: the big side gets a
     deterministic salt in [0, salt_buckets), the small side is
     REPLICATED once per salt value, and the join runs on
     (key, salt) — a hot key's rows spread over ``salt_buckets``
@@ -199,21 +195,19 @@ def salted_join(
     small_r = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
     )
-    on = [*key_cols, "_salt"]
-    return big_s.join(small_r, on=on, how=how).drop("_salt")
+    return big_s.join(small_r, on=["user_id", "_salt"], how=how).drop("_salt")
 
 
 def interval_overlap_join(
     left: DataFrame,
     right: DataFrame,
-    l_start: str,
-    l_end: str,
     r_start: str,
     r_end: str,
     band: int,
 ) -> DataFrame:
     """Interval OVERLAP join with NO equi key — pairs of (left, right)
-    rows whose [start, end] ranges intersect — via band bucketing, the
+    rows whose [start, end] ranges intersect (``[ls, le]`` on the left) —
+    via band bucketing, the
     pattern that keeps a pure range theta-join off Spark's
     broadcast-nested-loop path at scale (genomic-region and
     time-interval joins).
@@ -223,7 +217,7 @@ def interval_overlap_join(
     overlap predicate filters false candidates. A pair spanning
     several shared buckets would surface once per bucket, so instead
     of a distinct over the (wide) pair output, each pair is kept only
-    in its CANONICAL bucket — the bucket of max(l_start, r_start),
+    in its CANONICAL bucket — the bucket of max(ls, r_start),
     which both sides provably contain (it is where the overlap
     starts). Cost: sum of per-bucket |L_b| x |R_b| — the caller picks
     ``band`` near the typical interval length so intervals span O(1)
@@ -238,7 +232,7 @@ def interval_overlap_join(
     """
     if band <= 0:
         raise ValueError(f"band must be a positive bucket width, got {band}")
-    shared = ({l_start, l_end} & set(right.columns)) | (
+    shared = ({"ls", "le"} & set(right.columns)) | (
         {r_start, r_end} & set(left.columns)
     )
     if shared:
@@ -258,13 +252,13 @@ def interval_overlap_join(
             ),
         )
 
-    lb = banded(left, l_start, l_end, "l")
+    lb = banded(left, "ls", "le", "l")
     rb = banded(right, r_start, r_end, "r")
-    overlap = (F.col(l_start) <= F.col(r_end)) & (
-        F.col(r_start) <= F.col(l_end)
+    overlap = (F.col("ls") <= F.col(r_end)) & (
+        F.col(r_start) <= F.col("le")
     )
     canonical = F.col("_b_l") == F.floor(
-        F.greatest(F.col(l_start), F.col(r_start)) / band
+        F.greatest(F.col("ls"), F.col(r_start)) / band
     )
     return (
         lb.join(rb, F.col("_b_l") == F.col("_b_r"))

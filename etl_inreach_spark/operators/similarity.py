@@ -35,8 +35,12 @@ from etl_inreach_spark.functions.vectors import cosine, l2_norm
 from etl_inreach_spark.operators.dedup import topk_by_key
 
 
-def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
-    """Exact top-k cosine neighbors per query vector.
+# Neighbours each top-k search returns per query vector.
+TOPK = 5
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-``TOPK`` cosine neighbors per query vector.
 
     Output: (q_id, vec_id, rank, cos). Self-matches (same id) are
     excluded. Deterministic: ties broken by neighbor id.
@@ -50,7 +54,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame
         cosine(F.col("_qvec"), F.col("embedding")).alias("cos"),
     )
     top = topk_by_key(
-        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], TOPK, rank_col="rank"
     )
     return top.select("q_id", "vec_id", "rank", "cos")
 
@@ -75,10 +79,17 @@ def _rademacher_sign(plane: int, j: int, dim: int) -> float:
     return 1.0 if ((PORTABLE_A * (plane * dim + j) + PORTABLE_B) % PORTABLE_M) & 1 else -1.0
 
 
-def portable_lsh_bucket(vec, dim: int, num_planes: int):
-    """Rademacher-hyperplane LSH bucket as a Column, bit-reproducible
-    in portable SQL (``portable_lsh_bucket_sql`` renders the same
-    computation for DuckDB).
+# Embedding width and hyperplane count (2^4 buckets) of the portable
+# LSH signature.
+LSH_DIM = 64
+LSH_PLANES = 4
+
+
+def portable_lsh_bucket(vec):
+    """Rademacher-hyperplane LSH bucket of an ``LSH_DIM``-wide vector
+    Column, bit-reproducible in portable SQL
+    (``portable_lsh_bucket_sql`` renders the same computation for
+    DuckDB).
 
     bit_p = (sum_j vec[j] * s(p, j) > 0) with s in {-1, +1} from the
     portable hash. Multiplying a double by ±1.0 is EXACT, so the only
@@ -89,8 +100,10 @@ def portable_lsh_bucket(vec, dim: int, num_planes: int):
     CLT), so this is a real LSH, not just an oracle trick."""
     vd = F.transform(vec, lambda x: x.cast("double"))
     bucket = F.lit(0)
-    for p in range(num_planes):
-        signs = F.array(*[F.lit(_rademacher_sign(p, j, dim)) for j in range(1, dim + 1)])
+    for p in range(LSH_PLANES):
+        signs = F.array(
+            *[F.lit(_rademacher_sign(p, j, LSH_DIM)) for j in range(1, LSH_DIM + 1)]
+        )
         proj = F.aggregate(
             F.zip_with(vd, signs, lambda x, s: x * s),
             F.lit(0.0),
@@ -100,36 +113,27 @@ def portable_lsh_bucket(vec, dim: int, num_planes: int):
     return bucket
 
 
-def portable_lsh_bucket_sql(vec_expr: str, dim: int, num_planes: int) -> str:
-    """DuckDB rendering of ``portable_lsh_bucket`` — same signs, same
-    sequential fold, bit-identical bucket ids."""
+def portable_lsh_bucket_sql() -> str:
+    """DuckDB rendering of ``portable_lsh_bucket`` over ``embedding`` —
+    same signs, same sequential fold, bit-identical bucket ids."""
     terms = []
-    for p in range(num_planes):
+    for p in range(LSH_PLANES):
         sign = (
-            f"(CASE WHEN (({PORTABLE_A} * ({p * dim} + j) + {PORTABLE_B})"
+            f"(CASE WHEN (({PORTABLE_A} * ({p * LSH_DIM} + j) + {PORTABLE_B})"
             f" % {PORTABLE_M}) & 1 = 1"
             " THEN CAST(1.0 AS DOUBLE) ELSE CAST(-1.0 AS DOUBLE) END)"
         )
         proj = (
             "list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(generate_series(1, {dim}), "
-            f"j -> CAST({vec_expr}[j] AS DOUBLE) * {sign})), (a, b) -> a + b)"
+            f"list_transform(generate_series(1, {LSH_DIM}), "
+            f"j -> CAST(embedding[j] AS DOUBLE) * {sign})), (a, b) -> a + b)"
         )
         terms.append(f"(CASE WHEN {proj} > 0.0 THEN {1 << p} ELSE 0 END)")
     return "(" + "\n         + ".join(terms) + ")"
 
 
-# lsh_topk_portable's hyperplane count: 2^4 buckets.
-LSH_PLANES = 4
-
-
-def lsh_topk_portable(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    dim: int,
-) -> DataFrame:
-    """Approximate top-k: bucket join on the portable Rademacher LSH
+def lsh_topk_portable(corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Approximate top-``TOPK``: bucket join on the portable Rademacher LSH
     signature (multi-probe radius 1), exact cosine re-rank inside
     candidate buckets. Value-oracle-able: the buckets reproduce
     bit-for-bit in portable SQL. Recall < 1 by design: on
@@ -139,7 +143,7 @@ def lsh_topk_portable(
     No candidate dedup is needed: each corpus vector owns exactly ONE
     bucket and a query's probe set {b, b^1, b^2, ...} is distinct
     values, so a (query, corpus) pair matches at most once."""
-    b = portable_lsh_bucket(F.col("embedding"), dim, LSH_PLANES)
+    b = portable_lsh_bucket(F.col("embedding"))
     c_sig = corpus.select(F.col("vec_id"), F.col("embedding"), b.alias("bucket"))
     q_sig = queries.select(
         F.col("vec_id").alias("q_id"),
@@ -153,7 +157,7 @@ def lsh_topk_portable(
         "q_id", "vec_id", cosine(F.col("_qvec"), F.col("embedding")).alias("cos")
     )
     top = topk_by_key(
-        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], TOPK, rank_col="rank"
     )
     return top.select("q_id", "vec_id", "rank", "cos")
 
@@ -184,10 +188,9 @@ def _nearest_cells(
     df: DataFrame,
     cent: DataFrame,
     n: int,
-    id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """Rank the broadcast centroids by cosine per vector, keep the top
+    """Rank the broadcast centroids by cosine per ``vec_id``, keep the top
     ``n`` cells (ties broken by cell asc — exact double comparison,
     identical on both engines).
 
@@ -285,7 +288,7 @@ def _nearest_cells(
                 )
 
             return df.select(
-                F.col(id_col), F.col(vec_col), _argmax_cell(F.col(vec_col)).alias("cell")
+                F.col("vec_id"), F.col(vec_col), _argmax_cell(F.col(vec_col)).alias("cell")
             )
 
         # n > 1 — the IVF query-side probe (r12): the same Arrow score
@@ -307,7 +310,7 @@ def _nearest_cells(
             return pd.Series([cells_arr[row].tolist() for row in idx])
 
         return df.select(
-            F.col(id_col),
+            F.col("vec_id"),
             F.col(vec_col),
             F.explode(_topn_cells(F.col(vec_col))).alias("cell"),
         )
@@ -315,7 +318,7 @@ def _nearest_cells(
     dfn = df.withColumn("_vnrm", l2_norm(F.col(vec_col)))
     centn = cent.withColumn("_cnrm", l2_norm(F.col("_cvec")))
     scored = dfn.crossJoin(F.broadcast(centn)).select(
-        id_col,
+        "vec_id",
         vec_col,
         "cell",
         (
@@ -324,17 +327,16 @@ def _nearest_cells(
         ).alias("_cc"),
     )
     return topk_by_key(
-        scored, [id_col], [F.col("_cc").desc(), F.col("cell").asc()], n, rank_col="_crn"
-    ).select(id_col, vec_col, "cell")
+        scored, ["vec_id"], [F.col("_cc").desc(), F.col("cell").asc()], n, rank_col="_crn"
+    ).select("vec_id", vec_col, "cell")
 
 
 def ivf_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Approximate top-k via IVF with the portable hash-sampled coarse
+    """Approximate top-``TOPK`` via IVF with the portable hash-sampled coarse
     quantizer: corpus partitioned by nearest centroid, each query scans
     only its ``nprobe`` nearest cells with exact cosine re-rank. Scan
     fraction ~ nprobe/16 on balanced cells (16 cells); probing every cell
@@ -345,8 +347,8 @@ def ivf_topk_portable(
     A corpus vector owns exactly one cell and a query probes nprobe
     DISTINCT cells, so no candidate dedup is needed."""
     cent = portable_centroids(corpus, 16)
-    c_cells = _nearest_cells(corpus, cent, 1, "vec_id", "embedding")
-    q_cells = _nearest_cells(queries, cent, nprobe, "vec_id", "embedding").select(
+    c_cells = _nearest_cells(corpus, cent, 1, "embedding")
+    q_cells = _nearest_cells(queries, cent, nprobe, "embedding").select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("_qvec"), "cell"
     )
     cand = c_cells.join(F.broadcast(q_cells), on="cell").filter(
@@ -356,24 +358,25 @@ def ivf_topk_portable(
         "q_id", "vec_id", cosine(F.col("_qvec"), F.col("embedding")).alias("cos")
     )
     top = topk_by_key(
-        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], k, rank_col="rank"
+        scored, ["q_id"], [F.col("cos").desc(), F.col("vec_id").asc()], TOPK, rank_col="rank"
     )
     return top.select("q_id", "vec_id", "rank", "cos")
 
 
-# cosine_pairs_exact's block count B.
+# cosine_pairs_exact's block count B and cosine threshold.
 PAIR_BLOCKS = 8
+PAIR_MIN_COS = 0.4
 
 
-def cosine_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
-    """EXACT all-pairs cosine join: (id_a < id_b, cos >= threshold).
+def cosine_pairs_exact(df: DataFrame) -> DataFrame:
+    """EXACT all-pairs cosine join: (id_a < id_b, cos >= PAIR_MIN_COS).
 
     Block-grid candidate generation: each vector lands in one of
     PAIR_BLOCKS hash blocks; every grid cell (i, j), i <= j, pairs
     block i against block j with one numpy float64 GEMM inside
     applyInPandas. A pair of blocks appears in exactly one cell, so no
     pair is scored twice. The GEMM keeps pairs with estimated cos >=
-    threshold - 1e-6 (float64 matmul error ~1e-14, so recall is
+    PAIR_MIN_COS - 1e-6 (float64 matmul error ~1e-14, so recall is
     exact); survivors are re-scored with the sequential-fold
     ``cosine`` expression, which is bit-identical to DuckDB's
     list_cosine_similarity — the margin pre-filter never leaks into
@@ -403,7 +406,7 @@ def cosine_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
     )
     replicated = b.select("_id", "_v", "_blk", F.explode(cells).alias("_cell"))
 
-    margin = float(threshold) - 1e-6
+    margin = PAIR_MIN_COS - 1e-6
 
     def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         i, j = int(pdf["_cell"].iloc[0]["i"]), int(pdf["_cell"].iloc[0]["j"])
@@ -436,7 +439,7 @@ def cosine_pairs_exact(df: DataFrame, threshold: float) -> DataFrame:
         cand.join(va, "id_a")
         .join(vb, "id_b")
         .select("id_a", "id_b", cosine(F.col("_va"), F.col("_vb")).alias("cos"))
-        .filter(F.col("cos") >= threshold)
+        .filter(F.col("cos") >= PAIR_MIN_COS)
     )
 
 
@@ -486,7 +489,7 @@ def semantic_dedup_cells(
     cell join over the checkpointed assignment — the cap costs the
     one sizing reduction and nothing else until a hot cell exists."""
     cent = portable_centroids(corpus, nlist)
-    asg = _nearest_cells(corpus, cent, 1, "vec_id", "embedding")
+    asg = _nearest_cells(corpus, cent, 1, "embedding")
     # Precompute each vector's norm ONCE: cosine(a,b) recomputes both
     # norms per pair (3 sequential folds); dot/(na*nb) with carried
     # norms is the IDENTICAL float expression tree — l2_norm(a) =

@@ -88,16 +88,6 @@ def poly_gram_hash(g: Column, k: int) -> Column:
     return h
 
 
-def poly_gram_hash_sql(g: str, k: int) -> str:
-    """The identical hash as ANSI SQL text (for DuckDB oracles) —
-    generated by the same loop so the two renderings cannot drift."""
-    h = f"(CAST(ascii(substring({g}, 1, 1)) AS BIGINT) % {MERSENNE31})"
-    for j in range(2, k + 1):
-        h = (
-            f"(({h} * {POLY_P} + CAST(ascii(substring({g}, {j}, 1)) AS BIGINT))"
-            f" % {MERSENNE31})"
-        )
-    return h
 
 
 # Affine re-hash constants (MINSTD multiplier) for widening the 31-bit
@@ -136,10 +126,16 @@ def poly_gram_hasher60(k: int):
     return h
 
 
-def poly_gram_hash60_sql(g: str, k: int) -> str:
-    """DuckDB rendering of ``poly_gram_hasher60`` — same loop, same
+def poly_gram_hash60_sql() -> str:
+    """DuckDB rendering of ``poly_gram_hasher60(9)`` over the 9-gram
+    column ``g`` — the same loop as ``poly_gram_hash``, the same
     constants, bit-identical values."""
-    h1 = poly_gram_hash_sql(g, k)
+    h1 = f"(CAST(ascii(substring(g, 1, 1)) AS BIGINT) % {MERSENNE31})"
+    for j in range(2, 10):
+        h1 = (
+            f"(({h1} * {POLY_P} + CAST(ascii(substring(g, {j}, 1)) AS BIGINT))"
+            f" % {MERSENNE31})"
+        )
     return (
         f"((({h1}) & {_MASK30}) + "
         f"((({POLY_A2} * ({h1}) + {POLY_B2}) % {MERSENNE31}) & {_MASK30}) * {1 << 30})"
@@ -148,15 +144,14 @@ def poly_gram_hash60_sql(g: str, k: int) -> str:
 
 def shingles_exploded(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     k: int,
     gram_hash=None,
     distinct: bool = True,
     keep_pos: bool = False,
 ) -> DataFrame:
-    """Distinct (doc, k-gram-hash) pairs as a tall narrow relation —
-    the shared foundation of every dedup variant: (_id, _len, _h).
+    """Distinct (doc, k-gram-hash) pairs of a (doc_id, text) corpus as a
+    tall narrow relation — the shared foundation of every dedup
+    variant: (_id, _len, _h).
     Shingling is a scalar substring over an exploded position sequence
     and a hash (all codegen); the distinct is a partial-aggregated
     groupBy.
@@ -199,13 +194,12 @@ def shingles_exploded(
     if keep_pos and distinct:
         raise ValueError("keep_pos requires distinct=False (multiset output)")
     pos_cols = ("_p",) if keep_pos else ()
+    t = df.select(
+        F.col("doc_id").alias("_id"),
+        F.col("text").alias("_t"),
+        F.length(F.col("text")).alias("_len"),
+    ).filter(F.length("_t") >= k)
     if gram_hash is None or getattr(gram_hash, "_poly60", False):
-        t = df.select(
-            F.col(id_col).alias("_id"),
-            F.col(text_col).alias("_t"),
-            F.length(F.col(text_col)).alias("_len"),
-        ).filter(F.length("_t") >= k)
-
         # distinct=True folds the (doc, hash) DISTINCT into the UDF:
         # _len is functionally dependent on _id, so the
         # relation-level distinct equals a per-document np.unique of
@@ -259,11 +253,6 @@ def shingles_exploded(
             "_id", "_len", *pos_cols, "_h"
         )
 
-    t = df.select(
-        F.col(id_col).alias("_id"),
-        F.col(text_col).alias("_t"),
-        F.length(F.col(text_col)).alias("_len"),
-    ).filter(F.length("_t") >= k)
     out = (
         t.select(
             "_id",
@@ -362,14 +351,13 @@ def _verify_pairs(cand: DataFrame, sh: DataFrame, threshold: float) -> DataFrame
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     threshold: float,
     length_block: int | None = None,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """Exact shingle-Jaccard pairs (id_a < id_b, jaccard >= threshold),
-    optionally restricted to |len_a - len_b| <= ``length_block``.
+    """Exact shingle-Jaccard pairs (id_a < id_b, jaccard >= threshold)
+    of a (doc_id, text) corpus, optionally restricted to
+    |len_a - len_b| <= ``length_block``.
 
     The (doc, shingle-hash) relation is localCheckpointed: THREE
     consumers read it (document frequency, the ranked prefix join,
@@ -398,7 +386,7 @@ def ngram_jaccard_pairs(
 
     Both filters are exact-recall; all join keys are 8-byte hashes.
     """
-    sh = shingles_exploded(df, id_col, text_col, shingle_k)
+    sh = shingles_exploded(df, shingle_k)
     if _materialize_enabled():
         # LAZY (r11): the first consuming stage materializes the
         # shingle pass; concurrent consumers dedupe via block locks.
@@ -510,20 +498,19 @@ def banded_minhash(sh: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    threshold: float,
-    shingle_k: int = 5,
-) -> DataFrame:
-    """MinHash + LSH banding + exact-Jaccard verification.
+# minhash_lsh_pairs' Jaccard threshold.
+MINHASH_THRESHOLD = 0.8
+
+
+def minhash_lsh_pairs(df: DataFrame, shingle_k: int = 5) -> DataFrame:
+    """MinHash + LSH banding + exact-Jaccard verification over a
+    (doc_id, text) corpus.
 
     With k=64, b=16 (r=4): P(candidate | j) = 1-(1-j^4)^16 — ~1.0 at
     j=0.9 (miss probability ~4e-8), ~0.12 at j=0.3, so candidates are
     few and verification exact. Returns (id_a, id_b, jaccard >=
-    threshold), same contract as ngram_jaccard_pairs but probabilistic
-    recall.
+    MINHASH_THRESHOLD), same contract as ngram_jaccard_pairs but
+    probabilistic recall.
 
     The signature is k simultaneous MIN aggregates over per-shingle
     affine re-hashes of ONE portable 60-bit hash per shingle — scalar
@@ -533,12 +520,12 @@ def minhash_lsh_pairs(
     Between banding and exact verification sits a signature-agreement
     pre-filter: the fraction of equal signature slots is an unbiased
     estimate of Jaccard, so candidates estimated far below threshold
-    (< threshold/2) are dropped before any shingle is touched. This
+    (< MINHASH_THRESHOLD/2) are dropped before any shingle is touched. This
     makes the operator robust to corpora whose background similarity
     sits near the band-collision knee — false candidates cost 64
     integer compares, not an intersection count.
     """
-    sh = shingles_exploded(df, id_col, text_col, shingle_k)
+    sh = shingles_exploded(df, shingle_k)
     if _materialize_enabled():
         # two consumers (signature build + exact verify) — same
         # recompute-vs-store trade as ngram_jaccard_pairs; LAZY (r11)
@@ -556,17 +543,19 @@ def minhash_lsh_pairs(
     )
     cand = (
         _bucket_pairs(banded, F.struct(F.col("_id"), F.col("_sig")))
-        .filter(est >= threshold / 2)
+        .filter(est >= MINHASH_THRESHOLD / 2)
         .select(F.col("_a._id").alias("id_a"), F.col("_b._id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])  # a pair may collide in many bands
     )
-    return _verify_pairs(cand, sh, threshold)
+    return _verify_pairs(cand, sh, MINHASH_THRESHOLD)
 
 
 def simhash_sketch(sh: DataFrame, bits: int = 64) -> DataFrame:
     """(_id, _sim): ``bits``-bit SimHash per doc from the exploded
-    (doc, shingle_hash) relation. bit b = 1 iff more shingle hashes
-    have bit b set than unset.
+    (doc, gram position, shingle_hash) multiset relation
+    (``shingles_exploded(..., distinct=False, keep_pos=True)``); ``bits``
+    must be a multiple of 4. bit b = 1 iff more shingle hashes have
+    bit b set than unset.
 
     Bit counting is LANE-PACKED: instead of ``bits`` conditional sums,
     bits {b, b+W, b+2W, b+3W} (W = bits/4) are accumulated in four
@@ -579,62 +568,24 @@ def simhash_sketch(sh: DataFrame, bits: int = 64) -> DataFrame:
     A lane carries into its neighbor once a per-doc per-bit count
     reaches 2^W (32768 at W=15) — i.e. any document with >= 2^W
     shingles of one bit value, which web/book-scale or boilerplate-
-    heavy text genuinely reaches (~64 KB of repetitive content). Two
-    guards make that IMPOSSIBLE rather than unlikely:
-
-    * If ``sh`` carries a gram position ``_p`` (shingles_exploded
-      ``keep_pos=True``), lanes aggregate per (doc, chunk) with
-      chunk = _p >> (W-1), so no group exceeds 2^(W-1) rows; the
-      unpacked per-bit counts are then summed per doc in a SECOND tiny
-      aggregation (|docs| x ceil(shingles/2^(W-1)) rows). The heavy
-      first level keeps full lane-packed speed and shuffles the same
-      volume (key is (doc, chunk) instead of doc); overflow would now
-      need a single 2^63-shingle document.
-    * Without positions, the single-level lane aggregation keeps its
-      speed but RAISES (codegen-side) on any document whose shingle
-      count could overflow a lane — silent sketch corruption is not an
-      outcome.
+    heavy text genuinely reaches (~64 KB of repetitive content). The
+    gram position ``_p`` makes that IMPOSSIBLE rather than unlikely:
+    lanes aggregate per (doc, chunk) with chunk = _p >> (W-1), so no
+    group exceeds 2^(W-1) rows; the unpacked per-bit counts are then
+    summed per doc in a SECOND tiny aggregation (|docs| x
+    ceil(shingles/2^(W-1)) rows). The heavy first level keeps full
+    lane-packed speed and shuffles the same volume (key is (doc,
+    chunk) instead of doc); overflow would now need a single
+    2^63-shingle document.
 
     Post-aggregation, counts are majority-voted into the sketch on
     |docs| rows — negligible."""
-    if bits % 4 == 0 and "_p" in sh.columns:
-        width = bits // 4
-        lane_mask = sum(1 << (width * j) for j in range(4))
-        part = (
-            sh.select(
-                "_id", F.shiftright(F.col("_p"), width - 1).alias("_chunk"), "_h"
-            )
-            .groupBy("_id", "_chunk")
-            .agg(
-                F.count(F.lit(1)).alias("_cnt"),
-                *[
-                    F.sum(
-                        F.shiftrightunsigned("_h", b).bitwiseAND(F.lit(lane_mask))
-                    ).alias(f"_s{b}")
-                    for b in range(width)
-                ],
-            )
-        )
-
-        def unpack(i: int) -> Column:
-            b, j = i % width, i // width
-            return F.shiftrightunsigned(F.col(f"_s{b}"), width * j).bitwiseAND(
-                F.lit((1 << width) - 1)
-            )
-
-        counts = part.groupBy("_id").agg(
-            F.sum("_cnt").alias("_cnt"),
-            *[F.sum(unpack(i)).alias(f"_c{i}") for i in range(bits)],
-        )
-
-        def bit_count(i: int) -> Column:
-            return F.col(f"_c{i}")
-
-    elif bits % 4 == 0:
-        width = bits // 4
-        lane_mask = sum(1 << (width * j) for j in range(4))
-        lane_cap = 1 << width
-        counts = sh.groupBy("_id").agg(
+    width = bits // 4
+    lane_mask = sum(1 << (width * j) for j in range(4))
+    part = (
+        sh.select("_id", F.shiftright(F.col("_p"), width - 1).alias("_chunk"), "_h")
+        .groupBy("_id", "_chunk")
+        .agg(
             F.count(F.lit(1)).alias("_cnt"),
             *[
                 F.sum(
@@ -643,50 +594,25 @@ def simhash_sketch(sh: DataFrame, bits: int = 64) -> DataFrame:
                 for b in range(width)
             ],
         )
-        # loud guard: _cnt >= 2^W means a lane carry was POSSIBLE, so
-        # the sketch cannot be trusted — fail instead of corrupting
-        counts = counts.withColumn(
-            "_cnt",
-            F.when(
-                F.col("_cnt") >= lane_cap,
-                F.raise_error(
-                    F.concat(
-                        F.lit("simhash lane overflow: document "),
-                        F.col("_id").cast("string"),
-                        F.lit(
-                            f" has >= {lane_cap} shingles; pass positions "
-                            "(shingles_exploded keep_pos=True) for the "
-                            "chunked overflow-proof path"
-                        ),
-                    )
-                ).cast("bigint"),
-            ).otherwise(F.col("_cnt")),
+    )
+
+    def unpack(i: int) -> Column:
+        b, j = i % width, i // width
+        return F.shiftrightunsigned(F.col(f"_s{b}"), width * j).bitwiseAND(
+            F.lit((1 << width) - 1)
         )
 
-        def bit_count(i: int) -> Column:
-            b, j = i % width, i // width
-            return F.shiftrightunsigned(F.col(f"_s{b}"), width * j).bitwiseAND(
-                F.lit((1 << width) - 1)
-            )
-
-    else:
-        counts = sh.groupBy("_id").agg(
-            F.count(F.lit(1)).alias("_cnt"),
-            *[
-                F.sum(F.shiftright("_h", i).bitwiseAND(F.lit(1))).alias(f"_c{i}")
-                for i in range(bits)
-            ],
-        )
-
-        def bit_count(i: int) -> Column:
-            return F.col(f"_c{i}")
+    counts = part.groupBy("_id").agg(
+        F.sum("_cnt").alias("_cnt"),
+        *[F.sum(unpack(i)).alias(f"_c{i}") for i in range(bits)],
+    )
 
     # bit 63 is the sign bit of int64: its weight is -(2^63)
     sim = F.lit(0).cast("bigint")
     for i in range(bits):
         weight = (1 << i) if i < 63 else -(1 << 63)
         sim = sim + F.when(
-            bit_count(i) * 2 > F.col("_cnt"), F.lit(weight).cast("bigint")
+            F.col(f"_c{i}") * 2 > F.col("_cnt"), F.lit(weight).cast("bigint")
         ).otherwise(F.lit(0).cast("bigint"))
     return counts.select("_id", sim.alias("_sim"))
 
@@ -701,14 +627,12 @@ SIMHASH_BANDS = 4
 
 def simhash_pairs(
     df: DataFrame,
-    id_col: str,
-    text_col: str,
     shingle_k: int = 5,
     bits: int = 64,
     gram_hash=None,
 ) -> DataFrame:
-    """SimHash near-dup pairs (Hamming distance <= SIMHASH_BANDS - 1 = 3)
-    with banded blocking: SIMHASH_BANDS bands of ``bits //
+    """SimHash near-dup pairs of a (doc_id, text) corpus (Hamming
+    distance <= SIMHASH_BANDS - 1 = 3) with banded blocking: SIMHASH_BANDS bands of ``bits //
     SIMHASH_BANDS`` bits; by pigeonhole any pair within Hamming
     distance SIMHASH_BANDS - 1 shares at least one exact band, so the
     blocked join loses nothing; the Hamming filter then prunes
@@ -735,8 +659,6 @@ def simhash_pairs(
     sk = simhash_sketch(
         shingles_exploded(
             df,
-            id_col,
-            text_col,
             shingle_k,
             gram_hash=gram_hash or F.xxhash64,
             distinct=False,

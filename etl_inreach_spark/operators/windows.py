@@ -8,6 +8,9 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Events of one key further apart than this start a new session.
+SESSION_GAP_SECONDS = 1800
+
 
 def tumbling_bucket(ts: Column, width_seconds: int) -> Column:
     """Epoch-aligned tumbling window start.
@@ -23,36 +26,30 @@ def tumbling_bucket(ts: Column, width_seconds: int) -> Column:
     return F.timestamp_seconds(secs - F.pmod(secs, F.lit(width_seconds)))
 
 
-def tumbling_agg(
-    df: DataFrame,
-    ts_col: str,
-    width_seconds: int,
-    group_cols: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """Tumbling-window aggregation: one hash agg, partial+final."""
-    bucket = tumbling_bucket(F.col(ts_col), width_seconds).alias("bucket")
-    return df.groupBy(bucket, *[F.col(c) for c in group_cols]).agg(*aggs)
+def tumbling_agg(df: DataFrame, aggs: Sequence[Column]) -> DataFrame:
+    """15-minute tumbling-window aggregation of ``ts`` per ``event_type``:
+    one hash agg, partial+final."""
+    bucket = tumbling_bucket(F.col("ts"), 900).alias("bucket")
+    return df.groupBy(bucket, F.col("event_type")).agg(*aggs)
 
 
 def sessionize(
     df: DataFrame,
     key_cols: Sequence[str],
-    ts_col: str,
-    gap_seconds: int,
     arrival_col: str,
     session_col: str = "session_id",
 ) -> DataFrame:
-    """Gap-based sessions: a new session starts when the time since the
-    previous event of the same key exceeds ``gap_seconds``.
+    """Gap-based sessions over ``ts``: a new session starts when the time
+    since the previous event of the same key exceeds
+    ``SESSION_GAP_SECONDS``.
 
     Two window passes over ONE shuffle+sort (same partitioning and
     ordering, so Catalyst reuses the sort): lag to detect gaps, then a
     running sum to number sessions. Session ids are 1-based per key.
     """
-    order = [F.col(ts_col).asc(), F.col(arrival_col).asc()]
+    order = [F.col("ts").asc(), F.col(arrival_col).asc()]
     w = Window.partitionBy(*key_cols).orderBy(*order)
-    prev_ts = F.lag(F.col(ts_col)).over(w)
+    prev_ts = F.lag(F.col("ts")).over(w)
     is_new = F.when(
         prev_ts.isNull()
         # timestamp subtraction yields a microsecond-precision
@@ -61,8 +58,8 @@ def sessionize(
         # and type-agnostic: works for TIMESTAMP and TIMESTAMP_NTZ
         # alike, where unix_micros() rejects NTZ input.
         | (
-            F.col(ts_col) - prev_ts
-            > F.expr(f"INTERVAL '{int(gap_seconds)}' SECOND")
+            F.col("ts") - prev_ts
+            > F.expr(f"INTERVAL '{SESSION_GAP_SECONDS}' SECOND")
         ),
         F.lit(1),
     ).otherwise(F.lit(0))

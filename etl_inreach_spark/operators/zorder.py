@@ -83,12 +83,17 @@ def minmax_bucket(col: Column, lo: Column, hi: Column, bits: int = 16) -> Column
 # Bits per column of with_zvalue's Morton code.
 ZORDER_BITS = 16
 
+# The orders columns (customer key, order-date epoch seconds) that the
+# Morton and Hilbert layouts cluster on.
+LAYOUT_COLS = ("o_custkey", "o_secs")
 
-def with_zvalue(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Append the ZORDER_BITS-per-column Morton code of ``cols`` as
-    ``_zvalue``: one 1-row
+
+def with_zvalue(df: DataFrame) -> DataFrame:
+    """Append the ZORDER_BITS-per-column Morton code of ``LAYOUT_COLS``
+    as ``_zvalue``: one 1-row
     aggregate (broadcast) for the global min-max bounds, then pure
     scalar bit arithmetic — no shuffle of ``df`` itself."""
+    cols = LAYOUT_COLS
     bounds = df.agg(
         *[F.min(c).alias(f"_lo_{c}") for c in cols],
         *[F.max(c).alias(f"_hi_{c}") for c in cols],
@@ -108,12 +113,8 @@ def with_zvalue(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     )
 
 
-def zorder_repartition(
-    df: DataFrame,
-    cols: Sequence[str],
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """``df`` range-partitioned by the Morton code of ``cols`` (the
+def zorder_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """``df`` range-partitioned by the Morton code of ``LAYOUT_COLS`` (the
     OPTIMIZE ZORDER layout pass, minus the file writer). Appends the
     code as ``_zvalue`` so callers can sortWithinPartitions / write and
     tests can audit locality. One 1-row aggregate (broadcast) for the
@@ -121,20 +122,15 @@ def zorder_repartition(
     range boundaries -> evenly SIZED partitions (what you want for
     shuffle/compute); ``write_zordered`` snaps boundaries to the
     z-grid instead (what you want for tight file zonemaps)."""
-    b = with_zvalue(df, cols)
+    b = with_zvalue(df)
     if num_partitions:
         return b.repartitionByRange(num_partitions, F.col("_zvalue"))
     return b.repartitionByRange(F.col("_zvalue"))
 
 
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    num_files: int = 16,
-) -> None:
+def write_zordered(df: DataFrame, path: str, num_files: int = 16) -> None:
     """Write ``df`` as parquet laid out by the Morton code of
-    ``cols``: one file per cell of the top-bits z-GRID, rows sorted
+    ``LAYOUT_COLS``: one file per cell of the top-bits z-GRID, rows sorted
     by the full code WITHIN each file, so every file's min-max
     envelope is one small rectangle in column space and every ROW
     GROUP inside it is an even smaller one — both the file-skipping
@@ -153,8 +149,8 @@ def write_zordered(
     scaling down with file count. num_files is rounded down to a
     power of two; empty cells write no file."""
     k = max(1, (num_files).bit_length() - 1)  # floor(log2)
-    total = ZORDER_BITS * len(cols)
-    z = with_zvalue(df, cols)
+    total = ZORDER_BITS * len(LAYOUT_COLS)
+    z = with_zvalue(df)
     zq = F.shiftright(F.col("_zvalue"), total - k)
     (
         z.withColumn("_zcell", zq)
@@ -166,8 +162,8 @@ def write_zordered(
     )
 
 
-def file_envelopes(path: str, cols: Sequence[str]) -> "list[dict]":
-    """Per-file min-max envelopes on ``cols`` read straight from the
+def file_envelopes(path: str) -> "list[dict]":
+    """Per-file min-max envelopes on ``LAYOUT_COLS`` read straight from the
     parquet footers (pyarrow, no data pages touched) — the same
     metadata a lakehouse zonemap/file-skipping index serves. Audit /
     planning utility: runs on the driver over footers only, never row
@@ -182,7 +178,7 @@ def file_envelopes(path: str, cols: Sequence[str]) -> "list[dict]":
         md = pq.ParquetFile(str(f)).metadata
         names = {md.schema.column(i).name: i for i in range(md.num_columns)}
         env: dict = {"file": f.name, "rows": md.num_rows}
-        for c in cols:
+        for c in LAYOUT_COLS:
             lo = hi = None
             for rg in range(md.num_row_groups):
                 st = md.row_group(rg).column(names[c]).statistics
@@ -270,8 +266,8 @@ def hilbert_lookup(spark, bits: int = 8) -> DataFrame:
 HILBERT_BITS = 8
 
 
-def with_hilbert(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """Append the 2-D Hilbert code of ``cols`` as ``_hvalue``: one 1-row
+def with_hilbert(df: DataFrame) -> DataFrame:
+    """Append the 2-D Hilbert code of ``LAYOUT_COLS`` as ``_hvalue``: one 1-row
     bounds aggregate (broadcast), min-max bucketize both columns to
     the 2^HILBERT_BITS grid, then broadcast-hash-join the driver-built
     (bx, by) -> code lookup — no UDF, no shuffle of ``df`` itself.
@@ -279,8 +275,7 @@ def with_hilbert(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     DuckDB recursive CTE runs the same 8-level rotation recurrence per
     row; pinned exactly equal to the lookup for the whole 256x256
     grid)."""
-    if len(cols) != 2:
-        raise ValueError("with_hilbert is 2-D")
+    cols = LAYOUT_COLS
     spark = df.sparkSession
     bounds = df.agg(
         *[F.min(c).alias(f"_lo_{c}") for c in cols],

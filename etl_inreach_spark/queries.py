@@ -20,6 +20,8 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_inreach_spark.session import tune
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 _QUERIES: dict[str, QueryFn] = {}
@@ -27,13 +29,23 @@ _ORACLES: dict[str, str] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query and (optionally) its DuckDB oracle SQL."""
+    """Register a query and (optionally) its DuckDB oracle SQL.
+
+    The registered (and returned) callable applies ``session.tune`` to
+    the session before the body builds anything, so every query runs
+    with the engine's runtime confs on any session, the driver's
+    included."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        _QUERIES[name] = fn
+        @functools.wraps(fn)
+        def tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tune(spark)
+            return fn(spark, sf_dir)
+
+        _QUERIES[name] = tuned
         if oracle is not None:
             _ORACLES[name] = oracle
-        return fn
+        return tuned
 
     return deco
 

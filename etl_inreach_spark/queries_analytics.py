@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 
 # SCD2 interval derivation, shared VERBATIM by the scd2_user_state
@@ -68,7 +67,6 @@ def scd2_user_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic gaps-and-islands chain (lag -> running sum -> group ->
     lead). Every window and the aggregation share the user_id
     partitioning, so the whole plan is ONE shuffle on user_id."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w1 = Window.partitionBy("user_id").orderBy("ts", "event_id")
     prev = F.lag("event_type").over(w1)
@@ -141,7 +139,6 @@ def resample_gapfill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     is last(ignorenulls) over the user partition, sharing the join's
     user_id shuffle. Values are carried, never summed, so no decimal
     discipline is needed."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     horizon = ev.agg(F.date_trunc("hour", F.max("ts")).alias("h1"))
     spine = (
@@ -243,7 +240,6 @@ def data_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx_count_distinct there — a profiler does not need the value
     gate's exactness), and hash vs sort aggregation over that 7x
     relation is exactly the difference measured here."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     aggs = []
     dist_aggs = []
@@ -303,7 +299,6 @@ def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     The c_nationkey = s_nationkey equality joins customer BEFORE
     aggregation — the classic case Catalyst cannot reorder away, so
     the plan is written in the efficient order by hand."""
-    tune(spark)
     cu = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -355,7 +350,6 @@ def orders_above_cust_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     price*count > sum in integer cents, so the boundary is exact in
     both engines (a decimal AVG would round differently: DuckDB's AVG
     returns DOUBLE, Spark's returns DECIMAL)."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("analytics_orders")
     return spark.sql(
         """
@@ -399,7 +393,6 @@ def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     run = uuid.uuid4().hex[:12]
     base = f"/tmp/spark_graft_stream/{run}"
@@ -484,7 +477,6 @@ def window_function_zoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-window pattern an engine must not split into per-function
     exchanges. Values are carried or ratio-of-counts doubles
     (deterministic IEEE division), no decimal discipline needed."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wf = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -525,7 +517,6 @@ def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
@@ -589,7 +580,6 @@ def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per key, WindowGroupLimit pushes it into the sort), then the
     tombstone filter on the surviving row — commit order
     (ts, event_id) DESC matches the oracle's tie-break exactly."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     ranked = ev.withColumn(
         "_rn",
@@ -628,7 +618,6 @@ def rollup_time_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation, no self-union of scans), with grouping() flags
     disambiguating real NULLs from subtotal rows. Decimal-exact sums
     so subtotals hash identically in both engines."""
-    tune(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .withColumn("order_year", F.year("o_orderdate"))
@@ -663,7 +652,6 @@ def variant_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle extracts the same field with DuckDB's JSON functions;
     the (uniform, by construction) per-row schema string is asserted
     literally so a shape drift in the generator breaks the hash."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     v = ev.select("event_id", F.parse_json("props").alias("_v"))
     return v.select(
@@ -727,7 +715,6 @@ def cogroup_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     row count must go through an eager localCheckpoint first: a bare
     ``count()`` prunes the cogroup inputs and crashes the pandas
     function."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     bucket = F.pmod(F.col("user_id"), F.lit(256)).alias("bucket")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -836,7 +823,6 @@ def zorder_events_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     column). Pure shift/mask column expressions (functions/vectors.py
     morton_interleave16), the oracle unrolls the same bit-spreading
     stages as CTE steps."""
-    tune(spark)
     from etl_inreach_spark.functions.vectors import morton_interleave16
 
     ev = load_table(spark, sf_dir, "events")
@@ -869,7 +855,6 @@ def tpch_q13_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     The outer-join-with-on-clause-filter is the shape that
     distinguishes a real outer-join implementation from a
     filter-then-join rewrite."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select("c_custkey")
     o = load_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
     per = (
@@ -908,7 +893,6 @@ def tpch_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders — at 100 TB the agg is the only full-table pass and both
     joins carry ~0.1% of orders (AQE broadcasts the survivors).
     Decimal-summed quantity (exact) surfaced as DOUBLE."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
@@ -957,7 +941,6 @@ def tpch_q21_last_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     — never as a broadcast-nested-loop. The supplier dim joins
     broadcast. This is the decorrelation pattern Catalyst applies to
     EXISTS subqueries, written explicitly at the DataFrame layer."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_shipdate"
     )
@@ -1001,7 +984,6 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's injected runtime bloom filter). At 100 TB this is the
     difference between shuffling every fact row and shuffling ~the
     matching fraction + epsilon."""
-    tune(spark)
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1044,7 +1026,6 @@ def incremental_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     lo, hi = o.agg(F.min("o_orderdate"), F.max("o_orderdate")).first()
@@ -1108,7 +1089,6 @@ def pandas_udaf_median_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     BOUNDED groups (5 priorities here); corpus-scale exact percentiles
     belong to the sort-based order_value_percentiles path. The point
     under the gate is the pandas-UDAF API tier itself."""
-    tune(spark)
     # typed-hint GROUPED_AGG form (Series -> scalar); the stringized
     # hints resolve against this module's globals, which import pd
     @F.pandas_udf("double")
@@ -1162,7 +1142,6 @@ def scd2_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins the interval that is OPEN AT T (the later state) — both
     engines apply the identical predicate, and the SCD2 reading is
     'the state in effect at T', not 'the state this event created'."""
-    tune(spark)
     iv = scd2_user_state(spark, sf_dir).select(
         F.col("user_id").alias("_uid"), "state_seq", "state",
         "valid_from", "valid_to",
@@ -1213,7 +1192,6 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-outer join on the key, null-safe per-column comparison (no
     hashes, so no collision-masked misses), output |changes|-sized.
     Exercises all three change classes on real data."""
-    tune(spark)
     from etl_inreach_spark.operators.relational import snapshot_diff
 
     orders = load_table(spark, sf_dir, "orders")
@@ -1266,7 +1244,6 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the scan, and the only big shuffles are the
     lineitem-orders-customer equi-joins. Decimal-fold revenue for the
     exact cross-engine sum."""
-    tune(spark)
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     pair = n.filter(F.col("n_name").isin("NATION_1", "NATION_2"))
     s = load_table(spark, sf_dir, "supplier").join(
@@ -1325,7 +1302,6 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered (per-partition partial top-k + driver merge), not a
     global sort. Deterministic tie-break on custkey; decimal-fold
     revenue."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey"
     )
@@ -1391,7 +1367,6 @@ def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     needed). Generalizes /root/reference/task.ts:151-159's
     "latest-state share" reporting into the standard promo-share form.
     """
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
     price_d = F.col("l_extendedprice").cast("decimal(14,4)")
@@ -1456,7 +1431,6 @@ def cms_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     from etl_inreach_spark.operators.cms import cms_build
     from etl_inreach_spark.sinks.upsert import merge_aggregate_partitioned
 
@@ -1520,7 +1494,6 @@ def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row final merge — the shape that proves predicate pushdown and
     column pruning survive into the physical plan. Decimal-fold
     product for the exact cross-engine sum."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     rev = F.col("l_extendedprice").cast("decimal(18,4)") * F.col(
         "l_discount"
@@ -1573,7 +1546,6 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     The only big shuffles are lineitem-orders-customer. The share is a
     ratio of two decimal-fold sums divided as doubles — exact and
     order-insensitive on both engines."""
-    tune(spark)
     n = load_table(spark, sf_dir, "nation")
     r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     cust_nations = n.join(
@@ -1644,7 +1616,6 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 1-row broadcast joined back, never a driver collect. Equality on
     total_revenue is safe because the decimal-fold makes both engines'
     revenue bit-identical before the double cast."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     revenue = (
         li.filter(
@@ -1695,7 +1666,6 @@ def tpch_q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly. The threshold avg decimal-folds (sum exact, then ONE
     double division) so both engines filter on bit-identical
     thresholds. The part filter BROADCASTS into both sides."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     pa = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") == "Brand#4") & (F.col("p_size") < 15)
@@ -1750,7 +1720,6 @@ def tpch_q19_disjunctive_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     matching parts; the mixed part+lineitem disjuncts evaluate post-
     join in one codegen stage — no union-of-three-joins rewrite, no
     double scan of lineitem."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_brand", "p_size"
@@ -1816,7 +1785,6 @@ def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan so the anti side shrinks before the shuffle), then a
     nationkey hash agg. Decimal-fold for the average and the output
     sum."""
-    tune(spark)
     pool = load_table(spark, sf_dir, "customer").filter(
         F.col("c_nationkey").isin(1, 3, 5, 7, 9, 11)
     ).select("c_custkey", "c_nationkey", "c_acctbal")
@@ -1880,7 +1848,6 @@ def pareto_frontier_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     has already collapsed the data 5 orders of magnitude, which is
     what makes the global frame safe. Prices/dates pass through raw
     (no arithmetic), so doubles are bit-identical parquet values."""
-    tune(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .where(F.col("o_orderpriority") == "1-URGENT")
@@ -1937,7 +1904,6 @@ def cohort_retention_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     so always a multiple of 7). At 100 TB the distinct and the final
     agg are both partial-aggregated and the widest relation is one
     row per active (user, week) — the standard retention shape."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     act = ev.select(
         "user_id", F.to_date(F.date_trunc("week", F.col("ts"))).alias("wk")
@@ -1995,7 +1961,6 @@ def trailing_1h_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan shape. For indefinitely-running pipelines the streaming
     sliding-window operator (sliding_1h_user_activity) is the
     companion shape."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     sec = F.unix_timestamp("ts")
     base = ev.select(
@@ -2083,7 +2048,6 @@ def ewma_user_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     block fold); windows are partitioned by (user, block) — never a
     data-sized unpartitioned stream. The DECIMAL grid bounds the
     weighted prefix by 2^16 * c_max * 2^20 << 10^38."""
-    tune(spark)
     blk_len = 16
     ev = load_table(spark, sf_dir, "events")
     dc = (
@@ -2238,7 +2202,6 @@ def mad_anomaly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     the event volume grows per-day row COUNT, not the per-type series
     length; for multi-decade histories switch the median to the
     rank-selection form of exact_quantile_rankselect."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     dc = ev.groupBy(
         "event_type", F.to_date("ts").alias("day")
@@ -2297,7 +2260,6 @@ def ohlc_user_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-shuffles). This is the aggregation form of the
     latest_per_key argmax dedup (reference O18) generalized to
     first+last+extremes."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     key = F.struct(F.col("ts").alias("t"), F.col("event_id").alias("i"),
                    F.col("value").alias("v"))
@@ -2361,13 +2323,12 @@ def session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg count whose key space is bounded by |event_types|^3,
     and a TakeOrdered top-20 (no global sort). The path relation is
     vocabulary-sized, never event-sized."""
-    tune(spark)
     from etl_inreach_spark.operators.windows import sessionize
 
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    g = sessionize(ev, ["user_id"], "ts", 1800, "event_id", "sid")
+    g = sessionize(ev, ["user_id"], "event_id", "sid")
     w = Window.partitionBy("user_id", "sid").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )

@@ -20,7 +20,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 # Portable whitespace tokenization (same rendering as queries_training).
 _DUCK_TOKS = "list_filter(string_split_regex(text, '\\s+'), x -> x != '')"
@@ -81,7 +80,6 @@ def segment_dedup_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64(seg_text) (fixed-width) with the string carried alongside;
     semantics identical modulo 64-bit collisions.
     """
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
 
     d = (
@@ -145,7 +143,6 @@ def stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible under any partitioning. The filter is a narrow
     per-row predicate (no shuffle); at scale it composes with
     partition pruning when the stratum is a partition column."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     h = _sample_hash(F.col("doc_id"))
     thresh = F.when(
@@ -177,7 +174,6 @@ def reservoir_sample_per_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key reservoir sampling. One shuffle on the stratum key; the
     rank filter cuts each partition to k rows before the next stage
     (WindowGroupLimit pushes the top-k into the sort at scale)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("source").orderBy(
         _sample_hash(F.col("doc_id")), F.col("doc_id")
@@ -222,7 +218,6 @@ def domain_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     oversampling disallowed). The global total is a window over the
     already-aggregated 20-row relation — the single-partition window
     is on post-agg data, never the raw corpus."""
-    tune(spark)
     from etl_inreach_spark.functions.text import token_count
 
     d = load_table(spark, sf_dir, "documents")
@@ -279,7 +274,6 @@ def udtf_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the table-function API the way multimodal covers mapInPandas.
     Arrow-optimized (ArrowEvalPythonUDTF), so the registry-wide
     no-BatchEvalPython audit still holds."""
-    tune(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="token string, start_pos bigint, run_len bigint", useArrow=True)
@@ -330,7 +324,6 @@ def pseudonymize_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     without the key. Pure column expressions (regexp_extract + integer
     arithmetic), no shuffle; the analytics column (mktsegment)
     survives untouched."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     ident = F.regexp_extract(F.col("c_name"), r"([0-9]+)", 1).cast("bigint")
     return c.select(
@@ -368,7 +361,6 @@ def hof_array_zoo(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice — all JVM-side lambda expressions, zero UDFs, zero shuffles.
     The fold accumulates in BIGINT so the oracle's list_sum (HUGEINT
     in DuckDB) renders identically after the CAST."""
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents").select(
@@ -423,7 +415,6 @@ def groupwise_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-level split, with the portable polynomial string hash
     (functions/text.rolling_hash) standing in for the affine integer
     hash because the group key is a string."""
-    tune(spark)
     from etl_inreach_spark.functions.text import rolling_hash
 
     d = load_table(spark, sf_dir, "documents")
@@ -460,7 +451,6 @@ def compress_consecutive_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on user_id; downstream joins pay |transitions|, not
     |events|. NULL-first semantics: a user's first event always
     survives."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     prev = F.lag("event_type").over(w)
@@ -525,7 +515,6 @@ def token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Generalizes the reference's keep-the-freshest-rows selection
     (/root/reference/task.ts:151-159) from per-key latest to
     global best-under-budget."""
-    tune(spark)
     from etl_inreach_spark.functions.text import (
         LANG_MARKERS,
         marker_hits,
@@ -628,7 +617,6 @@ def priority_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME window pass. Generalizes the reference's keep-best-rows
     selection (/root/reference/task.ts:151-159) to weighted-k-with-
     estimation."""
-    tune(spark)
     from etl_inreach_spark.operators.sampling import priority_sample
 
     d = load_table(spark, sf_dir, "documents")
@@ -662,7 +650,6 @@ def global_row_index_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/packing.pack_chunks), plan-shape-pinned in
     tests/test_indexing.py. Equality with the oracle holds because the
     bucket function floor(key*B/(max+1)) is monotone in the key."""
-    tune(spark)
     from etl_inreach_spark.operators.indexing import global_row_index
 
     o = load_table(spark, sf_dir, "orders").select("o_orderkey")
@@ -713,13 +700,10 @@ def negative_sample_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproducible on any cluster/partitioning. The oracle replays the
     identical integer arithmetic on DuckDB; collision dedup keeps the
     lowest slot per (anchor, negative) pair on both engines."""
-    tune(spark)
     from etl_inreach_spark.operators.indexing import negative_sample
 
     d = load_table(spark, sf_dir, "documents")
-    return negative_sample(
-        d.select("doc_id", "source"), "doc_id", 4, group_cols=["source"]
-    )
+    return negative_sample(d.select("doc_id", "source"), 4, group_cols=["source"])
 
 
 _SPAN_K = 8  # tokens per duplicated window (Lee et al. use 50 BPE tokens)
@@ -771,7 +755,6 @@ def dup_span_maximal(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline, so values (token indices) match exactly; see
     operators/text_dedup.py:duplicated_spans for the plan shape and
     the xxhash64 shuffle-key swap at 100 TB."""
-    tune(spark)
     from etl_inreach_spark.operators.text_dedup import duplicated_spans
 
     d = load_table(spark, sf_dir, "documents")
@@ -855,7 +838,6 @@ def temperature_resample_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast back onto the fact (no second shuffle of documents),
     one final per-source agg. At 100 TB the rate relation is
     |sources| rows — always broadcastable."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     return temperature_resample(d)
 
@@ -892,7 +874,6 @@ def ngram_diversity_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup — the same two-level distinct-count shape as
     vocab_top_terms; at 100 TB swap the gram string for xxhash64 as
     in dup_span_maximal (documented there)."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     from etl_inreach_spark.functions.text import tokens
 
@@ -954,7 +935,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-integer output, and the narrow QI projection prunes at the
     scan. At 100 TB the class-size relation is |QI-combinations| rows,
     orders of magnitude below the table."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     g = c.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("group_size")
@@ -1013,7 +993,6 @@ def distribution_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical on both engines — NOT CAST(price AS BIGINT)//50000,
     whose cast truncates on Spark and ROUNDS on DuckDB, flipping
     boundary rows across buckets (caught by the sf0.1 sweep)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").where(
         F.year("o_orderdate").isin(1997, 1998)
     )
@@ -1109,7 +1088,6 @@ def ks_drift_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed through DECIMAL(38,0) (Spark) / HUGEINT (oracle) and
     only the <=2^20 quotient is cast back to BIGINT. Past (a), widen
     the cross-products themselves the same way."""
-    tune(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O"))
@@ -1232,7 +1210,6 @@ def auc_price_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     through DECIMAL(38,0) (Spark) / HUGEINT (oracle) and only the
     <=2^20 quotient is cast back to BIGINT. Past (a), widen two_r1
     itself the same way."""
-    tune(spark)
     o = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus").isin("F", "O"))
@@ -1338,7 +1315,6 @@ def benford_first_digit_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     the CORRECT answer; the query pins the measurement, not the
     law.) Scale shape: a 9-key map-side-combined aggregate plus one
     broadcast total — nothing else crosses the wire."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     d = o.select(
         F.substring(
@@ -1410,7 +1386,6 @@ def source_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     hhi_fp/eff_sources_fp are computed through DECIMAL(38,0)
     (Spark) / HUGEINT (oracle) with only the bounded quotient cast
     back to BIGINT."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     c = d.groupBy("source").agg(F.count(F.lit(1)).alias("cnt"))
     n = c.agg(
@@ -1481,7 +1456,6 @@ def gini_order_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number plus the histogram-level COUNT prefix (never a global
     sort); the three reductions are one partial-agg pass. The
     DECIMAL(38,0) grid holds to n ~ 9e14 rows."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.floor(F.col("o_totalprice").cast("double") * 100 + F.lit(0.5))
         .cast("bigint")
@@ -1669,7 +1643,6 @@ def curation_gate_composed(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join; gate 3 is the NB vocab agg + broadcast model join +
     doc-keyed sum; final assembly is two doc_id equi-joins of
     doc-sized relations. No window functions, no driver collects."""
-    tune(spark)
     from etl_inreach_spark.functions.text import (
         LANG_MARKERS,
         marker_hits,

@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 # DuckDB rendering of the distinct-9-gram shingle set (matches
 # operators.text_dedup.shingles_exploded at k=9). 9-char shingles give
@@ -55,7 +54,6 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text quality scoring: token/subword/punctuation counts, stopword
     ratio, and a composite quality score — all built-in expressions
     (one narrow projection, no shuffle)."""
-    tune(spark)
     from etl_inreach_spark.functions.text import (
         LANG_MARKERS,
         marker_hits,
@@ -120,7 +118,6 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lang_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID heuristic (stopword-overlap argmax, deterministic
     precedence tie-break)."""
-    tune(spark)
     from etl_inreach_spark.functions.text import lang_id
 
     d = load_table(spark, sf_dir, "documents")
@@ -151,7 +148,6 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpreted per-char fold measures FASTER here than an
     explode+groupBy closed form — a 200-element fold per row beats
     shuffling a million 1-char rows; see spark-perf notes)."""
-    tune(spark)
     from etl_inreach_spark.functions.text import fingerprint_md5, rolling_hash
 
     d = load_table(spark, sf_dir, "documents")
@@ -175,7 +171,6 @@ def exact_dedup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup by content fingerprint: hash-groupBy, deterministic
     survivor (min doc_id). Partial-agg friendly — shuffle carries one
     row per distinct fingerprint."""
-    tune(spark)
     from etl_inreach_spark.functions.text import fingerprint_md5
 
     d = load_table(spark, sf_dir, "documents")
@@ -210,11 +205,10 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|len diff| <= 32; the blocking is part of the operator contract
     and mirrored in the oracle — PPJoin prefix+positional filtering
     keeps candidate generation sub-quadratic)."""
-    tune(spark)
     from etl_inreach_spark.operators.text_dedup import ngram_jaccard_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    return ngram_jaccard_pairs(d, "doc_id", "text", 0.8, length_block=32, shingle_k=9)
+    return ngram_jaccard_pairs(d, 0.8, length_block=32, shingle_k=9)
 
 
 @query(
@@ -226,13 +220,10 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the UNBLOCKED all-pairs Jaccard — at k=64/b=16 the LSH miss
     probability at j >= 0.9 is ~1e-9, so LSH+verify equals brute force
     on this data while staying O(n) in candidates."""
-    tune(spark)
     from etl_inreach_spark.operators.text_dedup import minhash_lsh_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(
-        d, "doc_id", "text", 0.8, shingle_k=9
-    )
+    return minhash_lsh_pairs(d, shingle_k=9)
 
 
 @query(
@@ -276,7 +267,6 @@ def minhash_after_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     minhash_lsh_dedup argument). The skew probe runs this composition
     against the planted 1,000-doc clique: pair output collapses from
     ~500k to the cross-stem residue (tools/skew_probe.py)."""
-    tune(spark)
     from etl_inreach_spark.functions.text import fingerprint_md5
     from etl_inreach_spark.operators.text_dedup import minhash_lsh_pairs
 
@@ -284,9 +274,7 @@ def minhash_after_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = d.select("doc_id", fingerprint_md5(F.col("text")).alias("fp"))
     surv = fp.groupBy("fp").agg(F.min("doc_id").alias("doc_id"))
     docs = d.select("doc_id", "text").join(surv.select("doc_id"), "doc_id")
-    return minhash_lsh_pairs(
-        docs, "doc_id", "text", 0.8, shingle_k=9
-    )
+    return minhash_lsh_pairs(docs, shingle_k=9)
 
 
 def _simhash_oracle() -> str:
@@ -310,7 +298,7 @@ def _simhash_oracle() -> str:
     )
     return f"""
     WITH grams AS (
-        SELECT doc_id, {poly_gram_hash60_sql('g', 9)} AS h
+        SELECT doc_id, {poly_gram_hash60_sql()} AS h
         FROM (
             SELECT doc_id,
                    unnest(list_transform(generate_series(1, length(text) - 8),
@@ -340,14 +328,11 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle of sketch + banding + Hamming verify — not a rows-only
     check. (The operator defaults to xxhash64/64-bit for production
     use; pytest additionally pins planted near-dup recall there.)"""
-    tune(spark)
     from etl_inreach_spark.operators.text_dedup import poly_gram_hasher60, simhash_pairs
 
     d = load_table(spark, sf_dir, "documents")
     return simhash_pairs(
         d,
-        "doc_id",
-        "text",
         shingle_k=9,
         bits=60,
         gram_hash=poly_gram_hasher60(9),
@@ -376,11 +361,10 @@ def embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast the queries, one shuffle-free pass over the corpus, then
     a tiny per-query top-k window. Bit-identical to DuckDB's
     list_cosine_similarity over DOUBLE[] (sequential fold)."""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import brute_force_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 8), 5)
+    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 8))
 
 
 def _ann_lsh_oracle() -> str:
@@ -390,7 +374,7 @@ def _ann_lsh_oracle() -> str:
     list_cosine_similarity re-rank as embedding_topk's oracle."""
     from etl_inreach_spark.operators.similarity import portable_lsh_bucket_sql
 
-    bucket = portable_lsh_bucket_sql("embedding", 64, 4)
+    bucket = portable_lsh_bucket_sql()
     probe_list = ", ".join(["bucket"] + [f"xor(bucket, {1 << i})" for i in range(4)])
     return f"""
     WITH sig AS (
@@ -425,11 +409,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     — a FULL value-hash oracle of signature + probing + re-rank.
     (Recall on these near-orthogonal embeddings is about the scan
     fraction; see operators/similarity.lsh_topk_portable.)"""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import lsh_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return lsh_topk_portable(emb, emb.filter(F.col("vec_id") < 8), 5, dim=64)
+    return lsh_topk_portable(emb, emb.filter(F.col("vec_id") < 8))
 
 
 @query(
@@ -453,7 +436,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas feature extractor (stub decoder). The oracle recomputes
     the byte features from the text directly (corpus is pure ASCII, so
     bytes == codepoints)."""
-    tune(spark)
     from etl_inreach_spark.operators.multimodal import extract_features, media_struct
 
     d = load_table(spark, sf_dir, "documents")
@@ -484,7 +466,6 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector-kernel sanity surface: sequential-fold L2 norm per
     embedding (same fold order as the oracle => bit-exact)."""
-    tune(spark)
     from etl_inreach_spark.functions.vectors import l2_norm
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -508,11 +489,10 @@ def embedding_cosine_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the DuckDB oracle). The corpus is near-orthogonal, so 0.4 marks
     the far tail — a structure no bucketing can exploit, which is
     exactly when the grid join is the right scale pattern."""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import cosine_pairs_exact
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return cosine_pairs_exact(emb, 0.4)
+    return cosine_pairs_exact(emb)
 
 
 def _ann_ivf_oracle() -> str:
@@ -570,11 +550,10 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle. (pytest pins recall at both nprobe extremes; the
     integer k-means trainer in operators/clustering.py is the refined
     quantizer.)"""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import ivf_topk_portable
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk_portable(emb, emb.filter(F.col("vec_id") < 8), 5, nprobe=4)
+    return ivf_topk_portable(emb, emb.filter(F.col("vec_id") < 8), nprobe=4)
 
 
 def _ivf_pq_oracle() -> str:
@@ -706,7 +685,6 @@ def ivf_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, candidates equi-join on (cell, sub, code), and the ADC sum
     is map-side combined; no raw corpus vector is touched at search
     time and no pairwise cross join ever forms."""
-    tune(spark)
     from etl_inreach_spark.operators.pq import ivf_pq_build, ivf_pq_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -751,7 +729,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     32-byte chunk becomes a frame row (1->N mapInPandas). The oracle
     recomputes chunk checksums from the text (pure-ASCII corpus, so
     bytes == codepoints)."""
-    tune(spark)
     from etl_inreach_spark.operators.multimodal import media_struct, sample_frames
 
     d = load_table(spark, sf_dir, "documents")
@@ -780,7 +757,6 @@ def cube_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 aggregation — CUBE grouping sets (all four subtotal
     combinations in one pass; Spark expands the cube map-side, one
     shuffle). Decimal-fold sums for order-insensitive exactness."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.cube("l_returnflag", "l_linestatus")
@@ -814,7 +790,6 @@ def catalog_row_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     task.ts:34-58: the task advertises its schemas to the
     orchestrator): enumerate every registered table with its row count
     — the counts come from parquet footer statistics, no full scan."""
-    tune(spark)
     from functools import reduce
 
     from etl_inreach_spark.catalog import TABLES
@@ -866,12 +841,11 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     clusters are tiny; the Spark side is the iterative min-label
     propagation that scales to corpus-size graphs
     (operators/dedup.connected_components)."""
-    tune(spark)
     from etl_inreach_spark.operators.dedup import connected_components
     from etl_inreach_spark.operators.text_dedup import ngram_jaccard_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.8, length_block=32, shingle_k=9)
+    pairs = ngram_jaccard_pairs(d, 0.8, length_block=32, shingle_k=9)
     comp = connected_components(pairs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "component").select(
@@ -892,12 +866,11 @@ def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     Value-oracled against the same recursive transitive closure, so
     the two CC algorithms are pinned equal on real data, not just in
     the property test."""
-    tune(spark)
     from etl_inreach_spark.operators.dedup import connected_components_star
     from etl_inreach_spark.operators.text_dedup import ngram_jaccard_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(d, "doc_id", "text", 0.8, length_block=32, shingle_k=9)
+    pairs = ngram_jaccard_pairs(d, 0.8, length_block=32, shingle_k=9)
     comp = connected_components_star(pairs)
     sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return comp.join(sizes, "component").select(
@@ -928,7 +901,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonicalizer cannot sort raw bytearray cells (CORRECTNESS_r03
     err), so no oracle-gated query may output a BINARY column
     (guarded by tests/test_registry_order.py)."""
-    tune(spark)
     from etl_inreach_spark.operators.multimodal import media_struct, resize_images
 
     d = load_table(spark, sf_dir, "documents")
@@ -940,7 +912,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.encode(F.col("text"), "UTF-8"),
         ).alias("media"),
     )
-    return resize_images(with_media, 4, 4).select(
+    return resize_images(with_media).select(
         "doc_id", "width", "height", F.hex(F.col("resized")).alias("resized_hex")
     )
 
@@ -983,7 +955,6 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain id-ordered two-path closure, which finds the same triangles
     because every triangle has exactly one acyclic orientation under
     any total order."""
-    tune(spark)
     from etl_inreach_spark.operators.graph import cooccurrence_edges, triangle_counts
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1028,7 +999,6 @@ def vocab_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition top-200 + driver merge), so
     no full sort ever materializes — the vocabulary-build shape a
     tokenizer-training pipeline runs at corpus scale."""
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -1078,7 +1048,6 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus count, and a per-doc top-k window (doc-bounded
     partitions). The per-(doc, term) relation is the scale carrier
     (~tokens), everything downstream is smaller."""
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
     from pyspark.sql import Window
 
@@ -1129,7 +1098,6 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the scale carrier), one partial-agg groupBy for scales, one
     |vectors|-sized join back — no HOFs in the hot path, fully
     codegen."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     el = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "_x")
@@ -1197,7 +1165,6 @@ def bm25_term_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds only query-term postings (|terms| * |docs| worst case, not
     |tokens|); doc lengths and the 1-row corpus stats broadcast; the
     final top-k is a per-term window over <= |docs| rows."""
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -1275,7 +1242,6 @@ def walk3_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     weight vector + a partial-agg groupBy — both shuffles keyed on
     node id; a fixed 3 rounds keeps lineage shallow with no
     checkpoint (operators/graph.walk_counts)."""
-    tune(spark)
     from etl_inreach_spark.operators.graph import cooccurrence_edges, walk_counts
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1313,7 +1279,6 @@ def embedding_argmax_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle's MIN(idx) over maximal positions). This is the API
     tier below mapInPandas for kernels where pandas object overhead
     matters; the plan is a single narrow mapInArrow pass, no shuffle."""
-    tune(spark)
     import pyarrow as pa
     import numpy as np
 
@@ -1411,7 +1376,6 @@ def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/bloom.py, and the sketch geometry rides in schema
     metadata so a mismatched probe grid raises instead of
     miscounting)."""
-    tune(spark)
     from etl_inreach_spark.operators.cms import cms_build, cms_estimate
 
     ev = load_table(spark, sf_dir, "events")
@@ -1450,7 +1414,6 @@ def fuzzy_name_pairs_edit1(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — output identical by construction
     (tests/test_skew_cap.py), inert at test SFs (natural-name buckets
     are tiny)."""
-    tune(spark)
     from etl_inreach_spark.operators.fuzzy import edit1_pairs
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
@@ -1496,7 +1459,6 @@ def fuzzy_name_pairs_edit2(spark: SparkSession, sf_dir: str) -> DataFrame:
     benchmark output materialization, not blocking; the slice keeps
     60.7k pairs, and the operator's scale story is carried by the
     cap/identity tests and the skew probe."""
-    tune(spark)
     from etl_inreach_spark.operators.fuzzy import edit2_pairs
 
     cust = (
@@ -1568,7 +1530,6 @@ def semantic_dedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: a 92%-hot cell was a 50x straggler without it) — output
     identical by construction, inert at test SFs (cells ~30-300
     rows)."""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import semantic_dedup_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -1600,7 +1561,6 @@ def heavy_hitters_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles billions of vocabulary keys; this shuffles P*k summary
     rows + |candidates| counts). k=4 < 5 distinct langs, so the
     eviction path of the sketch is genuinely exercised."""
-    tune(spark)
     from etl_inreach_spark.operators.heavyhitters import heavy_hitters
 
     k = 4
@@ -1692,7 +1652,6 @@ def kmv_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/kmv.py) makes every estimate bit-identical on DuckDB;
     k=32 < |users|, so the ESTIMATOR path (k-1)*M/kth is exercised,
     not the exact-small-set fallback."""
-    tune(spark)
     from etl_inreach_spark.operators.kmv import (
         kmv_set_estimates,
         kmv_sketch,
@@ -1708,17 +1667,14 @@ def kmv_corpus_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmv_set_estimates(sa, sb, _KMVO_K)
 
 
-# Morton interleave rendered as ANSI SQL: bit i (of 16) of bucket
-# column j of n lands at output position i*n + j (must mirror
+# Morton interleave of (bc, bs) rendered as ANSI SQL: bit i (of 16) of
+# bucket column j lands at output position 2*i + j (must mirror
 # operators/zorder.zvalue at ZORDER_BITS = 16 exactly).
-def _zorder_sql_terms(bucket_exprs: "list[str]") -> str:
-    n = len(bucket_exprs)
-    terms = [
-        f"((({b} >> {i}) & 1) << {i * n + j})"
-        for j, b in enumerate(bucket_exprs)
-        for i in range(16)
-    ]
-    return " + ".join(terms)
+_ZKEY_SQL = " + ".join(
+    f"((({b} >> {i}) & 1) << {i * 2 + j})"
+    for j, b in enumerate(("bc", "bs"))
+    for i in range(16)
+)
 
 
 @query(
@@ -1743,7 +1699,7 @@ def _zorder_sql_terms(bucket_exprs: "list[str]") -> str:
         FROM base, bounds
     )
     SELECT o_orderkey,
-           {_zorder_sql_terms(["bc", "bs"])} AS zkey
+           {_ZKEY_SQL} AS zkey
     FROM kb
     """,
 )
@@ -1762,7 +1718,6 @@ def zorder_locality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     double→bigint CAST truncates on Spark but rounds on DuckDB;
     tests/test_extended.py pins the locality win the layout exists
     for)."""
-    tune(spark)
     from etl_inreach_spark.operators.zorder import zorder_repartition
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -1770,7 +1725,7 @@ def zorder_locality_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_orderdate").cast("bigint").alias("o_secs"),
     )
-    z = zorder_repartition(o, ["o_custkey", "o_secs"])
+    z = zorder_repartition(o)
     return z.select("o_orderkey", F.col("_zvalue").alias("zkey"))
 
 
@@ -1816,7 +1771,6 @@ def term_lift_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join. At 100 TB the post-min_df vocabulary broadcast-prunes
     the (doc, term) relation; all division is integer DIV (both
     engines truncate — every operand here is positive)."""
-    tune(spark)
     from etl_inreach_spark.operators.cooccur import term_cooccurrence_lift
 
     d = load_table(spark, sf_dir, "documents")
@@ -1869,7 +1823,6 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     one equi-join against the model relation, which shards by term
     pair at web scale. Every division is integer DIV on positive
     operands, so Spark's truncation and DuckDB's agree."""
-    tune(spark)
     from etl_inreach_spark.operators.cooccur import bigram_lm_score
 
     d = load_table(spark, sf_dir, "documents")
@@ -1960,7 +1913,6 @@ def kmeans_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     checksum. Spark side: max_iter bounded jobs, each one corpus scan
     with a k*d-row partial-agg shuffle; assignment is the vectorized
     Arrow int64 matmul; the k-row model relation joins broadcast."""
-    tune(spark)
     from etl_inreach_spark.operators.clustering import kmeans_assign, kmeans_fit
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2104,7 +2056,6 @@ def kmeans_lloyd_round_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment pass over the corpus, one (cell, dim)-keyed partial
     aggregation whose shuffle carries nlist*dim rows per upstream
     partition, never the corpus."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     return _lloyd_finalize(_lloyd_fp_stats(_lloyd_assign_round1(emb)))
 
@@ -2137,7 +2088,7 @@ def _lloyd_assign_round1(emb: DataFrame) -> DataFrame:
         portable_centroids,
     )
 
-    return _nearest_cells(_lloyd_unit(emb), portable_centroids(emb, 16), 1, "vec_id", "_uv")
+    return _nearest_cells(_lloyd_unit(emb), portable_centroids(emb, 16), 1, "_uv")
 
 
 def _lloyd_fp_stats(asg: DataFrame) -> DataFrame:
@@ -2185,7 +2136,6 @@ def kmeans_lloyd_round2_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     statistics — broadcast back, never a corpus shuffle. Empty cells
     simply vanish from the statistics (no centroid row), exactly as
     the production trainer drops them."""
-    tune(spark)
     from etl_inreach_spark.operators.similarity import _nearest_cells
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -2198,7 +2148,7 @@ def kmeans_lloyd_round2_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["mean_fp"].cast("double") / F.lit(_LLOYD_GRID),
         ).alias("_cvec")
     )
-    asg2 = _nearest_cells(_lloyd_unit(emb), cent2, 1, "vec_id", "_uv")
+    asg2 = _nearest_cells(_lloyd_unit(emb), cent2, 1, "_uv")
     return _lloyd_finalize(_lloyd_fp_stats(asg2))
 
 
@@ -2258,7 +2208,6 @@ def hilbert_key_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     steps), pinned equal to the driver lookup over the full 256x256
     grid — so the broadcast-LUT plan and the sequential recurrence are
     provably the same function."""
-    tune(spark)
     from etl_inreach_spark.operators.zorder import with_hilbert
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -2266,7 +2215,7 @@ def hilbert_key_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.col("o_orderdate").cast("bigint").alias("o_secs"),
     )
-    return with_hilbert(o, ["o_custkey", "o_secs"]).select(
+    return with_hilbert(o).select(
         "o_orderkey", F.col("_hvalue").alias("hkey")
     )
 
@@ -2344,7 +2293,6 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from_json literal (no join); the global rank windows are the
     candidate-list sizes (top-k-bounded in production serving), and
     the fusion join is candidate-sized, never corpus-sized."""
-    tune(spark)
     import json as _json
     import math as _math
 
@@ -2473,7 +2421,6 @@ def pagerank3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm. See operators/graph.py:pagerank_integer for the
     per-iteration plan (|E| equi-join + node-keyed partial agg; sym
     checkpointed once; N as a broadcast 1-row aggregate)."""
-    tune(spark)
     from etl_inreach_spark.operators.graph import cooccurrence_edges, pagerank_integer
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -2548,7 +2495,6 @@ def embedding_project_jl(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT, all HOFs over the row's own array (zip_with + aggregate
     folds), zero shuffles and zero joins — at 100 TB this is a pure
     map stage that composes with the IVF/PQ operators downstream."""
-    tune(spark)
     signs = _jl_signs()
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.withColumn(
@@ -2638,7 +2584,6 @@ def embedding_standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     — past that, widen to DECIMAL(38,0) partials). The tall layout is
     deliberate: at 100 TB the stats pass reads the one column it
     needs and the rebuild-to-array form stays a downstream choice."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     el = emb.select(
         "vec_id", F.posexplode("embedding").alias("dim", "_x")
@@ -2708,7 +2653,6 @@ def phrase_match_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     single term are the classic posting-list scale (skew mitigation:
     salt hot terms or pre-bucket by doc_id ranges); adjacency keys
     are integers, no string re-comparison after the initial filter."""
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
 
     d = load_table(spark, sf_dir, "documents")
@@ -2782,7 +2726,6 @@ def source_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the per-(source,dim) partial sums are still the only
     thing that crosses the wire — int64 holds to ~6e12 docs/source
     at |q|<=1430 before DECIMAL(38,0) widening."""
-    tune(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     emb = load_table(spark, sf_dir, "embeddings")
     el = (
@@ -2918,7 +2861,6 @@ def farthest_point_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB each pass is scan-bound; k stays human-sized (5-100), and
     the HOF fold touches 64 ints per row per round — not a hot loop
     over candidates^2."""
-    tune(spark)
     emb = load_table(spark, sf_dir, "embeddings")
     qarr = F.transform(
         F.col("embedding"),

@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.plans.inreach import inreach_pipeline
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 
 def events_as_kml_feeds(ev: DataFrame) -> DataFrame:
@@ -119,7 +118,6 @@ def kml_pipeline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O6-O18 end-to-end: events -> synthetic KML feeds -> REAL parse/
     transform/dedup pipeline; oracle computes the same from events
     directly."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     feeds = events_as_kml_feeds(ev)
     shares = ev.select("user_id").distinct().select(
@@ -154,7 +152,6 @@ def streaming_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     feeds = events_as_kml_feeds(ev)
     shares = ev.select("user_id").distinct().select(
@@ -229,7 +226,6 @@ def streaming_stateful_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     feat = ev.select(
         F.concat(F.lit("inreach-"), F.col("user_id")).alias("id"),
@@ -318,7 +314,6 @@ def streaming_groupstate_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import time as _time
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     feat = ev.select(
         F.concat(F.lit("inreach-"), F.col("user_id")).alias("id"),
@@ -396,7 +391,6 @@ def upsert_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     feat = ev.select(
         "user_id", "event_type", "ts", "value", "event_id",
@@ -442,7 +436,6 @@ def _drain_windowed_stream(spark, sf_dir, table_prefix, window_agg):
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     run = uuid.uuid4().hex[:12]
     base = f"/tmp/spark_graft_stream/{run}"

@@ -47,7 +47,6 @@ from etl_inreach_spark.operators.text_dedup import (
     poly_gram_hash60_sql,
 )
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 _SCRATCH_ROOT: str | None = None
 _SCRATCH_GEN: dict[str, int] = {}
@@ -117,7 +116,7 @@ def _incremental_oracle() -> str:
     )
     return f"""
     WITH RECURSIVE grams AS (
-        SELECT doc_id, ({poly_gram_hash60_sql('g', 9)}) % {MERSENNE31} AS h
+        SELECT doc_id, ({poly_gram_hash60_sql()}) % {MERSENNE31} AS h
         FROM (
             SELECT doc_id,
                    unnest(list_transform(generate_series(1, length(text) - 8),
@@ -205,7 +204,6 @@ def incremental_dedup_convergence(spark: SparkSession, sf_dir: str) -> DataFrame
     Generalizes reference O18 (latest-per-key dedup,
     /root/reference/task.ts:131-149) to cross-batch near-dup identity.
     """
-    tune(spark)
     from etl_inreach_spark.operators.incremental_dedup import incremental_dedup
 
     d = load_table(spark, sf_dir, "documents")
@@ -302,7 +300,6 @@ def incremental_semantic_dedup_convergence(
     points state_path at shared storage;
     tests/test_incremental_semantic.py covers replay idempotence and
     non-monotone divergence)."""
-    tune(spark)
     from etl_inreach_spark.operators.incremental_semantic import (
         incremental_semantic_dedup,
     )
@@ -376,7 +373,6 @@ def bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-table shuffle once; every recurring join/agg on the bucket
     key reads pre-shuffled buckets (pick the bucket count for the
     target cluster's parallelism, not the test's 8)."""
-    tune(spark)
     from etl_inreach_spark.sinks.bucketed import bucketed_equijoin, write_bucketed
 
     o = load_table(spark, sf_dir, "orders").select(
@@ -431,7 +427,6 @@ def compaction_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-pinned. The rewrite itself is shuffle-free (coalesce) — the
     property that makes OPTIMIZE affordable at 100 TB — and
     fixed-point convergence is pinned in tests/test_compaction.py."""
-    tune(spark)
     from etl_inreach_spark.operators.compaction import compact_parquet
 
     path = os.path.join(_scratch("compact"), "orders")
@@ -500,7 +495,6 @@ def binary_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     deliberately excluded (not content-determined). Column pruning on
     metadata-only projections is plan-pinned in
     tests/test_binary_media.py."""
-    tune(spark)
     from etl_inreach_spark.sources.binary_media import read_binary_media
 
     m = read_binary_media(spark, _MEDIA_FIXTURE_DIR)
@@ -547,7 +541,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata (catalog/Delta/Iceberg), which is why the engine's own
     catalog tables (sinks/bucketed, sinks/upsert) carry their schema
     there instead."""
-    tune(spark)
     path = os.path.join(_scratch("schemaevo"), "orders")
     o = load_table(spark, sf_dir, "orders")
     o.filter(F.col("o_orderkey") % 2 == 0).select(

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 # Same portable affine-hash family as the ANN/KMV/MinHash operators.
 _A = 1103515245
@@ -55,7 +54,6 @@ def hash_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     no driver coordination; membership survives repartitioning and
     recomputation. Distinct hash digits (units for the split, the next
     two for sampling) keep the two decisions independent."""
-    tune(spark)
     d = load_table(spark, sf_dir, "documents")
     h = (F.lit(_A) * F.col("doc_id") + F.lit(_B)) % F.lit(_M)
     split = (
@@ -107,7 +105,6 @@ def quality_filter_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline): first failing rule wins — length bounds, punctuation
     density, stopword presence. One narrow codegen projection; the
     keep-rate per reason is the side-channel a pipeline would monitor."""
-    tune(spark)
     from etl_inreach_spark.functions.text import (
         LANG_MARKERS,
         marker_hits,
@@ -176,7 +173,6 @@ def corr_price_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     DOUBLE, with identical expression structure on both engines. This
     is also the right 100 TB shape: one partial-aggregated groupBy
     carrying five exact sums, no second pass."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     x = F.col("l_quantity").cast("decimal(12,2)")
     y = F.col("l_extendedprice").cast("decimal(18,2)")
@@ -222,7 +218,6 @@ def grouping_sets_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROLLUP nor CUBE can express: per-returnflag totals and
     per-linestatus totals in ONE hash aggregation (Catalyst expands to
     a single Expand + partial agg, not two scans)."""
-    tune(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         """
@@ -265,7 +260,6 @@ def ntile_customer_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside int64. Plan pin (test_queries_pipeline): the only
     unpartitioned window runs over the <=256-row bucket-count
     relation, never the customer row stream."""
-    tune(spark)
     from etl_inreach_spark.operators.indexing import global_row_index
 
     c = load_table(spark, sf_dir, "customer")
@@ -321,7 +315,6 @@ def date_dim_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing (sequence + explode) — the standard broadcast-side
     calendar for range joins. Weekday is pinned to ISO (0=Monday) on
     both engines since their native dayofweek conventions differ."""
-    tune(spark)
     days = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -360,7 +353,6 @@ def histogram_order_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     of an IEEE division — identical on both engines) + one hash agg
     with partial aggregation; sums travel as DECIMAL for
     order-insensitive exactness."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     bucket = F.least(F.floor(F.col("o_totalprice") / 25000.0), F.lit(19)).cast("bigint")
     return orders.groupBy(bucket.alias("bucket")).agg(
@@ -393,7 +385,6 @@ def partitioned_sink_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     run = uuid.uuid4().hex[:12]
     base = f"/tmp/spark_graft_sink/{run}"
@@ -438,7 +429,6 @@ def csv_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import uuid
 
-    tune(spark)
     ev = load_table(spark, sf_dir, "orders")
     run = uuid.uuid4().hex[:12]
     base = f"/tmp/spark_graft_sink/csv_{run}"
@@ -504,7 +494,6 @@ def ansi_safe_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings (every padding codepoint, decimals, 1e3, hex, signs,
     int64 overflow both directions, interior whitespace, arabic and
     full-width digits, empty, NULL). Measured 1.93 -> ~0.5 s."""
-    tune(spark)
     _INT_RE = r"^[\x00-\x20\x7f]*[+-]?\d+[\x00-\x20\x7f]*$"
     ev = load_table(spark, sf_dir, "events")
     return ev.select(
@@ -565,7 +554,6 @@ def corpus_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quality_filter_pipeline, exact_dedup_documents,
     hash_split_documents); this query pins their COMPOSITION — the
     integration a real corpus build runs nightly."""
-    tune(spark)
     from etl_inreach_spark.functions.text import fingerprint_md5, token_count
 
     d = load_table(spark, sf_dir, "documents")
@@ -635,7 +623,6 @@ def data_quality_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
     how many constraints ride each table, which is what makes running
     the suite on every batch affordable at 100 TB (vs one pass per
     constraint). Oracle renders the same constraint algebra."""
-    tune(spark)
     from functools import reduce
 
     orders = load_table(spark, sf_dir, "orders")

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.operators.dedup import latest_by_key
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 
 @query(
@@ -42,7 +41,6 @@ def latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     the arrival order. Rendered as a max_by hash aggregation (partial
     agg => shuffle carries ~|keys| rows; see operators/dedup.py).
     """
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     out = latest_by_key(ev, ["user_id"], "ts", arrival_col="event_id")
     return out.select("event_id", "ts", "user_id", "event_type", "value", "props")
@@ -87,7 +85,6 @@ def share_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     callsign default-fill (task.ts:75), surrogate key (task.ts:114) and
     link URL (task.ts:128), exercised over customer rows dressed up as
     the three observed ShareId spellings."""
-    tune(spark)
     from etl_inreach_spark.functions.strings import (
         default_fill,
         normalize_share_id,
@@ -164,7 +161,6 @@ def unit_strip_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor for reference-faithful semantics: substring_index(' ')
     would run in 0.54 s but splits only on LITERAL space, diverging
     from the reference's /\\s.*/ (tabs/newlines) — rejected."""
-    tune(spark)
     from etl_inreach_spark.functions.strings import strip_unit_to_double
     from etl_inreach_spark.functions.units import kmh_to_ms
 
@@ -218,7 +214,6 @@ def split_coordinates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O11 — '"lon,lat[,alt]"' CSV string -> typed components
     (task.ts:105-107), including the 2-element no-altitude case
     (NULL alt, never an ANSI error)."""
-    tune(spark)
     from etl_inreach_spark.functions.nested import coord, split_coordinates
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -262,7 +257,6 @@ def eav_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle is the trivial identity; the Spark side exercises the
     full array<struct> -> map_from_entries -> try_element_at path,
     including the missing-key -> NULL trap (SURVEY.md §2.3.6)."""
-    tune(spark)
     from etl_inreach_spark.functions.nested import eav_to_map, map_get
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -294,7 +288,6 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON functions row of SURVEY.md §2.2 — the reference's output is
     JSON (GeoJSON) and events.props is a JSON payload column; parse
     with from_json into a typed map and project."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), "map<string,string>")
     return ev.select(
@@ -317,7 +310,6 @@ def json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def timestamp_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O16 — timestamp -> ISO-8601 text and back (task.ts:122-123,142:
     the reference renders every timestamp via Date.toISOString())."""
-    tune(spark)
     from etl_inreach_spark.functions.units import parse_iso8601, to_iso8601
 
     ev = load_table(spark, sf_dir, "events")
@@ -341,11 +333,10 @@ def time_window_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 — the 30-minute lookback the reference pushes to the server
     as the d1 query param (task.ts:80-82), batch-rendered with a
     deterministic max(ts) anchor (FIXTURES.md §5)."""
-    tune(spark)
     from etl_inreach_spark.operators.relational import filter_recent
 
     ev = load_table(spark, sf_dir, "events")
-    return filter_recent(ev, "ts").select(
+    return filter_recent(ev).select(
         "event_id", "ts", "user_id", "event_type", "value"
     )
 
@@ -369,7 +360,6 @@ def string_functions_showcase(spark: SparkSession, sf_dir: str) -> DataFrame:
     (split/regexp/concat are covered by the O-queries): case mapping,
     reverse, padding, replace, split_part, edit distance — every one a
     codegen built-in with an exact DuckDB twin."""
-    tune(spark)
     c = load_table(spark, sf_dir, "customer")
     name = F.col("c_name")
     return c.select(

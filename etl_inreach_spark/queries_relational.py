@@ -9,7 +9,7 @@ end, so the driver's value hash is stable under any partitioning.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
@@ -20,10 +20,9 @@ from etl_inreach_spark.queries import query
 from etl_inreach_spark.session import tune
 
 
-def dsum(col):
+def dsum(col: str) -> Column:
     """Exact order-insensitive sum: decimal accumulate, double out."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast("decimal(18,4)")).cast("double")
+    return F.sum(F.col(col).cast("decimal(18,4)")).cast("double")
 
 
 @query(
@@ -38,7 +37,6 @@ def broadcast_config_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure-captured config (task.ts:68,121,128): every fact row picks
     up its config/dimension attributes via a broadcast hash join (no
     shuffle of the fact side)."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     joined = broadcast_dim_join(orders, customer, on=[F.col("o_custkey") == F.col("c_custkey")])
@@ -72,7 +70,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1-shaped pricing summary: the §2.2 aggregation row.
     One hash aggregation with map-side partial agg; the shipdate
     filter is pushed to the parquet scan (PushedFilters)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp")
     )
@@ -117,7 +114,6 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 top-k per key — the k>1 generalization of the reference's
     argmax dedup (O18), deterministic tie-break on o_orderkey."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     top = topk_by_key(
         orders, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()], 3
@@ -134,7 +130,6 @@ def top3_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 joins — left-semi: customers having at least one order."""
-    tune(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
     return customer.join(
@@ -153,7 +148,6 @@ def semi_join_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def anti_join_inactive_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 joins — left-anti: customers with no order in 2001 (the
     partial final year, so the result is non-empty at every SF)."""
-    tune(spark)
     customer = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders").filter(F.year("o_orderdate") == 2001)
     return customer.join(
@@ -176,7 +170,6 @@ def asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     """§2.2 as-of join — for each purchase, the latest click at-or-
     before it by the same user. Union+window implementation (one
     shuffle, no range-probe blow-up; operators/relational.asof_join)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
@@ -197,7 +190,6 @@ def cross_join_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only join shape without a key. Physical plan is a broadcast
     nested-loop join — the one place BNLJ is the RIGHT plan; anything
     non-dim-sized must never reach this operator."""
-    tune(spark)
     region = load_table(spark, sf_dir, "region")
     nation = load_table(spark, sf_dir, "nation")
     return region.crossJoin(F.broadcast(nation)).select(
@@ -224,7 +216,6 @@ def range_join_ship_within_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
     items shipped within 90 days of their order date. The equi key
     keeps it a hash join; the range condition is a post-join filter,
     so no nested-loop blow-up at scale."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
     joined = li.join(
@@ -252,7 +243,6 @@ def range_join_ship_within_90d(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 aggregation — ROLLUP grouping sets (subtotals + grand
     total), all in one hash aggregation."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     return li.rollup("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n"),
@@ -271,7 +261,6 @@ def rollup_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_ops_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 set ops — INTERSECT: customers ordering in both 1995 and
     1996."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     y95 = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     y96 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
@@ -289,7 +278,6 @@ def set_ops_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def set_ops_churned_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 set ops — EXCEPT: 1995 customers who did not return in
     1996."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     y95 = orders.filter(F.year("o_orderdate") == 1995).select("o_custkey")
     y96 = orders.filter(F.year("o_orderdate") == 1996).select("o_custkey")
@@ -317,7 +305,6 @@ def window_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 window functions — lag / row_number / running frame sum
     over each user's event timeline (deterministic ordering by
     (ts, event_id))."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.col("ts").asc(), F.col("event_id").asc())
     wf = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -362,9 +349,8 @@ def window_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 session windows (batch rendering) — 30-minute-gap
     sessionization per user (operators/windows.sessionize)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
-    out = sessionize(ev, ["user_id"], "ts", 1800, "event_id")
+    out = sessionize(ev, ["user_id"], "event_id")
     return out.select("event_id", "user_id", "ts", F.col("session_id").cast("bigint").alias("session_id"))
 
 
@@ -384,14 +370,9 @@ def tumbling_15min_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     15-minute tumbling aggregation (operators/windows.tumbling_agg).
     The bucket is a plain column (not Spark's window() struct) so the
     aggregation keeps map-side partial agg and the result is joinable."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return tumbling_agg(
-        ev,
-        "ts",
-        900,
-        ["event_type"],
-        [F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value")],
+        ev, [F.count(F.lit(1)).alias("n"), dsum("value").alias("sum_value")]
     )
 
 
@@ -407,7 +388,6 @@ def tumbling_15min_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_users_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 aggregation — exact distinct aggregation (expands to a
     two-phase agg under the hood; partial agg on (type, user) first)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("users"),
@@ -423,7 +403,6 @@ def approx_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only check, pytest asserts the estimate is within 5% of
     exact. (kmv_distinct_users below is the value-oracled rendering
     of the same capability.)"""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
         F.approx_count_distinct("user_id", rsd=0.01).alias("approx_users")
@@ -475,7 +454,6 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     one distinct (partial-agg groupBy) over narrow (type, hash) pairs,
     then a per-type top-k window on k=64 rows/group — the sketch
     merges associatively, so the same plan holds at 100 TB."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     h = F.pmod(
         F.lit(_KMV_A) * F.pmod(F.col("user_id").cast("bigint"), F.lit(_KMV_M))
@@ -509,7 +487,6 @@ def global_top10_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 sort/limit — global top-k. Spark plans orderBy+limit as
     TakeOrderedAndProject: per-partition top-10 then a single driver
     merge, never a full global sort."""
-    tune(spark)
     orders = load_table(spark, sf_dir, "orders")
     return (
         orders.orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
@@ -540,7 +517,6 @@ def shipping_priority_top10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3-shaped: multi-join + agg + global top-k. customer is
     broadcast (dimension); orders x lineitem share the orderkey so AQE
     plans one shuffle on it; final top-10 via TakeOrdered."""
-    tune(spark)
     customer = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
@@ -581,7 +557,6 @@ def pivot_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     type. Values are enumerated explicitly so the pivot is one pass
     with partial aggregation (a values-less pivot needs an extra
     distinct job to discover columns — avoid at scale)."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
@@ -604,13 +579,11 @@ def skew_safe_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     result to a plain groupBy (the oracle proves it), but a hot key is
     spread over 16 reducers in stage 1 and merged from 16 partial rows
     in stage 2. The pattern for extreme single-key skew at 100 TB."""
-    tune(spark)
     from etl_inreach_spark.operators.relational import salted_agg
 
     ev = load_table(spark, sf_dir, "events")
     return salted_agg(
         ev,
-        ["event_type"],
         {
             "n_events": (F.count(F.lit(1)), "sum"),
             "max_value": (F.max("value"), "max"),
@@ -639,7 +612,6 @@ def order_stats_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     an actual data value, so both engines agree exactly, where
     interpolated medians differ between engines (Spark interpolates,
     DuckDB's decimal median does not)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     dec = F.col("o_totalprice").cast("decimal(18,4)")
     per_group = Window.partitionBy("o_orderpriority")
@@ -681,7 +653,6 @@ def full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nations with customers but no suppliers and vice versa survive
     with zero-filled counts). Both sides pre-aggregate before the
     join, so the shuffle carries one row per nation."""
-    tune(spark)
     c = (
         load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nationkey"))
@@ -716,7 +687,6 @@ def full_outer_nation_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def unpivot_order_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 — UNPIVOT/melt (wide->long): numeric order columns to
     (key, metric, value) rows. Pure narrow generator, no shuffle."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     return (
         o.select(
@@ -743,7 +713,6 @@ def sliding_1h_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     event count over the trailing hour at each event. Value frames are
     the sliding-window primitive the reference's 30-min lookback
     generalizes to."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     # microsecond ordering: unix_timestamp would floor to seconds and
     # make sub-second neighbors spurious frame peers (oracle divergence)
@@ -779,7 +748,6 @@ def sql_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered temp views and on DuckDB — Catalyst plans it exactly
     like the DataFrame DSL (broadcast the nation dim, partial+final
     agg), proving the two surfaces are one engine."""
-    tune(spark)
     from etl_inreach_spark.catalog import register_views
 
     register_views(spark, sf_dir)
@@ -807,7 +775,6 @@ def order_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     buffer); at 100 TB the same query shape swaps in
     approx_percentile (t-digest sketch, partial-agg) — the KMV/HLL
     trade recorded at approx_distinct_users applies verbatim."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("double")
     return o.groupBy("o_orderpriority").agg(
@@ -840,7 +807,6 @@ def mode_ship_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level partial-agg count (shuffle ~ |flag x shipmode| groups)
     then a window over those few rows — the scalable mode rendering
     (never a per-row window over the raw table)."""
-    tune(spark)
     li = load_table(spark, sf_dir, "lineitem")
     counts = li.groupBy(
         "l_returnflag", F.month("l_shipdate").cast("bigint").alias("ship_month")
@@ -865,7 +831,6 @@ def approx_order_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows-only for the driver; pytest pins each approximate quantile
     within rel-error of the exact companion's value
     (tests/test_relational.py::test_approx_percentiles_near_exact)."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders")
     price = F.col("o_totalprice").cast("double")
     return o.groupBy("o_orderpriority").agg(
@@ -889,14 +854,13 @@ def salted_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically, small side replicated per salt, join on
     (key, salt). The oracle is the PLAIN join — proving salt
     invariance, the operator's whole contract."""
-    tune(spark)
     from etl_inreach_spark.operators.relational import salted_join
 
     ev = load_table(spark, sf_dir, "events")
     cust = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_name"
     )
-    out = salted_join(ev, cust, ["user_id"], salt_buckets=8)
+    out = salted_join(ev, cust, salt_buckets=8)
     return out.select(
         "event_id", "user_id", "c_name", F.col("value").cast("double").alias("value")
     )
@@ -938,7 +902,6 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     session_end is last-event + gap by definition. The oracle derives
     identical bounds from the gap/cumsum construction, pinning the two
     renderings to each other across engines."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
@@ -952,11 +915,12 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def funnel_steps(ev: DataFrame, steps: tuple[str, ...]) -> DataFrame:
-    """Ordered-funnel core, shared by the query and its semantics
-    test: for each step, the earliest event of that type STRICTLY
-    AFTER the previous step's timestamp (ties don't advance). Output:
-    user_id, t_<step> per step, reached (0..len(steps))."""
+def funnel_steps(ev: DataFrame) -> DataFrame:
+    """Ordered-funnel core (view -> click -> purchase), shared by the
+    query and its semantics test: for each step, the earliest event of
+    that type STRICTLY AFTER the previous step's timestamp (ties don't
+    advance). Output: user_id, t_<step> per step, reached (0..3)."""
+    steps = ("view", "click", "purchase")
 
     def one(event_type: str, after: DataFrame | None, prev_col: str | None, out: str) -> DataFrame:
         e = ev.filter(F.col("event_type") == event_type)
@@ -1015,9 +979,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed on user_id and carries one row per user, so at 100 TB the
     cost is three pruned scans + |users|-sized joins. The standard
     product-analytics primitive the reference's event stream invites."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
-    return funnel_steps(ev, ("view", "click", "purchase"))
+    return funnel_steps(ev)
 
 
 @query(
@@ -1041,7 +1004,6 @@ def asof_next_purchase_after_click(spark: SparkSession, sf_dir: str) -> DataFram
     (operators/relational.asof_join): one shuffle on user_id, the
     timeline walked in reverse so `last(ignorenulls)` carries the
     earliest >= purchase — no per-row range probe at 100 TB."""
-    tune(spark)
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", "user_id", "ts"
@@ -1087,7 +1049,6 @@ def interval_overlap_order_windows(spark: SparkSession, sf_dir: str) -> DataFram
     with a canonical-bucket dedup, keeping the plan off
     broadcast-nested-loop at 100 TB. Each unordered pair is counted
     once via k_l < k_r; bounds are integral epoch days."""
-    tune(spark)
     from etl_inreach_spark.operators.relational import interval_overlap_join
 
     iv = (
@@ -1119,7 +1080,7 @@ def interval_overlap_order_windows(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("s").alias("rs"),
         F.col("e").alias("re"),
     )
-    pairs = interval_overlap_join(left, right, "ls", "le", "rs", "re", band=16)
+    pairs = interval_overlap_join(left, right, "rs", "re", band=16)
     return (
         pairs.filter(F.col("k_l") < F.col("k_r"))
         .groupBy("l_priority", "r_priority")
@@ -1215,7 +1176,6 @@ def recursive_nation_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller's session. Deep-recursion workloads over big frontiers
     should keep AQE on — and per the module note should prefer the
     log-diameter CC operator anyway."""
-    tune(spark)
     rec = spark.newSession()
     tune(rec)
     rec.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1277,7 +1237,6 @@ def lateral_top2_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a nested loop. Oracle: the identical statement on DuckDB
     (deterministic tie-break on c_custkey; c_acctbal emitted raw, no
     arithmetic, so doubles are bit-identical parquet values)."""
-    tune(spark)
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_LATERAL_TOP2_SQL)
@@ -1313,7 +1272,6 @@ def null_safe_join_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the only caveat is that a nullable key concentrates every
     NULL into one hash partition — the registry's salting operator
     (salted_skew_join) is the mitigation when NULLs are hot."""
-    tune(spark)
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql(_NULL_SAFE_JOIN_SQL)
 
@@ -1342,7 +1300,6 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     {..., NULL} is never true), a second corner documented rather
     than exercised because an all-empty result would make the row
     gate vacuous."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(_NOT_IN_SQL)
@@ -1380,7 +1337,6 @@ def set_ops_bag_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     difference. The oracle is the IDENTICAL statement on DuckDB.
     Catalyst plans both as single hash aggregations counting
     per-side multiplicities — no join explosion, shuffle keyed on k."""
-    tune(spark)
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(_BAG_SET_OPS_SQL)
 
@@ -1429,7 +1385,6 @@ def exact_quantile_rankselect(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank carries the same VALUE. The oracle replays the semantics
     naively (full sort, pick rank) — equal output pins the
     distributed selection exactly."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").cast("double").alias("v")
     )
@@ -1511,7 +1466,6 @@ def grouped_quantile_rankselect(spark: SparkSession, sf_dir: str) -> DataFrame:
     target rank. No per-group value buffer ever exists; skewed group
     sizes cost one histogram row, not memory. Oracle = per-group
     full sort + pick rank."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
         F.col("o_totalprice").cast("double").alias("v"),
@@ -1606,7 +1560,6 @@ def revenue_weighted_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative order is not. The oracle is the naive full-sort running
     sum. At 100 TB: histogram stays range/width-bounded, the
     re-scanned fraction is ~|pcts| buckets, no global sort exists."""
-    tune(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_totalprice").cast("double").alias("v")
     ).select(

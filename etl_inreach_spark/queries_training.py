@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from etl_inreach_spark.catalog import load_table
 from etl_inreach_spark.queries import query
-from etl_inreach_spark.session import tune
 
 # Portable whitespace token count (identical semantics both engines;
 # same rendering as the quality_filter_pipeline oracle).
@@ -59,14 +58,13 @@ def seq_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     running sum); the Spark side computes the identical offsets with a
     two-level distributed prefix sum so no stage ever funnels the
     corpus through a single partition (see operators/packing.py)."""
-    tune(spark)
     from etl_inreach_spark.functions.text import token_count
     from etl_inreach_spark.operators.packing import pack_chunks
 
     d = load_table(spark, sf_dir, "documents").withColumn(
         "_tokcnt", token_count(F.col("text"))
     )
-    return pack_chunks(d, "doc_id", "_tokcnt", capacity=_PACK_CAPACITY)
+    return pack_chunks(d, "_tokcnt", capacity=_PACK_CAPACITY)
 
 
 @query(
@@ -99,7 +97,6 @@ def seq_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched applyInPandas grouped map. The DuckDB oracle runs the
     same recurrence as a recursive CTE — a FULL value check on a
     non-relational (sequential) operator."""
-    tune(spark)
     from etl_inreach_spark.functions.text import token_count
     from etl_inreach_spark.operators.packing import pack_bins_nextfit
 
@@ -107,7 +104,7 @@ def seq_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_tokcnt", token_count(F.col("text"))
     )
     return pack_bins_nextfit(
-        d, "doc_id", "_tokcnt", capacity=_PACK_CAPACITY, num_buckets=_PACK_BUCKETS
+        d, "_tokcnt", capacity=_PACK_CAPACITY, num_buckets=_PACK_BUCKETS
     )
 
 
@@ -140,13 +137,10 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     128-token chunks every 96 tokens (32-token overlap), full chunk
     TEXT value-checked. Shuffle-free narrow plan — each row's chunks
     derive from that row alone (operators/chunking.py)."""
-    tune(spark)
     from etl_inreach_spark.operators.chunking import chunk_tokens
 
     d = load_table(spark, sf_dir, "documents")
-    return chunk_tokens(
-        d, "doc_id", "text", capacity=_CHUNK_CAP, stride=_CHUNK_STRIDE
-    )
+    return chunk_tokens(d, capacity=_CHUNK_CAP, stride=_CHUNK_STRIDE)
 
 
 def _contamination_oracle() -> str:
@@ -154,7 +148,7 @@ def _contamination_oracle() -> str:
 
     return f"""
     WITH grams AS (
-        SELECT DISTINCT doc_id, {poly_gram_hash60_sql('g', 9)} AS h
+        SELECT DISTINCT doc_id, {poly_gram_hash60_sql()} AS h
         FROM (
             SELECT doc_id,
                    unnest(list_transform(generate_series(1, length(text) - 8),
@@ -184,15 +178,12 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     9-gram hashes appear in the eval set. The eval gram set is
     broadcast (bounded by construction); grams travel as portable
     60-bit hashes so the DuckDB oracle reproduces them bit-for-bit."""
-    tune(spark)
     from etl_inreach_spark.operators.corpus import contamination_ngrams
     from etl_inreach_spark.operators.text_dedup import poly_gram_hasher60
 
     d = load_table(spark, sf_dir, "documents")
     return contamination_ngrams(
         d,
-        "doc_id",
-        "text",
         bench_pred=F.pmod(F.col("doc_id"), F.lit(50)) == 0,
         gram_hash=poly_gram_hasher60(9),
     )
@@ -238,7 +229,6 @@ def repetition_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition gate: top-word occupancy, duplicate-word
     fraction, duplicate-bigram fraction per document, and the keep
     decision (top_word_frac <= 0.1 AND dup_2gram_frac <= 0.6)."""
-    tune(spark)
     from etl_inreach_spark.operators.corpus import repetition_profile as rp
 
     d = load_table(spark, sf_dir, "documents")
@@ -346,11 +336,10 @@ def bpe_merge_sequence(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes the trainer viable at 100 TB. MIN_PAIR_COUNT = 2 cannot bind
     at these SFs (top-8 pair counts are thousands), so the unrolled
     oracle always yields exactly 8 rows."""
-    tune(spark)
     from etl_inreach_spark.operators.bpe import bpe_merges_df, bpe_train
 
     d = load_table(spark, sf_dir, "documents")
-    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES)
+    merges, _vocab = bpe_train(d, n_merges=_BPE_MERGES)
     return bpe_merges_df(spark, merges).select(
         "rank",
         "left",
@@ -411,12 +400,11 @@ def bpe_segment_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab of the unrolled round chain. No shuffle in the apply stage:
     a narrow map over documents with the (tiny) merge table shipped
     in the closure — broadcast-state shape at 100 TB."""
-    tune(spark)
     from etl_inreach_spark.operators.bpe import bpe_segment, bpe_train
 
     d = load_table(spark, sf_dir, "documents")
-    merges, _vocab = bpe_train(d, "text", n_merges=_BPE_MERGES)
-    seg = bpe_segment(d, "text", merges, id_col="doc_id")
+    merges, _vocab = bpe_train(d, n_merges=_BPE_MERGES)
+    seg = bpe_segment(d, merges)
     return seg.select(
         "doc_id",
         F.size("subwords").cast("bigint").alias("n_subwords"),
@@ -446,7 +434,7 @@ def _nb_quality_oracle(max_vocab: int | None = None) -> str:
     cap_cte = (
         ""
         if max_vocab is None
-        else f""" cnt0 AS (
+        else """ cnt0 AS (
         SELECT term, CAST(sum(y) AS BIGINT) AS c1,
                CAST(sum(1 - y) AS BIGINT) AS c0
         FROM tr GROUP BY term
@@ -538,7 +526,6 @@ def nb_quality_train_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _nb_quality(
     spark: SparkSession, sf_dir: str, max_vocab: int | None
 ) -> DataFrame:
-    tune(spark)
     from etl_inreach_spark.functions.text import tokens
     from etl_inreach_spark.operators.nb_quality import nb_score, nb_train
 

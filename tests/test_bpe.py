@@ -47,7 +47,7 @@ def test_bpe_train_matches_python_reference(spark, sf_dir):
             wc[w] += 1
     ref_merges, ref_vocab = _py_bpe(dict(wc), 12)
 
-    merges, vocab = bpe_train(d, "text", 12)
+    merges, vocab = bpe_train(d, 12)
     assert merges == ref_merges
     got = {r["word"]: (r["wc"], list(r["syms"])) for r in vocab.collect()}
     assert set(got) == set(ref_vocab)
@@ -59,7 +59,7 @@ def test_bpe_early_stop_and_tiny_corpus(spark):
     df = spark.createDataFrame(
         [("aa aa ab",), ("aa xy",)], "text string"
     )
-    merges, vocab = bpe_train(df, "text", 50)
+    merges, vocab = bpe_train(df, 50)
     # ('a','a') appears in aa(x3 words? aa,aa,aa? -> words: aa:3, ab:1, xy:1)
     # pair (a,a) weighted 3 wins round 0; after that the only adjacent
     # pairs are (a,b) and (x,y) at count 1 < MIN_PAIR_COUNT = 2 -> stop.
@@ -74,12 +74,12 @@ def test_bpe_segment_consistent_with_training_vocab(spark, sf_dir):
     from etl_inreach_spark.operators.bpe import bpe_segment
 
     d = load_table(spark, sf_dir, "documents")
-    merges, vocab = bpe_train(d, "text", 10)
+    merges, vocab = bpe_train(d, 10)
     final_syms = {r["word"]: list(r["syms"]) for r in vocab.collect()}
 
     got = {
         r["doc_id"]: list(r["subwords"])
-        for r in bpe_segment(d, "text", merges, "doc_id").collect()
+        for r in bpe_segment(d, merges).collect()
     }
     for r in d.select("doc_id", "text").collect():
         expect = [s for w in r["text"].split() for s in final_syms[w]]
@@ -114,7 +114,7 @@ def test_bpe_batched_rounds_match_reference_on_adversarial_corpora(spark):
             wc[w] += 1
         for n in (1, 3, 8):
             ref_merges, ref_vocab = _py_bpe(dict(wc), n)
-            merges, vocab = bpe_train(df, "text", n)
+            merges, vocab = bpe_train(df, n)
             assert merges == ref_merges, (text, n, merges, ref_merges)
             got = {r["word"]: list(r["syms"]) for r in vocab.collect()}
             assert got == ref_vocab, (text, n)

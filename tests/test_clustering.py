@@ -190,7 +190,7 @@ def test_kmeans_centroids_seed_ivf_cells(spark):
     cent = spark.createDataFrame(
         list(enumerate(model.centroids_float())), "cell int, _cvec array<double>"
     )
-    cells = _nearest_cells(df, cent, 1, "vec_id", "embedding")
+    cells = _nearest_cells(df, cent, 1, "embedding")
     got = {r["vec_id"]: r["cell"] for r in cells.collect()}
     assert got == _assignments(kmeans_assign(df, model))
 

@@ -22,7 +22,7 @@ def docs(spark, sf_dir):
 def exact_pairs(docs):
     from etl_inreach_spark.operators.text_dedup import ngram_jaccard_pairs
 
-    return pairs(ngram_jaccard_pairs(docs, "doc_id", "text", 0.8, length_block=32))
+    return pairs(ngram_jaccard_pairs(docs, 0.8, length_block=32))
 
 
 def test_planted_near_dups_exist(exact_pairs):
@@ -32,14 +32,14 @@ def test_planted_near_dups_exist(exact_pairs):
 def test_minhash_lsh_equals_exact_on_testdata(docs, exact_pairs):
     from etl_inreach_spark.operators.text_dedup import minhash_lsh_pairs
 
-    got = pairs(minhash_lsh_pairs(docs, "doc_id", "text", 0.8))
+    got = pairs(minhash_lsh_pairs(docs))
     assert got == exact_pairs  # miss prob ~1e-9 at j>=0.9 on this data
 
 
 def test_simhash_finds_planted_dups(docs, exact_pairs):
     from etl_inreach_spark.operators.text_dedup import simhash_pairs
 
-    got = pairs(simhash_pairs(docs, "doc_id", "text"))
+    got = pairs(simhash_pairs(docs))
     # SimHash(hamming<=3) is a different (stricter) measure; it must
     # still find a solid majority of the planted j>=0.8 pairs and
     # nothing outside them on this clean-gap corpus.
@@ -55,7 +55,7 @@ def test_simhash_portable_hash_variant(docs, exact_pairs):
 
     got = pairs(
         simhash_pairs(
-            docs, "doc_id", "text", shingle_k=9,
+            docs, shingle_k=9,
             bits=60, gram_hash=poly_gram_hasher60(9),
         )
     )
@@ -92,18 +92,18 @@ def test_ann_portable_variants_recall(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 8)
-    exact = {(r["q_id"], r["vec_id"]) for r in brute_force_topk(emb, q, 5).collect()}
-    lsh = {(r["q_id"], r["vec_id"]) for r in lsh_topk_portable(emb, q, 5, dim=64).collect()}
+    exact = {(r["q_id"], r["vec_id"]) for r in brute_force_topk(emb, q).collect()}
+    lsh = {(r["q_id"], r["vec_id"]) for r in lsh_topk_portable(emb, q).collect()}
     assert len(lsh & exact) / len(exact) >= 0.2
     ivf = {
         (r["q_id"], r["vec_id"])
-        for r in ivf_topk_portable(emb, q, 5, nprobe=4).collect()
+        for r in ivf_topk_portable(emb, q, nprobe=4).collect()
     }
     assert len(ivf & exact) / len(exact) >= 0.2
     # probing every cell must reproduce brute force exactly
     full = {
         (r["q_id"], r["vec_id"])
-        for r in ivf_topk_portable(emb, q, 5, nprobe=16).collect()
+        for r in ivf_topk_portable(emb, q, nprobe=16).collect()
     }
     assert full == exact
 
@@ -154,7 +154,7 @@ def test_cosine_pairs_exact_matches_bruteforce(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     got = {
-        (r["id_a"], r["id_b"]) for r in cosine_pairs_exact(emb, 0.4).collect()
+        (r["id_a"], r["id_b"]) for r in cosine_pairs_exact(emb).collect()
     }
     rows = emb.collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype="float64") for r in rows}
@@ -231,7 +231,7 @@ def test_resize_real_pil_path(spark):
         "doc_id",
         media_struct(F.lit("mem://p"), F.lit("image/png"), F.col("payload")).alias("media"),
     )
-    rows = resize_images(media, 4, 4, fake=False).collect()
+    rows = resize_images(media, fake=False).collect()
     assert len(rows) == 1
     assert bytes(rows[0]["resized"]) == b"\x89" * 16
 
@@ -545,7 +545,7 @@ def test_zorder_repartition_improves_two_column_locality(spark, sf_dir):
         )
     )
     parts = 16
-    z = zorder_repartition(o, ["o_custkey", "o_secs"], num_partitions=parts)
+    z = zorder_repartition(o, num_partitions=parts)
     spans = (
         z.withColumn("_pid", F.spark_partition_id())
         .groupBy("_pid")
@@ -612,8 +612,8 @@ def test_write_zordered_zonemap_prunes_both_columns(spark, sf_dir, tmp_path):
     ).first()
 
     zpath = str(tmp_path / "zordered")
-    write_zordered(o, zpath, ["o_custkey", "o_secs"], num_files=16)
-    env = file_envelopes(zpath, ["o_custkey", "o_secs"])
+    write_zordered(o, zpath, num_files=16)
+    env = file_envelopes(zpath)
     assert 8 <= len(env) <= 16 and all(e["rows"] > 0 for e in env)
 
     # five 10%-of-domain slabs across the domain (includes placements
@@ -642,7 +642,7 @@ def test_write_zordered_zonemap_prunes_both_columns(spark, sf_dir, tmp_path):
     o.repartitionByRange(16, F.col("o_custkey")).sortWithinPartitions(
         "o_custkey"
     ).write.mode("overwrite").parquet(spath)
-    senv = file_envelopes(spath, ["o_custkey", "o_secs"])
+    senv = file_envelopes(spath)
     s_ck = mean_frac(senv, "o_custkey", dom["cl"], dom["ch"])
     s_ts = mean_frac(senv, "o_secs", dom["sl"], dom["sh"])
     assert s_ck <= 0.25  # single-column sort beats z-order on its own column

@@ -88,7 +88,7 @@ def test_negative_sample_matches_python_and_invariants(spark, sf_dir):
     expected = _py_negatives(ids, 4, meta)
 
     got = {}
-    for r in negative_sample(d, "doc_id", 4, group_cols=["source"]).collect():
+    for r in negative_sample(d, 4, group_cols=["source"]).collect():
         got[(r["anchor_id"], r["neg_id"])] = r["slot"]
         # invariants
         assert r["neg_id"] != r["anchor_id"]
@@ -106,7 +106,7 @@ def test_negative_sample_matches_python_and_invariants(spark, sf_dir):
 def test_negative_sample_rejects_bad_k(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     with pytest.raises(ValueError):
-        negative_sample(d, "doc_id", 0)
+        negative_sample(d, 0)
 
 
 from hypothesis import HealthCheck, given, settings

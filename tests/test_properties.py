@@ -133,7 +133,7 @@ def test_ngram_jaccard_matches_python_reference(spark, texts):
     df = spark.createDataFrame(docs, "doc_id long, text string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, "doc_id", "text", 0.6, shingle_k=3).collect()
+        for r in ngram_jaccard_pairs(df, 0.6, shingle_k=3).collect()
     }
     want = _brute_jaccard_pairs(docs, 3, 0.6)
     assert got == want

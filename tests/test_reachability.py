@@ -17,8 +17,13 @@ production code.
 Matching by name over-approximates reachability, so it can only miss dead
 code; it never flags live code.
 
-Options: every defaulted parameter of an engine function must receive at
-least two values across its call sites (see ``single_valued_options``).
+Options: every parameter of an engine function must receive at least two
+values across its call sites (see ``single_valued_options``). A defaulted
+parameter counts its default wherever a call omits it. A required parameter
+is single-valued only when every call passes the same literal: a source text
+that ``ast.literal_eval`` accepts (a str, a number, or a tuple/list of them).
+Names, Column expressions, calls and ``*args``/``**kwargs`` are dynamic.
+``@query`` functions are skipped: ``(spark, sf_dir)`` is the driver contract.
 """
 
 from __future__ import annotations
@@ -157,43 +162,61 @@ def _callee(call: ast.Call) -> str | None:
     return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
 
 
-def _defaults(fn: ast.FunctionDef) -> dict[str, ast.expr]:
-    """Defaulted parameter name -> default expression."""
+def _params(fn: ast.FunctionDef) -> dict[str, ast.expr | None]:
+    """Parameter name -> default expression, or None when it is required."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    out = {arg.arg: d for arg, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)}
-    out.update({arg.arg: d for arg, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None})
+    out: dict[str, ast.expr | None] = dict.fromkeys(arg.arg for arg in pos)
+    out.update({arg.arg: d for arg, d in zip(pos[len(pos) - len(a.defaults) :], a.defaults)})
+    out.update({arg.arg: d for arg, d in zip(a.kwonlyargs, a.kw_defaults)})
     return out
 
 
-def _value(call: ast.Call, positions: list[str], param: str, default: ast.expr) -> str | None:
-    """Source text of the value ``param`` takes at ``call``; None if dynamic
-    (a bare name, or an argument that ``*args``/``**kwargs`` may supply)."""
-    for kw in call.keywords:
-        if kw.arg == param:
-            return None if isinstance(kw.value, ast.Name) else ast.unparse(kw.value)
+def _literal(arg: ast.expr) -> str | None:
+    """Source text of a literal argument; None if it is not a literal."""
+    try:
+        ast.literal_eval(arg)
+    except ValueError:
+        return None
+    return ast.unparse(arg)
+
+
+def _value(
+    call: ast.Call, positions: list[str], param: str, default: ast.expr | None
+) -> str | None:
+    """Source text of the value ``param`` takes at ``call``; None if dynamic:
+    a bare name, an argument that ``*args``/``**kwargs`` may supply, or a
+    non-literal passed to a required parameter."""
+    passed = next((kw.value for kw in call.keywords if kw.arg == param), None)
     idx = positions.index(param) if param in positions else None
     star = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)
-    if idx is not None and idx < len(call.args) and (star is None or idx < star):
-        arg = call.args[idx]
-        return None if isinstance(arg, ast.Name) else ast.unparse(arg)
-    if (idx is not None and star is not None) or any(kw.arg is None for kw in call.keywords):
+    if passed is None and idx is not None and idx < len(call.args):
+        passed = call.args[idx] if star is None or idx < star else None
+    if passed is not None:
+        if default is None:
+            return _literal(passed)
+        return None if isinstance(passed, ast.Name) else ast.unparse(passed)
+    if default is None or (idx is not None and star is not None):
+        return None
+    if any(kw.arg is None for kw in call.keywords):
         return None
     return ast.unparse(default)
 
 
 def single_valued_options() -> list[tuple[str, int, str, str, str]]:
-    """``(relpath, line, function, param, value)`` for every defaulted
-    parameter that takes exactly one value over all its call sites.
+    """``(relpath, line, function, param, value)`` for every parameter that
+    takes exactly one value over all its call sites.
 
-    * Nodes: defaulted parameters of top-level engine functions whose name
-      no other top-level engine definition shares; kept references and
-      functions never called directly are skipped.
+    * Nodes: parameters of top-level engine functions whose name no other
+      top-level engine definition shares; ``@query`` functions, kept
+      references and functions never called directly are skipped.
     * Call sites: every call whose callee name or attribute matches, in the
       engine and in ``CALLERS``.
     * Value at a call: an omitted argument counts as the default's source
       text, a passed one as its ``ast.unparse``; a bare name, ``*args`` or
       ``**kwargs`` is dynamic and counts as distinct from every other value.
+      A required parameter's value is its argument's source text when that
+      is a literal (``ast.literal_eval`` accepts it), and dynamic otherwise.
     """
     fns: dict[str, tuple[str, ast.FunctionDef]] = {}
     counts: dict[str, int] = {}
@@ -203,7 +226,11 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 counts[stmt.name] = counts.get(stmt.name, 0) + 1
-                if isinstance(stmt, ast.FunctionDef) and (rel, stmt.name) not in KEPT_REFERENCES:
+                if (
+                    isinstance(stmt, ast.FunctionDef)
+                    and not _is_query(stmt)
+                    and (rel, stmt.name) not in KEPT_REFERENCES
+                ):
                     fns[stmt.name] = (rel, stmt)
     for pattern in CALLERS:
         trees += [_parse(path) for path in sorted(glob.glob(os.path.join(REPO, pattern)))]
@@ -218,7 +245,7 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
         if counts[name] > 1 or name not in calls:
             continue
         positions = [a.arg for a in fn.args.posonlyargs + fn.args.args]
-        for param, default in _defaults(fn).items():
+        for param, default in _params(fn).items():
             values = {_value(c, positions, param, default) for c in calls[name]}
             if len(values) == 1 and None not in values:
                 found.append((rel, fn.lineno, name, param, values.pop()))

@@ -64,14 +64,14 @@ def test_filter_recent_anchored(spark):
     df = spark.createDataFrame(
         [(1, ts(0)), (2, ts(50)), (3, ts(69)), (4, ts(80))], "id long, ts timestamp"
     )
-    kept = sorted(r["id"] for r in filter_recent(df, "ts").collect())
+    kept = sorted(r["id"] for r in filter_recent(df).collect())
     assert kept == [2, 3, 4]  # anchor = ts(80), cutoff = ts(50) inclusive
 
 
 def test_sessionize_gap(spark):
     rows = [("u", ts(0), 0), ("u", ts(10), 1), ("u", ts(50), 2), ("u", ts(55), 3), ("v", ts(0), 4)]
     df = spark.createDataFrame(rows, "k string, ts timestamp, arr long")
-    out = sessionize(df, ["k"], "ts", 1800, "arr")
+    out = sessionize(df, ["k"], "arr")
     got = {r["arr"]: r["session_id"] for r in out.collect()}
     assert got == {0: 1, 1: 1, 2: 2, 3: 2, 4: 1}
 
@@ -137,7 +137,7 @@ def test_salted_join_matches_plain_join(spark, sf_dir):
         expect = plain if how == "inner" else sorted(
             map(tuple, ev.join(cust, on="user_id", how="left").collect())
         )
-        got = sorted(map(tuple, salted_join(ev, cust, ["user_id"], salt_buckets=5, how=how).collect()))
+        got = sorted(map(tuple, salted_join(ev, cust, salt_buckets=5, how=how).collect()))
         assert got == expect, how
 
 
@@ -165,7 +165,7 @@ def test_funnel_strictly_after_semantics(spark):
     )
     out = {
         r["user_id"]: (r["t_view"], r["t_click"], r["t_purchase"], r["reached"])
-        for r in funnel_steps(ev, ("view", "click", "purchase")).collect()
+        for r in funnel_steps(ev).collect()
     }
     assert out[1] == (t0, None, None, 1)  # tie click didn't advance; purchase needs click
     assert out[2] == (t0, t1, None, 2)
@@ -225,7 +225,7 @@ def test_interval_overlap_join_matches_naive(spark):
 
     for band in (7, 16, 64):
         rows = interval_overlap_join(
-            left, right, "ls", "le", "rs", "re", band
+            left, right, "rs", "re", band
         ).collect()
         got = [(r["lid"], r["rid"]) for r in rows]
         assert len(got) == len(set(got)), f"dup pairs at band={band}"
@@ -242,12 +242,12 @@ def test_interval_overlap_join_validates_inputs(spark):
     left = spark.createDataFrame([(1, 0, 10)], "lid long, ls long, le long")
     right = spark.createDataFrame([(2, 5, 15)], "rid long, rs long, re long")
     with pytest.raises(ValueError, match="band"):
-        interval_overlap_join(left, right, "ls", "le", "rs", "re", 0)
+        interval_overlap_join(left, right, "rs", "re", 0)
     with pytest.raises(ValueError, match="band"):
-        interval_overlap_join(left, right, "ls", "le", "rs", "re", -4)
+        interval_overlap_join(left, right, "rs", "re", -4)
     same = spark.createDataFrame([(3, 1, 2)], "rid long, ls long, le long")
     with pytest.raises(ValueError, match="distinct endpoint"):
-        interval_overlap_join(left, same, "ls", "le", "ls", "le", 8)
+        interval_overlap_join(left, same, "ls", "le", 8)
 
 
 def test_snapshot_diff_classes_and_null_semantics(spark):

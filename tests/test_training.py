@@ -28,7 +28,7 @@ class TestPackChunks:
         # tiny bucket count forces multi-doc buckets; the two-level
         # prefix sum must still equal the serial one
         out = (
-            pack_chunks(df, "doc_id", "tok", capacity=CAP, num_buckets=3)
+            pack_chunks(df, "tok", capacity=CAP, num_buckets=3)
             .orderBy("doc_id")
             .collect()
         )
@@ -46,7 +46,7 @@ class TestPackChunks:
         df = spark.createDataFrame(
             [(0, 5), (1, 0), (2, 3)], "doc_id bigint, tok int"
         )
-        out = pack_chunks(df, "doc_id", "tok", capacity=CAP).orderBy("doc_id").collect()
+        out = pack_chunks(df, "tok", capacity=CAP).orderBy("doc_id").collect()
         assert [r.doc_id for r in out] == [0, 2]
         assert [r.tok_offset for r in out] == [0, 5]
 
@@ -56,9 +56,9 @@ class TestPackChunks:
         df = spark.createDataFrame(
             [(i, (i * 37) % 90 + 1) for i in range(200)], "doc_id bigint, tok int"
         )
-        a = pack_chunks(df, "doc_id", "tok", CAP).orderBy("doc_id").collect()
+        a = pack_chunks(df, "tok", CAP).orderBy("doc_id").collect()
         b = (
-            pack_chunks(df.repartition(7), "doc_id", "tok", CAP)
+            pack_chunks(df.repartition(7), "tok", CAP)
             .orderBy("doc_id")
             .collect()
         )
@@ -75,7 +75,7 @@ class TestPackBinsNextfit:
             [(i, s) for i, s in enumerate(sizes)], "doc_id bigint, tok int"
         )
         out = (
-            pack_bins_nextfit(df, "doc_id", "tok", capacity=100, num_buckets=1)
+            pack_bins_nextfit(df, "tok", capacity=100, num_buckets=1)
             .orderBy("doc_id")
             .collect()
         )
@@ -88,7 +88,7 @@ class TestPackBinsNextfit:
         df = spark.createDataFrame(
             [(i, (i * 53) % 140 + 1) for i in range(300)], "doc_id bigint, tok int"
         )
-        out = pack_bins_nextfit(df, "doc_id", "tok", capacity=100, num_buckets=8)
+        out = pack_bins_nextfit(df, "tok", capacity=100, num_buckets=8)
         bad = out.filter((F.col("bin_fill") > 100) & (F.col("n_tokens") <= 100))
         assert bad.count() == 0
 
@@ -98,7 +98,7 @@ class TestPackBinsNextfit:
         df = spark.createDataFrame(
             [(i, (i * 29) % 80 + 1) for i in range(200)], "doc_id bigint, tok int"
         )
-        out = pack_bins_nextfit(df, "doc_id", "tok", capacity=100, num_buckets=4)
+        out = pack_bins_nextfit(df, "tok", capacity=100, num_buckets=4)
         per = (
             out.groupBy("bucket")
             .agg(F.max("bin_seq").alias("mx"), F.count_distinct("bin_seq").alias("n"))
@@ -124,9 +124,7 @@ class TestContamination:
         )
         out = {
             r.doc_id: r
-            for r in contamination_ngrams(
-                df, "doc_id", "text", bench_pred=F.col("doc_id") == 0
-            ).collect()
+            for r in contamination_ngrams(df, bench_pred=F.col("doc_id") == 0).collect()
         }
         assert set(out) == {1, 2}
         assert out[1].contamination == 1.0 and out[1].contaminated
@@ -142,9 +140,7 @@ class TestContamination:
                 (1, "shared prefix words here then other tail stuff"),
             ],
         )
-        out = contamination_ngrams(
-            df, "doc_id", "text", bench_pred=F.col("doc_id") == 0
-        ).collect()
+        out = contamination_ngrams(df, bench_pred=F.col("doc_id") == 0).collect()
         (r,) = out
         assert 0.0 < r.contamination < 1.0
 
@@ -207,11 +203,11 @@ class TestShingleParity:
 
         df = self._corpus(spark)
         fast = td.shingles_exploded(
-            df, "doc_id", "text", self.K, distinct=distinct, keep_pos=keep_pos
+            df, self.K, distinct=distinct, keep_pos=keep_pos
         )
         # same hash WITHOUT the _poly60 marker -> legacy substring path
         slow = td.shingles_exploded(
-            df, "doc_id", "text", self.K,
+            df, self.K,
             gram_hash=lambda g: td._poly60_of_h1(td.poly_gram_hash(g, self.K)),
             distinct=distinct, keep_pos=keep_pos,
         )
@@ -241,8 +237,7 @@ class TestShingleParity:
 class TestSimhashLaneOverflow:
     """ADVICE r2 (high): a ~40k-char repetitive document overflowed a
     15-bit lane and silently zeroed the sketch. The chunked
-    position-keyed aggregation must return the TRUE sketch; the
-    positionless lane path must raise rather than corrupt."""
+    position-keyed aggregation must return the TRUE sketch."""
 
     K = 5
     BITS = 60
@@ -253,7 +248,7 @@ class TestSimhashLaneOverflow:
         # every gram identical -> per-bit counts hit 40k-4 >> 2^15
         df = _docs(spark, [(0, "a" * 40_000)])
         return td.shingles_exploded(
-            df, "doc_id", "text", self.K,
+            df, self.K,
             gram_hash=td.poly_gram_hasher60(self.K),
             distinct=False, keep_pos=keep_pos,
         )
@@ -271,29 +266,35 @@ class TestSimhashLaneOverflow:
         )
         assert row._sim == expect._h != 0
 
-    def test_positionless_lane_path_raises(self, spark):
-        from pyspark.errors import SparkRuntimeException
-        from etl_inreach_spark.operators import text_dedup as td
-
-        sk = td.simhash_sketch(self._sh(spark, keep_pos=False), bits=self.BITS)
-        with pytest.raises(SparkRuntimeException, match="lane overflow"):
-            sk.collect()
-
     def test_small_doc_paths_agree(self, spark):
+        """The lane-packed chunked sketch equals a plain per-bit majority
+        vote over the same 60-bit gram hashes."""
+        from collections import defaultdict
+
         from etl_inreach_spark.operators import text_dedup as td
 
         df = _docs(spark, [(i, t) for i, t in enumerate(
             ["the quick brown fox jumps over the lazy dog",
              "pack my box with five dozen liquor jugs",
              "aaaaabbbbbaaaaabbbbb"])])
-        mk = lambda pos: td.shingles_exploded(  # noqa: E731
-            df, "doc_id", "text", self.K,
+        sh = td.shingles_exploded(
+            df, self.K,
             gram_hash=td.poly_gram_hasher60(self.K),
-            distinct=False, keep_pos=pos,
+            distinct=False, keep_pos=True,
         )
-        chunked = sorted(map(tuple, td.simhash_sketch(mk(True), bits=self.BITS).collect()))
-        single = sorted(map(tuple, td.simhash_sketch(mk(False), bits=self.BITS).collect()))
-        assert chunked == single
+        hashes = defaultdict(list)
+        for r in sh.select("_id", "_h").collect():
+            hashes[r["_id"]].append(r["_h"])
+        want = {
+            doc: sum(
+                1 << b
+                for b in range(self.BITS)
+                if 2 * sum((h >> b) & 1 for h in hs) > len(hs)
+            )
+            for doc, hs in hashes.items()
+        }
+        got = dict(map(tuple, td.simhash_sketch(sh, bits=self.BITS).collect()))
+        assert got == want and len(got) == 3
 
 
 class TestChunking:
@@ -305,7 +306,7 @@ class TestChunking:
         df = spark.createDataFrame([(1, text)], "doc_id long, text string")
         rows = sorted(
             (r["chunk_idx"], r["start_tok"], r["n_tokens"], r["chunk_text"])
-            for r in chunk_tokens(df, "doc_id", "text", capacity=4, stride=3).collect()
+            for r in chunk_tokens(df, capacity=4, stride=3).collect()
         )
         assert rows == [
             (0, 0, 4, "t0 t1 t2 t3"),
@@ -320,7 +321,7 @@ class TestChunking:
         df = spark.createDataFrame(
             [(1, ""), (2, "   "), (3, "one")], "doc_id long, text string"
         )
-        rows = chunk_tokens(df, "doc_id", "text").collect()
+        rows = chunk_tokens(df).collect()
         assert [(r["doc_id"], r["n_tokens"], r["chunk_text"]) for r in rows] == [
             (3, 1, "one")
         ]
@@ -334,7 +335,7 @@ class TestChunking:
         df = spark.createDataFrame([(1, text)], "doc_id long, text string")
         rows = sorted(
             (r["start_tok"], r["n_tokens"])
-            for r in chunk_tokens(df, "doc_id", "text", capacity=2, stride=5).collect()
+            for r in chunk_tokens(df, capacity=2, stride=5).collect()
         )
         assert rows == [(0, 2), (5, 2)]
 
@@ -345,9 +346,9 @@ class TestChunking:
 
         df = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
         with _pytest.raises(ValueError):
-            chunk_tokens(df, "doc_id", "text", capacity=0)
+            chunk_tokens(df, capacity=0)
         with _pytest.raises(ValueError):
-            chunk_tokens(df, "doc_id", "text", stride=0)
+            chunk_tokens(df, stride=0)
 
     def test_single_tokenization_in_plan(self, spark):
         """Catalyst substitutes multiply-referenced aliases into every
@@ -358,7 +359,7 @@ class TestChunking:
 
         df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
         plan = (
-            chunk_tokens(df, "doc_id", "text")
+            chunk_tokens(df)
             ._jdf.queryExecution()
             .optimizedPlan()
             .toString()

@@ -62,10 +62,10 @@ def main() -> int:
     # BPE: 50 merges over the full document corpus.
     from etl_inreach_spark.operators.bpe import bpe_segment, bpe_train
 
-    t_train, (merges, vocab) = timed(lambda: bpe_train(docs, "text", 50))
+    t_train, (merges, vocab) = timed(lambda: bpe_train(docs, 50))
     n_vocab = vocab.count()
     t_seg, seg_rows = timed(
-        lambda: bpe_segment(docs, "text", merges, "doc_id").count()
+        lambda: bpe_segment(docs, merges).count()
     )
     results["bpe"] = {
         "n_docs": n_doc,
@@ -86,7 +86,7 @@ def main() -> int:
     results["priority_sample"] = {"n_docs": n_doc, "k": 1000, "sec": t_ps, "rows": ps_rows}
 
     t_ns, ns_rows = timed(
-        lambda: negative_sample(docs, "doc_id", 4, group_cols=["source"]).count()
+        lambda: negative_sample(docs, 4, group_cols=["source"]).count()
     )
     results["negative_sample"] = {"n_docs": n_doc, "k": 4, "sec": t_ns, "pairs": ns_rows}
 
@@ -158,9 +158,9 @@ def main() -> int:
     with tempfile.TemporaryDirectory() as td:
         zpath = os.path.join(td, "z")
         t_zw, _ = timed(
-            lambda: write_zordered(o, zpath, ["o_custkey", "o_secs"], num_files=64)
+            lambda: write_zordered(o, zpath, num_files=64)
         )
-        env = file_envelopes(zpath, ["o_custkey", "o_secs"])
+        env = file_envelopes(zpath)
         dom = o.agg(
             F.min("o_custkey").alias("cl"), F.max("o_custkey").alias("ch"),
             F.min("o_secs").alias("sl"), F.max("o_secs").alias("sh"),

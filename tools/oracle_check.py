@@ -217,7 +217,7 @@ def main() -> int:
         return 2
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # emulate the DRIVER's session: bare builder, no engine confs —
-        # queries must self-tune via session.tune(spark)
+        # the registry's query wrapper applies session.tune(spark)
         from pyspark.sql import SparkSession
 
         spark = (

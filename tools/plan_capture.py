@@ -6,7 +6,9 @@ Each query is BUILT, which runs its build-time jobs (eager
 localCheckpoints, bounded collects, iterative rounds; a full capture at
 sf0.001 launches more than 500 stages), but its final action is never
 run: the plan is explained, not executed. The session is the library
-session (same confs as bench).
+session (same confs as bench). The checkout root in each plan (file
+scan paths) is written as ``<repo>``, so captures from two checkouts of
+the same code compare equal.
 
 Usage:
   python tools/plan_capture.py --tag r11 --suffix before [sf_dir] [name ...]
@@ -20,7 +22,8 @@ import argparse
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from etl_inreach_spark.queries import all_queries  # noqa: E402
 from etl_inreach_spark.session import get_spark  # noqa: E402
@@ -34,11 +37,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        args.tag,
-    )
+    out_dir = os.path.join(ROOT, "plans", args.tag)
     os.makedirs(out_dir, exist_ok=True)
 
     spark = get_spark("plan-capture")
@@ -60,7 +59,7 @@ def main() -> int:
             continue
         path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(plan.replace(ROOT, "<repo>"))
         n_ok += 1
     print(f"plan_capture: wrote {n_ok}/{len(names)} plans to {out_dir}")
     spark.stop()

@@ -599,7 +599,7 @@ def _probe_incsem(spark, sf_dir: str, repl: int) -> dict:
     # 15 MB row group whose lone scan task reads as a phantom
     # straggler (the graph probe's single-file fixture artifact)
     state = os.path.join(root, "state")
-    seeded = _nearest_cells(skew, cent, 1, "vec_id", "embedding").select(
+    seeded = _nearest_cells(skew, cent, 1, "embedding").select(
         F.col("vec_id").alias("_id"),
         F.col("embedding").alias("_vec"),
         "cell",

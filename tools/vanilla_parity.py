@@ -11,8 +11,9 @@ tests/test_vanilla_parity.py invokes it via subprocess.
 
 Two passes, same JVM:
 
-1. **driver emulation** — bare builder, queries self-tune; catches any
-   query that forgets ``tune(spark)`` or depends on a builder-only conf.
+1. **driver emulation** — bare builder; the registry's ``query`` wrapper
+   applies ``tune(spark)`` before every query body, so this catches any
+   query that depends on a builder-only conf.
 2. **NTZ hard mode** — ``inferTimestampNTZ`` is removed from
    RUNTIME_CONF and forced true, so every scan really yields
    TIMESTAMP_NTZ and ``catalog._normalize_ntz`` must absorb it;
