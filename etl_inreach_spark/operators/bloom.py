@@ -56,10 +56,9 @@ def _positions(key: Column, m_bits: int, k_hashes: int) -> list[Column]:
     ]
 
 
-def bloom_words(
-    keys: DataFrame, key_col: str, m_bits: int = 1 << 17, k_hashes: int = 5
-) -> DataFrame:
-    """(word: bigint, bits: bigint) Bloom filter over ``keys[key_col]``.
+def bloom_words(keys: DataFrame, m_bits: int = 1 << 17, k_hashes: int = 5) -> DataFrame:
+    """(word: bigint, bits: bigint) Bloom filter over the customer keys
+    ``keys.c_custkey``.
 
     One narrow pass over the (deduplicated) key relation: explode the
     k bit positions, map each to (word = pos div 64, 1 << (pos mod 64)),
@@ -67,7 +66,7 @@ def bloom_words(
     the relation to <= m/64 rows map-side, so the shuffle is bounded by
     the filter size, not the key count."""
     pos = keys.select(
-        F.explode(F.array(*_positions(F.col(key_col), m_bits, k_hashes))).alias(
+        F.explode(F.array(*_positions(F.col("c_custkey"), m_bits, k_hashes))).alias(
             "_pos"
         )
     )
@@ -97,12 +96,12 @@ def bloom_words(
 
 def bloom_prune(
     fact: DataFrame,
-    key_col: str,
     words: DataFrame,
     m_bits: int = 1 << 17,
     k_hashes: int = 5,
 ) -> DataFrame:
-    """Rows of ``fact`` whose key MAY be in the filter (no false
+    """Rows of ``fact`` whose order customer key ``o_custkey`` MAY be
+    in the filter (no false
     negatives; false-positive rate ~ (1 - e^{-kn/m})^k).
 
     k broadcast left joins on the word id — all map-side, no shuffle of
@@ -142,8 +141,8 @@ def bloom_prune(
             "different bit grid and silently drop true members"
         )
     out = fact
-    probes = _positions(F.col(key_col), m_bits, k_hashes)
-    null_key = F.col(key_col).isNull()
+    probes = _positions(F.col("o_custkey"), m_bits, k_hashes)
+    null_key = F.col("o_custkey").isNull()
     for i, pos in enumerate(probes):
         w = words.select(
             F.col("word").alias(f"_w{i}"), F.col("bits").alias(f"_bits{i}")

@@ -80,7 +80,6 @@ def bpe_train(
     word's symbol array after all merges — the trained segmenter
     state. Stops early when no pair reaches MIN_PAIR_COUNT.
     """
-    spark = docs.sparkSession
     words = (
         docs.select(
             F.explode(

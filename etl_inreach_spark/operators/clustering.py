@@ -30,23 +30,12 @@ standard trick from integer DSP):
 
 Spark shapes (assignment is SHUFFLE-FREE — no join, no groupBy):
 
-  * two interchangeable per-row assignment paths, pinned identical by
-    tests. DEFAULT (``use_arrow=True``): an Arrow-batched
-    ``pandas_udf`` whose body is one int64 numpy matmul per batch
-    (``scores = |C|^2 - 2 Q C^T``, argmin axis=1 — np.argmin takes
-    the first occurrence, matching the tie-break). int64 numpy
-    arithmetic is exact under the documented overflow bounds and
-    per-row, so Arrow batch boundaries cannot change a result — the
-    determinism claim survives. ALTERNATIVE (``use_arrow=False``): a
-    pure-JVM expression — the k quantized centroids enter the plan as
-    ONE ``from_json`` string literal (NOT k*d unrolled ``lit`` nodes:
-    measured 0.43 s vs 2.4 s of Catalyst analysis per fresh plan at
-    k=16,d=64; the optimizer constant-folds the parse), each row then
-    folds ``zip_with`` + ``aggregate`` per centroid. Zero Python,
-    zero shuffle — but Spark evaluates higher-order-function lambdas
-    INTERPRETED, ~2.5 us per element-op single-threaded (measured),
-    ~1000x slower than the vectorized matmul. Use it where a
-    no-Python-workers constraint outranks throughput.
+  * per-row assignment is an Arrow-batched ``pandas_udf`` whose body
+    is one int64 numpy matmul per batch (``scores = |C|^2 - 2 Q C^T``,
+    argmin axis=1 — np.argmin takes the first occurrence, matching the
+    tie-break). int64 numpy arithmetic is exact under the documented
+    overflow bounds and per-row, so Arrow batch boundaries cannot
+    change a result — the determinism claim survives.
   * one Lloyd iteration = one job: scan the (localCheckpointed once)
     quantized relation → per-row argmin map → ``posexplode`` →
     partial-aggregated ``groupBy(cluster, dim)`` whose shuffle volume
@@ -85,7 +74,6 @@ stand-in).
 
 from __future__ import annotations
 
-import json
 from dataclasses import dataclass
 
 import numpy as np
@@ -140,46 +128,15 @@ def quantize_vectors(df: DataFrame, scale_bits: int = 20) -> Column:
     )
 
 
-def _lit_centroids(qcentroids: tuple[tuple[int, ...], ...]) -> Column:
-    """The k quantized centroids as ONE from_json string literal (the
-    optimizer constant-folds the parse to a nested-array literal).
-    One plan node instead of k*d unrolled ``lit``s: Catalyst analysis
-    of a fresh plan drops 2.4 s -> 0.43 s at k=16, d=64 — decisive
-    when every Lloyd iteration builds a new plan. No join, no
-    broadcast-variable plumbing."""
-    payload = json.dumps([[int(v) for v in row] for row in qcentroids])
-    return F.from_json(F.lit(payload), "array<array<bigint>>")
-
-
-def _assign_expr(qvec: Column, qcentroids: tuple[tuple[int, ...], ...]) -> Column:
-    """0-indexed argmin cluster for a quantized vector: scores[c] =
-    |c|^2 - 2<q,c> (int64-exact; the |q|^2 term is per-row constant),
-    first-occurrence tie-break via array_position of the min."""
-    csq = [sum(int(v) * int(v) for v in row) for row in qcentroids]
-    scores = F.zip_with(
-        _lit_centroids(qcentroids),
-        F.from_json(F.lit(json.dumps(csq)), "array<bigint>"),
-        lambda cvec, sq: sq
-        - F.lit(2).cast("bigint")
-        * F.aggregate(
-            F.zip_with(qvec, cvec, lambda a, b: a * b),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        ),
-    )
-    return (F.array_position(scores, F.array_min(scores)) - 1).cast("int")
-
-
 def _assign_arrow(
     qvec: Column, qcentroids: tuple[tuple[int, ...], ...]
 ) -> Column:
     """Vectorized assignment: an Arrow-batched pandas_udf computing
-    the identical integer argmin as ``_assign_expr`` via one int64
-    numpy matmul per batch (np.argmin axis=1 = first-occurrence
-    tie-break). Exact under the module's overflow bounds; per-row, so
-    Arrow batch boundaries cannot change a result. ~1000x the
-    throughput of the interpreted-HOF expression path (measured
-    ~2.5 us/element-op there vs ns-scale vectorized here)."""
+    the 0-indexed integer argmin cluster, scores[c] = |c|^2 - 2<q,c>
+    (the |q|^2 term is per-row constant), via one int64 numpy matmul
+    per batch (np.argmin axis=1 = first-occurrence tie-break). Exact
+    under the module's overflow bounds; per-row, so Arrow batch
+    boundaries cannot change a result."""
     cents = np.asarray([list(row) for row in qcentroids], dtype=np.int64)
     csq = (cents * cents).sum(axis=1, dtype=np.int64)
 
@@ -228,15 +185,11 @@ def kmeans_fit(
     df: DataFrame,
     k: int,
     max_iter: int = 25,
-    use_arrow: bool = True,
 ) -> KMeansModel:
     """Train the deterministic integer-grid k-means model over
     (vec_id, embedding) rows on the 2^SCALE_BITS grid. One job per
     Lloyd iteration; the quantized relation is localCheckpointed once
-    so upstream ETL runs exactly once regardless of max_iter. The two
-    assignment paths (``use_arrow``, see module header) train the
-    bit-identical model — pinned by tests."""
-    assign = _assign_arrow if use_arrow else _assign_expr
+    so upstream ETL runs exactly once regardless of max_iter."""
     # LAZY (r11): the init-centroid collect right below is the
     # first action and materializes the quantized relation in the
     # same job (2 jobs -> 1)
@@ -251,7 +204,7 @@ def kmeans_fit(
         n_iter += 1
         stats = (
             qdf.select(
-                assign(F.col("_qvec"), cents).alias("_c"),
+                _assign_arrow(F.col("_qvec"), cents).alias("_c"),
                 F.posexplode("_qvec").alias("_dim", "_x"),
             )
             .groupBy("_c", "_dim")
@@ -289,15 +242,11 @@ def kmeans_fit(
 def kmeans_assign(
     df: DataFrame,
     model: KMeansModel,
-    use_arrow: bool = True,
 ) -> DataFrame:
     """(vec_id, cluster): shuffle-free nearest-centroid assignment
     under the model — the same integer argmin the trainer used, so
-    fit-time and serve-time assignments can never disagree.
-    ``use_arrow`` picks the vectorized default or the pure-JVM
-    expression path (module header); both produce identical values."""
+    fit-time and serve-time assignments can never disagree."""
     qvec = quantize_vectors(df, model.scale_bits)
-    assign = _assign_arrow if use_arrow else _assign_expr
     return df.select(
-        F.col("vec_id"), assign(qvec, model.qcentroids).alias("cluster")
+        F.col("vec_id"), _assign_arrow(qvec, model.qcentroids).alias("cluster")
     )

@@ -63,11 +63,10 @@ def cms_position_sql(key_expr: str, row: int, width: int) -> str:
 
 def cms_build(
     keys: DataFrame,
-    key_col: str,
     width: int = 1024,
     depth: int = 4,
 ) -> DataFrame:
-    """(row: int, pos: bigint, cnt: bigint) sketch over ``keys[key_col]``
+    """(row: int, pos: bigint, cnt: bigint) sketch over ``keys.user_id``
     — one count per touched cell; untouched cells are implicit zeros
     (``cms_estimate`` coalesces them). The (width, depth) geometry
     rides in the ``row`` column's schema metadata, same discipline as
@@ -81,7 +80,7 @@ def cms_build(
                 *[
                     F.struct(
                         F.lit(i).alias("row"),
-                        cms_position(F.col(key_col), i, width).alias("pos"),
+                        cms_position(F.col("user_id"), i, width).alias("pos"),
                     )
                     for i in range(depth)
                 ]
@@ -103,11 +102,10 @@ def cms_build(
 def cms_estimate(
     sketch: DataFrame,
     queries: DataFrame,
-    key_col: str,
     width: int = 1024,
     depth: int = 4,
 ) -> DataFrame:
-    """``queries`` + an ``est_count`` column: min over the key's
+    """``queries`` + an ``est_count`` column: min over the ``user_id`` key's
     ``depth`` cells (absent cell -> 0). ``depth`` broadcast left joins
     on (row, pos) — the sketch is <= depth*width rows by construction,
     so the probe is map-side and the queried relation never shuffles."""
@@ -143,7 +141,7 @@ def cms_estimate(
             F.col("pos").alias(f"_p{i}"), F.col("cnt").alias(f"_cnt{i}")
         )
         out = (
-            out.withColumn(f"_q{i}", cms_position(F.col(key_col), i, width))
+            out.withColumn(f"_q{i}", cms_position(F.col("user_id"), i, width))
             .join(F.broadcast(s), F.col(f"_q{i}") == F.col(f"_p{i}"), "left")
             .drop(f"_p{i}", f"_q{i}")
         )

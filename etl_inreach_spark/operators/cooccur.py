@@ -25,9 +25,9 @@ Scale design:
 * ``bigram_lm_score`` — bigram extraction is a narrow per-row array
   transform (no shuffle); the corpus model is two groupBys (bigram,
   prefix); scoring is one equi-join of the exploded doc bigrams
-  against the model. The model relation at web scale shards fine
-  (keys are term pairs); OOV bigrams score 0 by the LEFT join,
-  exactly the smoothing-free convention a filter threshold absorbs.
+  against the model trained on the same corpus. The model relation at
+  web scale shards fine (keys are term pairs); the LEFT join keeps
+  documents with fewer than two tokens (zero bigrams, mean 0).
 """
 
 from __future__ import annotations
@@ -131,27 +131,24 @@ def bigram_model(docs: DataFrame) -> DataFrame:
     return cnt.join(pre, "w1").select("w1", "w2", "c_big", "c_pre")
 
 
-def bigram_lm_score(docs: DataFrame, model: DataFrame | None = None) -> DataFrame:
-    """Per-document LM quality score against a corpus bigram model
-    (the CCNet/C4-style 'does this text look like the corpus' filter,
+def bigram_lm_score(docs: DataFrame) -> DataFrame:
+    """Per-document LM quality score against the corpus's own bigram
+    model, ``bigram_model(docs)`` (train-on-self, the usual
+    corpus-profiling mode; the CCNet/C4-style 'does this text look like
+    the corpus' filter,
     with lift/probability in place of log-perplexity so values stay
     rational): for each adjacent pair, p = c_big/c_pre, floored to
     ppm; output (doc_id, n_bigrams, score_ppm_sum, mean_prob_ppm)
-    where mean = sum DIV n. OOV bigrams contribute 0 (no smoothing —
-    a threshold absorbs the convention; exact and portable).
+    where mean = sum DIV n. No smoothing: every bigram of the corpus
+    is in its own model (exact and portable).
 
     Floor-then-sum: each term is an exact bigint, so the aggregate is
     order-insensitive — same value on any partitioning, and the same
     value in a DuckDB replay (the r7 oracle sketch: bigram CTE via
     list_zip over string_split_regex, counts, join, the same integer
     arithmetic).
-
-    ``model`` defaults to ``bigram_model(docs)`` — train-on-self, the
-    usual corpus-profiling mode; pass a clean-reference model to score
-    a dirty corpus against clean statistics.
     """
-    if model is None:
-        model = bigram_model(docs)
+    model = bigram_model(docs)
     doc_big = docs.select(
         F.col("doc_id"), F.explode_outer(_bigrams()).alias("b")
     ).select(

@@ -18,7 +18,7 @@ from etl_inreach_spark.functions.text import tokens
 from etl_inreach_spark.operators.text_dedup import shingles_exploded
 
 
-def contamination_ngrams(df: DataFrame, bench_pred: Column, gram_hash=None) -> DataFrame:
+def contamination_ngrams(df: DataFrame, bench_pred: Column) -> DataFrame:
     """Benchmark-contamination check: for every non-benchmark document
     of a (doc_id, text) corpus, the fraction of its distinct character 9-grams that also appear
     anywhere in the benchmark set (``bench_pred`` selects benchmark
@@ -32,11 +32,11 @@ def contamination_ngrams(df: DataFrame, bench_pred: Column, gram_hash=None) -> D
     is small by construction (eval sets are fixed-size while the corpus
     grows), so the membership probe is a broadcast left-semi-style
     join — corpus grams stream past it with no shuffle of the corpus
-    side beyond the per-doc distinct. Gram identity is an 8-byte hash,
-    never a string (pass ``gram_hash=poly_gram_hasher60(9)`` for a
-    SQL-reproducible 60-bit hash whose collision odds are negligible).
+    side beyond the per-doc distinct. Gram identity is the 8-byte
+    SQL-reproducible 60-bit hash of ``shingles_exploded``, never a
+    string; its collision odds are negligible.
     """
-    sh = shingles_exploded(df, 9, gram_hash=gram_hash)
+    sh = shingles_exploded(df, 9)
     ids = df.select(F.col("doc_id").alias("_id"), bench_pred.alias("_is_bench"))
     sh = sh.join(ids, "_id")
 

@@ -265,7 +265,6 @@ def connected_components_star(edges: DataFrame) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    isolated = None  # star rounds drop nothing: every node keeps an edge
     prev_fp = None
     wn = Window.partitionBy("_n")
     for _ in range(STAR_MAX_ROUNDS):

@@ -61,6 +61,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+# The fuzzy-matched relation's id and string columns: customers by name.
+ID_COL = "c_custkey"
+S_COL = "c_name"
+
+
 def _delete1(s: str) -> str:
     """SQL fragment: ``s`` with the 1-based position in lambda variable
     ``i`` deleted."""
@@ -77,9 +82,7 @@ def _delete2(s: str) -> str:
     )
 
 
-def deletion_variants(
-    df: DataFrame, id_col: str, s_col: str, k: int = 1
-) -> DataFrame:
+def deletion_variants(df: DataFrame, k: int = 1) -> DataFrame:
     """(id, s, vkey): one row per depth-``k`` deletion-neighborhood
     member, keyed by xxhash64 of the variant text. ``k`` in {1, 2}:
     k=1 yields {s} U {delete one}, k=2 adds {delete two distinct
@@ -89,34 +92,32 @@ def deletion_variants(
     if k not in (1, 2):
         raise ValueError(f"deletion_variants: k must be 1 or 2, got {k}")
     d1 = (
-        f"transform(sequence(1, length({s_col})), "
-        f"i -> {_delete1(s_col)})"
+        f"transform(sequence(1, length({S_COL})), "
+        f"i -> {_delete1(S_COL)})"
     )
     if k == 1:
-        variants = F.expr(f"concat(array({s_col}), {d1})")
+        variants = F.expr(f"concat(array({S_COL}), {d1})")
     else:
         # guard i < length(s): sequence(start, stop) with start > stop
         # DESCENDS in Spark, which would emit out-of-range j positions
         # (harmless duplicates of 1-deletion variants, but noise)
         d2 = (
-            f"flatten(transform(sequence(1, length({s_col})), i -> "
-            f"case when i < length({s_col}) then "
-            f"transform(sequence(i + 1, length({s_col})), "
-            f"j -> {_delete2(s_col)}) "
+            f"flatten(transform(sequence(1, length({S_COL})), i -> "
+            f"case when i < length({S_COL}) then "
+            f"transform(sequence(i + 1, length({S_COL})), "
+            f"j -> {_delete2(S_COL)}) "
             f"else array() end))"
         )
-        variants = F.expr(f"concat(array({s_col}), {d1}, {d2})")
+        variants = F.expr(f"concat(array({S_COL}), {d1}, {d2})")
     return (
-        df.select(F.col(id_col), F.col(s_col), F.explode(variants).alias("_v"))
-        .select(id_col, s_col, F.xxhash64("_v").alias("vkey"))
+        df.select(F.col(ID_COL), F.col(S_COL), F.explode(variants).alias("_v"))
+        .select(ID_COL, S_COL, F.xxhash64("_v").alias("vkey"))
         .distinct()
     )
 
 
 def editk_pairs(
     df: DataFrame,
-    id_col: str,
-    s_col: str,
     k: int = 1,
     max_bucket_rows: int | None = None,
     max_len: int | None = None,
@@ -153,10 +154,10 @@ def editk_pairs(
         # isNull arm the 3VL NULL condition would fall into the
         # otherwise-branch and raise with a NULL message
         df = df.withColumn(
-            s_col,
+            S_COL,
             F.when(
-                F.col(s_col).isNull() | (F.length(s_col) <= max_len),
-                F.col(s_col),
+                F.col(S_COL).isNull() | (F.length(S_COL) <= max_len),
+                F.col(S_COL),
             ).otherwise(
                 F.raise_error(
                     F.concat(
@@ -164,12 +165,12 @@ def editk_pairs(
                             f"editk_pairs(k={k}): string exceeds "
                             f"max_len={max_len} chars: "
                         ),
-                        F.substring(F.col(s_col), 1, 80),
+                        F.substring(F.col(S_COL), 1, 80),
                     )
                 )
             ),
         )
-    v = deletion_variants(df, id_col, s_col, k)
+    v = deletion_variants(df, k)
     hot = None
     if max_bucket_rows is not None:
         # the capped plan references v on THREE branches (hot count,
@@ -217,10 +218,10 @@ def editk_pairs(
             hot = None  # plain join below, over the checkpoint
     if hot is None:
         a = v.select(
-            F.col(id_col).alias("id_a"), F.col(s_col).alias("s_a"), "vkey"
+            F.col(ID_COL).alias("id_a"), F.col(S_COL).alias("s_a"), "vkey"
         )
         b = v.select(
-            F.col(id_col).alias("id_b"), F.col(s_col).alias("s_b"), "vkey"
+            F.col(ID_COL).alias("id_b"), F.col(S_COL).alias("s_b"), "vkey"
         )
         cand = (
             a.join(b, "vkey")
@@ -234,7 +235,7 @@ def editk_pairs(
             .withColumn("_nb_blk", F.coalesce("_nb_blk", F.lit(1)))
             .withColumn(
                 "_blk",
-                F.pmod(F.xxhash64(F.col(id_col)), F.col("_nb_blk")).cast(
+                F.pmod(F.xxhash64(F.col(ID_COL)), F.col("_nb_blk")).cast(
                     "int"
                 ),
             )
@@ -245,7 +246,7 @@ def editk_pairs(
         # _ida < _idb filter de-duplicates the two orientations —
         # identical coverage argument to semantic_dedup_cells
         a = wb.select(
-            F.col(id_col).alias("_ida"), F.col(s_col).alias("_sa"),
+            F.col(ID_COL).alias("_ida"), F.col(S_COL).alias("_sa"),
             "vkey",
             F.col("_blk").alias("_gi"),
             F.explode(
@@ -253,7 +254,7 @@ def editk_pairs(
             ).alias("_gj"),
         )
         b = wb.select(
-            F.col(id_col).alias("_idb"), F.col(s_col).alias("_sb"),
+            F.col(ID_COL).alias("_idb"), F.col(S_COL).alias("_sb"),
             "vkey",
             F.explode(F.sequence(F.lit(0), F.col("_blk"))).alias("_gi"),
             F.col("_blk").alias("_gj"),
@@ -309,24 +310,14 @@ def editk_pairs(
     )
 
 
-def edit1_pairs(
-    df: DataFrame,
-    id_col: str,
-    s_col: str,
-    max_bucket_rows: int | None = None,
-) -> DataFrame:
+def edit1_pairs(df: DataFrame, max_bucket_rows: int | None = None) -> DataFrame:
     """Edit-distance <= 1 pairs (see ``editk_pairs``)."""
-    return editk_pairs(df, id_col, s_col, 1, max_bucket_rows)
+    return editk_pairs(df, 1, max_bucket_rows)
 
 
-def edit2_pairs(
-    df: DataFrame,
-    id_col: str,
-    s_col: str,
-    max_bucket_rows: int | None = None,
-) -> DataFrame:
+def edit2_pairs(df: DataFrame, max_bucket_rows: int | None = None) -> DataFrame:
     """Edit-distance <= 2 pairs — FastSS proper (see ``editk_pairs``).
     |D_2(s)| ~ |s|^2/2 variants per string, so strings are capped at
     64 chars (``editk_pairs``' ``max_len``): this is a KEY-column
     operator (callsigns two typos apart), not a document-text one."""
-    return editk_pairs(df, id_col, s_col, 2, max_bucket_rows, 64)
+    return editk_pairs(df, 2, max_bucket_rows, 64)

@@ -25,11 +25,11 @@ Scale design:
     ~3x wall-clock on the sf0.1 co-purchase graph, whose density makes
     two-path volume explode). Orientation never changes the result
     (each triangle has exactly one acyclic orientation under any total
-    order), pinned by a pytest equality test. Joins are equi-joins on
-    bigint node ids; the adjacency side is |V| rows bounded per-row by
-    the sqrt(|E|) out-degree cap, so AQE may broadcast it when small
-    and shuffle-join it at cluster scale. No UDFs, no cartesian
-    products.
+    order), pinned by a pytest test against a hand-listed triangle set.
+    Joins are equi-joins on bigint node ids; the adjacency side is |V|
+    rows bounded per-row by the sqrt(|E|) out-degree cap, so AQE may
+    broadcast it when small and shuffle-join it at cluster scale. No
+    UDFs, no cartesian products.
 """
 
 from __future__ import annotations
@@ -38,20 +38,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cooccurrence_edges(
-    df: DataFrame,
-    node_col: str,
-    bucket_cols: list[str] | tuple[str, ...],
-) -> DataFrame:
-    """Distinct undirected edges (u < v) between nodes sharing any
-    (bucket_cols) group. Rendered as distinct-membership self-join on
-    the bucket key — pairs expand only within a bucket."""
-    m = df.select(*[F.col(c) for c in bucket_cols], F.col(node_col).alias("_n")).distinct()
+# Output node column of the graph operators: the co-purchase graph's parts.
+NODE_COL = "part_id"
+
+
+def cooccurrence_edges(df: DataFrame) -> DataFrame:
+    """Distinct undirected edges (u < v) between ``l_partkey`` nodes
+    sharing an ``l_orderkey`` (the co-purchase graph). Rendered as
+    distinct-membership self-join on the bucket key — pairs expand only
+    within a bucket."""
+    m = df.select(F.col("l_orderkey"), F.col("l_partkey").alias("_n")).distinct()
     a = m.alias("a")
     b = m.alias("b")
-    cond = F.col("a._n") < F.col("b._n")
-    for c in bucket_cols:
-        cond = cond & (F.col(f"a.{c}") == F.col(f"b.{c}"))
+    cond = (F.col("a._n") < F.col("b._n")) & (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
     return (
         a.join(b, cond)
         .select(F.col("a._n").alias("u"), F.col("b._n").alias("v"))
@@ -59,12 +58,9 @@ def cooccurrence_edges(
     )
 
 
-def _orient(edges: DataFrame, by_degree: bool) -> DataFrame:
-    """Acyclic orientation of undirected (u < v) edges. ``by_degree``
-    re-orients from the lower-(degree, id) endpoint; otherwise the
-    id order already present is kept."""
-    if not by_degree:
-        return edges
+def _orient(edges: DataFrame) -> DataFrame:
+    """Acyclic orientation of undirected (u < v) edges from the
+    lower-(degree, id) endpoint."""
     deg = (
         edges.select(F.col("u").alias("_n"))
         .unionByName(edges.select(F.col("v").alias("_n")))
@@ -84,7 +80,7 @@ def _orient(edges: DataFrame, by_degree: bool) -> DataFrame:
     )
 
 
-def triangles(edges: DataFrame, orient_by_degree: bool = True) -> DataFrame:
+def triangles(edges: DataFrame) -> DataFrame:
     """All triangles (x, y, z) of the undirected graph, each exactly
     once. ``edges`` must be distinct undirected pairs with u < v.
 
@@ -105,7 +101,7 @@ def triangles(edges: DataFrame, orient_by_degree: bool = True) -> DataFrame:
     SLOWER here (6.8 s vs 4.3 s min-of-4) — the double-consumed
     subtree is cheap relative to the checkpoint's serialization
     barrier."""
-    o = _orient(edges, orient_by_degree)
+    o = _orient(edges)
     adj = o.groupBy("u").agg(F.collect_list("v").alias("_nbrs"))
     return (
         adj.select("u", F.col("_nbrs").alias("_nu"), F.explode("_nbrs").alias("v"))
@@ -118,8 +114,8 @@ def triangles(edges: DataFrame, orient_by_degree: bool = True) -> DataFrame:
     )
 
 
-def triangle_counts(edges: DataFrame, node_alias: str = "node") -> DataFrame:
-    """(node, n_triangles): how many triangles each node participates
+def triangle_counts(edges: DataFrame) -> DataFrame:
+    """(part_id, n_triangles): how many triangles each node participates
     in. Nodes in no triangle are absent (join back against the node
     set for a dense output)."""
     tri = triangles(edges)
@@ -128,8 +124,8 @@ def triangle_counts(edges: DataFrame, node_alias: str = "node") -> DataFrame:
     # selects of ``tri`` re-executes the whole triangle pipeline three
     # times — measured 2x end-to-end on the co-purchase graph.)
     return (
-        tri.select(F.explode(F.array("x", "y", "z")).alias(node_alias))
-        .groupBy(node_alias)
+        tri.select(F.explode(F.array("x", "y", "z")).alias(NODE_COL))
+        .groupBy(NODE_COL)
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
 
@@ -141,7 +137,7 @@ def symmetrize(edges: DataFrame) -> DataFrame:
     )
 
 
-def walk_counts(edges: DataFrame, length: int, node_alias: str = "node") -> DataFrame:
+def walk_counts(edges: DataFrame, length: int) -> DataFrame:
     """Per-node count of walks of ``length`` steps leaving the node —
     the integer power-iteration skeleton (w_{i+1} = A @ w_i on the
     symmetric adjacency). Eigenvector/PageRank centrality is this loop
@@ -166,13 +162,13 @@ def walk_counts(edges: DataFrame, length: int, node_alias: str = "node") -> Data
     sym = symmetrize(
         edges.localCheckpoint(eager=False)
     ).localCheckpoint(eager=True)
-    w = sym.groupBy(F.col("u").alias(node_alias)).agg(
+    w = sym.groupBy(F.col("u").alias(NODE_COL)).agg(
         F.count(F.lit(1)).alias("walks")
     )
     for _ in range(length - 1):
         w = (
-            sym.join(w, sym["v"] == w[node_alias])
-            .groupBy(sym["u"].alias(node_alias))
+            sym.join(w, sym["v"] == w[NODE_COL])
+            .groupBy(sym["u"].alias(NODE_COL))
             .agg(F.sum("walks").alias("walks"))
         )
     return w
@@ -187,7 +183,6 @@ PR_D_DEN = 20
 def pagerank_integer(
     edges: DataFrame,
     iters: int = 3,
-    node_alias: str = "node",
 ) -> DataFrame:
     """Damped PageRank in EXACT integer arithmetic: ranks live on the
     PR_SCALE = 2^20 fixed-point grid, the damping factor is the rational
@@ -269,5 +264,5 @@ def pagerank_integer(
             F.expr(f"{base}L + ({PR_D_NUM}L * _s) div {PR_D_DEN}L").alias("_rank"),
         )
     return state.select(
-        F.col("u").alias(node_alias), F.col("_rank").alias("rank_scaled")
+        F.col("u").alias(NODE_COL), F.col("_rank").alias("rank_scaled")
     )

@@ -26,8 +26,6 @@ slots, the same plan shape (documented, deterministic).
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -74,14 +72,10 @@ def global_row_index(
     )
 
 
-def negative_sample(
-    corpus: DataFrame,
-    k: int,
-    group_cols: Sequence[str] = (),
-) -> DataFrame:
-    """(anchor_id, slot, neg_id [, anchor/neg group cols]): up to ``k``
+def negative_sample(corpus: DataFrame, k: int) -> DataFrame:
+    """(anchor_id, slot, neg_id, anchor_source, neg_source): up to ``k``
     deterministic negatives per corpus ``doc_id``, excluding the anchor
-    itself and any row sharing its ``group_cols`` values.
+    itself and any row of the same ``source``.
 
     Slot j of anchor a targets corpus position
     ``(hash(a) + j * hash2(a)) mod N`` (double hashing, so one
@@ -92,7 +86,6 @@ def negative_sample(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    gcols = list(group_cols)
     # LAZY checkpoint (r11): the indexed corpus is referenced THREE
     # times below (the N count, the anchor side, the negative side) and
     # unmaterialized each reference replays the whole two-level
@@ -102,20 +95,20 @@ def negative_sample(
     # (BlockManager block locks) — without the extra build job an eager
     # checkpoint would pay.
     indexed = global_row_index(
-        corpus.select("doc_id", *gcols), "doc_id"
+        corpus.select("doc_id", "source"), "doc_id"
     ).localCheckpoint(eager=False)
     n_rel = indexed.agg(F.count(F.lit(1)).alias("_n"))
 
     anchors = indexed.select(
         F.col("doc_id").alias("anchor_id"),
         F.col("row_index").alias("_arow"),
-        *[F.col(c).alias(f"anchor_{c}") for c in gcols],
+        F.col("source").alias("anchor_source"),
     )
     slots = anchors.crossJoin(F.broadcast(n_rel)).select(
         "anchor_id",
         "_arow",
         "_n",
-        *[f"anchor_{c}" for c in gcols],
+        "anchor_source",
         F.explode(F.sequence(F.lit(0), F.lit(k - 1))).alias("slot"),
     )
     h1 = (F.col("anchor_id").cast("bigint") * F.lit(HASH_MULT)) % F.lit(HASH_MOD)
@@ -128,21 +121,12 @@ def negative_sample(
     neg = indexed.select(
         F.col("doc_id").alias("neg_id"),
         F.col("row_index").alias("_trow"),
-        *[F.col(c).alias(f"neg_{c}") for c in gcols],
+        F.col("source").alias("neg_source"),
     )
     joined = probes.join(neg, "_trow")
-    keep = F.col("neg_id") != F.col("anchor_id")
-    for c in gcols:
-        keep = keep & (
-            ~F.col(f"anchor_{c}").eqNullSafe(F.col(f"neg_{c}"))
-        )
-    out_cols = [
-        "anchor_id",
-        "slot",
-        "neg_id",
-        *[f"anchor_{c}" for c in gcols],
-        *[f"neg_{c}" for c in gcols],
-    ]
+    keep = (F.col("neg_id") != F.col("anchor_id")) & (
+        ~F.col("anchor_source").eqNullSafe(F.col("neg_source"))
+    )
     # The odd stride guarantees distinct slot targets only for
     # power-of-2 N; for arbitrary N two slots of one anchor can land
     # on the same position. Keep the lowest slot per (anchor, neg) —
@@ -152,11 +136,8 @@ def negative_sample(
         .groupBy("anchor_id", "neg_id")
         .agg(
             F.min("slot").alias("slot"),
-            *[
-                F.first(c).alias(c)
-                for c in out_cols
-                if c not in ("anchor_id", "neg_id", "slot")
-            ],
+            F.first("anchor_source").alias("anchor_source"),
+            F.first("neg_source").alias("neg_source"),
         )
     )
-    return deduped.select(*out_cols)
+    return deduped.select("anchor_id", "slot", "neg_id", "anchor_source", "neg_source")

@@ -6,11 +6,11 @@ Convention (SURVEY.md §7 P3): media travel as
 — bytes opaque to the engine, metadata typed, decode/feature-extract
 as Arrow-batched pandas stages over mapInPandas.
 
-The actual image/audio decoders are STUBBED (libs not in this
-container): ``decode_stub`` raises NotImplementedError unless the
-deterministic fake is requested. The Spark-side plumbing — schema,
-batch iteration, partition shape — is real and tested; swapping the
-stub for PIL/ffmpeg is a pure function replacement.
+The actual image/audio decoders are STUBBED: ``decode_stub`` and
+``resize_stub`` return deterministic features and pixels derived from
+the raw bytes. The Spark-side plumbing — schema, batch iteration,
+partition shape — is real and tested; swapping the stubs for
+PIL/ffmpeg is a pure function replacement.
 """
 
 from __future__ import annotations
@@ -31,15 +31,9 @@ def media_struct(uri: Column, mime: Column, data: Column, meta: Column | None = 
     )
 
 
-def decode_stub(payload: bytes, mime: str, fake: bool = True) -> dict:
-    """Per-item decoder. Real decoders (PIL, soundfile, av) are not
-    installed here; ``fake=True`` returns deterministic features
-    derived from the raw bytes so the pipeline is testable end-to-end.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "media decoding requires PIL/soundfile/av — not available in this environment"
-        )
+def decode_stub(payload: bytes) -> dict:
+    """Per-item decoder stand-in: deterministic features derived from
+    the raw bytes, so the pipeline is testable end-to-end."""
     return {
         "n_bytes": len(payload),
         "first_byte": payload[0] if payload else None,
@@ -66,7 +60,7 @@ def extract_features(df: DataFrame) -> DataFrame:
             feats = [
                 null_feats
                 if m is None
-                else decode_stub(m["bytes"] if m["bytes"] is not None else b"", m["mime"])
+                else decode_stub(m["bytes"] if m["bytes"] is not None else b"")
                 for m in media
             ]
             yield pd.DataFrame(
@@ -82,44 +76,11 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
-_PIL_IMAGE = None  # resolved once per process; resize_stub runs per ROW
-
-
-def _pil_image_cls():
-    """PIL.Image, resolved and cached at first use. resize_stub sits
-    inside the mapInPandas per-row loop — a find_spec() walk of
-    sys.meta_path per image would dominate small payloads."""
-    global _PIL_IMAGE
-    if _PIL_IMAGE is None:
-        try:
-            from PIL import Image
-        except ImportError:
-            _PIL_IMAGE = False
-        else:
-            _PIL_IMAGE = Image
-    return _PIL_IMAGE
-
-
-def resize_stub(payload: bytes, width: int, height: int, fake: bool = True) -> bytes:
-    """Image resize. ``fake=True`` (default in this container, which has
-    no imaging libraries) cycles the payload to width*height bytes — a
-    deterministic stand-in that keeps the Arrow plumbing testable and
-    oracle-checkable. ``fake=False`` decodes the payload with PIL and
-    returns the resized image's grayscale pixel buffer (width*height
-    bytes — same output-size contract as the fake), raising
-    NotImplementedError where PIL is absent. The real path is covered
-    by a skipif-marked test (tests/test_extended.py) that runs
-    automatically wherever PIL exists."""
-    if not fake:
-        import io
-
-        Image = _pil_image_cls()
-        if Image is False:
-            raise NotImplementedError(
-                "image resize requires PIL — not available in this environment"
-            )
-        img = Image.open(io.BytesIO(payload)).convert("L").resize((width, height))
-        return img.tobytes()
+def resize_stub(payload: bytes, width: int, height: int) -> bytes:
+    """Image resize stand-in: cycles the payload to width*height bytes —
+    deterministic, so the Arrow plumbing stays testable and
+    oracle-checkable. A real resize (PIL: decode, grayscale, resize,
+    pixel buffer) keeps the same width*height output-size contract."""
     if not payload:
         return b"\x00" * (width * height)
     reps = (width * height + len(payload) - 1) // len(payload)
@@ -168,7 +129,7 @@ def sample_frames(df: DataFrame) -> DataFrame:
 RESIZE_PX = 4
 
 
-def resize_images(df: DataFrame, fake: bool = True) -> DataFrame:
+def resize_images(df: DataFrame) -> DataFrame:
     """Batch ``RESIZE_PX`` x ``RESIZE_PX`` image resize over the
     ``media`` struct column — the same
     Arrow mapInPandas plumbing a real PIL/opencv resize drops into
@@ -185,8 +146,7 @@ def resize_images(df: DataFrame, fake: bool = True) -> DataFrame:
                 None
                 if m is None
                 else resize_stub(
-                    m["bytes"] if m["bytes"] is not None else b"", RESIZE_PX, RESIZE_PX,
-                    fake=fake,
+                    m["bytes"] if m["bytes"] is not None else b"", RESIZE_PX, RESIZE_PX
                 )
                 for m in media
             ]

@@ -227,7 +227,7 @@ def ilog2_sql_cte_chain(
 
 def nb_train(
     toks: DataFrame,
-    doc_labels: DataFrame | None = None,
+    doc_labels: DataFrame,
     max_vocab: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Train the classifier from labeled token OCCURRENCES
@@ -236,9 +236,7 @@ def nb_train(
     ``doc_labels`` (doc_id, y) supplies the class PRIORS from the
     document-level relation directly — at scale that skips an
     explode-sized aggregation (the token stream is orders of
-    magnitude larger than the doc list); when omitted, priors fall
-    back to distinct-doc counts derived from the tokens (documents
-    with zero tokens then carry no prior mass).
+    magnitude larger than the doc list).
 
     ``max_vocab`` caps the vocabulary to the top-V terms by total
     training frequency (ties broken by term, so the cut is
@@ -298,8 +296,6 @@ def nb_train(
     w = cnt.join(F.broadcast(pair_w), ["c1", "c0"]).select(
         "term", "w_fp"
     )
-    if doc_labels is None:
-        doc_labels = toks.groupBy("doc_id").agg(F.max(y).alias("y"))
     dcnt = doc_labels.agg(
         F.sum("y").alias("_d1"),
         F.sum(1 - F.col("y")).alias("_d0"),

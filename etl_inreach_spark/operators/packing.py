@@ -41,11 +41,11 @@ from pyspark.sql import functions as F
 
 def pack_chunks(
     df: DataFrame,
-    tok_col: str,
     capacity: int,
     num_buckets: int = 256,
 ) -> DataFrame:
-    """Concat-and-chunk packing: global token offset per document (in
+    """Concat-and-chunk packing of documents whose token count is the
+    ``_tokcnt`` column: global token offset per document (in
     ``doc_id`` order) and the [chunk_start, chunk_end] range of
     ``capacity``-token windows the document occupies.
 
@@ -61,7 +61,7 @@ def pack_chunks(
     pass over the corpus anywhere.
     """
     d = df.select(
-        F.col("doc_id").alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
+        F.col("doc_id").alias("_id"), F.col("_tokcnt").cast("bigint").alias("_tok")
     ).filter(F.col("_tok") > 0)
 
     # id-range bucketing via a lazily-joined bound (no driver collect):
@@ -107,12 +107,12 @@ def pack_chunks(
 
 def pack_bins_nextfit(
     df: DataFrame,
-    tok_col: str,
     capacity: int,
     num_buckets: int = 16,
 ) -> DataFrame:
-    """Next-fit bin packing per hash bucket (bucket = doc_id %
-    num_buckets, documents in doc_id order within the bucket).
+    """Next-fit bin packing of documents whose token count is the
+    ``_tokcnt`` column, per hash bucket (bucket = doc_id % num_buckets,
+    documents in doc_id order within the bucket).
 
     Output: (doc_id, bucket, n_tokens, bin_seq, bin_fill) where bin_seq is
     1-based within the bucket and bin_fill is the bin's running token
@@ -126,7 +126,7 @@ def pack_bins_nextfit(
     applyInPandas stays relational.
     """
     d = df.select(
-        F.col("doc_id").alias("_id"), F.col(tok_col).cast("bigint").alias("_tok")
+        F.col("doc_id").alias("_id"), F.col("_tokcnt").cast("bigint").alias("_tok")
     ).filter(F.col("_tok") > 0)
     d = d.withColumn("_bucket", F.pmod(F.col("_id"), F.lit(num_buckets)))
 

@@ -65,9 +65,9 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
-def subvectors(df: DataFrame, num_sub: int, dim: int, vec_col: str) -> DataFrame:
-    """(_pid, sub, _sv): the corpus exploded by ``vec_id`` into
-    per-subspace slices, elements cast to double. dim must divide
+def subvectors(df: DataFrame, num_sub: int, dim: int) -> DataFrame:
+    """(_pid, sub, _sv): the corpus's residual vectors ``_res`` exploded
+    by ``vec_id`` into per-subspace slices, elements cast to double. dim must divide
     evenly by num_sub."""
     if dim % num_sub:
         raise ValueError(f"dim {dim} not divisible by num_sub {num_sub}")
@@ -75,7 +75,7 @@ def subvectors(df: DataFrame, num_sub: int, dim: int, vec_col: str) -> DataFrame
     slices = F.array(
         *[
             F.transform(
-                F.slice(F.col(vec_col), m * dsub + 1, dsub),
+                F.slice(F.col("_res"), m * dsub + 1, dsub),
                 lambda x: x.cast("double"),
             )
             for m in range(num_sub)
@@ -108,10 +108,9 @@ def pq_train(
     ksub: int = 16,
     iters: int = 4,
     dim: int = 64,
-    vec_col: str = "embedding",
     init_offset: int = 0,
 ) -> DataFrame:
-    """Train all subspace codebooks; returns (sub, code, _cvec) with
+    """Train all subspace codebooks over the ``_res`` vectors; returns (sub, code, _cvec) with
     code in [1, ksub]. Init = the subvectors of the ksub corpus ids
     at positions [init_offset, init_offset + ksub) of the portable
     hash order (global TakeOrdered — bounded heaps, no sort); empty
@@ -120,7 +119,7 @@ def pq_train(
     coarse cells: training on RESIDUALS with offset 0 seeds
     codebooks with the cell centroids' own all-zero residuals — a
     degenerate init that tie-breaks every point into code 1."""
-    subs = subvectors(corpus, num_sub, dim, vec_col).localCheckpoint(
+    subs = subvectors(corpus, num_sub, dim).localCheckpoint(
         eager=True
     )
     h = (F.lit(PORTABLE_A) * F.col("_pid") + F.lit(PORTABLE_B)) % F.lit(PORTABLE_M)
@@ -180,14 +179,13 @@ def pq_encode(
     cent: DataFrame,
     num_sub: int = 8,
     dim: int = 64,
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, codes): each vector as its array of per-subspace nearest
+    """(id, codes): each ``_res`` vector as its array of per-subspace nearest
     codebook codes (array ordered by sub). One broadcast join + two
     hash aggregations; the output is the compressed corpus
     representation downstream ADC search reads INSTEAD of the
     embeddings."""
-    asg = _assign(subvectors(corpus, num_sub, dim, vec_col), cent)
+    asg = _assign(subvectors(corpus, num_sub, dim), cent)
     return (
         asg.groupBy("_pid")
         .agg(F.array_sort(F.collect_list(F.struct("sub", "code"))).alias("_sc"))
@@ -362,11 +360,10 @@ def ivf_pq_build(
         ksub=ksub,
         iters=iters,
         dim=dim,
-        vec_col="_res",
         init_offset=nlist,
     )
     index = (
-        pq_encode(assigned, books, num_sub=num_sub, dim=dim, vec_col="_res")
+        pq_encode(assigned, books, num_sub=num_sub, dim=dim)
         .join(assigned.select("vec_id", "cell"), "vec_id")
         .localCheckpoint(eager=True)
     )

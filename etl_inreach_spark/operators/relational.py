@@ -52,19 +52,15 @@ def filter_recent(df: DataFrame) -> DataFrame:
 def asof_join(
     left: DataFrame,
     right: DataFrame,
-    key_cols: Sequence[str],
-    left_ts: str,
-    right_ts: str,
-    right_value_cols: Sequence[str],
-    prefix: str = "asof_",
     direction: str = "backward",
 ) -> DataFrame:
-    """As-of join. ``direction="backward"`` (default): for each left
-    row, the LATEST right row with ``right.ts <= left.ts`` on the same
-    key. ``direction="forward"``: the EARLIEST right row with
-    ``right.ts >= left.ts`` — the same one-window rendering with the
-    timeline walked in reverse, so both directions share every scale
-    property below.
+    """As-of join of two (``user_id``, ``ts``, ...) relations: ``left``
+    plus ``asof_ts``, the ``ts`` of one matched right row of the same
+    user. ``direction="backward"`` (default): the LATEST right row with
+    ``right.ts <= left.ts``. ``direction="forward"``: the EARLIEST
+    right row with ``right.ts >= left.ts`` — the same one-window
+    rendering with the timeline walked in reverse, so both directions
+    share every scale property below.
 
     Implemented as UNION + single window pass (the scale path): tag
     both sides, sort each key's timeline once, and carry the last seen
@@ -78,28 +74,24 @@ def asof_join(
     from pyspark.sql.types import StructField, StructType
 
     lcols = left.columns
-    # All right value columns travel as ONE struct carried by a single
+    # The right ts travels as a one-field struct carried by
     # last(ignorenulls): left rows hold a NULL struct (skipped whole),
-    # right rows a non-null struct even when individual FIELDS are
-    # NULL — so the carried values always come from one right row,
-    # never a per-column mix of different rows.
-    vals_type = StructType(
-        [StructField(c, right.schema[c].dataType, True) for c in right_value_cols]
-    )
+    # right rows a non-null struct even when the ts FIELD is NULL.
+    vals_type = StructType([StructField("ts", right.schema["ts"].dataType, True)])
     tagged_left = left.select(
         *[F.col(c) for c in lcols],
         F.lit(1).alias("_side"),
         F.lit(None).cast(vals_type).alias("_vals"),
-        F.col(left_ts).alias("_ts"),
+        F.col("ts").alias("_ts"),
     )
     tagged_right = right.select(
         *[
-            F.col(k) if k in key_cols else F.lit(None).cast(left.schema[k].dataType).alias(k)
+            F.col(k) if k == "user_id" else F.lit(None).cast(left.schema[k].dataType).alias(k)
             for k in lcols
         ],
         F.lit(0).alias("_side"),
-        F.struct(*[F.col(c).alias(c) for c in right_value_cols]).alias("_vals"),
-        F.col(right_ts).alias("_ts"),
+        F.struct(F.col("ts").alias("ts")).alias("_vals"),
+        F.col("ts").alias("_ts"),
     )
     unioned = tagged_left.unionByName(tagged_right)
     # Tie-break among right rows sharing a timestamp: order by the
@@ -112,7 +104,7 @@ def asof_join(
     # the >= (respectively <=) boundary row visible to `last`.
     ts_order = F.col("_ts").asc() if direction == "backward" else F.col("_ts").desc()
     w = (
-        Window.partitionBy(*key_cols)
+        Window.partitionBy("user_id")
         .orderBy(ts_order, F.col("_side").asc(), F.col("_vals").asc_nulls_first())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
@@ -123,10 +115,7 @@ def asof_join(
     )
     return (
         carried.filter(F.col("_side") == 1)
-        .select(
-            *[F.col(c) for c in lcols],
-            *[F.col(f"_vals.{c}").alias(f"{prefix}{c}") for c in right_value_cols],
-        )
+        .select(*[F.col(c) for c in lcols], F.col("_vals.ts").alias("asof_ts"))
     )
 
 
@@ -162,14 +151,9 @@ def salted_agg(df: DataFrame, aggs: dict[str, tuple[Column, str]]) -> DataFrame:
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join on ``user_id`` by salting: the big side gets a
-    deterministic salt in [0, salt_buckets), the small side is
+def salted_join(big: DataFrame, small: DataFrame, salt_buckets: int = 8) -> DataFrame:
+    """Skew-safe inner equi-join on ``user_id`` by salting: the big side
+    gets a deterministic salt in [0, salt_buckets), the small side is
     REPLICATED once per salt value, and the join runs on
     (key, salt) — a hot key's rows spread over ``salt_buckets``
     reducers instead of hammering one. Result is exactly the plain
@@ -180,33 +164,25 @@ def salted_join(
     when the big side's key histogram is so degenerate that AQE's
     skew-join splitting (which handles MOST skew for free and is on in
     tune()) still leaves a straggler, and the small side is too big to
-    broadcast outright. ``how`` supports 'inner' and 'left' (for
-    'left', unmatched big rows survive in their salt slice).
+    broadcast outright.
 
     The salt is a hash of the big side's whole row (xxhash64 over all
     columns), not rand(): deterministic across retries/replays, which
     straggler re-execution at 100 TB requires.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"salted_join supports inner/left, got {how!r}")
     big_s = big.withColumn(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in big.columns]), F.lit(salt_buckets))
     )
     small_r = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)).cast("array<bigint>"))
     )
-    return big_s.join(small_r, on=["user_id", "_salt"], how=how).drop("_salt")
+    return big_s.join(small_r, on=["user_id", "_salt"], how="inner").drop("_salt")
 
 
-def interval_overlap_join(
-    left: DataFrame,
-    right: DataFrame,
-    r_start: str,
-    r_end: str,
-    band: int,
-) -> DataFrame:
+def interval_overlap_join(left: DataFrame, right: DataFrame, band: int) -> DataFrame:
     """Interval OVERLAP join with NO equi key — pairs of (left, right)
-    rows whose [start, end] ranges intersect (``[ls, le]`` on the left) —
+    rows whose [start, end] ranges intersect (``[ls, le]`` on the left,
+    ``[rs, re]`` on the right) —
     via band bucketing, the
     pattern that keeps a pure range theta-join off Spark's
     broadcast-nested-loop path at scale (genomic-region and
@@ -217,7 +193,7 @@ def interval_overlap_join(
     overlap predicate filters false candidates. A pair spanning
     several shared buckets would surface once per bucket, so instead
     of a distinct over the (wide) pair output, each pair is kept only
-    in its CANONICAL bucket — the bucket of max(ls, r_start),
+    in its CANONICAL bucket — the bucket of max(ls, rs),
     which both sides provably contain (it is where the overlap
     starts). Cost: sum of per-bucket |L_b| x |R_b| — the caller picks
     ``band`` near the typical interval length so intervals span O(1)
@@ -232,9 +208,7 @@ def interval_overlap_join(
     """
     if band <= 0:
         raise ValueError(f"band must be a positive bucket width, got {band}")
-    shared = ({"ls", "le"} & set(right.columns)) | (
-        {r_start, r_end} & set(left.columns)
-    )
+    shared = ({"ls", "le"} & set(right.columns)) | ({"rs", "re"} & set(left.columns))
     if shared:
         raise ValueError(
             "interval_overlap_join needs distinct endpoint column names "
@@ -253,13 +227,9 @@ def interval_overlap_join(
         )
 
     lb = banded(left, "ls", "le", "l")
-    rb = banded(right, r_start, r_end, "r")
-    overlap = (F.col("ls") <= F.col(r_end)) & (
-        F.col(r_start) <= F.col("le")
-    )
-    canonical = F.col("_b_l") == F.floor(
-        F.greatest(F.col("ls"), F.col(r_start)) / band
-    )
+    rb = banded(right, "rs", "re", "r")
+    overlap = (F.col("ls") <= F.col("re")) & (F.col("rs") <= F.col("le"))
+    canonical = F.col("_b_l") == F.floor(F.greatest(F.col("ls"), F.col("rs")) / band)
     return (
         lb.join(rb, F.col("_b_l") == F.col("_b_r"))
         .filter(overlap & canonical)
@@ -267,38 +237,26 @@ def interval_overlap_join(
     )
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_cols: Sequence[str],
-    compare_cols: Sequence[str],
-) -> DataFrame:
-    """Change-data-feed GENERATION: diff two snapshots of a keyed
-    table into (key..., change_type in {'insert','update','delete'})
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
+    """Change-data-feed GENERATION: diff two snapshots of the orders
+    table into (o_orderkey, change_type in {'insert','update','delete'})
     — the inverse of cdc_latest_state (which COMPACTS a feed back
     into a snapshot). This is how a plain-parquet pipeline emits an
     incremental feed downstream when the source cannot (Delta/Iceberg
     CDF does this natively; the plan here is the same one they run).
 
-    One full-outer equi-join on the key; rows equal on every
-    ``compare_cols`` (null-safe) are dropped, so the output is
-    |changes|-sized, not |table|-sized. Comparison is per-column
+    One full-outer equi-join on the key; rows equal on both
+    ``o_orderstatus`` and ``o_totalprice`` (null-safe) are dropped, so
+    the output is |changes|-sized, not |table|-sized. Comparison is per-column
     IS-NOT-DISTINCT-FROM conjunction — no hashing, so the oracle
     renders 1:1 and false "changes" are impossible (a hash would
     admit collisions the other way). At 100 TB both sides shuffle on
     the key once; with both snapshots bucketed by key the join is
     co-located and shuffle-free."""
-    o = old.select(
-        *[F.col(k) for k in key_cols],
-        F.struct(*[F.col(c) for c in compare_cols]).alias("_ov"),
-        F.lit(True).alias("_in_old"),
-    )
-    n = new.select(
-        *[F.col(k) for k in key_cols],
-        F.struct(*[F.col(c) for c in compare_cols]).alias("_nv"),
-        F.lit(True).alias("_in_new"),
-    )
-    j = o.join(n, on=list(key_cols), how="full_outer")
+    compared = F.struct(F.col("o_orderstatus"), F.col("o_totalprice"))
+    o = old.select(F.col("o_orderkey"), compared.alias("_ov"), F.lit(True).alias("_in_old"))
+    n = new.select(F.col("o_orderkey"), compared.alias("_nv"), F.lit(True).alias("_in_new"))
+    j = o.join(n, on=["o_orderkey"], how="full_outer")
     change = (
         F.when(F.col("_in_old").isNull(), F.lit("insert"))
         .when(F.col("_in_new").isNull(), F.lit("delete"))
@@ -307,5 +265,5 @@ def snapshot_diff(
     return (
         j.withColumn("change_type", change)
         .filter(F.col("change_type").isNotNull())
-        .select(*key_cols, "change_type")
+        .select("o_orderkey", "change_type")
     )

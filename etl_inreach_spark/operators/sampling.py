@@ -64,13 +64,12 @@ def priority_of(id_col: Column, weight_col: Column) -> Column:
 
 def priority_sample(
     df: DataFrame,
-    id_col: str,
-    weight_col: str,
     k: int,
     strata_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """k-row priority sample (global, or per stratum when
-    ``strata_cols`` is given), with the DLT adjusted weight.
+    """k-row priority sample of ``doc_id`` rows weighted by ``n_chars``
+    (global, or per stratum when ``strata_cols`` is given), with the
+    DLT adjusted weight.
 
     Output = the selected rows with three extra columns:
     ``priority`` (double), ``sample_rank`` (1-based within the
@@ -85,9 +84,9 @@ def priority_sample(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    pri = priority_of(F.col(id_col), F.col(weight_col)).alias("priority")
+    pri = priority_of(F.col("doc_id"), F.col("n_chars")).alias("priority")
     base = df.withColumn("priority", pri)
-    order = [F.col("priority").desc(), F.col(id_col).asc()]
+    order = [F.col("priority").desc(), F.col("doc_id").asc()]
 
     if strata_cols:
         w_rank = Window.partitionBy(*strata_cols).orderBy(*order)
@@ -115,7 +114,7 @@ def priority_sample(
         cand.withColumn("_tau", tau)
         .filter(F.col("sample_rank") <= k)
         .withColumn(
-            "est_weight", F.greatest(F.col(weight_col).cast("double"), F.col("_tau"))
+            "est_weight", F.greatest(F.col("n_chars").cast("double"), F.col("_tau"))
         )
         .drop("_tau")
     )

@@ -15,8 +15,8 @@ Scale design (the point of each variant):
     k-value signature, bands of the signature become bucket keys, and
     the only wide-ish shuffle is the initial shingle explode (linear in
     corpus size). Cost ~ O(n * k) + O(candidate pairs).
-  * ``simhash_pairs`` — constant-size 64-bit sketch; near-dup =
-    small Hamming distance; banding the 64 bits into 4x16 gives exact
+  * ``simhash_pairs`` — constant-size 60-bit sketch; near-dup =
+    small Hamming distance; banding the 60 bits into 4x15 gives exact
     recall for distance <= 3 by pigeonhole (any 3 flipped bits leave
     one band untouched), and the verify step prunes false positives.
 
@@ -24,9 +24,9 @@ Execution discipline (why this file looks the way it does):
   * Shingles travel as 8-byte 60-bit portable-hash values, never
     strings — every join/shuffle key is a bigint. (Collision risk:
     ~(u^2/2)/2^60 for u distinct shingles — negligible against the
-    oracle gate.) The hash is computed on the window-lead fast path
-    (one ascii per character + integer Horner over lead() windows),
-    not per materialized gram string.
+    oracle gate.) The hash is computed by one Arrow-batched
+    pandas_udf per document batch (numpy Horner over code units), not
+    per materialized gram string.
   * Higher-order functions (transform/aggregate over arrays) are
     CodegenFallback in Spark — every element evaluation walks an
     interpreted expression tree. All hot loops here are therefore
@@ -66,30 +66,6 @@ MERSENNE31 = (1 << 31) - 1
 POLY_P = 131
 
 
-def _materialize_enabled() -> bool:
-    """Gate for the eager localCheckpoint barriers. Setting
-    SPARK_GRAFT_NO_MATERIALIZE=1 disables them so the FULL logical
-    subtree stays visible to plan inspection (a checkpoint truncates
-    lineage to a Scan ExistingRDD, which would let a cartesian product
-    or row-UDF hide from the registry-wide plan audit) and so
-    analysis-only contexts don't execute eager jobs. Production /
-    bench paths leave it unset."""
-    import os
-
-    return not os.environ.get("SPARK_GRAFT_NO_MATERIALIZE")
-
-
-def poly_gram_hash(g: Column, k: int) -> Column:
-    """Portable polynomial hash of a fixed-length k-gram Column —
-    k scalar ascii/substring ops, fully whole-stage-codegen."""
-    h = F.ascii(F.substring(g, 1, 1)).cast("bigint") % MERSENNE31
-    for j in range(2, k + 1):
-        h = (h * POLY_P + F.ascii(F.substring(g, j, 1)).cast("bigint")) % MERSENNE31
-    return h
-
-
-
-
 # Affine re-hash constants (MINSTD multiplier) for widening the 31-bit
 # polynomial hash to 60 bits: h2 = (A2*h1 + B2) mod M is a bijection of
 # h1, and the universal-family re-hash decorrelates its bits from h1's
@@ -99,37 +75,12 @@ POLY_B2 = 11
 _MASK30 = (1 << 30) - 1
 
 
-def _poly60_of_h1(h1: Column) -> Column:
-    """Widen the 31-bit polynomial hash to 60 portable bits: low 30
-    bits of h1 plus low 30 bits of its affine (MINSTD) re-hash."""
-    h2 = (F.lit(POLY_A2) * h1 + F.lit(POLY_B2)) % F.lit(MERSENNE31)
-    return h1.bitwiseAND(F.lit(_MASK30)) + F.shiftleft(
-        h2.bitwiseAND(F.lit(_MASK30)), 30
-    )
-
-
-def poly_gram_hasher60(k: int):
-    """60-bit portable gram hash: low 30 bits of the polynomial hash
-    plus low 30 bits of its affine re-hash, shifted. ONE character
-    extraction pass (the re-hash is two integer ops), and every bit is
-    reproducible in portable SQL — wide enough for 4x15-bit SimHash
-    banding to stay collision-sparse.
-
-    ``shingles_exploded`` recognizes this hasher (``_poly60`` marker)
-    and computes the identical values on its window-lead fast path
-    instead of calling the Column function per materialized gram."""
-
-    def h(g: Column) -> Column:
-        return _poly60_of_h1(poly_gram_hash(g, k))
-
-    h._poly60 = True  # type: ignore[attr-defined]
-    return h
-
-
 def poly_gram_hash60_sql() -> str:
-    """DuckDB rendering of ``poly_gram_hasher60(9)`` over the 9-gram
-    column ``g`` — the same loop as ``poly_gram_hash``, the same
-    constants, bit-identical values."""
+    """DuckDB rendering of ``shingles_exploded``'s 60-bit gram hash over
+    the 9-gram column ``g``: the Horner polynomial mod MERSENNE31 gives
+    h1, its affine re-hash h2, and the hash is the low 30 bits of h1
+    plus the low 30 bits of h2 shifted left by 30 — the same constants,
+    bit-identical values."""
     h1 = f"(CAST(ascii(substring(g, 1, 1)) AS BIGINT) % {MERSENNE31})"
     for j in range(2, 10):
         h1 = (
@@ -145,22 +96,20 @@ def poly_gram_hash60_sql() -> str:
 def shingles_exploded(
     df: DataFrame,
     k: int,
-    gram_hash=None,
     distinct: bool = True,
     keep_pos: bool = False,
 ) -> DataFrame:
     """Distinct (doc, k-gram-hash) pairs of a (doc_id, text) corpus as a
     tall narrow relation — the shared foundation of every dedup
-    variant: (_id, _len, _h).
-    Shingling is a scalar substring over an exploded position sequence
-    and a hash (all codegen); the distinct is a partial-aggregated
-    groupBy.
+    variant: (_id, _len, _h), one row per gram of each document with at
+    least ``k`` characters.
 
-    ``gram_hash``: optional Column -> Column hash of the k-gram string.
-    The DEFAULT (None, or a ``poly_gram_hasher60`` hasher) is the
-    portable 60-bit polynomial+affine hash computed on the window-lead
-    fast path below; any other callable falls back to the legacy
-    materialize-each-gram path.
+    The gram hash is the portable 60-bit polynomial+affine hash: the
+    Horner polynomial over the gram's code units mod MERSENNE31 (h1),
+    widened by its MINSTD affine re-hash (h2) to the low 30 bits of h1
+    plus the low 30 bits of h2 shifted left by 30. Every bit is
+    reproducible in portable SQL (``poly_gram_hash60_sql``) and wide
+    enough for 4x15-bit SimHash banding to stay collision-sparse.
 
     ``distinct=False`` skips the dedup shuffle and yields the gram
     MULTISET — correct (and cheaper) for consumers whose aggregate is
@@ -171,7 +120,7 @@ def shingles_exploded(
     start position ``_p`` — consumers like the chunked SimHash lane
     aggregation use it to bound per-group row counts.
 
-    Fast path (r12, guide §2.1/§4.2): the k-gram hashes are pure
+    Rendering (r12, guide §2.1/§4.2): the k-gram hashes are pure
     int64 arithmetic per document, so ONE Arrow-batched pandas_udf
     emits each document's whole hash array from a narrow map — no
     per-character rows and NO shuffle at all. The previous fast path
@@ -189,8 +138,8 @@ def shingles_exploded(
     means equal values, no IEEE-order concerns), and each document
     slices its [offset, offset + len - k + 1) gram range out, which
     drops cross-boundary grams exactly like the window path's NULL
-    leads. Values are bit-identical to the substring rendering
-    (pinned by tests/test_training.py::TestShingleParity)."""
+    leads. Values are bit-identical to a per-gram replay of the hash
+    over code points (pinned by tests/test_training.py::TestShingleParity)."""
     if keep_pos and distinct:
         raise ValueError("keep_pos requires distinct=False (multiset output)")
     pos_cols = ("_p",) if keep_pos else ()
@@ -199,82 +148,57 @@ def shingles_exploded(
         F.col("text").alias("_t"),
         F.length(F.col("text")).alias("_len"),
     ).filter(F.length("_t") >= k)
-    if gram_hash is None or getattr(gram_hash, "_poly60", False):
-        # distinct=True folds the (doc, hash) DISTINCT into the UDF:
-        # _len is functionally dependent on _id, so the
-        # relation-level distinct equals a per-document np.unique of
-        # the hash array — the second shuffle (|corpus shingles| rows
-        # hashed on every output column) disappears along with the
-        # window exchange. Set consumers are order-insensitive by
-        # construction (mins, groupBys, array_intersect).
-        dedup = distinct
+    # distinct=True folds the (doc, hash) DISTINCT into the UDF:
+    # _len is functionally dependent on _id, so the
+    # relation-level distinct equals a per-document np.unique of
+    # the hash array — the second shuffle (|corpus shingles| rows
+    # hashed on every output column) disappears along with the
+    # window exchange. Set consumers are order-insensitive by
+    # construction (mins, groupBys, array_intersect).
 
-        @F.pandas_udf("array<bigint>")
-        def _gram60(texts: pd.Series) -> pd.Series:
-            vals = texts.tolist()
-            if not vals:
-                return pd.Series([], dtype=object)
-            enc = [t.encode("utf-16-le") for t in vals]
-            codes = np.frombuffer(b"".join(enc), dtype="<u2").astype(np.int64)
-            n = codes.shape[0]
-            if n >= k:
-                # Horner with a modulo every 3 chars: h < 2^31 and
-                # 131^3 < 2^22 keep intermediates under 2^53 — never
-                # overflows int64 (same placement as the old window
-                # chain, so residues are identical).
-                m = n - k + 1
-                h = codes[:m].copy()
-                pending = 0
-                for j in range(1, k):
-                    h = h * POLY_P + codes[j : j + m]
-                    pending += 1
-                    if pending == 3:
-                        h %= MERSENNE31
-                        pending = 0
-                h %= MERSENNE31
-                h2 = (POLY_A2 * h + POLY_B2) % MERSENNE31
-                h = (h & _MASK30) + ((h2 & _MASK30) << 30)
-            else:
-                h = np.empty(0, dtype=np.int64)
-            out, off = [], 0
-            for e in enc:
-                ln = len(e) >> 1  # code units
-                doc = h[off : off + ln - k + 1]
-                out.append(np.unique(doc) if dedup else doc)
-                off += ln
-            return pd.Series(out)
+    @F.pandas_udf("array<bigint>")
+    def _gram60(texts: pd.Series) -> pd.Series:
+        vals = texts.tolist()
+        if not vals:
+            return pd.Series([], dtype=object)
+        enc = [t.encode("utf-16-le") for t in vals]
+        codes = np.frombuffer(b"".join(enc), dtype="<u2").astype(np.int64)
+        n = codes.shape[0]
+        if n >= k:
+            # Horner with a modulo every 3 chars: h < 2^31 and
+            # 131^3 < 2^22 keep intermediates under 2^53 — never
+            # overflows int64 (same placement as the old window
+            # chain, so residues are identical).
+            m = n - k + 1
+            h = codes[:m].copy()
+            pending = 0
+            for j in range(1, k):
+                h = h * POLY_P + codes[j : j + m]
+                pending += 1
+                if pending == 3:
+                    h %= MERSENNE31
+                    pending = 0
+            h %= MERSENNE31
+            h2 = (POLY_A2 * h + POLY_B2) % MERSENNE31
+            h = (h & _MASK30) + ((h2 & _MASK30) << 30)
+        else:
+            h = np.empty(0, dtype=np.int64)
+        out, off = [], 0
+        for e in enc:
+            ln = len(e) >> 1  # code units
+            doc = h[off : off + ln - k + 1]
+            out.append(np.unique(doc) if distinct else doc)
+            off += ln
+        return pd.Series(out)
 
-        gram_col = (
-            F.posexplode(_gram60(F.col("_t"))).alias("_p", "_h")
-            if keep_pos
-            else F.explode(_gram60(F.col("_t"))).alias("_h")
-        )
-        return t.select("_id", "_len", gram_col).select(
-            "_id", "_len", *pos_cols, "_h"
-        )
-
-    out = (
-        t.select(
-            "_id",
-            "_len",
-            F.explode(F.sequence(F.lit(1), F.col("_len") - (k - 1))).alias("_p"),
-            "_t",
-        )
-        # the gram is materialized in its OWN projection: a multi-char
-        # gram_hash evaluates substring(gram, j, 1) k times, and
-        # without this barrier each evaluation re-runs the full
-        # substring(_t, _p, k) against the long document string
-        # (~40% slower end-to-end; Catalyst keeps the split because it
-        # does not duplicate expensive multiply-referenced expressions)
-        .select(
-            "_id", "_len",
-            # normalize to the fast path's 0-based gram position
-            *((F.col("_p") - 1).alias("_p"),) if keep_pos else (),
-            F.expr(f"substring(_t, _p, {k})").alias("_g"),
-        )
-        .select("_id", "_len", *pos_cols, gram_hash(F.col("_g")).alias("_h"))
+    gram_col = (
+        F.posexplode(_gram60(F.col("_t"))).alias("_p", "_h")
+        if keep_pos
+        else F.explode(_gram60(F.col("_t"))).alias("_h")
     )
-    return out.distinct() if distinct else out
+    return t.select("_id", "_len", gram_col).select(
+        "_id", "_len", *pos_cols, "_h"
+    )
 
 
 def _bucket_pairs(banded: DataFrame, item: Column) -> DataFrame:
@@ -386,11 +310,9 @@ def ngram_jaccard_pairs(
 
     Both filters are exact-recall; all join keys are 8-byte hashes.
     """
-    sh = shingles_exploded(df, shingle_k)
-    if _materialize_enabled():
-        # LAZY (r11): the first consuming stage materializes the
-        # shingle pass; concurrent consumers dedupe via block locks.
-        sh = sh.localCheckpoint(eager=False)
+    # LAZY (r11): the first consuming stage materializes the shingle
+    # pass; concurrent consumers dedupe via block locks.
+    sh = shingles_exploded(df, shingle_k).localCheckpoint(eager=False)
     per_doc = Window.partitionBy("_id")
     # document frequency via groupBy + join-back, NOT a window over _h:
     # the gram-frequency distribution is heavy-tailed, so a window
@@ -525,12 +447,10 @@ def minhash_lsh_pairs(df: DataFrame, shingle_k: int = 5) -> DataFrame:
     sits near the band-collision knee — false candidates cost 64
     integer compares, not an intersection count.
     """
-    sh = shingles_exploded(df, shingle_k)
-    if _materialize_enabled():
-        # two consumers (signature build + exact verify) — same
-        # recompute-vs-store trade as ngram_jaccard_pairs; LAZY (r11)
-        # so the signature stage materializes it (no separate job)
-        sh = sh.localCheckpoint(eager=False)
+    # two consumers (signature build + exact verify) — same
+    # recompute-vs-store trade as ngram_jaccard_pairs; LAZY (r11) so the
+    # signature stage materializes it (no separate job)
+    sh = shingles_exploded(df, shingle_k).localCheckpoint(eager=False)
     banded = banded_minhash(sh)
     est = (
         F.size(
@@ -621,19 +541,17 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-# simhash_pairs' band count; pairs within Hamming SIMHASH_BANDS - 1 are kept.
+# simhash_pairs' sketch width (the gram hash's 60 bits) and band count;
+# pairs within Hamming SIMHASH_BANDS - 1 are kept.
+SIMHASH_BITS = 60
 SIMHASH_BANDS = 4
 
 
-def simhash_pairs(
-    df: DataFrame,
-    shingle_k: int = 5,
-    bits: int = 64,
-    gram_hash=None,
-) -> DataFrame:
-    """SimHash near-dup pairs of a (doc_id, text) corpus (Hamming
-    distance <= SIMHASH_BANDS - 1 = 3) with banded blocking: SIMHASH_BANDS bands of ``bits //
-    SIMHASH_BANDS`` bits; by pigeonhole any pair within Hamming
+def simhash_pairs(df: DataFrame) -> DataFrame:
+    """SimHash near-dup pairs of a (doc_id, text) corpus over its
+    character 9-grams (Hamming distance <= SIMHASH_BANDS - 1 = 3) with
+    banded blocking: SIMHASH_BANDS bands of SIMHASH_BITS //
+    SIMHASH_BANDS = 15 bits; by pigeonhole any pair within Hamming
     distance SIMHASH_BANDS - 1 shares at least one exact band, so the
     blocked join loses nothing; the Hamming filter then prunes
     collisions. The sketch replaces the
@@ -643,30 +561,21 @@ def simhash_pairs(
     weighting): this skips the set-dedup shuffle entirely — the only
     wide operation left is the map-side-combined sketch groupBy.
 
-    With ``gram_hash=poly_gram_hasher60(shingle_k)`` and ``bits=60``
-    the whole pipeline is reproducible in portable SQL
-    (DuckDB-oracle-able) AND runs on the window-lead fast path. The
-    DEFAULT (gram_hash=None) pins xxhash64 so a ``bits=64`` sketch
-    gets 64 genuinely-informative hash bits — a 60-bit hash under a
-    64-bit sketch would fix 4 sketch bits at 0, silently loosening
-    every Hamming distance by up to 4."""
-    # explicit raise, not assert: this guards the LOSSLESS-banding
-    # correctness contract and must survive `python -O`
-    if bits % SIMHASH_BANDS != 0:
-        raise ValueError("bits must divide evenly into bands")
-    width = bits // SIMHASH_BANDS
+    The sketch is as wide as the portable 60-bit gram hash of
+    ``shingles_exploded``, so the whole pipeline is reproducible in
+    portable SQL (DuckDB-oracle-able)."""
+    width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << width) - 1
     sk = simhash_sketch(
         shingles_exploded(
             df,
-            shingle_k,
-            gram_hash=gram_hash or F.xxhash64,
+            9,
             distinct=False,
             # positions feed the chunked lane aggregation, making the
             # sketch overflow-proof for arbitrarily long documents
             keep_pos=True,
         ),
-        bits=bits,
+        bits=SIMHASH_BITS,
     )
     banded = sk.select(
         "_id",

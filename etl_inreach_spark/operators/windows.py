@@ -33,22 +33,18 @@ def tumbling_agg(df: DataFrame, aggs: Sequence[Column]) -> DataFrame:
     return df.groupBy(bucket, F.col("event_type")).agg(*aggs)
 
 
-def sessionize(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    arrival_col: str,
-    session_col: str = "session_id",
-) -> DataFrame:
-    """Gap-based sessions over ``ts``: a new session starts when the time
-    since the previous event of the same key exceeds
+def sessionize(df: DataFrame, session_col: str = "session_id") -> DataFrame:
+    """Gap-based sessions over ``ts`` per ``user_id``, ties broken by
+    ``event_id`` arrival order: a new session starts when the time
+    since the previous event of the same user exceeds
     ``SESSION_GAP_SECONDS``.
 
     Two window passes over ONE shuffle+sort (same partitioning and
     ordering, so Catalyst reuses the sort): lag to detect gaps, then a
     running sum to number sessions. Session ids are 1-based per key.
     """
-    order = [F.col("ts").asc(), F.col(arrival_col).asc()]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
+    order = [F.col("ts").asc(), F.col("event_id").asc()]
+    w = Window.partitionBy("user_id").orderBy(*order)
     prev_ts = F.lag(F.col("ts")).over(w)
     is_new = F.when(
         prev_ts.isNull()
@@ -63,7 +59,7 @@ def sessionize(
         ),
         F.lit(1),
     ).otherwise(F.lit(0))
-    running = Window.partitionBy(*key_cols).orderBy(*order).rowsBetween(
+    running = Window.partitionBy("user_id").orderBy(*order).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return df.withColumn("_new", is_new).withColumn(

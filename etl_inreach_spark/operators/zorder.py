@@ -113,19 +113,17 @@ def with_zvalue(df: DataFrame) -> DataFrame:
     )
 
 
-def zorder_repartition(df: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def zorder_repartition(df: DataFrame) -> DataFrame:
     """``df`` range-partitioned by the Morton code of ``LAYOUT_COLS`` (the
     OPTIMIZE ZORDER layout pass, minus the file writer). Appends the
     code as ``_zvalue`` so callers can sortWithinPartitions / write and
     tests can audit locality. One 1-row aggregate (broadcast) for the
-    min-max bounds + one range shuffle; no other passes. Sampled
+    min-max bounds + one range shuffle into
+    ``spark.sql.shuffle.partitions`` ranges; no other passes. Sampled
     range boundaries -> evenly SIZED partitions (what you want for
     shuffle/compute); ``write_zordered`` snaps boundaries to the
     z-grid instead (what you want for tight file zonemaps)."""
-    b = with_zvalue(df)
-    if num_partitions:
-        return b.repartitionByRange(num_partitions, F.col("_zvalue"))
-    return b.repartitionByRange(F.col("_zvalue"))
+    return with_zvalue(df).repartitionByRange(F.col("_zvalue"))
 
 
 def write_zordered(df: DataFrame, path: str, num_files: int = 16) -> None:

@@ -994,8 +994,8 @@ def bloom_prune_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_acctbal") > 9000)
         .select("c_custkey", "c_acctbal")
     )
-    words = bloom_words(c.select("c_custkey"), "c_custkey")
-    pruned = bloom_prune(o, "o_custkey", words)
+    words = bloom_words(c.select("c_custkey"))
+    pruned = bloom_prune(o, words)
     return pruned.join(c, F.col("c_custkey") == F.col("o_custkey")).select(
         "o_orderkey", "o_custkey", "c_acctbal", "o_totalprice"
     )
@@ -1211,9 +1211,7 @@ def snapshot_diff_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("o_totalprice")).alias("o_totalprice"),
         )
     )
-    return snapshot_diff(
-        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
-    )
+    return snapshot_diff(old, new)
 
 
 @query(
@@ -1446,9 +1444,7 @@ def cms_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ev.filter(F.col("ts") > F.lit(cutoff)),
             )
         ):
-            partial = cms_build(
-                batch.select("user_id"), "user_id", width=512, depth=4
-            )
+            partial = cms_build(batch.select("user_id"), width=512, depth=4)
             # partition_col is itself part of the cell key: the sink
             # groups by (partition_col, *key_cols), so "row" must not
             # repeat in key_cols
@@ -2328,7 +2324,7 @@ def session_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
     )
-    g = sessionize(ev, ["user_id"], "event_id", "sid")
+    g = sessionize(ev, "sid")
     w = Window.partitionBy("user_id", "sid").orderBy(
         F.col("ts").asc(), F.col("event_id").asc()
     )

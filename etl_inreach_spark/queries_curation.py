@@ -621,11 +621,7 @@ def priority_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return priority_sample(
-        d.select("doc_id", "source", "n_chars"),
-        "doc_id",
-        "n_chars",
-        3,
-        strata_cols=["source"],
+        d.select("doc_id", "source", "n_chars"), 3, strata_cols=["source"]
     ).select("doc_id", "source", "priority", "sample_rank", "est_weight")
 
 
@@ -703,7 +699,7 @@ def negative_sample_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.indexing import negative_sample
 
     d = load_table(spark, sf_dir, "documents")
-    return negative_sample(d.select("doc_id", "source"), 4, group_cols=["source"])
+    return negative_sample(d.select("doc_id", "source"), 4)
 
 
 _SPAN_K = 8  # tokens per duplicated window (Lee et al. use 50 BPE tokens)

@@ -326,17 +326,11 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d <= 3 by pigeonhole). The polynomial+affine gram hash makes the
     sketch value-reproducible in DuckDB, so this is a FULL value-hash
     oracle of sketch + banding + Hamming verify — not a rows-only
-    check. (The operator defaults to xxhash64/64-bit for production
-    use; pytest additionally pins planted near-dup recall there.)"""
-    from etl_inreach_spark.operators.text_dedup import poly_gram_hasher60, simhash_pairs
+    check. (pytest additionally pins planted near-dup recall.)"""
+    from etl_inreach_spark.operators.text_dedup import simhash_pairs
 
     d = load_table(spark, sf_dir, "documents")
-    return simhash_pairs(
-        d,
-        shingle_k=9,
-        bits=60,
-        gram_hash=poly_gram_hasher60(9),
-    ).withColumn("hamming", F.col("hamming").cast("bigint"))
+    return simhash_pairs(d).withColumn("hamming", F.col("hamming").cast("bigint"))
 
 
 @query(
@@ -968,10 +962,8 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pagerank_integer; the earlier "checkpoint measured slower" note
     # in operators/graph.py applies to the ORIENTED relation (cheap to
     # recompute from edges), not to the edge build itself.
-    edges = cooccurrence_edges(m, "l_partkey", ("l_orderkey",)).localCheckpoint(
-        eager=True
-    )
-    return triangle_counts(edges, node_alias="part_id")
+    edges = cooccurrence_edges(m).localCheckpoint(eager=True)
+    return triangle_counts(edges)
 
 
 @query(
@@ -1173,13 +1165,13 @@ def bm25_term_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join and the 1-row corpus stats, and without a barrier each
     # consumer re-runs the full tokenize+explode subtree (the same
     # shared-subtree rule as shingles in operators/text_dedup — tf's
-    # own filtered tokenization is then the only other pass)
-    from etl_inreach_spark.operators.text_dedup import _materialize_enabled
-
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    if _materialize_enabled():
-        # LAZY (r11): the stats aggregate materializes it in-action
-        dl = dl.localCheckpoint(eager=False)
+    # own filtered tokenization is then the only other pass). LAZY (r11):
+    # the stats aggregate materializes it in-action
+    dl = (
+        toks.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("dl"))
+        .localCheckpoint(eager=False)
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -1245,10 +1237,8 @@ def walk3_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.graph import cooccurrence_edges, walk_counts
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(
-        li.select("l_orderkey", "l_partkey"), "l_partkey", ("l_orderkey",)
-    )
-    return walk_counts(edges, 3, node_alias="part_id")
+    edges = cooccurrence_edges(li.select("l_orderkey", "l_partkey"))
+    return walk_counts(edges, 3)
 
 
 @query(
@@ -1379,14 +1369,14 @@ def cms_user_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.cms import cms_build, cms_estimate
 
     ev = load_table(spark, sf_dir, "events")
-    sketch = cms_build(ev.select("user_id"), "user_id", width=1024, depth=4)
+    sketch = cms_build(ev.select("user_id"), width=1024, depth=4)
     top = (
         ev.groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("true_count"))
         .orderBy(F.col("true_count").desc(), F.col("user_id").asc())
         .limit(20)
     )
-    est = cms_estimate(sketch, top, "user_id", width=1024, depth=4)
+    est = cms_estimate(sketch, top, width=1024, depth=4)
     return est.select("user_id", "true_count", "est_count")
 
 
@@ -1417,7 +1407,7 @@ def fuzzy_name_pairs_edit1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.fuzzy import edit1_pairs
 
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    pairs = edit1_pairs(cust, "c_custkey", "c_name", max_bucket_rows=256)
+    pairs = edit1_pairs(cust, max_bucket_rows=256)
     return pairs.select(
         F.col("id_a").alias("custkey_a"),
         F.col("id_b").alias("custkey_b"),
@@ -1466,7 +1456,7 @@ def fuzzy_name_pairs_edit2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_custkey") <= 600)
         .select("c_custkey", "c_name")
     )
-    pairs = edit2_pairs(cust, "c_custkey", "c_name", max_bucket_rows=256)
+    pairs = edit2_pairs(cust, max_bucket_rows=256)
     return pairs.select(
         F.col("id_a").alias("custkey_a"),
         F.col("id_b").alias("custkey_b"),
@@ -2298,17 +2288,18 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_inreach_spark.functions.text import tokens
     from etl_inreach_spark.operators.clustering import quantize_vectors
-    from etl_inreach_spark.operators.text_dedup import _materialize_enabled
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
 
     toks = d.select("doc_id", F.explode(tokens(F.col("text"))).alias("term"))
-    dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    if _materialize_enabled():
-        # LAZY (r11): the stats aggregate materializes it in-action
-        dl = dl.localCheckpoint(eager=False)
+    # LAZY (r11): the stats aggregate materializes it in-action
+    dl = (
+        toks.groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("dl"))
+        .localCheckpoint(eager=False)
+    )
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
@@ -2424,10 +2415,8 @@ def pagerank3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.operators.graph import cooccurrence_edges, pagerank_integer
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(
-        li.select("l_orderkey", "l_partkey"), "l_partkey", ("l_orderkey",)
-    )
-    return pagerank_integer(edges, iters=3, node_alias="part_id")
+    edges = cooccurrence_edges(li.select("l_orderkey", "l_partkey"))
+    return pagerank_integer(edges, iters=3)
 
 
 _JL_K = 16  # projected dims

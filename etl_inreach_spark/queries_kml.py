@@ -170,10 +170,10 @@ def streaming_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         from etl_inreach_spark.streaming.pipeline import stream_features
 
         sdf = spark.readStream.schema(feeds.schema).parquet(in_dir)
-        # week-long fixture timelines: a wide watermark keeps every event
-        # inside one dedup horizon so the emitted set is exactly one row
-        # per device before the closing distinct()
-        feat = stream_features(sdf, shares, watermark="365 days")
+        # week-long fixture timelines: the wide watermark keeps every
+        # event inside one dedup horizon so the emitted set is exactly
+        # one row per device before the closing distinct()
+        feat = stream_features(sdf, shares)
         table = f"stream_ids_{run}"
         q = (
             feat.select("id")
@@ -408,13 +408,7 @@ def upsert_merge_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             feat.filter(F.col("ts") <= F.lit(cutoff)),
             feat.filter(F.col("ts") > F.lit(cutoff)),
         ):
-            upsert_latest_partitioned(
-                spark, path, half,
-                key_cols=["user_id", "event_type"],
-                ts_col="ts",
-                partition_col="bucket",
-                arrival_col="event_id",
-            )
+            upsert_latest_partitioned(spark, path, half)
         out = spark.read.parquet(path).select(
             "user_id", "event_type", "ts", F.col("value").cast("double").alias("value")
         )

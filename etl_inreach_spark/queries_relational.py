@@ -173,7 +173,7 @@ def asof_last_click_before_purchase(spark: SparkSession, sf_dir: str) -> DataFra
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     clicks = ev.filter(F.col("event_type") == "click").select("user_id", "ts")
-    out = asof_join(purchases, clicks, ["user_id"], "ts", "ts", ["ts"])
+    out = asof_join(purchases, clicks)
     return out.select("event_id", "user_id", "ts", "asof_ts")
 
 
@@ -350,7 +350,7 @@ def sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.2 session windows (batch rendering) — 30-minute-gap
     sessionization per user (operators/windows.sessionize)."""
     ev = load_table(spark, sf_dir, "events")
-    out = sessionize(ev, ["user_id"], "event_id")
+    out = sessionize(ev)
     return out.select("event_id", "user_id", "ts", F.col("session_id").cast("bigint").alias("session_id"))
 
 
@@ -1009,9 +1009,7 @@ def asof_next_purchase_after_click(spark: SparkSession, sf_dir: str) -> DataFram
         "event_id", "user_id", "ts"
     )
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts")
-    out = asof_join(
-        clicks, purchases, ["user_id"], "ts", "ts", ["ts"], direction="forward"
-    )
+    out = asof_join(clicks, purchases, direction="forward")
     return out.select(
         "event_id", "user_id", "ts", F.col("asof_ts").alias("next_purchase_ts")
     )
@@ -1080,7 +1078,7 @@ def interval_overlap_order_windows(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("s").alias("rs"),
         F.col("e").alias("re"),
     )
-    pairs = interval_overlap_join(left, right, "rs", "re", band=16)
+    pairs = interval_overlap_join(left, right, band=16)
     return (
         pairs.filter(F.col("k_l") < F.col("k_r"))
         .groupBy("l_priority", "r_priority")

@@ -64,7 +64,7 @@ def seq_pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").withColumn(
         "_tokcnt", token_count(F.col("text"))
     )
-    return pack_chunks(d, "_tokcnt", capacity=_PACK_CAPACITY)
+    return pack_chunks(d, capacity=_PACK_CAPACITY)
 
 
 @query(
@@ -103,9 +103,7 @@ def seq_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").withColumn(
         "_tokcnt", token_count(F.col("text"))
     )
-    return pack_bins_nextfit(
-        d, "_tokcnt", capacity=_PACK_CAPACITY, num_buckets=_PACK_BUCKETS
-    )
+    return pack_bins_nextfit(d, capacity=_PACK_CAPACITY, num_buckets=_PACK_BUCKETS)
 
 
 _CHUNK_CAP = 128
@@ -179,14 +177,9 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast (bounded by construction); grams travel as portable
     60-bit hashes so the DuckDB oracle reproduces them bit-for-bit."""
     from etl_inreach_spark.operators.corpus import contamination_ngrams
-    from etl_inreach_spark.operators.text_dedup import poly_gram_hasher60
 
     d = load_table(spark, sf_dir, "documents")
-    return contamination_ngrams(
-        d,
-        bench_pred=F.pmod(F.col("doc_id"), F.lit(50)) == 0,
-        gram_hash=poly_gram_hasher60(9),
-    )
+    return contamination_ngrams(d, bench_pred=F.pmod(F.col("doc_id"), F.lit(50)) == 0)
 
 
 @query(

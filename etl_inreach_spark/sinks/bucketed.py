@@ -36,22 +36,21 @@ def write_bucketed(
     table: str,
     keys: Sequence[str],
     num_buckets: int,
-    sort: bool = True,
     path: str | None = None,
 ) -> None:
-    """Save ``df`` as a parquet table bucketed (and by default
-    sorted) by ``keys`` — one up-front shuffle-equivalent write;
+    """Save ``df`` as a parquet table bucketed and sorted by ``keys`` — one up-front shuffle-equivalent write;
     every later equi-join/agg on ``keys`` against a co-bucketed table
     is exchange-free. ``path`` makes the table EXTERNAL at that
     location — needed when the catalog is per-session in-memory but
     the warehouse directory outlives it (a managed saveAsTable into a
     fresh session fails with LOCATION_ALREADY_EXISTS on the stale
     directory); bucketing metadata is recorded either way."""
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, keys[0], *keys[1:]
+    w = (
+        df.write.mode("overwrite")
+        .format("parquet")
+        .bucketBy(num_buckets, keys[0], *keys[1:])
+        .sortBy(keys[0], *keys[1:])
     )
-    if sort:
-        w = w.sortBy(keys[0], *keys[1:])
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)

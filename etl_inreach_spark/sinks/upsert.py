@@ -57,52 +57,26 @@ def _mark_batch_applied(spark: SparkSession, path: str, batch_id: str) -> None:
     fs.create(jpath, True).close()
 
 
-def _merge(
-    current: DataFrame | None,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    arrival_col: str | None,
-) -> DataFrame:
-    """Union current+updates and keep the reference-semantics latest
-    row per key (strict ``>``: existing rows win timestamp ties, so
-    current MUST sort before updates in arrival order)."""
-    if current is None:
-        merged = updates
-    else:
-        merged = current.unionByName(updates)
-    return latest_by_key(merged, key_cols, ts_col, arrival_col=arrival_col)
+def upsert_latest_partitioned(spark: SparkSession, path: str, updates: DataFrame) -> None:
+    """Partition-pruned keyed upsert of (user_id, event_type) rows:
+    merge and rewrite ONLY the ``bucket`` partitions the update batch
+    touches, keeping the reference-semantics latest row per key by
+    ``ts`` (strict ``>``: existing rows win timestamp ties, so current
+    rows sort before updates; ``event_id`` orders arrivals).
 
-
-def upsert_latest_partitioned(
-    spark: SparkSession,
-    path: str,
-    updates: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    partition_col: str,
-    arrival_col: str | None = None,
-) -> None:
-    """Partition-pruned keyed upsert: merge and rewrite ONLY the
-    partitions the update batch touches.
-
-    ``partition_col`` must already exist on ``updates`` and be a
-    function of the key. The current-table scan is filtered to the
-    touched partition values (partition pruning keeps untouched data
-    unread), and ``partitionOverwriteMode=dynamic`` makes the write
-    replace exactly the partitions present in the merged result."""
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
+    ``bucket`` must already exist on ``updates`` and be a function of
+    the key. The current-table scan is filtered to the touched
+    partition values (partition pruning keeps untouched data unread),
+    and ``partitionOverwriteMode=dynamic`` makes the write replace
+    exactly the partitions present in the merged result."""
+    touched = [r[0] for r in updates.select("bucket").distinct().collect()]
     if not touched:
         return
+    merged = updates
     if _path_exists(spark, path):
-        current = spark.read.parquet(path).filter(
-            F.col(partition_col).isin(touched)
-        )
-    else:
-        current = None
-    merged = _merge(current, updates, key_cols, ts_col, arrival_col)
+        current = spark.read.parquet(path).filter(F.col("bucket").isin(touched))
+        merged = current.unionByName(updates)
+    merged = latest_by_key(merged, ["user_id", "event_type"], "ts", arrival_col="event_id")
     # Materialize BEFORE the overwrite: merged lazily reads the same
     # path the write replaces; pinning the read result decouples
     # correctness from the writer's commit ordering.
@@ -110,7 +84,7 @@ def upsert_latest_partitioned(
     (
         merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partition_col)
+        .partitionBy("bucket")
         .parquet(path)
     )
 

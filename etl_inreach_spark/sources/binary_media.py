@@ -3,8 +3,7 @@ directory-of-blobs -> the engine's media-struct convention
 (operators/multimodal.MEDIA_SCHEMA) in one declarative read.
 
 Spark-first rationale: ``binaryFile`` is a real FileFormat — its scan
-distributes over executors, honors ``pathGlobFilter`` /
-``recursiveFileLookup`` / partition discovery, and exposes file
+distributes over executors, honors partition discovery, and exposes file
 metadata (path, length, modificationTime) as columns, so there is no
 driver-side directory walk (the anti-pattern at 100 TB: a driver
 listing of a 100M-object bucket; Spark's InMemoryFileIndex lists in
@@ -14,9 +13,9 @@ here rather than left to folklore:
 * binary files DO NOT SPLIT: one file = one row = one task's memory,
   so ``spark.sql.files.maxPartitionBytes`` governs packing of SMALL
   files into tasks, while a single multi-GB video still lands whole in
-  one task — gate oversize blobs out with ``max_bytes`` (pushed down
-  as a ``length`` filter, which the source evaluates from file status
-  BEFORE reading content) and route them to a chunked/streaming
+  one task — a pipeline that meets oversize blobs filters them out on
+  the ``length`` column (the source evaluates it from file status
+  BEFORE reading content) and routes them to a chunked/streaming
   ingest instead.
 * content materializes in executor memory; keep projections tight so
   column pruning can drop ``content`` on metadata-only queries.
@@ -52,30 +51,16 @@ _EXT_MIME = {
 }
 
 
-def read_binary_media(
-    spark: SparkSession,
-    path: str,
-    glob: str | None = None,
-    recursive: bool = False,
-    max_bytes: int | None = None,
-) -> DataFrame:
-    """Load a directory of media blobs as
+def read_binary_media(spark: SparkSession, path: str) -> DataFrame:
+    """Load the top-level files of a directory of media blobs as
     ``(doc_id bigint, path string, length bigint, modified timestamp,
     media MEDIA_SCHEMA)``.
 
     ``doc_id`` is ``xxhash64(path)`` — stable across re-ingests and
     partitionings, joinable against downstream feature/embedding
-    tables. ``max_bytes`` filters on the source's ``length`` metadata
-    column so oversize blobs are rejected without reading a byte.
+    tables.
     """
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    if recursive:
-        r = r.option("recursiveFileLookup", "true")
-    df = r.load(path)
-    if max_bytes is not None:
-        df = df.filter(F.col("length") <= F.lit(max_bytes))
+    df = spark.read.format("binaryFile").load(path)
     ext = F.lower(
         F.when(
             F.col("path").rlike(r"\.[A-Za-z0-9]+$"),

@@ -38,13 +38,14 @@ from etl_inreach_spark.plans.inreach import normalize_shares, placemarks_to_feat
 from etl_inreach_spark.sources.kml import kml_to_placemarks
 
 
-def stream_features(
-    feeds: DataFrame,
-    shares: DataFrame,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Streaming (share_id, body) micro-batches -> deduped feature
-    stream.
+# Dedup horizon of the feature stream: the fixture timelines span a week,
+# so a year keeps every event of a device inside one horizon.
+WATERMARK_DELAY = "365 days"
+
+
+def stream_features(feeds: DataFrame, shares: DataFrame) -> DataFrame:
+    """Streaming (share_id, body) micro-batches -> feature stream
+    deduped per device id within ``WATERMARK_DELAY``.
 
     ``feeds`` must be a streaming DataFrame with at least
     (share_id string, body string). ``shares`` is the static config
@@ -58,7 +59,7 @@ def stream_features(
     features = placemarks_to_features(placemarks, cfg)
     return (
         features.filter(F.col("time").isNotNull())
-        .withWatermark("time", watermark)
+        .withWatermark("time", WATERMARK_DELAY)
         .dropDuplicatesWithinWatermark(["id"])
     )
 

@@ -1,6 +1,6 @@
 """binaryFile media ingestion (sources/binary_media.py): schema,
-glob/size gating semantics, metadata-only pruning, and hand-off into
-the mapInPandas feature extractor."""
+top-level-only listing, metadata-only pruning, and hand-off into the
+mapInPandas feature extractor."""
 
 from __future__ import annotations
 
@@ -44,26 +44,6 @@ def test_read_binary_media_schema_and_mime(spark, media_dir):
         for r in read_binary_media(spark, media_dir).collect()
     }
     assert again == {k: r["doc_id"] for k, r in rows.items()}
-
-
-def test_read_binary_media_glob_recursive_and_size_gate(spark, media_dir):
-    from etl_inreach_spark.sources.binary_media import read_binary_media
-
-    pngs = read_binary_media(spark, media_dir, glob="*.png", recursive=True)
-    names = {r["path"].rsplit("/", 1)[-1] for r in pngs.collect()}
-    assert names == {"a.png", "d.png"}
-
-    small = read_binary_media(spark, media_dir, max_bytes=200)
-    assert {r["path"].rsplit("/", 1)[-1] for r in small.collect()} == {
-        "a.png",
-        "b.jpg",
-        "notes.txt",
-        "mystery.zzz",
-    }
-    # the size gate is metadata: it reaches the scan as a length
-    # filter, evaluated from file status before content is read
-    plan = small._jdf.queryExecution().executedPlan().toString()
-    assert "length" in plan
 
 
 def test_metadata_only_query_prunes_content_column(spark, media_dir):

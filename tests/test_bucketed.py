@@ -112,7 +112,7 @@ def test_bucketed_groupby_on_bucket_key_is_exchange_free(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select("user_id", "event_type")
     t = f"b_events_{uuid.uuid4().hex[:8]}"
     with _tables(spark, t), _no_broadcast(spark):
-        write_bucketed(ev, t, ["user_id"], 8, sort=False)
+        write_bucketed(ev, t, ["user_id"], 8)
         agg = spark.table(t).groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n")
         )

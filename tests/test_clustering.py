@@ -204,39 +204,17 @@ def test_k_exceeding_corpus_raises(spark):
 def test_assignment_plans_are_shuffle_free(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     model = kmeans_fit(emb, k=4, max_iter=5)
-    # expr path: pure JVM — no shuffle, no join, no Python workers
+    # no shuffle/join; vectorized Arrow eval, never the row-at-a-time
+    # Python evaluator
     plan = (
-        kmeans_assign(emb, model, use_arrow=False)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    for banned in ("Exchange", "BatchEvalPython", "ArrowEvalPython", "Join"):
-        assert banned not in plan, f"{banned} in expr assignment plan:\n{plan}"
-    # arrow path: still no shuffle/join; vectorized Arrow eval, never
-    # the row-at-a-time Python evaluator
-    plan_a = (
-        kmeans_assign(emb, model, use_arrow=True)
+        kmeans_assign(emb, model)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     for banned in ("Exchange", "BatchEvalPython", "Join"):
-        assert banned not in plan_a, f"{banned} in arrow assignment plan:\n{plan_a}"
-    assert "ArrowEvalPython" in plan_a
-
-
-def test_arrow_and_expr_paths_identical(spark, sf_dir):
-    """The vectorized Arrow matmul and the interpreted JVM expression
-    are the same integer function: identical trained model AND
-    identical per-row assignments."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    m_arrow = kmeans_fit(emb, k=6, max_iter=8, use_arrow=True)
-    m_expr = kmeans_fit(emb, k=6, max_iter=8, use_arrow=False)
-    assert m_arrow == m_expr
-    a = _assignments(kmeans_assign(emb, m_arrow, use_arrow=True))
-    b = _assignments(kmeans_assign(emb, m_arrow, use_arrow=False))
-    assert a == b
+        assert banned not in plan, f"{banned} in arrow assignment plan:\n{plan}"
+    assert "ArrowEvalPython" in plan
 
 
 def test_centroids_float_roundtrip():

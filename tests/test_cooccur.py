@@ -112,19 +112,18 @@ def test_bigram_lm_score_exact_and_partitioning_proof(spark, tiny_docs):
     }
 
 
-def test_bigram_lm_score_short_and_oov_docs(spark, tiny_docs):
-    from etl_inreach_spark.operators.cooccur import bigram_lm_score, bigram_model
+def test_bigram_lm_score_short_docs(spark):
+    from etl_inreach_spark.operators.cooccur import bigram_lm_score
 
-    model = bigram_model(tiny_docs)
     probe = spark.createDataFrame(
         [(10, "one"), (11, ""), (12, "never seen tokens")],
         "doc_id long, text string",
     )
-    out = {r["doc_id"]: r for r in bigram_lm_score(probe, model=model).collect()}
+    out = {r["doc_id"]: r for r in bigram_lm_score(probe).collect()}
     assert (out[10]["n_bigrams"], out[10]["mean_prob_ppm"]) == (0, 0)
     assert (out[11]["n_bigrams"], out[11]["mean_prob_ppm"]) == (0, 0)
-    # OOV bigrams score 0, but are counted
-    assert (out[12]["n_bigrams"], out[12]["score_ppm_sum"]) == (2, 0)
+    # each bigram is the only one after its first word: p = 1
+    assert (out[12]["n_bigrams"], out[12]["score_ppm_sum"]) == (2, 2 * PPM)
 
 
 def test_cooccur_plans_have_no_python_udf(spark, sf_dir):

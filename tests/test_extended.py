@@ -40,27 +40,12 @@ def test_simhash_finds_planted_dups(docs, exact_pairs):
     from etl_inreach_spark.operators.text_dedup import simhash_pairs
 
     got = pairs(simhash_pairs(docs))
-    # SimHash(hamming<=3) is a different (stricter) measure; it must
-    # still find a solid majority of the planted j>=0.8 pairs and
-    # nothing outside them on this clean-gap corpus.
+    # SimHash(hamming<=3) over portable 60-bit 9-gram hashes (the
+    # oracled query's configuration) is a different (stricter) measure;
+    # it must still find a solid majority of the planted j>=0.8 pairs
+    # and nothing outside them on this clean-gap corpus.
     assert got <= exact_pairs
     assert len(got) >= len(exact_pairs) * 0.5
-
-
-def test_simhash_portable_hash_variant(docs, exact_pairs):
-    """The 60-bit/4-band portable-hash configuration (the oracled
-    query) must behave like the 64-bit xxhash one on planted dups:
-    mostly the true j>=0.8 pairs, decent recall, few false pairs."""
-    from etl_inreach_spark.operators.text_dedup import poly_gram_hasher60, simhash_pairs
-
-    got = pairs(
-        simhash_pairs(
-            docs, shingle_k=9,
-            bits=60, gram_hash=poly_gram_hasher60(9),
-        )
-    )
-    assert len(got & exact_pairs) >= len(exact_pairs) * 0.5
-    assert len(got - exact_pairs) <= max(5, len(exact_pairs) // 2)
 
 
 def test_kmv_estimate_close_to_exact(spark, sf_dir):
@@ -129,10 +114,8 @@ def test_rolling_hash_prefix_only(spark):
 
 
 def test_multimodal_stub_features(spark):
-    from etl_inreach_spark.operators.multimodal import decode_stub, extract_features, media_struct
+    from etl_inreach_spark.operators.multimodal import extract_features, media_struct
 
-    with pytest.raises(NotImplementedError):
-        decode_stub(b"xx", "image/png", fake=False)
     df = spark.createDataFrame([(1, "hello"), (2, "")], "doc_id long, payload string")
     media = df.select(
         "doc_id",
@@ -174,11 +157,6 @@ def test_resize_stub_and_frame_sampler(spark):
         sample_frames,
     )
 
-    import importlib.util
-
-    if importlib.util.find_spec("PIL") is None:
-        with pytest.raises(NotImplementedError):
-            resize_stub(b"xx", 4, 4, fake=False)
     assert len(resize_stub(b"abc", 4, 4)) == 16
     assert resize_stub(b"", 2, 2) == b"\x00" * 4
 
@@ -197,43 +175,6 @@ def test_resize_stub_and_frame_sampler(spark):
     assert set(got) == {(1, 0), (1, 2)}
     assert got[(1, 0)] == (32, (97 * 32) % 997)
     assert got[(1, 2)] == (6, (97 * 6) % 997)
-
-
-@pytest.mark.skipif(
-    __import__("importlib.util", fromlist=["util"]).find_spec("PIL") is None,
-    reason="PIL not installed in this container — real-decoder path runs wherever it is",
-)
-def test_resize_real_pil_path(spark):
-    """fake=False resize through the SAME mapInPandas plumbing as the
-    stub: a real 8x8 PNG goes in, a width*height grayscale pixel
-    buffer comes out. Skipped where PIL is absent; green wherever the
-    imaging stack exists, proving the stub/real swap is a pure
-    function replacement (operators/multimodal.py resize_stub)."""
-    import io
-
-    from PIL import Image
-
-    from etl_inreach_spark.operators.multimodal import (
-        media_struct,
-        resize_images,
-        resize_stub,
-    )
-
-    buf = io.BytesIO()
-    Image.new("L", (8, 8), color=137).save(buf, format="PNG")
-    png = buf.getvalue()
-
-    out = resize_stub(png, 4, 4, fake=False)
-    assert out == b"\x89" * 16  # constant-137 image resizes to itself
-
-    df = spark.createDataFrame([(1, bytearray(png))], "doc_id long, payload binary")
-    media = df.select(
-        "doc_id",
-        media_struct(F.lit("mem://p"), F.lit("image/png"), F.col("payload")).alias("media"),
-    )
-    rows = resize_images(media, fake=False).collect()
-    assert len(rows) == 1
-    assert bytes(rows[0]["resized"]) == b"\x89" * 16
 
 
 def test_multimodal_null_media_rows(spark):
@@ -255,7 +196,7 @@ def test_multimodal_null_media_rows(spark):
 
 
 def test_triangle_counts_orientation_invariant(spark):
-    """Degree orientation must find exactly the id-order triangles —
+    """Degree orientation must find exactly the hand-listed triangles —
     every triangle has one acyclic orientation under any total order.
     Graph: square 1-2-3-4 with diagonal 1-3 (two triangles sharing
     edge 1-3) plus hub 5 connected to 1,2,3 (adds 3 more: via edges
@@ -267,14 +208,10 @@ def test_triangle_counts_orientation_invariant(spark):
         "u long, v long",
     )
     want = {(1, 2, 3), (1, 3, 4), (1, 2, 5), (2, 3, 5), (1, 3, 5)}
-    for orient in (False, True):
-        got = {
-            tuple(sorted((r["x"], r["y"], r["z"])))
-            for r in triangles(edges, orient_by_degree=orient).collect()
-        }
-        assert got == want, orient
+    got = {tuple(sorted((r["x"], r["y"], r["z"]))) for r in triangles(edges).collect()}
+    assert got == want
     counts = {
-        r["node"]: r["n_triangles"] for r in triangle_counts(edges).collect()
+        r["part_id"]: r["n_triangles"] for r in triangle_counts(edges).collect()
     }
     assert counts == {1: 4, 2: 3, 3: 4, 4: 1, 5: 3}
 
@@ -284,9 +221,9 @@ def test_cooccurrence_edges_bucketed(spark):
 
     df = spark.createDataFrame(
         [("b1", 1), ("b1", 2), ("b1", 3), ("b2", 3), ("b2", 4), ("b3", 5)],
-        "bucket string, node long",
+        "l_orderkey string, l_partkey long",
     )
-    got = {(r["u"], r["v"]) for r in cooccurrence_edges(df, "node", ("bucket",)).collect()}
+    got = {(r["u"], r["v"]) for r in cooccurrence_edges(df).collect()}
     # pairs only WITHIN a bucket; singleton bucket b3 contributes none
     assert got == {(1, 2), (1, 3), (2, 3), (3, 4)}
 
@@ -299,23 +236,23 @@ def test_walk_counts_path_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "u long, v long"
     )
-    w1 = {r["node"]: r["walks"] for r in walk_counts(edges, 1).collect()}
+    w1 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 1).collect()}
     assert w1 == {1: 1, 2: 2, 3: 2, 4: 1}
-    w2 = {r["node"]: r["walks"] for r in walk_counts(edges, 2).collect()}
+    w2 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 2).collect()}
     assert w2 == {1: 2, 2: 3, 3: 3, 4: 2}
-    w3 = {r["node"]: r["walks"] for r in walk_counts(edges, 3).collect()}
+    w3 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 3).collect()}
     assert w3 == {1: 3, 2: 5, 3: 5, 4: 3}
 
 
 def test_bloom_prune_no_false_negatives_and_fp_bounded(spark):
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
-    keys = spark.range(0, 500).withColumnRenamed("id", "k")
+    keys = spark.range(0, 500).withColumnRenamed("id", "o_custkey")
     # dim = multiples of 7; fact = all 500 keys
-    dim = keys.filter(F.col("k") % 7 == 0)
-    words = bloom_words(dim, "k", m_bits=1 << 12, k_hashes=5)
-    kept = {r["k"] for r in bloom_prune(keys, "k", words, m_bits=1 << 12, k_hashes=5).collect()}
-    member = {r["k"] for r in dim.collect()}
+    dim = keys.filter(F.col("o_custkey") % 7 == 0).withColumnRenamed("o_custkey", "c_custkey")
+    words = bloom_words(dim, m_bits=1 << 12, k_hashes=5)
+    kept = {r["o_custkey"] for r in bloom_prune(keys, words, m_bits=1 << 12, k_hashes=5).collect()}
+    member = {r["c_custkey"] for r in dim.collect()}
     assert member <= kept, "bloom filter dropped a true member"
     # m=4096 bits, n=72 keys, k=5 -> fp ~ 2e-5; allow generous slack
     assert len(kept - member) <= 5, f"false-positive blowup: {len(kept - member)}"
@@ -326,10 +263,10 @@ def test_bloom_prune_plan_shuffles_only_dim(spark):
     every bloom probe is a broadcast hash join."""
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
-    fact = spark.range(0, 10000).withColumnRenamed("id", "k")
-    dim = spark.range(0, 100).withColumnRenamed("id", "k")
-    words = bloom_words(dim, "k")
-    plan = bloom_prune(fact, "k", words)._jdf.queryExecution().executedPlan().toString()
+    fact = spark.range(0, 10000).withColumnRenamed("id", "o_custkey")
+    dim = spark.range(0, 100).withColumnRenamed("id", "c_custkey")
+    words = bloom_words(dim)
+    plan = bloom_prune(fact, words)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") == 5
     # the only exchanges allowed are building the tiny word table
     # (groupBy bit_or) and its broadcasts — never a fact-side shuffle
@@ -341,10 +278,10 @@ def test_bloom_empty_dim_prunes_everything(spark):
     reads a missing word (coalesce 0) and no fact row survives."""
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
-    fact = spark.range(0, 100).withColumnRenamed("id", "k")
-    dim = fact.filter(F.col("k") < 0)
-    words = bloom_words(dim, "k")
-    assert bloom_prune(fact, "k", words).count() == 0
+    fact = spark.range(0, 100).withColumnRenamed("id", "o_custkey")
+    dim = spark.range(0, 100).withColumnRenamed("id", "c_custkey").filter(F.col("c_custkey") < 0)
+    words = bloom_words(dim)
+    assert bloom_prune(fact, words).count() == 0
 
 
 def test_merge_aggregate_partitioned_batches(spark, tmp_path):
@@ -416,14 +353,15 @@ def test_bloom_prune_rejects_mismatched_filter_geometry(spark):
 
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
-    dim = spark.range(100).withColumnRenamed("id", "k")
-    words = bloom_words(dim, "k", m_bits=1 << 12, k_hashes=5)
+    dim = spark.range(100).withColumnRenamed("id", "c_custkey")
+    fact = spark.range(100).withColumnRenamed("id", "o_custkey")
+    words = bloom_words(dim, m_bits=1 << 12, k_hashes=5)
     with pytest.raises(ValueError, match="bit grid"):
-        bloom_prune(dim, "k", words, m_bits=1 << 13, k_hashes=5)
+        bloom_prune(fact, words, m_bits=1 << 13, k_hashes=5)
     with pytest.raises(ValueError, match="bit grid"):
-        bloom_prune(dim, "k", words, m_bits=1 << 12, k_hashes=4)
+        bloom_prune(fact, words, m_bits=1 << 12, k_hashes=4)
     # matching geometry still fine
-    assert bloom_prune(dim, "k", words, m_bits=1 << 12, k_hashes=5).count() == 100
+    assert bloom_prune(fact, words, m_bits=1 << 12, k_hashes=5).count() == 100
 
 
 def test_arrow_argmax_skips_empty_and_null_embeddings(spark):
@@ -460,11 +398,11 @@ def test_bloom_prune_passes_null_keys_through(spark):
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
     fact = spark.createDataFrame(
-        [(1, "a"), (None, "b"), (50, "c")], "k long, tag string"
+        [(1, "a"), (None, "b"), (50, "c")], "o_custkey long, tag string"
     )
-    dim = spark.createDataFrame([(1,)], "k long")
-    words = bloom_words(dim, "k")
-    got = {r["tag"] for r in bloom_prune(fact, "k", words).collect()}
+    dim = spark.createDataFrame([(1,)], "c_custkey long")
+    words = bloom_words(dim)
+    got = {r["tag"] for r in bloom_prune(fact, words).collect()}
     # member key kept, NULL key passed through, non-member pruned
     # (50 could only survive as a ~1e-5 false positive)
     assert "a" in got and "b" in got
@@ -545,20 +483,33 @@ def test_zorder_repartition_improves_two_column_locality(spark, sf_dir):
         )
     )
     parts = 16
-    z = zorder_repartition(o, num_partitions=parts)
-    spans = (
-        z.withColumn("_pid", F.spark_partition_id())
-        .groupBy("_pid")
-        .agg(
-            (F.max("o_custkey") - F.min("o_custkey")).alias("ck_span"),
-            (F.max("o_secs") - F.min("o_secs")).alias("ts_span"),
+    # the range shuffle takes spark.sql.shuffle.partitions ranges; keep
+    # AQE from coalescing them back into one partition at this size
+    confs = {
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    saved = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        rows = (
+            zorder_repartition(o)
+            .withColumn("_pid", F.spark_partition_id())
+            .groupBy("_pid")
+            .agg(
+                (F.max("o_custkey") - F.min("o_custkey")).alias("ck_span"),
+                (F.max("o_secs") - F.min("o_secs")).alias("ts_span"),
+            )
+            .collect()
         )
-    )
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
     dom = o.agg(
         (F.max("o_custkey") - F.min("o_custkey")).alias("ck_dom"),
         (F.max("o_secs") - F.min("o_secs")).alias("ts_dom"),
     ).first()
-    rows = spans.collect()
     mean_ck = sum(r["ck_span"] for r in rows) / len(rows) / dom["ck_dom"]
     mean_ts = sum(r["ts_span"] for r in rows) / len(rows) / dom["ts_dom"]
     assert mean_ck < 0.5, f"custkey locality not achieved: {mean_ck:.2f}"

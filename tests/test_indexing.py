@@ -88,7 +88,7 @@ def test_negative_sample_matches_python_and_invariants(spark, sf_dir):
     expected = _py_negatives(ids, 4, meta)
 
     got = {}
-    for r in negative_sample(d, 4, group_cols=["source"]).collect():
+    for r in negative_sample(d, 4).collect():
         got[(r["anchor_id"], r["neg_id"])] = r["slot"]
         # invariants
         assert r["neg_id"] != r["anchor_id"]

@@ -168,16 +168,14 @@ def test_nb_train_max_vocab_cap_matches_python_replica(spark, sf_dir):
         for t in kept
     }
 
-    toks = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("doc_id") % 3 != 0)
-        .select(
-            "doc_id",
-            F.expr("cast(lang = 'en' as bigint)").alias("y"),
-            F.explode(F.split("text", " ")).alias("term"),
-        )
+    train = load_table(spark, sf_dir, "documents").where(F.col("doc_id") % 3 != 0)
+    labels = train.select("doc_id", F.expr("cast(lang = 'en' as bigint)").alias("y"))
+    toks = train.select(
+        "doc_id",
+        F.expr("cast(lang = 'en' as bigint)").alias("y"),
+        F.explode(F.split("text", " ")).alias("term"),
     )
-    w, _ = nb_train(toks, max_vocab=cap)
+    w, _ = nb_train(toks, labels, max_vocab=cap)
     got = {r["term"]: r["w_fp"] for r in w.collect()}
     assert got == expected
 

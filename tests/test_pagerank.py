@@ -28,8 +28,8 @@ def _replica(edges, iters=3, scale=SCALE, d_num=17, d_den=20):
 
 def _spark_ranks(spark, edges, iters=3):
     df = spark.createDataFrame(edges, "u bigint, v bigint")
-    out = pagerank_integer(df, iters=iters, node_alias="node")
-    return {r.node: r.rank_scaled for r in out.collect()}
+    out = pagerank_integer(df, iters=iters)
+    return {r.part_id: r.rank_scaled for r in out.collect()}
 
 
 EDGES = [
@@ -51,8 +51,8 @@ class TestPagerankInteger:
     def test_partition_invariant(self, spark):
         df1 = spark.createDataFrame(EDGES, "u bigint, v bigint").repartition(1)
         df7 = spark.createDataFrame(EDGES, "u bigint, v bigint").repartition(7)
-        r1 = {r.node: r.rank_scaled for r in pagerank_integer(df1).collect()}
-        r7 = {r.node: r.rank_scaled for r in pagerank_integer(df7).collect()}
+        r1 = {r.part_id: r.rank_scaled for r in pagerank_integer(df1).collect()}
+        r7 = {r.part_id: r.rank_scaled for r in pagerank_integer(df7).collect()}
         assert r1 == r7
 
     def test_hub_outranks_leaf(self, spark):

@@ -2,7 +2,8 @@
 product or a row-at-a-time Python UDF (BatchEvalPython) — the two
 blacklisted 100 TB anti-patterns. Arrow-batched pandas ops
 (ArrowEvalPython / MapInPandas / FlatMapGroupsInPandas) are the
-sanctioned escape hatch and remain allowed."""
+sanctioned escape hatch and remain allowed. Each query is audited on
+its final plan and on the plan of every subtree it checkpointed."""
 
 from __future__ import annotations
 
@@ -13,34 +14,50 @@ from etl_inreach_spark.queries import all_oracles, all_queries
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module")
 def analyzed(spark):
-    import os
+    """name -> (schema, plans): the executed plan of every subtree the
+    query checkpointed while it was built, then its final executed plan.
+    A checkpoint truncates lineage to a Scan ExistingRDD, so without the
+    recorded subtrees a cartesian product or row UDF could hide behind
+    one."""
+    df_class = type(spark.range(1))
+    original = df_class.__dict__["localCheckpoint"]
+    plans: list[str] = []
 
-    # Disable eager localCheckpoint barriers: a checkpoint truncates
-    # lineage to Scan ExistingRDD, which would HIDE the materialized
-    # subtree (shingle pipelines) from the audits below — and execute
-    # real jobs during what should be plan inspection.
-    os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
+    def recording(self, *args, **kwargs):
+        plans.append(_executed_plan(self))
+        return original(self, *args, **kwargs)
+
+    df_class.localCheckpoint = recording
     out = {}
     try:
         for name, fn in all_queries().items():
             if name.startswith("streaming"):
                 continue  # streaming fixtures drain checkpoints; covered elsewhere
+            plans.clear()
             df = fn(spark, SF_DIR)
-            out[name] = (df.schema, df._jdf.queryExecution().executedPlan().toString())
+            out[name] = (df.schema, [*plans, _executed_plan(df)])
     finally:
-        os.environ.pop("SPARK_GRAFT_NO_MATERIALIZE", None)
+        df_class.localCheckpoint = original
     return out
 
 
 def test_no_cartesian_products(analyzed):
-    offenders = [n for n, (_, p) in analyzed.items() if "CartesianProduct" in p]
+    offenders = [
+        n for n, (_, plans) in analyzed.items() if any("CartesianProduct" in p for p in plans)
+    ]
     assert not offenders, offenders
 
 
 def test_no_row_at_a_time_python_udfs(analyzed):
-    offenders = [n for n, (_, p) in analyzed.items() if "BatchEvalPython" in p]
+    offenders = [
+        n for n, (_, plans) in analyzed.items() if any("BatchEvalPython" in p for p in plans)
+    ]
     assert not offenders, offenders
 
 

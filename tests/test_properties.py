@@ -223,11 +223,14 @@ def test_bloom_never_drops_members(spark, member, probe):
     indirectly: membership keys must all survive)."""
     from etl_inreach_spark.operators.bloom import bloom_prune, bloom_words
 
-    dim = spark.createDataFrame([(k,) for k in member], "k long")
+    dim = spark.createDataFrame([(k,) for k in member], "c_custkey long")
     fact_keys = sorted(set(member) | set(probe))
-    fact = spark.createDataFrame([(k,) for k in fact_keys], "k long")
-    words = bloom_words(dim, "k", m_bits=1 << 12, k_hashes=4)
-    kept = {r["k"] for r in bloom_prune(fact, "k", words, m_bits=1 << 12, k_hashes=4).collect()}
+    fact = spark.createDataFrame([(k,) for k in fact_keys], "o_custkey long")
+    words = bloom_words(dim, m_bits=1 << 12, k_hashes=4)
+    kept = {
+        r["o_custkey"]
+        for r in bloom_prune(fact, words, m_bits=1 << 12, k_hashes=4).collect()
+    }
     assert set(member) <= kept
 
 

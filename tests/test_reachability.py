@@ -1,6 +1,6 @@
-"""Two static censuses of the engine, so that code and options that
-production never uses cannot grow back. Stdlib ``ast`` only; no Spark
-session.
+"""Three static censuses of the engine, so that code, options and
+locals that production never uses cannot grow back. Stdlib ``ast`` only;
+no Spark session.
 
 Reachability: every top-level engine definition must be reached from
 production code.
@@ -24,6 +24,13 @@ is single-valued only when every call passes the same literal: a source text
 that ``ast.literal_eval`` accepts (a str, a number, or a tuple/list of them).
 Names, Column expressions, calls and ``*args``/``**kwargs`` are dynamic.
 ``@query`` functions are skipped: ``(spark, sf_dir)`` is the driver contract.
+Production call sites decide whether a parameter has one value; test call
+sites add values only when that value is a number, which tests shrink to
+stand in for scale.
+
+Locals: every name an engine function assigns must also be read in it or in
+a function nested in it (see ``dead_locals``); ``_``-prefixed names are
+exempt.
 """
 
 from __future__ import annotations
@@ -146,15 +153,11 @@ def test_only_kept_references_are_unreached():
     assert {(rel, name) for rel, _, name in found} == KEPT_REFERENCES
 
 
-# Files whose calls count as call sites of an engine function.
-CALLERS = (
-    "bench.py",
-    "__spark_entry__.py",
-    "tools/*.py",
-    "perfbench/*.py",
-    "perfbench/tests/*.py",
-    "tests/*.py",
-)
+# Files whose calls decide the values an engine parameter takes.
+CALLERS = ("bench.py", "__spark_entry__.py", "tools/*.py", "perfbench/*.py")
+# Test files: their calls add values only to a numeric parameter, which tests
+# shrink to stand in for scale.
+TEST_CALLERS = ("tests/*.py", "perfbench/tests/*.py")
 
 
 def _callee(call: ast.Call) -> str | None:
@@ -179,6 +182,15 @@ def _literal(arg: ast.expr) -> str | None:
     except ValueError:
         return None
     return ast.unparse(arg)
+
+
+def _is_number(text: str) -> bool:
+    """An int or float literal, or constant arithmetic over them (``1 << 17``)."""
+    return all(
+        isinstance(n, (ast.BinOp, ast.UnaryOp, ast.operator, ast.unaryop))
+        or (isinstance(n, ast.Constant) and type(n.value) in (int, float))
+        for n in ast.walk(ast.parse(text, mode="eval").body)
+    )
 
 
 def _value(
@@ -211,7 +223,9 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
       top-level engine definition shares; ``@query`` functions, kept
       references and functions never called directly are skipped.
     * Call sites: every call whose callee name or attribute matches, in the
-      engine and in ``CALLERS``.
+      engine and in ``CALLERS``; they decide whether the parameter has one
+      value. Calls in ``TEST_CALLERS`` add values only when that value is a
+      number (``_is_number``).
     * Value at a call: an omitted argument counts as the default's source
       text, a passed one as its ``ast.unparse``; a bare name, ``*args`` or
       ``**kwargs`` is dynamic and counts as distinct from every other value.
@@ -221,7 +235,6 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
     fns: dict[str, tuple[str, ast.FunctionDef]] = {}
     counts: dict[str, int] = {}
     modules = _engine_modules()
-    trees = [tree for _, tree in modules]
     for rel, tree in modules:
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
@@ -232,13 +245,17 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
                     and (rel, stmt.name) not in KEPT_REFERENCES
                 ):
                     fns[stmt.name] = (rel, stmt)
-    for pattern in CALLERS:
-        trees += [_parse(path) for path in sorted(glob.glob(os.path.join(REPO, pattern)))]
+    sources = [(False, tree) for _, tree in modules]
+    for is_test, patterns in ((False, CALLERS), (True, TEST_CALLERS)):
+        for pattern in patterns:
+            paths = sorted(glob.glob(os.path.join(REPO, pattern)))
+            sources += [(is_test, _parse(path)) for path in paths]
     calls: dict[str, list[ast.Call]] = {}
-    for tree in trees:
+    test_calls: dict[str, list[ast.Call]] = {}
+    for is_test, tree in sources:
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and _callee(node) in fns:
-                calls.setdefault(_callee(node), []).append(node)
+                (test_calls if is_test else calls).setdefault(_callee(node), []).append(node)
 
     found = []
     for name, (rel, fn) in sorted(fns.items()):
@@ -247,8 +264,14 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
         positions = [a.arg for a in fn.args.posonlyargs + fn.args.args]
         for param, default in _params(fn).items():
             values = {_value(c, positions, param, default) for c in calls[name]}
-            if len(values) == 1 and None not in values:
-                found.append((rel, fn.lineno, name, param, values.pop()))
+            if len(values) != 1 or None in values:
+                continue
+            value = values.pop()
+            if _is_number(value) and any(
+                _value(c, positions, param, default) != value for c in test_calls.get(name, ())
+            ):
+                continue
+            found.append((rel, fn.lineno, name, param, value))
     return found
 
 
@@ -256,4 +279,40 @@ def test_every_engine_option_takes_two_values():
     found = single_valued_options()
     assert not found, "engine options that only ever take one value:\n" + "\n".join(
         f"{rel}:{line} {fn}.{param} = {value}" for rel, line, fn, param, value in found
+    )
+
+
+def dead_locals() -> list[tuple[str, int, str, str]]:
+    """``(relpath, line, function, name)`` for every name an engine
+    function (at any nesting depth) binds as a plain-name target and that
+    no ``Name`` in its body — nested functions and lambdas included —
+    reads. Names declared ``global``/``nonlocal`` and ``_``-prefixed
+    names are skipped."""
+    found = []
+    for rel, tree in _engine_modules():
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            stored: dict[str, int] = {}
+            read: set[str] = set()
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Name):
+                    if isinstance(node.ctx, ast.Store):
+                        stored.setdefault(node.id, node.lineno)
+                    else:
+                        read.add(node.id)
+                elif isinstance(node, (ast.Global, ast.Nonlocal)):
+                    read.update(node.names)
+            found += [
+                (rel, line, fn.name, name)
+                for name, line in stored.items()
+                if name not in read and not name.startswith("_")
+            ]
+    return sorted(found)
+
+
+def test_every_engine_local_is_read():
+    found = dead_locals()
+    assert not found, "engine locals assigned but never read:\n" + "\n".join(
+        f"{rel}:{line} {fn}.{name}" for rel, line, fn, name in found
     )

@@ -38,7 +38,7 @@ def test_priority_sample_global_matches_python(spark, sf_dir):
     expected = _py_sample(rows, 25)
     got = {
         r["doc_id"]: (r["sample_rank"], r["est_weight"])
-        for r in priority_sample(d, "doc_id", "n_chars", 25).collect()
+        for r in priority_sample(d, 25).collect()
     }
     assert got == expected
     # estimator sanity: sum of adjusted weights tracks the true total
@@ -58,9 +58,7 @@ def test_priority_sample_stratified_matches_python(spark, sf_dir):
             expected[rid] = (src, rank, est)
     got = {
         r["doc_id"]: (r["source"], r["sample_rank"], r["est_weight"])
-        for r in priority_sample(
-            d, "doc_id", "n_chars", 3, strata_cols=["source"]
-        ).collect()
+        for r in priority_sample(d, 3, strata_cols=["source"]).collect()
     }
     assert got == expected
 
@@ -69,24 +67,22 @@ def test_priority_sample_small_stratum_exact_weights(spark):
     # stratum with <= k rows: tau = 0, est_weight = the raw weight
     df = spark.createDataFrame(
         [(1, 10.0, "a"), (2, 20.0, "a"), (3, 5.0, "b")],
-        "id long, w double, s string",
+        "doc_id long, n_chars double, source string",
     )
-    got = priority_sample(df, "id", "w", 5, strata_cols=["s"]).collect()
+    got = priority_sample(df, 5, strata_cols=["source"]).collect()
     assert len(got) == 3
-    assert all(r["est_weight"] == r["w"] for r in got)
+    assert all(r["est_weight"] == r["n_chars"] for r in got)
 
 
 def test_priority_sample_repartition_proof(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     a = sorted(
         (r["doc_id"], r["sample_rank"], r["est_weight"])
-        for r in priority_sample(d, "doc_id", "n_chars", 10).collect()
+        for r in priority_sample(d, 10).collect()
     )
     b = sorted(
         (r["doc_id"], r["sample_rank"], r["est_weight"])
-        for r in priority_sample(
-            d.repartition(7), "doc_id", "n_chars", 10
-        ).collect()
+        for r in priority_sample(d.repartition(7), 10).collect()
     )
     assert a == b
 
@@ -97,7 +93,7 @@ def test_priority_sample_global_plan_is_take_ordered(spark, sf_dir):
     Sort + GlobalLimit."""
     d = load_table(spark, sf_dir, "documents")
     plan = (
-        priority_sample(d, "doc_id", "n_chars", 10)
+        priority_sample(d, 10)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -108,7 +104,7 @@ def test_priority_sample_global_plan_is_take_ordered(spark, sf_dir):
 def test_priority_sample_rejects_bad_k(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     with pytest.raises(ValueError):
-        priority_sample(d, "doc_id", "n_chars", 0)
+        priority_sample(d, 0)
 
 
 # ---------------------------------------------------------------- PQ
@@ -167,7 +163,7 @@ def test_pq_train_encode_match_numpy(spark):
 
     df = spark.createDataFrame(
         [(i, [float(x) for x in vecs[i]]) for i in ids],
-        "vec_id long, embedding array<double>",
+        "vec_id long, _res array<double>",
     )
     cent = pq_train(df, num_sub=num_sub, ksub=ksub, iters=iters, dim=8)
     got = {(r["sub"], r["code"]): np.array(r["_cvec"]) for r in cent.collect()}
@@ -298,10 +294,10 @@ from hypothesis import strategies as st
 def test_priority_sample_property(spark, rows, k):
     """Arbitrary (id, weight) sets: Spark selection == the Python DLT
     definition, including ranks and adjusted weights."""
-    df = spark.createDataFrame(rows, "id long, w long")
+    df = spark.createDataFrame(rows, "doc_id long, n_chars long")
     expected = _py_sample(rows, k)
     got = {
-        r["id"]: (r["sample_rank"], r["est_weight"])
-        for r in priority_sample(df, "id", "w", k).collect()
+        r["doc_id"]: (r["sample_rank"], r["est_weight"])
+        for r in priority_sample(df, k).collect()
     }
     assert got == expected

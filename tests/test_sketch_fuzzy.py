@@ -19,10 +19,10 @@ def test_cms_estimate_never_underestimates(spark):
 
     rng = random.Random(7)
     rows = [(rng.randrange(0, 200) ** 2 % 997,) for _ in range(5000)]
-    df = spark.createDataFrame(rows, "k long")
-    truth = df.groupBy("k").agg(F.count(F.lit(1)).alias("true_count"))
-    sketch = cms_build(df, "k", width=256, depth=4)
-    est = cms_estimate(sketch, truth, "k", width=256, depth=4)
+    df = spark.createDataFrame(rows, "user_id long")
+    truth = df.groupBy("user_id").agg(F.count(F.lit(1)).alias("true_count"))
+    sketch = cms_build(df, width=256, depth=4)
+    est = cms_estimate(sketch, truth, width=256, depth=4)
     bad = est.filter(F.col("est_count") < F.col("true_count")).count()
     assert bad == 0, "count-min sketch underestimated a key"
     # with a roomy grid the estimate is exact for most keys
@@ -33,12 +33,12 @@ def test_cms_estimate_never_underestimates(spark):
 def test_cms_rejects_mismatched_geometry(spark):
     from etl_inreach_spark.operators.cms import cms_build, cms_estimate
 
-    df = spark.range(100).withColumnRenamed("id", "k")
-    sketch = cms_build(df, "k", width=256, depth=4)
+    df = spark.range(100).withColumnRenamed("id", "user_id")
+    sketch = cms_build(df, width=256, depth=4)
     with pytest.raises(ValueError, match="cell grid"):
-        cms_estimate(sketch, df, "k", width=512, depth=4)
+        cms_estimate(sketch, df, width=512, depth=4)
     with pytest.raises(ValueError, match="cell grid"):
-        cms_estimate(sketch, df, "k", width=256, depth=3)
+        cms_estimate(sketch, df, width=256, depth=3)
 
 
 def test_cms_merge_is_groupby_sum(spark):
@@ -47,15 +47,15 @@ def test_cms_merge_is_groupby_sum(spark):
     partition-parallel and streamable."""
     from etl_inreach_spark.operators.cms import cms_build
 
-    a = spark.range(0, 500).withColumnRenamed("id", "k")
-    b = spark.range(300, 900).withColumnRenamed("id", "k")
+    a = spark.range(0, 500).withColumnRenamed("id", "user_id")
+    b = spark.range(300, 900).withColumnRenamed("id", "user_id")
     merged = (
-        cms_build(a, "k", width=128, depth=2)
-        .unionByName(cms_build(b, "k", width=128, depth=2))
+        cms_build(a, width=128, depth=2)
+        .unionByName(cms_build(b, width=128, depth=2))
         .groupBy("row", "pos")
         .agg(F.sum("cnt").alias("cnt"))
     )
-    whole = cms_build(a.unionByName(b), "k", width=128, depth=2)
+    whole = cms_build(a.unionByName(b), width=128, depth=2)
     got = {(r["row"], r["pos"]): r["cnt"] for r in merged.collect()}
     want = {(r["row"], r["pos"]): r["cnt"] for r in whole.collect()}
     assert got == want
@@ -103,10 +103,10 @@ def test_edit1_pairs_matches_naive(spark):
     ]
     from etl_inreach_spark.operators.fuzzy import edit1_pairs
 
-    df = spark.createDataFrame(rows, "id long, s string")
+    df = spark.createDataFrame(rows, "c_custkey long, c_name string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in edit1_pairs(df, "id", "s").collect()
+        for r in edit1_pairs(df).collect()
     }
     assert got == _naive_edit1_pairs(rows)
 
@@ -131,10 +131,10 @@ def test_edit1_pairs_random_property(spark):
         mutated.append((2 * i + 1, "".join(t)))
     from etl_inreach_spark.operators.fuzzy import edit1_pairs
 
-    df = spark.createDataFrame(mutated, "id long, s string")
+    df = spark.createDataFrame(mutated, "c_custkey long, c_name string")
     got = {
         (r["id_a"], r["id_b"])
-        for r in edit1_pairs(df, "id", "s").collect()
+        for r in edit1_pairs(df).collect()
     }
     assert got == _naive_edit1_pairs(mutated)
 
@@ -299,10 +299,10 @@ def test_edit2_pairs_matches_naive(spark):
     ]
     from etl_inreach_spark.operators.fuzzy import edit2_pairs
 
-    df = spark.createDataFrame(rows, "id long, s string")
+    df = spark.createDataFrame(rows, "c_custkey long, c_name string")
     got = {
         (r["id_a"], r["id_b"], r["dist"])
-        for r in edit2_pairs(df, "id", "s").collect()
+        for r in edit2_pairs(df).collect()
     }
     assert got == _naive_editk_pairs(rows, 2)
 
@@ -334,10 +334,10 @@ def test_edit2_pairs_random_property(spark):
             mutated.append((3 * i + rep, "".join(t)))
     from etl_inreach_spark.operators.fuzzy import edit2_pairs
 
-    df = spark.createDataFrame(mutated, "id long, s string")
+    df = spark.createDataFrame(mutated, "c_custkey long, c_name string")
     got = {
         (r["id_a"], r["id_b"], r["dist"])
-        for r in edit2_pairs(df, "id", "s").collect()
+        for r in edit2_pairs(df).collect()
     }
     assert got == _naive_editk_pairs(mutated, 2)
 
@@ -350,10 +350,10 @@ def test_edit2_max_len_guard_raises(spark):
     from etl_inreach_spark.operators.fuzzy import edit2_pairs
 
     df = spark.createDataFrame(
-        [(1, "x" * 100), (2, "y")], "id long, s string"
+        [(1, "x" * 100), (2, "y")], "c_custkey long, c_name string"
     )
     with pytest.raises(Exception) as ei:
-        edit2_pairs(df, "id", "s").collect()
+        edit2_pairs(df).collect()
     assert "max_len" in str(ei.value)
 
 
@@ -365,21 +365,21 @@ def test_edit2_null_strings_dropped_not_raised(spark):
 
     df = spark.createDataFrame(
         [(1, "kitten"), (2, None), (3, "kitte"), (4, "kitt")],
-        "id long, s string",
+        "c_custkey long, c_name string",
     )
     got2 = {
         (r["id_a"], r["id_b"], r["dist"])
-        for r in edit2_pairs(df, "id", "s").collect()
+        for r in edit2_pairs(df).collect()
     }
     assert got2 == {(1, 3, 1), (1, 4, 2), (3, 4, 1)}
     # capped path too (the guard + checkpoint branch)
     got2c = {
         (r["id_a"], r["id_b"], r["dist"])
-        for r in edit2_pairs(df, "id", "s", max_bucket_rows=2).collect()
+        for r in edit2_pairs(df, max_bucket_rows=2).collect()
     }
     assert got2c == got2
     got1 = {
         (r["id_a"], r["id_b"])
-        for r in edit1_pairs(df, "id", "s").collect()
+        for r in edit1_pairs(df).collect()
     }
     assert got1 == {(1, 3), (3, 4)}

@@ -77,17 +77,17 @@ def test_capped_edit1_pairs_equals_uncapped(spark, sf_dir):
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name"
     )
-    base = _pair_rows(edit1_pairs(cust, "c_custkey", "c_name"))
+    base = _pair_rows(edit1_pairs(cust))
     # natural-name buckets are ~1-3 rows; cap 2 forces multi-block
     # grids wherever a bucket exceeds it, exercising off-diagonal and
     # diagonal grid cells on real data
     capped = _pair_rows(
-        edit1_pairs(cust, "c_custkey", "c_name", max_bucket_rows=2)
+        edit1_pairs(cust, max_bucket_rows=2)
     )
     assert capped == base
     # and the inert production cap is a no-op too
     inert = _pair_rows(
-        edit1_pairs(cust, "c_custkey", "c_name", max_bucket_rows=256)
+        edit1_pairs(cust, max_bucket_rows=256)
     )
     assert inert == base
 
@@ -101,11 +101,11 @@ def test_capped_edit1_mass_duplicate_name(spark):
     dup, n_dup = "aaron blake", 60
     rows = [(i, dup) for i in range(n_dup)]
     rows += [(100, "aaron blakes"), (101, "aron blake"), (102, "zz top")]
-    df = spark.createDataFrame(rows, "cid long, name string")
-    base = _pair_rows(edit1_pairs(df, "cid", "name"))
+    df = spark.createDataFrame(rows, "c_custkey long, c_name string")
+    base = _pair_rows(edit1_pairs(df))
     # clique pairs + (dup, near-miss) pairs must all be present
     assert len(base) == n_dup * (n_dup - 1) // 2 + 2 * n_dup
-    capped = _pair_rows(edit1_pairs(df, "cid", "name", max_bucket_rows=8))
+    capped = _pair_rows(edit1_pairs(df, max_bucket_rows=8))
     assert capped == base
 
 
@@ -125,10 +125,10 @@ def test_capped_edit2_pairs_equals_uncapped(spark):
         (102, "aaron blk"),      # dist 2 (2 dels)
         (103, "zz top"),         # far
     ]
-    df = spark.createDataFrame(rows, "cid long, name string")
-    base = _pair_rows(edit2_pairs(df, "cid", "name"))
+    df = spark.createDataFrame(rows, "c_custkey long, c_name string")
+    base = _pair_rows(edit2_pairs(df))
     # clique pairs + (dup, near-miss) pairs + the one cross near-miss
     # pair within distance 2 of each other (100, 101)
     assert len(base) == n_dup * (n_dup - 1) // 2 + 3 * n_dup + 1
-    capped = _pair_rows(edit2_pairs(df, "cid", "name", max_bucket_rows=8))
+    capped = _pair_rows(edit2_pairs(df, max_bucket_rows=8))
     assert capped == base

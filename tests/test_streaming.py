@@ -59,7 +59,7 @@ def test_stream_features_dedups_across_batches(spark, feed_dir, tmp_path):
         .json(feed_dir)
     )
     shares = spark.createDataFrame(SHARES, "share_id string, callsign string, password string")
-    features = stream_features(feeds, shares, watermark="30 minutes")
+    features = stream_features(feeds, shares)
     q = (
         features.writeStream.format("memory")
         .queryName("feat_stream")

@@ -23,12 +23,12 @@ class TestPackChunks:
 
         sizes = [7, 50, 100, 3, 260, 1, 99, 42]
         df = _docs(spark, [(i, toks(s)) for i, s in enumerate(sizes)]).withColumn(
-            "tok", F.size(F.split("text", " "))
+            "_tokcnt", F.size(F.split("text", " "))
         )
         # tiny bucket count forces multi-doc buckets; the two-level
         # prefix sum must still equal the serial one
         out = (
-            pack_chunks(df, "tok", capacity=CAP, num_buckets=3)
+            pack_chunks(df, capacity=CAP, num_buckets=3)
             .orderBy("doc_id")
             .collect()
         )
@@ -44,9 +44,9 @@ class TestPackChunks:
         from etl_inreach_spark.operators.packing import pack_chunks
 
         df = spark.createDataFrame(
-            [(0, 5), (1, 0), (2, 3)], "doc_id bigint, tok int"
+            [(0, 5), (1, 0), (2, 3)], "doc_id bigint, _tokcnt int"
         )
-        out = pack_chunks(df, "tok", capacity=CAP).orderBy("doc_id").collect()
+        out = pack_chunks(df, capacity=CAP).orderBy("doc_id").collect()
         assert [r.doc_id for r in out] == [0, 2]
         assert [r.tok_offset for r in out] == [0, 5]
 
@@ -54,11 +54,11 @@ class TestPackChunks:
         from etl_inreach_spark.operators.packing import pack_chunks
 
         df = spark.createDataFrame(
-            [(i, (i * 37) % 90 + 1) for i in range(200)], "doc_id bigint, tok int"
+            [(i, (i * 37) % 90 + 1) for i in range(200)], "doc_id bigint, _tokcnt int"
         )
-        a = pack_chunks(df, "tok", CAP).orderBy("doc_id").collect()
+        a = pack_chunks(df, CAP).orderBy("doc_id").collect()
         b = (
-            pack_chunks(df.repartition(7), "tok", CAP)
+            pack_chunks(df.repartition(7), CAP)
             .orderBy("doc_id")
             .collect()
         )
@@ -72,10 +72,10 @@ class TestPackBinsNextfit:
         # capacity 100: [60, 30, 20, 150, 10] -> bins [1,1,2,3,4]
         sizes = [60, 30, 20, 150, 10]
         df = spark.createDataFrame(
-            [(i, s) for i, s in enumerate(sizes)], "doc_id bigint, tok int"
+            [(i, s) for i, s in enumerate(sizes)], "doc_id bigint, _tokcnt int"
         )
         out = (
-            pack_bins_nextfit(df, "tok", capacity=100, num_buckets=1)
+            pack_bins_nextfit(df, capacity=100, num_buckets=1)
             .orderBy("doc_id")
             .collect()
         )
@@ -86,9 +86,9 @@ class TestPackBinsNextfit:
         from etl_inreach_spark.operators.packing import pack_bins_nextfit
 
         df = spark.createDataFrame(
-            [(i, (i * 53) % 140 + 1) for i in range(300)], "doc_id bigint, tok int"
+            [(i, (i * 53) % 140 + 1) for i in range(300)], "doc_id bigint, _tokcnt int"
         )
-        out = pack_bins_nextfit(df, "tok", capacity=100, num_buckets=8)
+        out = pack_bins_nextfit(df, capacity=100, num_buckets=8)
         bad = out.filter((F.col("bin_fill") > 100) & (F.col("n_tokens") <= 100))
         assert bad.count() == 0
 
@@ -96,9 +96,9 @@ class TestPackBinsNextfit:
         from etl_inreach_spark.operators.packing import pack_bins_nextfit
 
         df = spark.createDataFrame(
-            [(i, (i * 29) % 80 + 1) for i in range(200)], "doc_id bigint, tok int"
+            [(i, (i * 29) % 80 + 1) for i in range(200)], "doc_id bigint, _tokcnt int"
         )
-        out = pack_bins_nextfit(df, "tok", capacity=100, num_buckets=4)
+        out = pack_bins_nextfit(df, capacity=100, num_buckets=4)
         per = (
             out.groupBy("bucket")
             .agg(F.max("bin_seq").alias("mx"), F.count_distinct("bin_seq").alias("n"))
@@ -178,11 +178,12 @@ class TestRepetitionProfile:
 
 
 class TestShingleParity:
-    """Fast (window-lead) path vs substring path of shingles_exploded
-    must be bit-identical — sets, multisets, and positions — including
-    len==k documents and non-ASCII text (ADVICE r2: this parity was
-    claimed but untested, and silently depended on split('') semantics
-    that changed in SPARK-40194)."""
+    """The Arrow/numpy rendering of shingles_exploded must equal a
+    per-gram Python replay of the 60-bit polynomial+affine hash over
+    code points — sets, multisets, and positions — including len==k
+    documents and non-ASCII text (ADVICE r2: this parity was claimed
+    but untested, and silently depended on split('') semantics that
+    changed in SPARK-40194)."""
 
     K = 4
 
@@ -198,6 +199,16 @@ class TestShingleParity:
         ]
         return _docs(spark, rows)
 
+    def _hash60(self, gram):
+        from etl_inreach_spark.operators import text_dedup as td
+
+        h1 = 0
+        for c in gram:
+            h1 = (h1 * td.POLY_P + ord(c)) % td.MERSENNE31
+        h2 = (td.POLY_A2 * h1 + td.POLY_B2) % td.MERSENNE31
+        mask = (1 << 30) - 1
+        return (h1 & mask) + ((h2 & mask) << 30)
+
     def _both(self, spark, distinct, keep_pos=False):
         from etl_inreach_spark.operators import text_dedup as td
 
@@ -205,24 +216,24 @@ class TestShingleParity:
         fast = td.shingles_exploded(
             df, self.K, distinct=distinct, keep_pos=keep_pos
         )
-        # same hash WITHOUT the _poly60 marker -> legacy substring path
-        slow = td.shingles_exploded(
-            df, self.K,
-            gram_hash=lambda g: td._poly60_of_h1(td.poly_gram_hash(g, self.K)),
-            distinct=distinct, keep_pos=keep_pos,
-        )
+        # (_id, _p, _h) rows of the per-gram replay
+        slow = [
+            (r.doc_id, p, self._hash60(r.text[p : p + self.K]))
+            for r in df.collect()
+            for p in range(len(r.text) - self.K + 1)
+        ]
         return fast, slow
 
     def test_set_parity(self, spark):
         fast, slow = self._both(spark, distinct=True)
         a = sorted(map(tuple, fast.select("_id", "_h").collect()))
-        b = sorted(map(tuple, slow.select("_id", "_h").collect()))
+        b = sorted({(i, h) for i, _, h in slow})
         assert a == b and len(a) > 0
 
     def test_multiset_and_position_parity(self, spark):
         fast, slow = self._both(spark, distinct=False, keep_pos=True)
         a = sorted(map(tuple, fast.select("_id", "_p", "_h").collect()))
-        b = sorted(map(tuple, slow.select("_id", "_p", "_h").collect()))
+        b = sorted(slow)
         assert a == b and len(a) > 0
         # gram count per doc must be len-k+1 (char-count len, not bytes)
         from collections import Counter
@@ -247,11 +258,7 @@ class TestSimhashLaneOverflow:
 
         # every gram identical -> per-bit counts hit 40k-4 >> 2^15
         df = _docs(spark, [(0, "a" * 40_000)])
-        return td.shingles_exploded(
-            df, self.K,
-            gram_hash=td.poly_gram_hasher60(self.K),
-            distinct=False, keep_pos=keep_pos,
-        )
+        return td.shingles_exploded(df, self.K, distinct=False, keep_pos=keep_pos)
 
     def test_chunked_sketch_is_exact(self, spark):
         from etl_inreach_spark.operators import text_dedup as td
@@ -277,11 +284,7 @@ class TestSimhashLaneOverflow:
             ["the quick brown fox jumps over the lazy dog",
              "pack my box with five dozen liquor jugs",
              "aaaaabbbbbaaaaabbbbb"])])
-        sh = td.shingles_exploded(
-            df, self.K,
-            gram_hash=td.poly_gram_hasher60(self.K),
-            distinct=False, keep_pos=True,
-        )
+        sh = td.shingles_exploded(df, self.K, distinct=False, keep_pos=True)
         hashes = defaultdict(list)
         for r in sh.select("_id", "_h").collect():
             hashes[r["_id"]].append(r["_h"])

@@ -14,19 +14,21 @@ from etl_inreach_spark.sinks.upsert import upsert_latest_partitioned
 
 def _mkdf(spark, rows):
     df = spark.createDataFrame(
-        rows, "id string, time string, payload string, arrival long"
+        rows, "user_id string, ts string, payload string, event_id long"
     )
-    return df.withColumn("time", F.col("time").cast("timestamp"))
+    return df.withColumn("ts", F.col("ts").cast("timestamp")).withColumn(
+        "event_type", F.lit("click")
+    )
 
 
 def _with_part(df):
     # the partition column is a function of the key, as the sink requires
-    return df.withColumn("part", F.pmod(F.xxhash64("id"), F.lit(4)))
+    return df.withColumn("bucket", F.pmod(F.xxhash64("user_id"), F.lit(4)))
 
 
 def _state(spark, path):
     return {
-        r["id"]: (str(r["time"]), r["payload"])
+        r["user_id"]: (str(r["ts"]), r["payload"])
         for r in spark.read.parquet(path).collect()
     }
 
@@ -40,9 +42,7 @@ def test_upsert_latest_reference_semantics(spark, tmp_path):
             ("b", "2024-01-01 10:00:00", "b1", 2),
         ],
     )
-    upsert_latest_partitioned(
-        spark, path, _with_part(b1), ["id"], "time", "part", arrival_col="arrival"
-    )
+    upsert_latest_partitioned(spark, path, _with_part(b1))
     # newer a wins; EQUAL-time b must NOT replace (strict >, first-seen
     # wins — the existing row has the smaller arrival index); new key c
     b2 = _mkdf(
@@ -53,18 +53,14 @@ def test_upsert_latest_reference_semantics(spark, tmp_path):
             ("c", None, "c1", 5),
         ],
     )
-    upsert_latest_partitioned(
-        spark, path, _with_part(b2), ["id"], "time", "part", arrival_col="arrival"
-    )
+    upsert_latest_partitioned(spark, path, _with_part(b2))
     got = _state(spark, path)
     assert got["a"] == ("2024-01-01 11:00:00", "a2")
     assert got["b"] == ("2024-01-01 10:00:00", "b1")
     assert got["c"][1] == "c1"
     # a null-time row never replaces a timestamped one
     b3 = _mkdf(spark, [("a", None, "a3", 6)])
-    upsert_latest_partitioned(
-        spark, path, _with_part(b3), ["id"], "time", "part", arrival_col="arrival"
-    )
+    upsert_latest_partitioned(spark, path, _with_part(b3))
     assert _state(spark, path)["a"] == ("2024-01-01 11:00:00", "a2")
 
 
@@ -75,20 +71,20 @@ def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
     b1 = _with_part(
         _mkdf(spark, [(i, "2024-01-01 10:00:00", f"{i}-v1", n) for n, i in enumerate(ids)])
     )
-    upsert_latest_partitioned(spark, path, b1, ["id"], "time", "part")
+    upsert_latest_partitioned(spark, path, b1)
     before = _state(spark, path)
     assert len(before) == 16
 
     # update ONE key; only its partition's files may change
     target = ids[0]
-    tpart = b1.filter(F.col("id") == target).select("part").first()["part"]
+    tpart = b1.filter(F.col("user_id") == target).select("bucket").first()["bucket"]
     untouched = {
         f: os.path.getmtime(f)
-        for f in glob.glob(f"{path}/part=*/*.parquet")
-        if f"part={tpart}" not in f
+        for f in glob.glob(f"{path}/bucket=*/*.parquet")
+        if f"bucket={tpart}" not in f
     }
     b2 = _with_part(_mkdf(spark, [(target, "2024-01-01 12:00:00", "new", 99)]))
-    upsert_latest_partitioned(spark, path, b2, ["id"], "time", "part")
+    upsert_latest_partitioned(spark, path, b2)
 
     got = _state(spark, path)
     assert got[target] == ("2024-01-01 12:00:00", "new")
@@ -96,8 +92,8 @@ def test_upsert_partitioned_prunes_untouched(spark, tmp_path):
     # untouched partitions: same files, same mtimes (never rewritten)
     assert untouched == {
         f: os.path.getmtime(f)
-        for f in glob.glob(f"{path}/part=*/*.parquet")
-        if f"part={tpart}" not in f
+        for f in glob.glob(f"{path}/bucket=*/*.parquet")
+        if f"bucket={tpart}" not in f
     }
 
 
@@ -105,5 +101,5 @@ def test_upsert_survives_empty_and_creates(spark, tmp_path):
     path = str(tmp_path / "fresh")
     empty = _with_part(_mkdf(spark, []))
     # empty batch on a missing table is a no-op, not an error
-    upsert_latest_partitioned(spark, path, empty, ["id"], "time", "part")
+    upsert_latest_partitioned(spark, path, empty)
     assert not os.path.exists(path)

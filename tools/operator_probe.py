@@ -81,12 +81,12 @@ def main() -> int:
     from etl_inreach_spark.operators.sampling import priority_sample
 
     t_ps, ps_rows = timed(
-        lambda: priority_sample(docs, "doc_id", "n_chars", 1000).count()
+        lambda: priority_sample(docs, 1000).count()
     )
     results["priority_sample"] = {"n_docs": n_doc, "k": 1000, "sec": t_ps, "rows": ps_rows}
 
     t_ns, ns_rows = timed(
-        lambda: negative_sample(docs, 4, group_cols=["source"]).count()
+        lambda: negative_sample(docs, 4).count()
     )
     results["negative_sample"] = {"n_docs": n_doc, "k": 4, "sec": t_ns, "pairs": ns_rows}
 

@@ -7,8 +7,9 @@ localCheckpoints, bounded collects, iterative rounds; a full capture at
 sf0.001 launches more than 500 stages), but its final action is never
 run: the plan is explained, not executed. The session is the library
 session (same confs as bench). The checkout root in each plan (file
-scan paths) is written as ``<repo>``, so captures from two checkouts of
-the same code compare equal.
+scan paths) is written as ``<repo>``, and the lakehouse queries'
+per-process fixture directory as ``<scratch>``, so captures from two
+checkouts or two runs of the same code compare equal.
 
 Usage:
   python tools/plan_capture.py --tag r11 --suffix before [sf_dir] [name ...]
@@ -25,6 +26,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+from etl_inreach_spark import queries_lakehouse  # noqa: E402
 from etl_inreach_spark.queries import all_queries  # noqa: E402
 from etl_inreach_spark.session import get_spark  # noqa: E402
 
@@ -58,6 +60,8 @@ def main() -> int:
             print(f"plan_capture: {name} FAILED: {e}", file=sys.stderr)
             continue
         path = os.path.join(out_dir, f"{name}_{args.suffix}.txt")
+        if queries_lakehouse._SCRATCH_ROOT is not None:
+            plan = plan.replace(queries_lakehouse._SCRATCH_ROOT, "<scratch>")
         with open(path, "w") as fh:
             fh.write(plan.replace(ROOT, "<repo>"))
         n_ok += 1

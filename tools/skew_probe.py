@@ -492,11 +492,11 @@ def _probe_fuzzy(spark, sf_dir: str, repl: int) -> dict:
 
     def capped(s, d):
         c = load_table(s, d, "customer").select("c_custkey", "c_name")
-        return edit1_pairs(c, "c_custkey", "c_name", max_bucket_rows=256)
+        return edit1_pairs(c, max_bucket_rows=256)
 
     def uncapped(s, d):
         c = load_table(s, d, "customer").select("c_custkey", "c_name")
-        return edit1_pairs(c, "c_custkey", "c_name")
+        return edit1_pairs(c)
 
     # auto-broadcast off, as at scale: the variant relation of a
     # 100 TB corpus cannot broadcast — the bucket self-join shuffles
