@@ -48,6 +48,22 @@ def test_simhash_finds_planted_dups(docs, exact_pairs):
     assert len(got) >= len(exact_pairs) * 0.5
 
 
+def test_simhash_portable_hash_variant(docs, exact_pairs):
+    """SimHash runs the 60-bit/4-band portable-hash configuration (the
+    oracled query): 15-bit bands, and on planted dups mostly the true
+    j>=0.8 pairs, decent recall, few false pairs."""
+    from etl_inreach_spark.operators.text_dedup import (
+        SIMHASH_BANDS,
+        SIMHASH_BITS,
+        simhash_pairs,
+    )
+
+    assert (SIMHASH_BITS, SIMHASH_BANDS) == (60, 4)
+    got = pairs(simhash_pairs(docs))
+    assert len(got & exact_pairs) >= len(exact_pairs) * 0.5
+    assert len(got - exact_pairs) <= max(5, len(exact_pairs) // 2)
+
+
 def test_kmv_estimate_close_to_exact(spark, sf_dir):
     from etl_inreach_spark.queries_relational import kmv_distinct_users
 
