@@ -66,20 +66,19 @@ ID_COL = "c_custkey"
 S_COL = "c_name"
 
 
-def _delete1(s: str) -> str:
-    """SQL fragment: ``s`` with the 1-based position in lambda variable
-    ``i`` deleted."""
-    return f"concat(substring({s}, 1, i - 1), substring({s}, i + 1, length({s}) - i))"
-
-
-def _delete2(s: str) -> str:
-    """SQL fragment: ``s`` with the 1-based positions in lambda variables
-    ``i`` < ``j`` both deleted."""
-    return (
-        f"concat(substring({s}, 1, i - 1), "
-        f"substring({s}, i + 1, j - i - 1), "
-        f"substring({s}, j + 1, length({s}) - j))"
-    )
+# SQL fragment: S_COL with the 1-based position in lambda variable ``i``
+# deleted.
+_DELETE1 = (
+    f"concat(substring({S_COL}, 1, i - 1), "
+    f"substring({S_COL}, i + 1, length({S_COL}) - i))"
+)
+# SQL fragment: S_COL with the 1-based positions in lambda variables
+# ``i`` < ``j`` both deleted.
+_DELETE2 = (
+    f"concat(substring({S_COL}, 1, i - 1), "
+    f"substring({S_COL}, i + 1, j - i - 1), "
+    f"substring({S_COL}, j + 1, length({S_COL}) - j))"
+)
 
 
 def deletion_variants(df: DataFrame, k: int = 1) -> DataFrame:
@@ -93,7 +92,7 @@ def deletion_variants(df: DataFrame, k: int = 1) -> DataFrame:
         raise ValueError(f"deletion_variants: k must be 1 or 2, got {k}")
     d1 = (
         f"transform(sequence(1, length({S_COL})), "
-        f"i -> {_delete1(S_COL)})"
+        f"i -> {_DELETE1})"
     )
     if k == 1:
         variants = F.expr(f"concat(array({S_COL}), {d1})")
@@ -105,7 +104,7 @@ def deletion_variants(df: DataFrame, k: int = 1) -> DataFrame:
             f"flatten(transform(sequence(1, length({S_COL})), i -> "
             f"case when i < length({S_COL}) then "
             f"transform(sequence(i + 1, length({S_COL})), "
-            f"j -> {_delete2(S_COL)}) "
+            f"j -> {_DELETE2}) "
             f"else array() end))"
         )
         variants = F.expr(f"concat(array({S_COL}), {d1}, {d2})")

@@ -76,15 +76,20 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Image resize stand-in: cycles the payload to width*height bytes —
-    deterministic, so the Arrow plumbing stays testable and
+# Side of resize_images' square output, in pixels.
+RESIZE_PX = 4
+
+
+def resize_stub(payload: bytes) -> bytes:
+    """Image resize stand-in: cycles the payload to RESIZE_PX * RESIZE_PX
+    bytes — deterministic, so the Arrow plumbing stays testable and
     oracle-checkable. A real resize (PIL: decode, grayscale, resize,
-    pixel buffer) keeps the same width*height output-size contract."""
+    pixel buffer) keeps the same output-size contract."""
+    size = RESIZE_PX * RESIZE_PX
     if not payload:
-        return b"\x00" * (width * height)
-    reps = (width * height + len(payload) - 1) // len(payload)
-    return (payload * reps)[: width * height]
+        return b"\x00" * size
+    reps = (size + len(payload) - 1) // len(payload)
+    return (payload * reps)[:size]
 
 
 # sample_frames: bytes per frame chunk, and keep every FRAME_STRIDE-th chunk.
@@ -125,10 +130,6 @@ def sample_frames(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(run, out_schema)
 
 
-# Side of resize_images' square output, in pixels.
-RESIZE_PX = 4
-
-
 def resize_images(df: DataFrame) -> DataFrame:
     """Batch ``RESIZE_PX`` x ``RESIZE_PX`` image resize over the
     ``media`` struct column — the same
@@ -145,9 +146,7 @@ def resize_images(df: DataFrame) -> DataFrame:
             resized = [
                 None
                 if m is None
-                else resize_stub(
-                    m["bytes"] if m["bytes"] is not None else b"", RESIZE_PX, RESIZE_PX
-                )
+                else resize_stub(m["bytes"] if m["bytes"] is not None else b"")
                 for m in media
             ]
             yield pd.DataFrame(

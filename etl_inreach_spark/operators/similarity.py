@@ -59,9 +59,9 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     return top.select("q_id", "vec_id", "rank", "cos")
 
 
-def _probe_buckets(bucket, num_planes: int):
-    """bucket plus all 1-bit-flip neighbors (multi-probe)."""
-    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(num_planes)])
+def _probe_buckets(bucket):
+    """bucket plus all LSH_PLANES 1-bit-flip neighbors (multi-probe)."""
+    return F.array(bucket, *[bucket.bitwiseXOR(F.lit(1 << i)) for i in range(LSH_PLANES)])
 
 
 # Portable-hash family shared by the oracle-able ANN variants below:
@@ -73,10 +73,10 @@ PORTABLE_B = 12345
 PORTABLE_M = (1 << 31) - 1
 
 
-def _rademacher_sign(plane: int, j: int, dim: int) -> float:
+def _rademacher_sign(plane: int, j: int) -> float:
     """Deterministic ±1 hyperplane entry for (plane, component j),
     j 1-based — the parity bit of the portable affine hash."""
-    return 1.0 if ((PORTABLE_A * (plane * dim + j) + PORTABLE_B) % PORTABLE_M) & 1 else -1.0
+    return 1.0 if ((PORTABLE_A * (plane * LSH_DIM + j) + PORTABLE_B) % PORTABLE_M) & 1 else -1.0
 
 
 # Embedding width and hyperplane count (2^4 buckets) of the portable
@@ -102,7 +102,7 @@ def portable_lsh_bucket(vec):
     bucket = F.lit(0)
     for p in range(LSH_PLANES):
         signs = F.array(
-            *[F.lit(_rademacher_sign(p, j, LSH_DIM)) for j in range(1, LSH_DIM + 1)]
+            *[F.lit(_rademacher_sign(p, j)) for j in range(1, LSH_DIM + 1)]
         )
         proj = F.aggregate(
             F.zip_with(vd, signs, lambda x, s: x * s),
@@ -148,7 +148,7 @@ def lsh_topk_portable(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     q_sig = queries.select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("_qvec"),
-        F.explode(_probe_buckets(b, LSH_PLANES)).alias("bucket"),
+        F.explode(_probe_buckets(b)).alias("bucket"),
     )
     cand = c_sig.join(F.broadcast(q_sig), on="bucket").filter(
         F.col("q_id") != F.col("vec_id")

@@ -366,13 +366,13 @@ def ngram_jaccard_pairs(
     return _verify_pairs(cand, sh, threshold)
 
 
-def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
-    """Deterministic universal-hash coefficients (a, b) in [1, p) x
-    [0, p) for the mod-(2^31-1) Carter-Wegman family."""
+def _minhash_coeffs() -> list[tuple[int, int]]:
+    """MINHASH_HASHES deterministic universal-hash coefficients (a, b)
+    in [1, p) x [0, p) for the mod-(2^31-1) Carter-Wegman family."""
     rng = random.Random(0x5EED)
     return [
         (rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31))
-        for _ in range(num_hashes)
+        for _ in range(MINHASH_HASHES)
     ]
 
 
@@ -398,7 +398,7 @@ def banded_minhash(sh: DataFrame) -> DataFrame:
             F.min((F.lit(a) * F.col("_hp") + F.lit(b)) % F.lit(MERSENNE31)).alias(
                 f"_m{i}"
             )
-            for i, (a, b) in enumerate(_minhash_coeffs(MINHASH_HASHES))
+            for i, (a, b) in enumerate(_minhash_coeffs())
         ]
     )
     return sig.select(
@@ -470,19 +470,19 @@ def minhash_lsh_pairs(df: DataFrame, shingle_k: int = 5) -> DataFrame:
     return _verify_pairs(cand, sh, MINHASH_THRESHOLD)
 
 
-def simhash_sketch(sh: DataFrame, bits: int = 64) -> DataFrame:
-    """(_id, _sim): ``bits``-bit SimHash per doc from the exploded
+def simhash_sketch(sh: DataFrame) -> DataFrame:
+    """(_id, _sim): SIMHASH_BITS-bit SimHash per doc from the exploded
     (doc, gram position, shingle_hash) multiset relation
-    (``shingles_exploded(..., distinct=False, keep_pos=True)``); ``bits``
-    must be a multiple of 4. bit b = 1 iff more shingle hashes have
-    bit b set than unset.
+    (``shingles_exploded(..., distinct=False, keep_pos=True)``);
+    SIMHASH_BITS is a multiple of 4. bit b = 1 iff more shingle hashes
+    have bit b set than unset.
 
-    Bit counting is LANE-PACKED: instead of ``bits`` conditional sums,
-    bits {b, b+W, b+2W, b+3W} (W = bits/4) are accumulated in four
-    W-bit lanes of ONE int64 sum — ``(h >>> b) & m`` with m selecting
-    every W-th bit — so the per-shingle work under the
-    map-side-combined groupBy is bits/4 shift+AND+adds (4x fewer agg
-    buffers and row ops; measured ~2x end-to-end on the 60-bit
+    Bit counting is LANE-PACKED: instead of SIMHASH_BITS conditional
+    sums, bits {b, b+W, b+2W, b+3W} (W = SIMHASH_BITS/4) are
+    accumulated in four W-bit lanes of ONE int64 sum — ``(h >>> b) & m``
+    with m selecting every W-th bit — so the per-shingle work under the
+    map-side-combined groupBy is SIMHASH_BITS/4 shift+AND+adds (4x fewer
+    agg buffers and row ops; measured ~2x end-to-end on the 60-bit
     sketch).
 
     A lane carries into its neighbor once a per-doc per-bit count
@@ -500,6 +500,7 @@ def simhash_sketch(sh: DataFrame, bits: int = 64) -> DataFrame:
 
     Post-aggregation, counts are majority-voted into the sketch on
     |docs| rows — negligible."""
+    bits = SIMHASH_BITS
     width = bits // 4
     lane_mask = sum(1 << (width * j) for j in range(4))
     part = (
@@ -574,8 +575,7 @@ def simhash_pairs(df: DataFrame) -> DataFrame:
             # positions feed the chunked lane aggregation, making the
             # sketch overflow-proof for arbitrarily long documents
             keep_pos=True,
-        ),
-        bits=SIMHASH_BITS,
+        )
     )
     banded = sk.select(
         "_id",

@@ -109,7 +109,7 @@ def _incremental_oracle() -> str:
     """
     ms = [
         f"min(({a} * h + {b}) % {MERSENNE31}) AS m{i}"
-        for i, (a, b) in enumerate(_minhash_coeffs(64))
+        for i, (a, b) in enumerate(_minhash_coeffs())
     ]
     agree = " + ".join(
         f"(CASE WHEN x.m{i} = y.m{i} THEN 1 ELSE 0 END)" for i in range(64)

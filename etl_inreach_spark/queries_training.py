@@ -252,7 +252,7 @@ def _bpe_oracle() -> str:
     back into symbols and zips adjacent slices, exactly the Spark
     side's zip_with; ties break on (pa, pb) binary string order in
     both engines."""
-    ctes = ",".join(_bpe_round_ctes(_BPE_MERGES))
+    ctes = ",".join(_bpe_round_ctes())
     return "WITH " + ctes + "\n    " + " UNION ALL ".join(
         f"SELECT {r} AS rank, pa AS \"left\", pb AS \"right\", "
         f"c AS weighted_count FROM b{r}"
@@ -260,10 +260,10 @@ def _bpe_oracle() -> str:
     )
 
 
-def _bpe_round_ctes(n: int) -> list[str]:
-    """The shared CTE chain: weighted vocab -> n rounds of
+def _bpe_round_ctes() -> list[str]:
+    """The shared CTE chain: weighted vocab -> _BPE_MERGES rounds of
     (pair counts p{r}, argmax b{r}, merged vocab v{r+1}). ``word``
-    rides through every v{r} so the final v{n} doubles as the
+    rides through every v{r} so the final v{_BPE_MERGES} doubles as the
     word -> segmentation dictionary for the inference oracle."""
     t = "chr(9)"
     parts = [
@@ -283,7 +283,7 @@ def _bpe_round_ctes(n: int) -> list[str]:
         FROM words
     )"""
     ]
-    for r in range(n):
+    for r in range(_BPE_MERGES):
         parts.append(f"""
     p{r} AS MATERIALIZED (
         SELECT pr[1] AS pa, pr[2] AS pb, CAST(sum(wc) AS BIGINT) AS c
@@ -349,7 +349,7 @@ def _bpe_segment_oracle() -> str:
     segmentation = tokenize each document in order, look every token
     up in that vocab, and splice the sub-symbol lists back together."""
     t = "chr(9)"
-    ctes = ",".join(_bpe_round_ctes(_BPE_MERGES))
+    ctes = ",".join(_bpe_round_ctes())
     return f"""WITH {ctes},
     dict AS MATERIALIZED (
         SELECT word,

@@ -62,7 +62,15 @@ BUILDER_ONLY_CONF: dict[str, str] = {
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    """SPARK_GRAFT_CPUS, else the CPUs this process may run on (its
+    affinity mask, which a container or taskset narrows below
+    ``os.cpu_count()``). Hosts without affinity masks (macOS, Windows)
+    fall back to ``os.cpu_count()``."""
+    if hasattr(os, "sched_getaffinity"):
+        usable = len(os.sched_getaffinity(0))
+    else:
+        usable = os.cpu_count() or 8
+    return int(os.environ.get("SPARK_GRAFT_CPUS", usable))
 
 
 def _default_driver_mem() -> str:

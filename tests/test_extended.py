@@ -173,8 +173,8 @@ def test_resize_stub_and_frame_sampler(spark):
         sample_frames,
     )
 
-    assert len(resize_stub(b"abc", 4, 4)) == 16
-    assert resize_stub(b"", 2, 2) == b"\x00" * 4
+    assert resize_stub(b"abc") == b"abc" * 5 + b"a"  # cycled to 4 x 4 bytes
+    assert resize_stub(b"") == b"\x00" * 16
 
     df = spark.createDataFrame(
         [(1, "a" * 70), (2, "")], "doc_id long, payload string"

@@ -6,7 +6,12 @@ import json
 
 import pytest
 
-from etl_inreach_spark.sources.http_kml import KMLFeedDataSource, build_feed_url
+from etl_inreach_spark.sources.http_kml import (
+    FETCH_THREADS,
+    KMLFeedDataSource,
+    build_feed_url,
+    fetch_shares,
+)
 from tests.test_kml_pipeline import GOOD_FEED
 
 
@@ -17,7 +22,7 @@ def feed_dir(tmp_path_factory):
     return d
 
 
-def test_reads_one_partition_per_share_with_error_isolation(spark, feed_dir):
+def test_reads_shares_in_one_chunk_with_error_isolation(spark, feed_dir):
     spark.dataSource.register(KMLFeedDataSource)
     shares = [{"share_id": "AAA"}, {"share_id": "MISSING"}]
     df = (
@@ -27,8 +32,11 @@ def test_reads_one_partition_per_share_with_error_isolation(spark, feed_dir):
         .option("lookback_minutes", "0")  # no d1 on file URLs
         .load()
     )
-    assert df.rdd.getNumPartitions() == 2  # one partition per share
-    rows = {r["share_id"]: r for r in df.collect()}
+    # fewer shares than FETCH_THREADS: both come out of a single partition
+    parts = df.rdd.glom().collect()
+    assert len(parts) == 1
+    rows = {r["share_id"]: r for r in parts[0]}
+    assert set(rows) == {"AAA", "MISSING"}
     assert rows["AAA"]["body"] == GOOD_FEED and rows["AAA"]["error"] is None
     # missing feed -> error row, job still succeeds (task.ts:165-168)
     assert rows["MISSING"]["body"] is None and rows["MISSING"]["error"]
@@ -73,6 +81,36 @@ def test_fetch_logs_each_request_and_failure(feed_dir, caplog):
     msgs = [r.getMessage() for r in caplog.records]
     assert msgs[:2] == ["ok - requesting AAA", "ok - requesting MISSING"]
     assert msgs[2].startswith("feed MISSING failed: ")
+
+
+@pytest.mark.parametrize("n", [0, 1, FETCH_THREADS, FETCH_THREADS + 1, 10_000])
+def test_partitions_are_bounded_contiguous_chunks(monkeypatch, n):
+    """min(parallelism, ceil(n / FETCH_THREADS)) chunks that hold every
+    share exactly once, in input order."""
+    from etl_inreach_spark.sources import http_kml
+
+    monkeypatch.setattr(http_kml, "default_parallelism", lambda: 4)
+    shares = [{"share_id": f"S{i}"} for i in range(n)]
+    reader = http_kml.KMLFeedReader({"shares": json.dumps(shares), "lookback_minutes": "0"})
+    chunks = [p.shares for p in reader.partitions()]
+    assert len(chunks) == min(4, -(-n // FETCH_THREADS))
+    assert [s for chunk in chunks for s in chunk] == shares
+    assert all(chunks)  # no empty chunk
+    assert max(map(len, chunks), default=0) - min(map(len, chunks), default=0) <= 1
+
+
+def test_fetch_shares_keeps_input_order_and_isolates_failures(tmp_path):
+    (tmp_path / "AAA").write_text(GOOD_FEED)
+    (tmp_path / "BBB").write_text("bbb")
+    # more shares than pool threads, a failing one between every good pair
+    shares = [{"share_id": s} for s in ("AAA", "MISSING", "BBB")] * (FETCH_THREADS + 1)
+    rows = list(fetch_shares(shares, f"file://{tmp_path}/", None))
+    assert [r[0] for r in rows] == [s["share_id"] for s in shares]
+    for share_id, body, error, _ in rows:
+        if share_id == "MISSING":
+            assert body is None and error
+        else:
+            assert body == (GOOD_FEED if share_id == "AAA" else "bbb") and error is None
 
 
 def test_d1_lookback_is_pushed_into_url():

@@ -22,7 +22,9 @@ values across its call sites (see ``single_valued_options``). A defaulted
 parameter counts its default wherever a call omits it. A required parameter
 is single-valued only when every call passes the same literal: a source text
 that ``ast.literal_eval`` accepts (a str, a number, or a tuple/list of them).
-Names, Column expressions, calls and ``*args``/``**kwargs`` are dynamic.
+A name counts as its literal when the calling module binds it exactly once,
+at module level, to an immutable literal (``SIMHASH_BITS = 60``); other
+names, Column expressions, calls and ``*args``/``**kwargs`` are dynamic.
 ``@query`` functions are skipped: ``(spark, sf_dir)`` is the driver contract.
 Production call sites decide whether a parameter has one value; test call
 sites add values only when that value is a number, which tests shrink to
@@ -193,25 +195,64 @@ def _is_number(text: str) -> bool:
     )
 
 
+def _constants(tree: ast.Module) -> dict[str, str]:
+    """Name -> literal source text for every name the module binds exactly
+    once, by a module-level assignment of a literal (``SIMHASH_BITS = 60``).
+    Any other binding of the name (a parameter, a local, an import, a
+    definition) makes it a variable, not a constant."""
+    binds: dict[str, int] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Load):
+            name = node.id
+        elif isinstance(node, ast.arg):
+            name = node.arg
+        elif isinstance(node, ast.alias):
+            name = node.asname or node.name.split(".")[0]
+        elif isinstance(node, (*_DEFS, ast.ExceptHandler)) and node.name:
+            name = node.name
+        else:
+            continue
+        binds[name] = binds.get(name, 0) + 1
+    out = {}
+    for stmt in tree.body:
+        names = _assigned_names(stmt)
+        if len(names) == 1 and binds[names[0]] == 1:
+            text = _literal(stmt.value)
+            mutable = (ast.List, ast.Dict, ast.Set)
+            if text is not None and not any(isinstance(n, mutable) for n in ast.walk(stmt.value)):
+                out[names[0]] = text
+    return out
+
+
 def _value(
-    call: ast.Call, positions: list[str], param: str, default: ast.expr | None
+    call: ast.Call,
+    positions: list[str],
+    param: str,
+    default: ast.expr | None,
+    consts: dict[str, str],
+    fn_consts: dict[str, str],
 ) -> str | None:
     """Source text of the value ``param`` takes at ``call``; None if dynamic:
-    a bare name, an argument that ``*args``/``**kwargs`` may supply, or a
-    non-literal passed to a required parameter."""
+    a bare name that is not a constant of the calling module (``consts``),
+    an argument that ``*args``/``**kwargs`` may supply, or a non-literal
+    passed to a required parameter. A constant counts as its literal, and
+    so does a default that names a constant of the function's own module
+    (``fn_consts``)."""
     passed = next((kw.value for kw in call.keywords if kw.arg == param), None)
     idx = positions.index(param) if param in positions else None
     star = next((i for i, a in enumerate(call.args) if isinstance(a, ast.Starred)), None)
     if passed is None and idx is not None and idx < len(call.args):
         passed = call.args[idx] if star is None or idx < star else None
     if passed is not None:
-        if default is None:
-            return _literal(passed)
-        return None if isinstance(passed, ast.Name) else ast.unparse(passed)
+        if isinstance(passed, ast.Name):
+            return consts.get(passed.id)
+        return _literal(passed) if default is None else ast.unparse(passed)
     if default is None or (idx is not None and star is not None):
         return None
     if any(kw.arg is None for kw in call.keywords):
         return None
+    if isinstance(default, ast.Name):
+        return fn_consts.get(default.id, ast.unparse(default))
     return ast.unparse(default)
 
 
@@ -227,15 +268,18 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
       value. Calls in ``TEST_CALLERS`` add values only when that value is a
       number (``_is_number``).
     * Value at a call: an omitted argument counts as the default's source
-      text, a passed one as its ``ast.unparse``; a bare name, ``*args`` or
-      ``**kwargs`` is dynamic and counts as distinct from every other value.
-      A required parameter's value is its argument's source text when that
-      is a literal (``ast.literal_eval`` accepts it), and dynamic otherwise.
+      text, a passed one as its ``ast.unparse``; a module constant
+      (``_constants``) counts as its literal; any other bare name, ``*args``
+      or ``**kwargs`` is dynamic and counts as distinct from every other
+      value. A required parameter's value is its argument's source text when
+      that is a literal (``ast.literal_eval`` accepts it) or a constant, and
+      dynamic otherwise.
     """
-    fns: dict[str, tuple[str, ast.FunctionDef]] = {}
+    fns: dict[str, tuple[str, ast.FunctionDef, dict[str, str]]] = {}
     counts: dict[str, int] = {}
     modules = _engine_modules()
     for rel, tree in modules:
+        consts = _constants(tree)
         for stmt in tree.body:
             if isinstance(stmt, _DEFS):
                 counts[stmt.name] = counts.get(stmt.name, 0) + 1
@@ -244,31 +288,38 @@ def single_valued_options() -> list[tuple[str, int, str, str, str]]:
                     and not _is_query(stmt)
                     and (rel, stmt.name) not in KEPT_REFERENCES
                 ):
-                    fns[stmt.name] = (rel, stmt)
+                    fns[stmt.name] = (rel, stmt, consts)
     sources = [(False, tree) for _, tree in modules]
     for is_test, patterns in ((False, CALLERS), (True, TEST_CALLERS)):
         for pattern in patterns:
             paths = sorted(glob.glob(os.path.join(REPO, pattern)))
             sources += [(is_test, _parse(path)) for path in paths]
-    calls: dict[str, list[ast.Call]] = {}
-    test_calls: dict[str, list[ast.Call]] = {}
+    # callee name -> [(call, constants of the calling module)]
+    calls: dict[str, list[tuple[ast.Call, dict[str, str]]]] = {}
+    test_calls: dict[str, list[tuple[ast.Call, dict[str, str]]]] = {}
     for is_test, tree in sources:
+        consts = _constants(tree)
         for node in ast.walk(tree):
             if isinstance(node, ast.Call) and _callee(node) in fns:
-                (test_calls if is_test else calls).setdefault(_callee(node), []).append(node)
+                site = (node, consts)
+                (test_calls if is_test else calls).setdefault(_callee(node), []).append(site)
 
     found = []
-    for name, (rel, fn) in sorted(fns.items()):
+    for name, (rel, fn, fn_consts) in sorted(fns.items()):
         if counts[name] > 1 or name not in calls:
             continue
         positions = [a.arg for a in fn.args.posonlyargs + fn.args.args]
         for param, default in _params(fn).items():
-            values = {_value(c, positions, param, default) for c in calls[name]}
+            values = {
+                _value(c, positions, param, default, consts, fn_consts)
+                for c, consts in calls[name]
+            }
             if len(values) != 1 or None in values:
                 continue
             value = values.pop()
             if _is_number(value) and any(
-                _value(c, positions, param, default) != value for c in test_calls.get(name, ())
+                _value(c, positions, param, default, consts, fn_consts) != value
+                for c, consts in test_calls.get(name, ())
             ):
                 continue
             found.append((rel, fn.lineno, name, param, value))

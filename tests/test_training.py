@@ -263,7 +263,7 @@ class TestSimhashLaneOverflow:
     def test_chunked_sketch_is_exact(self, spark):
         from etl_inreach_spark.operators import text_dedup as td
 
-        sk = td.simhash_sketch(self._sh(spark, keep_pos=True), bits=self.BITS)
+        sk = td.simhash_sketch(self._sh(spark, keep_pos=True))
         [row] = sk.collect()
         # all-identical shingles: majority vote reproduces the gram
         # hash itself (every set bit wins n-0, every unset bit 0-n)
@@ -296,7 +296,7 @@ class TestSimhashLaneOverflow:
             )
             for doc, hs in hashes.items()
         }
-        got = dict(map(tuple, td.simhash_sketch(sh, bits=self.BITS).collect()))
+        got = dict(map(tuple, td.simhash_sketch(sh).collect()))
         assert got == want and len(got) == 3
 
 
