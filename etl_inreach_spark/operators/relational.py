@@ -94,9 +94,9 @@ def asof_join(
         F.col("ts").alias("_ts"),
     )
     unioned = tagged_left.unionByName(tagged_right)
-    # Tie-break among right rows sharing a timestamp: order by the
-    # carried struct so `last` is deterministic (left rows have a NULL
-    # struct and are already separated by _side).
+    # (_ts, _side) needs no tie-break for `last` to be deterministic:
+    # right rows that tie on both carry equal structs (ts = _ts), and
+    # left rows carry a NULL struct that `last(ignorenulls)` skips.
     if direction not in ("backward", "forward"):
         raise ValueError(f"direction must be backward|forward, got {direction!r}")
     # forward = the same carry walked in reverse timeline order:
@@ -105,7 +105,7 @@ def asof_join(
     ts_order = F.col("_ts").asc() if direction == "backward" else F.col("_ts").desc()
     w = (
         Window.partitionBy("user_id")
-        .orderBy(ts_order, F.col("_side").asc(), F.col("_vals").asc_nulls_first())
+        .orderBy(ts_order, F.col("_side").asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = unioned.select(

@@ -58,6 +58,18 @@ BUILDER_ONLY_CONF: dict[str, str] = {
     # lane-packed sketch sums): successive heavy queries evicted each
     # other's classes and paid multi-second recompiles.
     "spark.sql.codegen.cache.maxEntries": "5000",
+    # DataFrame origin capture: with it on, every functions.* / Column
+    # call fetches the active session, reads the stack-trace depth conf,
+    # walks the Python stack and sets then clears the JVM's
+    # PySparkCurrentOrigin, so `F.col("a") == F.lit(1)` costs 27 py4j
+    # round trips instead of 7, and plan builds that unroll expression
+    # families pay it thousands of times. Off, a runtime error keeps its
+    # class and message but loses the Python call-site block; plans are
+    # unchanged (an origin is metadata `explain` does not print).
+    # PySpark reads it once per process (errors.utils.is_debugging_enabled
+    # caches the first answer), and sessions get_spark does not build
+    # keep the upstream default and the capture.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 

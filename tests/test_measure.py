@@ -28,6 +28,17 @@ def test_jobs_match_the_status_tracker(spark, sf_dir):
     assert 0.0 < rec["max_task_s"] <= rec["wall_s"] + rec["plan_s"]
 
 
+def test_py4j_calls_repeat_across_builds(spark, sf_dir):
+    from etl_inreach_spark.queries import all_queries
+
+    build = all_queries()["latest_per_key"]
+    first, second = (
+        m.measure(spark, f"test:py4j:{i}", lambda: build(spark, sf_dir))["py4j_calls"]
+        for i in range(2)
+    )
+    assert first == second > 0
+
+
 def test_cli_rejects_unknown_query_before_starting_a_session(monkeypatch, capsys):
     def no_session(*a, **k):
         raise AssertionError("session started")

@@ -5,7 +5,8 @@ reads its execution counters from Spark's in-process status store
 (``perfbench.metrics.StatusStore``: UI off, no network):
 
   build_s  ``build()``, including the eager jobs (localCheckpoint,
-           bounded collects) it runs; counted as ``build_jobs``
+           bounded collects) it runs; counted as ``build_jobs``, and
+           its py4j gateway commands as ``py4j_calls``
   plan_s   the built DataFrame's ``executedPlan`` (Catalyst)
   exec_s   a ``noop``-format write: the full distributed plan without
            a driver collect. Spark plans again per action, so
@@ -27,6 +28,7 @@ import sys
 import time
 import uuid
 from contextlib import contextmanager
+from types import SimpleNamespace
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -75,6 +77,38 @@ def _job_group(sc, group: str, description: str):
         sc.setLocalProperty("spark.job.description", None)
 
 
+# py4j's memory-detach command: finalizers send one whenever Python frees
+# a JavaObject, so counting them makes the total depend on when the
+# garbage collector runs.
+_DETACH = "m\nd\n"
+
+
+@contextmanager
+def py4j_calls(spark):
+    """Count the py4j gateway commands (JVM round trips) sent while the
+    block runs, leaving out memory-detach commands. Yields a namespace
+    whose ``n`` holds the count::
+
+        with py4j_calls(spark) as calls:
+            df = build()
+        calls.n
+    """
+    client = spark.sparkContext._gateway._gateway_client
+    calls = SimpleNamespace(n=0)
+    send = client.send_command
+
+    def counting(command, *args, **kwargs):
+        if not command.startswith(_DETACH):
+            calls.n += 1
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        yield calls
+    finally:
+        client.send_command = send
+
+
 def _max_task_s(spark, groups: list[str]) -> float:
     """Longest successful task of the groups' jobs (the status store's
     per-stage task summary at quantile 1.0)."""
@@ -106,7 +140,7 @@ def measure(spark, label: str, build) -> dict:
     store.mark()
     run = uuid.uuid4().hex[:8]
     groups = [f"{label}#{run}:build", f"{label}#{run}:exec"]
-    with _job_group(sc, groups[0], label):
+    with _job_group(sc, groups[0], label), py4j_calls(spark) as calls:
         t0 = time.monotonic()
         df = build()
         t1 = time.monotonic()
@@ -123,6 +157,7 @@ def measure(spark, label: str, build) -> dict:
         "exec_s": t3 - t2,
         "wall_s": t1 - t0 + t3 - t2,
         "build_jobs": b.jobs,
+        "py4j_calls": calls.n,
         "straggler_ratio": max(b.straggler_ratio, e.straggler_ratio),
         "max_task_s": _max_task_s(spark, groups),
     }
