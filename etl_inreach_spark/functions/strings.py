@@ -1,19 +1,19 @@
 """String transforms observed in the reference (SURVEY.md §2.1).
 
-All pure Column expressions — whole-stage-codegen friendly, no UDFs.
+Each helper takes SQL text and returns SQL text (functions/sql.py): pure
+built-in expressions — whole-stage-codegen friendly, no UDFs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from etl_inreach_spark.functions.sql import literal
 
 # Reference operator O2 (task.ts:70-74): a ShareId may arrive as a bare
 # id, as "https://<host>/<id>", or as "share.garmin.com/<id>".
 GARMIN_SHARE_BASE = "https://share.garmin.com/"
 
 
-def normalize_share_id(share_id: Column) -> Column:
+def normalize_share_id(share_id: str) -> str:
     """O2 — strip URL prefixes down to the bare share key.
 
     Two distinct branches, mirroring task.ts:71-74 exactly:
@@ -26,30 +26,30 @@ def normalize_share_id(share_id: Column) -> Column:
       SURVIVES in this branch.
     - anything else passes through unchanged.
     """
-    pathname = F.regexp_replace(
-        F.regexp_replace(share_id, r"^https://[^/?#]*", ""), r"[?#].*$", ""
+    host, tail = literal(r"^https://[^/?#]*"), literal(r"[?#].*$")
+    garmin = literal(r"^share\.garmin\.com/")
+    pathname = f"regexp_replace(regexp_replace({share_id}, {host}, ''), {tail}, '')"
+    return (
+        f"CASE WHEN startswith({share_id}, 'https://') "
+        f"THEN regexp_replace({pathname}, '^/', '') "
+        f"ELSE regexp_replace({share_id}, {garmin}, '') END"
     )
-    return F.when(
-        share_id.startswith("https://"), F.regexp_replace(pathname, r"^/", "")
-    ).otherwise(F.regexp_replace(share_id, r"^share\.garmin\.com/", ""))
 
 
-def default_fill(primary: Column, fallback: Column) -> Column:
+def default_fill(primary: str, fallback: str) -> str:
     """O3 (task.ts:75) — CallSign defaults to ShareId when absent.
 
     The reference tests JS falsiness (`if (!share.CallSign)`), so an
     EMPTY STRING falls back too, not just NULL."""
-    return F.when(
-        primary.isNull() | (primary == F.lit("")), fallback
-    ).otherwise(primary)
+    return f"CASE WHEN ({primary}) IS NULL OR ({primary}) = '' THEN {fallback} ELSE {primary} END"
 
 
-def share_link_url(share_id: Column) -> Column:
+def share_link_url(share_id: str) -> str:
     """Feature link URL (task.ts:128)."""
-    return F.concat(F.lit(GARMIN_SHARE_BASE), share_id)
+    return f"concat({literal(GARMIN_SHARE_BASE)}, {share_id})"
 
 
-def surrogate_key(imei: Column) -> Column:
+def surrogate_key(imei: str) -> str:
     """O13 (task.ts:114) — device-identity surrogate key.
 
     IMEI, not message Id (reference CHANGELOG.md:122-124, v3.7.3).
@@ -57,10 +57,10 @@ def surrogate_key(imei: Column) -> Column:
     string concat with undefined, task.ts:114) — NOT NULL, which would
     both vanish from the GeoJSON id field and collapse with every
     other NULL under a dedup key."""
-    return F.concat(F.lit("inreach-"), F.coalesce(imei, F.lit("undefined")))
+    return f"concat('inreach-', coalesce({imei}, 'undefined'))"
 
 
-def strip_unit(value: Column) -> Column:
+def strip_unit(value: str) -> str:
     """O14 (task.ts:119-120, ``.replace(/\\s.*/, '')``) — drop
     everything from the first whitespace: '"123.0 ° True"' ->
     '"123.0"'. Rendered as ``regexp_extract('^\\S*')`` — the leading
@@ -76,10 +76,11 @@ def strip_unit(value: Column) -> Column:
     the JS reference /\\s.*/ -> 'a\\nc'); the feed's coordinate/speed/
     course strings are single-line, so the divergence is unreachable
     on real data and the faster extract is kept."""
-    return F.regexp_extract(value, r"^\S*", 0)
+    leading_run = literal(r"^\S*")
+    return f"regexp_extract({value}, {leading_run}, 0)"
 
 
-def strip_unit_to_double(value: Column) -> Column:
+def strip_unit_to_double(value: str) -> str:
     """O14 + cast, with the reference's ``Number()`` semantics
     (task.ts:119-120): ``Number('') === 0``, so a value that is empty —
     or whitespace-only, which the unit strip reduces to empty — casts
@@ -87,6 +88,4 @@ def strip_unit_to_double(value: Column) -> Column:
     NULL via try_cast (the NaN analog; ANSI-safe), and NULL in -> NULL
     out (missing key, §2.3.6)."""
     stripped = strip_unit(value)
-    return F.when(stripped == F.lit(""), F.lit(0.0)).otherwise(
-        stripped.try_cast("double")
-    )
+    return f"CASE WHEN {stripped} = '' THEN {literal(0.0)} ELSE try_cast({stripped} AS DOUBLE) END"

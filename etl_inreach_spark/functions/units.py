@@ -1,9 +1,9 @@
-"""Unit and timestamp normalization (SURVEY.md §2.1 O15/O16)."""
+"""Unit and timestamp normalization (SURVEY.md §2.1 O15/O16). SQL text
+in, SQL text out (functions/sql.py)."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from etl_inreach_spark.functions.sql import literal
 
 # O15 (task.ts:120): the reference multiplies by the literal 0.277778,
 # NOT by 1000/3600 — the ~1e-7 difference matters for value-hash parity
@@ -15,15 +15,15 @@ KMH_TO_MS = 0.277778
 ISO_FMT = "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'"
 
 
-def kmh_to_ms(speed_kmh: Column) -> Column:
-    return speed_kmh * F.lit(KMH_TO_MS)
+def kmh_to_ms(speed_kmh: str) -> str:
+    return f"({speed_kmh}) * {literal(KMH_TO_MS)}"
 
 
-def to_iso8601(ts: Column) -> Column:
+def to_iso8601(ts: str) -> str:
     """O16 — render a timestamp as ISO-8601 (UTC, millisecond)."""
-    return F.date_format(ts, ISO_FMT)
+    return f"date_format({ts}, {literal(ISO_FMT)})"
 
 
-def parse_iso8601(s: Column) -> Column:
+def parse_iso8601(s: str) -> str:
     """O16 — parse ISO-8601; NULL (not job failure) on malformed."""
-    return F.try_to_timestamp(s, F.lit(ISO_FMT))
+    return f"try_to_timestamp({s}, {literal(ISO_FMT)})"

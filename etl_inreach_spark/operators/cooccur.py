@@ -156,11 +156,10 @@ def bigram_lm_score(docs: DataFrame) -> DataFrame:
     )
     scored = doc_big.join(model, ["w1", "w2"], "left").select(
         "doc_id",
-        F.when(F.col("w1").isNull(), F.lit(None)).otherwise(
-            F.coalesce(
-                F.expr(f"({_PPM}L * c_big) DIV c_pre"), F.lit(0).cast("bigint")
-            )
-        ).alias("p_ppm"),
+        # train-on-self: every non-null bigram finds its model row
+        F.when(F.col("w1").isNull(), F.lit(None))
+        .otherwise(F.expr(f"({_PPM}L * c_big) DIV c_pre"))
+        .alias("p_ppm"),
     )
     return (
         scored.groupBy("doc_id")

@@ -13,15 +13,14 @@ Exact semantics preserved (SURVEY.md §2.3.1-2):
     timestamped row.
 
 Scale notes:
-  * ``latest_by_key`` (default) renders the argmax as
+  * ``latest_by_key`` renders the argmax as
     ``max_by(struct(*), ordering_struct)`` — a hash aggregation with
     map-side partial aggregation, so the shuffle carries one row per
     (partition, key) instead of every row. This is the 100 TB path:
-    shuffle volume ~ |keys|, not |rows|.
-  * ``latest_by_key_window`` is the window rendering (full shuffle +
-    per-partition sort). Kept because it generalizes to top-k (k>1) and
-    because some callers want rank columns. Prefer the agg form for
-    k=1.
+    shuffle volume ~ |keys|, not |rows|. The window rendering (full
+    shuffle + per-partition sort) lives in tests/references.py, which
+    checks the aggregation against it; ``topk_by_key`` is the window
+    form for k>1.
 """
 
 from __future__ import annotations
@@ -31,26 +30,23 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-def EPOCH0() -> Column:
-    """Epoch-0 stand-in for NULL event times ("time ?? 0", task.ts:154).
+from etl_inreach_spark.functions.sql import ident
 
-    A function, not a module constant: classic Column objects need an
-    active SparkContext, which doesn't exist at import time.
-    """
-    return F.to_timestamp(F.lit("1970-01-01 00:00:00"))
+# Epoch-0 stand-in for NULL event times ("time ?? 0", task.ts:154).
+EPOCH0 = "to_timestamp('1970-01-01 00:00:00')"
 
 
-def _ordering_struct(ts_col: str, arrival_col: str | None) -> Column:
+def _ordering_struct(ts_col: str, arrival_col: str | None) -> str:
     """Struct whose lexicographic MAX is the row the reference keeps.
 
     Timestamp ascending-max picks the latest; on ties, the smallest
     arrival index must win, so arrival enters NEGATED (max of -arrival
     = min arrival = first seen).
     """
-    ts = F.coalesce(F.col(ts_col), EPOCH0())
+    ts = f"coalesce({ident(ts_col)}, {EPOCH0}) AS ts"
     if arrival_col is None:
-        return F.struct(ts.alias("ts"))
-    return F.struct(ts.alias("ts"), (-F.col(arrival_col)).alias("neg_arrival"))
+        return f"struct({ts})"
+    return f"struct({ts}, -{ident(arrival_col)} AS neg_arrival)"
 
 
 def latest_by_key(
@@ -64,28 +60,11 @@ def latest_by_key(
     Aggregation rendering: partial-agg friendly, one shuffle keyed on
     ``key_cols`` carrying ~|keys| rows after map-side combine.
     """
-    cols = df.columns
-    picked = F.max_by(F.struct(*[F.col(c) for c in cols]), _ordering_struct(ts_col, arrival_col))
-    out = df.groupBy(*[F.col(k) for k in key_cols]).agg(picked.alias("_row"))
-    return out.select(*[F.col(f"_row.{c}").alias(c) for c in cols])
-
-
-def latest_by_key_window(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    arrival_col: str | None = None,
-) -> DataFrame:
-    """Window rendering of the same semantics (row_number == 1)."""
-    order = [F.coalesce(F.col(ts_col), EPOCH0()).desc()]
-    if arrival_col is not None:
-        order.append(F.col(arrival_col).asc())
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    cols = [ident(c) for c in df.columns]
+    row = f"struct({', '.join(cols)})"
+    picked = f"max_by({row}, {_ordering_struct(ts_col, arrival_col)}) AS _row"
+    out = df.groupBy(*key_cols).agg(F.expr(picked))
+    return out.selectExpr(*[f"_row.{c} AS {c}" for c in cols])
 
 
 def topk_by_key(

@@ -21,9 +21,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = "struct<uri:string,mime:string,bytes:binary,meta:map<string,string>>"
-
-
 def media_struct(uri: Column, mime: Column, data: Column, meta: Column | None = None) -> Column:
     meta_col = meta if meta is not None else F.create_map().cast("map<string,string>")
     return F.struct(

@@ -15,7 +15,7 @@ classic repeated-squaring bit-extraction method (normalize x into
 emitting one fraction bit per squaring). Every step is int64
 arithmetic, so the result — within one grid ulp of the true
 floor(log2(x) * 2^20), and THE SPEC by definition — is identical in
-Spark, DuckDB, and the Python replica, and the per-document score is
+Spark, DuckDB, and the Python replica (tests/references.py), and the per-document score is
 a SUM OF BIGINTS: exact, order-insensitive, partition-invariant.
 
 Model:  w(t) = ilog2((c1(t)+1) * (N0+V)) - ilog2((c0(t)+1) * (N1+V))
@@ -63,24 +63,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 ILOG2_FRAC_BITS = 20
-
-
-def ilog2_fp_py(x: int, frac_bits: int = ILOG2_FRAC_BITS) -> int:
-    """Python replica of the fixed-point log2 (the executable spec)."""
-    if x < 1:
-        raise ValueError("ilog2_fp requires x >= 1")
-    g = 1 << frac_bits
-    m = x.bit_length() - 1
-    y = x << (frac_bits - m) if m <= frac_bits else x >> (m - frac_bits)
-    a = 0
-    for _ in range(frac_bits):
-        y = (y * y) >> frac_bits
-        if y >= 2 * g:
-            a = a * 2 + 1
-            y >>= 1
-        else:
-            a = a * 2
-    return m * g + a
 
 
 def with_ilog2_fp(df: DataFrame, x_col: str, out_col: str) -> DataFrame:

@@ -16,7 +16,7 @@ satisfy — the same pattern that oracle-gated the CMS monoid via
   equal the plain shuffled join (oracle = the plain join);
 * ``compaction_roundtrip_orders`` — OPTIMIZE-style compaction must be
   content-invariant and hit its computed output-file count;
-* ``binary_media_metadata`` — the binaryFile MEDIA_SCHEMA scan's
+* ``binary_media_metadata`` — the binaryFile media-struct scan's
   metadata/content against DuckDB's ``read_blob`` over the same
   committed fixture directory.
 
@@ -488,7 +488,7 @@ def binary_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_blob + decode() md5 hashes the identical bytes Spark's
     binary md5 sees — a straight BLOB->VARCHAR cast would hash the
     ESCAPED rendering, e.g. newline as the four characters \\x0A) and emit name/length/inferred-mime/content checksum.
-    Pins the MEDIA_SCHEMA plumbing's observable contract — the scan
+    Pins the media-struct plumbing's observable contract — the scan
     distributes (one InputPartition batch per file group, no driver
     directory walk), mime inference is the deterministic extension
     map, and `length` comes from file status. The mtime column is

@@ -111,13 +111,13 @@ def share_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("c_mktsegment"))
         .alias("callsign_raw"),
     )
-    share = normalize_share_id(F.col("share_id_raw"))
-    return raw.select(
+    share = normalize_share_id("share_id_raw")
+    return raw.selectExpr(
         "c_custkey",
-        share.alias("share_id"),
-        default_fill(F.col("callsign_raw"), share).alias("callsign"),
-        surrogate_key(share).alias("feature_id"),
-        share_link_url(share).alias("link_url"),
+        f"{share} AS share_id",
+        f"{default_fill('callsign_raw', share)} AS callsign",
+        f"{surrogate_key(share)} AS feature_id",
+        f"{share_link_url(share)} AS link_url",
     )
 
 
@@ -177,18 +177,18 @@ def unit_strip_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (not the expression) keeps the regex strip evaluated once —
     # inlining the shared strip expression into both consumers
     # measured ~2x slower at sf0.1
-    staged = raw.select(
+    staged = raw.selectExpr(
         "l_orderkey",
         "l_linenumber",
-        strip_unit_to_double(F.col("course_raw")).alias("course"),
-        strip_unit_to_double(F.col("velocity_raw")).alias("speed_kmh"),
+        f"{strip_unit_to_double('course_raw')} AS course",
+        f"{strip_unit_to_double('velocity_raw')} AS speed_kmh",
     )
-    return staged.select(
+    return staged.selectExpr(
         "l_orderkey",
         "l_linenumber",
         "course",
         "speed_kmh",
-        kmh_to_ms(F.col("speed_kmh")).alias("speed_ms"),
+        f"{kmh_to_ms('speed_kmh')} AS speed_ms",
     )
 
 
@@ -230,13 +230,13 @@ def split_coordinates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.lit("")),
         ).alias("coords_csv"),
     )
-    arr = split_coordinates(F.col("coords_csv"))
-    return raw.select(
+    arr = split_coordinates("coords_csv")
+    return raw.selectExpr(
         "l_orderkey",
         "l_linenumber",
-        coord(arr, 1).alias("lon"),
-        coord(arr, 2).alias("lat"),
-        coord(arr, 3).alias("alt"),
+        f"{coord(arr, 1)} AS lon",
+        f"{coord(arr, 2)} AS lat",
+        f"{coord(arr, 3)} AS alt",
     )
 
 
@@ -260,18 +260,17 @@ def eav_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.functions.nested import eav_to_map, map_get
 
     li = load_table(spark, sf_dir, "lineitem")
-    entries = F.array(
-        F.struct(F.lit("part").alias("name"), F.col("l_partkey").cast("string").alias("value")),
-        F.struct(F.lit("supp").alias("name"), F.col("l_suppkey").cast("string").alias("value")),
+    m = eav_to_map(
+        "array(named_struct('name', 'part', 'value', CAST(l_partkey AS STRING)),"
+        " named_struct('name', 'supp', 'value', CAST(l_suppkey AS STRING)))"
     )
-    m = eav_to_map(entries)
-    return li.select(
+    return li.selectExpr(
         "l_orderkey",
         "l_linenumber",
-        map_get(m, "part").alias("part_s"),
-        map_get(m, "supp").alias("supp_s"),
-        map_get(m, "part").try_cast("bigint").alias("part_n"),
-        map_get(m, "nope").alias("missing_key"),
+        f"{map_get(m, 'part')} AS part_s",
+        f"{map_get(m, 'supp')} AS supp_s",
+        f"try_cast({map_get(m, 'part')} AS BIGINT) AS part_n",
+        f"{map_get(m, 'nope')} AS missing_key",
     )
 
 
@@ -313,12 +312,8 @@ def timestamp_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_inreach_spark.functions.units import parse_iso8601, to_iso8601
 
     ev = load_table(spark, sf_dir, "events")
-    iso = to_iso8601(F.col("ts"))
-    return ev.select(
-        "event_id",
-        iso.alias("iso"),
-        parse_iso8601(iso).alias("parsed_back"),
-    )
+    iso = to_iso8601("ts")
+    return ev.selectExpr("event_id", f"{iso} AS iso", f"{parse_iso8601(iso)} AS parsed_back")
 
 
 @query(

@@ -10,66 +10,72 @@ batch per partition instead of collecting everything to one node.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable, Iterator
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
-from etl_inreach_spark.functions.nested import feature_struct, point_geometry
 from etl_inreach_spark.functions.units import to_iso8601
 
 
-def _drop_null_fields(c: Column) -> Column:
-    # GeoJSON omits absent optional properties (TS `undefined` keys
-    # simply don't serialize); to_json(ignoreNullFields=true) matches.
-    return F.to_json(c, {"ignoreNullFields": "true"})
+def _named_struct(**fields: str) -> str:
+    return "named_struct(" + ", ".join(f"'{k}', {v}" for k, v in fields.items()) + ")"
 
 
 def features_to_json(features: DataFrame) -> DataFrame:
     """Flat silver feature rows -> (id, feature_json string).
 
     Mirrors the reference's Feature shape (task.ts:115-149): properties
-    incl. the links array and metadata struct, Point geometry.
+    incl. the links array and metadata struct, Point geometry. GeoJSON
+    omits absent optional properties (TS ``undefined`` keys simply don't
+    serialize); ``to_json`` with ``ignoreNullFields`` matches.
     """
-    metadata = F.struct(
-        F.col("inreach_id").alias("inreachId"),
-        F.col("inreach_name").alias("inreachName"),
-        F.col("inreach_device_type").alias("inreachDeviceType"),
-        F.col("inreach_imei").alias("inreachIMEI"),
-        F.col("inreach_incident_id").alias("inreachIncidentId"),
-        F.col("inreach_valid_fix").alias("inreachValidFix"),
-        F.col("inreach_text").alias("inreachText"),
-        F.col("inreach_event").alias("inreachEvent"),
-        F.col("inreach_device_id").alias("inreachDeviceId"),
-        to_iso8601(F.col("inreach_receive")).alias("inreachReceive"),
+    metadata = _named_struct(
+        inreachId="inreach_id",
+        inreachName="inreach_name",
+        inreachDeviceType="inreach_device_type",
+        inreachIMEI="inreach_imei",
+        inreachIncidentId="inreach_incident_id",
+        inreachValidFix="inreach_valid_fix",
+        inreachText="inreach_text",
+        inreachEvent="inreach_event",
+        inreachDeviceId="inreach_device_id",
+        inreachReceive=to_iso8601("inreach_receive"),
     )
-    links = F.array(
-        F.struct(
-            # the self-link uid is the FEATURE's own id ('inreach-<IMEI>',
-            # task.ts:114,125: `uid: id`), not the inReach message id
-            F.col("id").alias("uid"),
-            F.lit("r-u").alias("relation"),
-            F.lit("text/html").alias("mime"),
-            F.col("link_url").alias("url"),
-            F.lit("Garmin Portal").alias("remarks"),  # task.ts:129
-        )
+    # the self-link uid is the FEATURE's own id ('inreach-<IMEI>',
+    # task.ts:114,125: `uid: id`), not the inReach message id
+    link = _named_struct(
+        uid="id",
+        relation="'r-u'",
+        mime="'text/html'",
+        url="link_url",
+        remarks="'Garmin Portal'",  # task.ts:129
     )
-    properties = F.struct(
-        F.col("callsign").alias("callsign"),
-        F.col("course"),
-        F.col("speed"),
-        to_iso8601(F.col("time")).alias("time"),
-        to_iso8601(F.col("start")).alias("start"),
-        links.alias("links"),
-        metadata.alias("metadata"),
+    properties = _named_struct(
+        callsign="callsign",
+        course="course",
+        speed="speed",
+        time=to_iso8601("time"),
+        start=to_iso8601("start"),
+        links=f"array({link})",
+        metadata=metadata,
     )
-    feature = feature_struct(
-        F.col("id"),
-        properties,
-        point_geometry(F.col("lon"), F.col("lat")),
+    # Point geometry (task.ts:145-148). Coordinates are POSITIONAL: a
+    # malformed lon/lat stays NULL in its slot (the reference emits NaN
+    # -> JSON null there), never filtered out, which would shift latitude
+    # into the longitude slot. The reference parseFloat-maps EVERY CSV
+    # component (task.ts:105-107), so a 3-component string whose third
+    # part fails to parse yields [lon, lat, null]; the altitude slot is
+    # absent only when the string had fewer than 3 components
+    # (``n_coords``). Components beyond the third are not represented in
+    # the flat feature table.
+    geometry = _named_struct(
+        type="'Point'",
+        coordinates="CASE WHEN n_coords >= 3 THEN array(lon, lat, alt) ELSE array(lon, lat) END",
     )
-    return features.select(F.col("id"), _drop_null_fields(feature).alias("feature_json"))
+    feature = _named_struct(id="id", type="'Feature'", properties=properties, geometry=geometry)
+    return features.selectExpr(
+        "id", f"to_json({feature}, map('ignoreNullFields', 'true')) AS feature_json"
+    )
 
 
 def post_feature_collections(
@@ -106,11 +112,3 @@ def post_feature_collections(
 
     features_json.foreachPartition(send)
     return count.value
-
-
-def parse_feature_collection(doc: str) -> list[dict]:
-    """Test helper: FeatureCollection JSON -> list of feature dicts."""
-    parsed = json.loads(doc)
-    if parsed["type"] != "FeatureCollection":
-        raise ValueError(f"not a FeatureCollection: {parsed['type']!r}")
-    return parsed["features"]

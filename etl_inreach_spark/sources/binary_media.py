@@ -1,6 +1,6 @@
 """Raw-media ingestion via Spark's built-in ``binaryFile`` source:
 directory-of-blobs -> the engine's media-struct convention
-(operators/multimodal.MEDIA_SCHEMA) in one declarative read.
+(operators/multimodal.media_struct) in one declarative read.
 
 Spark-first rationale: ``binaryFile`` is a real FileFormat — its scan
 distributes over executors, honors partition discovery, and exposes file
@@ -54,7 +54,7 @@ _EXT_MIME = {
 def read_binary_media(spark: SparkSession, path: str) -> DataFrame:
     """Load the top-level files of a directory of media blobs as
     ``(doc_id bigint, path string, length bigint, modified timestamp,
-    media MEDIA_SCHEMA)``.
+    media struct<uri, mime, bytes, meta>)``.
 
     ``doc_id`` is ``xxhash64(path)`` — stable across re-ingests and
     partitionings, joinable against downstream feature/embedding

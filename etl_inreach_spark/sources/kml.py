@@ -31,10 +31,12 @@ tests/test_kml_pipeline.py::test_js_date_grammar_parity).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame
 
 from etl_inreach_spark.functions.nested import eav_to_map
+from etl_inreach_spark.functions.sql import ident, literal
 
 # Access-path schema, mirroring exactly what the reference reads
 # (task.ts:98-111). xml2js wraps every element in an array; in Spark a
@@ -50,11 +52,6 @@ KML_SCHEMA = (
     "ExtendedData: struct<Data: array<struct<_name: string, value: string>>>"
     ">>>>>>"
 )
-
-def parse_kml(body: Column) -> Column:
-    """XML text -> nested KML struct; NULL on malformed input."""
-    return F.from_xml(body, KML_SCHEMA)
-
 
 # Non-ISO shapes JS `new Date()` accepts that Spark's default
 # try_to_timestamp grammar does not (task.ts:122-123 parity). Parsed
@@ -87,7 +84,7 @@ _RFC_NO_WEEKDAY_PATTERNS = (
 )
 
 
-def js_try_to_timestamp(s: Column) -> Column:
+def js_try_to_timestamp(s: str) -> str:
     """``new Date()``-grammar timestamp parse: ISO-8601 first (the
     shape Garmin actually emits — stays the cheap common path), then
     the JS-accepted non-ISO fallbacks, then RFC-2822 with its weekday
@@ -95,15 +92,17 @@ def js_try_to_timestamp(s: Column) -> Column:
     NULL when nothing matches — the Invalid Date analog. The fallback
     chain is pure codegen scalar expressions; coalesce stops at the
     first hit so well-formed feeds never pay for the long tail."""
-    rfc = F.regexp_replace(s, r"^[A-Za-z]{3},\s*", "")
-    return F.coalesce(
-        F.try_to_timestamp(s),
-        *[F.try_to_timestamp(s, F.lit(p)) for p in JS_EXTRA_TS_PATTERNS],
-        *[F.try_to_timestamp(rfc, F.lit(p)) for p in _RFC_NO_WEEKDAY_PATTERNS],
-    )
+    weekday = literal(r"^[A-Za-z]{3},\s*")
+    rfc = f"regexp_replace({s}, {weekday}, '')"
+    tries = [
+        f"try_to_timestamp({s})",
+        *[f"try_to_timestamp({s}, {literal(p)})" for p in JS_EXTRA_TS_PATTERNS],
+        *[f"try_to_timestamp({rfc}, {literal(p)})" for p in _RFC_NO_WEEKDAY_PATTERNS],
+    ]
+    return f"coalesce({', '.join(tries)})"
 
 
-def placemark_feed_error(placemarks_arr: Column) -> Column:
+def placemark_feed_error(placemarks_arr: str) -> str:
     """TRUE when any Point-bearing placemark in the feed's placemark
     array would throw inside the reference's per-share closure and so
     drop the WHOLE feed (task.ts:103-142, isolation task.ts:165-168):
@@ -120,26 +119,24 @@ def placemark_feed_error(placemarks_arr: Column) -> Column:
     Pure column expressions over the nested array (exists/HOF) — no
     UDF; runs pre-explode so the verdict is per-feed by construction.
     """
+    data = "p.ExtendedData.Data"
 
-    def throws(p: Column) -> Column:
-        data = p["ExtendedData"]["Data"]
+    def lacks_key(k: str) -> str:
+        return f"NOT coalesce(exists({data}, d -> d._name = {literal(k)}), false)"
 
-        def has_key(k: str) -> Column:
-            return F.coalesce(
-                F.exists(data, lambda d: d["_name"] == F.lit(k)), F.lit(False)
-            )
-
-        when_s = p["TimeStamp"]["when"]
-        return p["Point"].isNotNull() & (
-            p["Point"]["coordinates"].isNull()
-            | data.isNull()
-            | ~has_key("Course")
-            | ~has_key("Velocity")
-            | when_s.isNull()
-            | js_try_to_timestamp(when_s).isNull()
-        )
-
-    return F.coalesce(F.exists(placemarks_arr, throws), F.lit(False))
+    when_s = f"p.TimeStamp.{ident('when')}"
+    checks = [
+        "p.Point.coordinates IS NULL",
+        f"{data} IS NULL",
+        lacks_key("Course"),
+        lacks_key("Velocity"),
+        f"{when_s} IS NULL",
+        f"{js_try_to_timestamp(when_s)} IS NULL",
+    ]
+    # parenthesized left-deep, as `a | b | c` builds it: the SQL parser
+    # would balance a bare OR chain into a different tree
+    any_check = reduce(lambda acc, c: f"({acc} OR {c})", checks)
+    return f"coalesce(exists({placemarks_arr}, p -> p.Point IS NOT NULL AND {any_check}), false)"
 
 
 def kml_to_placemarks(feeds: DataFrame) -> DataFrame:
@@ -175,22 +172,18 @@ def kml_to_placemarks(feeds: DataFrame) -> DataFrame:
     pipeline where a per-feed window verdict would be unsupported.
     Pinned by tests/test_kml_pipeline.py::test_single_xml_parse_in_plan.
     """
-    nonempty = feeds.filter(F.trim(F.col("body")) != "")
-
-    def validated_placemarks(kml: Column) -> Column:
-        # first folder only (Document[0].Folder[0], task.ts:101);
-        # missing Folder -> NULL array -> no feed error, no rows
-        pm_arr = F.try_element_at(kml["Document"]["Folder"], F.lit(1))["Placemark"]
-        return F.when(
-            kml["Document"].isNotNull() & ~placemark_feed_error(pm_arr), pm_arr
-        )
-
-    staged = nonempty.select(
-        F.col("share_id"),
-        F.element_at(
-            F.transform(F.array(parse_kml(F.col("body"))), validated_placemarks),
-            1,
-        ).alias("_pms"),
+    nonempty = feeds.filter("trim(body) != ''")
+    # first folder only (Document[0].Folder[0], task.ts:101); missing
+    # Folder -> NULL array -> no feed error, no rows
+    pm_arr = "try_element_at(kml.Document.Folder, 1).Placemark"
+    validated = (
+        f"CASE WHEN kml.Document IS NOT NULL AND NOT {placemark_feed_error(pm_arr)}"
+        f" THEN {pm_arr} END"
+    )
+    parsed = f"from_xml(body, {literal(KML_SCHEMA)})"
+    staged = nonempty.selectExpr(
+        "share_id",
+        f"element_at(transform(array({parsed}), kml -> {validated}), 1) AS _pms",
     )
     # OUTER explode + post-filter, not plain posexplode: for the
     # non-outer form InferFiltersFromGenerate infers `size(_pms) > 0`
@@ -198,14 +191,13 @@ def kml_to_placemarks(feeds: DataFrame) -> DataFrame:
     # the Filter. The outer generate admits no such inference; the
     # null-row filter below reads only GENERATED columns, so it cannot
     # be pushed past the parse.
-    placemarks = staged.select(
-        F.col("share_id"),
-        F.posexplode_outer(F.col("_pms")).alias("arrival_idx", "_pm"),
-    ).filter(F.col("arrival_idx").isNotNull())
-    return placemarks.select(
-        F.col("share_id"),
-        F.col("arrival_idx").cast("long").alias("arrival_idx"),
-        F.col("_pm.Point.coordinates").alias("point_coordinates"),
-        F.col("_pm.TimeStamp.when").alias("timestamp_when"),
-        eav_to_map(F.col("_pm.ExtendedData.Data"), "_name").alias("extended"),
+    placemarks = staged.selectExpr(
+        "share_id", "posexplode_outer(_pms) AS (arrival_idx, _pm)"
+    ).filter("arrival_idx IS NOT NULL")
+    return placemarks.selectExpr(
+        "share_id",
+        "CAST(arrival_idx AS BIGINT) AS arrival_idx",
+        "_pm.Point.coordinates AS point_coordinates",
+        f"_pm.TimeStamp.{ident('when')} AS timestamp_when",
+        f"{eav_to_map('_pm.ExtendedData.Data', '_name')} AS extended",
     )

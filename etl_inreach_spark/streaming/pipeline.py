@@ -11,6 +11,7 @@ per run, so re-fetched overlap is re-submitted). The streaming analog:
   -> dropDuplicatesWithinWatermark(id)   <- STRONGER than reference:
                                             cross-batch exactly-once
                                             per device in-watermark
+  -> static config join (callsign)       <- closure capture
   -> foreachBatch(POST FeatureCollection) <- this.submit(fc)
 
 Per SURVEY.md §2.2 (streaming rows), cross-batch dedup deliberately
@@ -22,8 +23,9 @@ monotonically-arriving position feed is the same device set with
 at-most-once emission per watermark period.
 
 Every transform below is the SAME code path the batch plan uses
-(plans/inreach.py) — narrow projections work identically on streaming
-DataFrames; only the dedup stage differs. The sink is the batch one,
+(plans/inreach.py), in the same order — projection, dedup, then the
+config join; narrow projections work identically on streaming
+DataFrames, and only the dedup stage differs. The sink is the batch one,
 applied per micro-batch: ``writeStream.foreachBatch`` over
 ``sinks/geojson.features_to_json`` and ``post_feature_collections``.
 """
@@ -31,10 +33,9 @@ applied per micro-batch: ``writeStream.foreachBatch`` over
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from etl_inreach_spark.plans.inreach import normalize_shares, placemarks_to_features
+from etl_inreach_spark.plans.inreach import attach_config, normalize_shares, project_features
 from etl_inreach_spark.sources.kml import kml_to_placemarks
 
 
@@ -54,14 +55,13 @@ def stream_features(feeds: DataFrame, shares: DataFrame) -> DataFrame:
     participate in watermarking and are dropped here (the batch path
     keeps them as epoch-0; SURVEY.md §2.3.2 — documented divergence).
     """
-    cfg = normalize_shares(shares)
-    placemarks = kml_to_placemarks(feeds)
-    features = placemarks_to_features(placemarks, cfg)
-    return (
-        features.filter(F.col("time").isNotNull())
+    deduped = (
+        project_features(kml_to_placemarks(feeds))
+        .filter("time IS NOT NULL")
         .withWatermark("time", WATERMARK_DELAY)
         .dropDuplicatesWithinWatermark(["id"])
     )
+    return attach_config(deduped, normalize_shares(shares))
 
 
 def run_once(writer: DataStreamWriter) -> StreamingQuery:

@@ -22,8 +22,8 @@ def media_dir(tmp_path):
 
 
 def test_read_binary_media_schema_and_mime(spark, media_dir):
-    from etl_inreach_spark.operators.multimodal import MEDIA_SCHEMA
     from etl_inreach_spark.sources.binary_media import read_binary_media
+    from tests.references import MEDIA_SCHEMA
 
     df = read_binary_media(spark, media_dir)
     assert df.schema["media"].dataType.simpleString() == MEDIA_SCHEMA

@@ -8,11 +8,8 @@ import datetime as dt
 import pytest
 from pyspark.sql import Row
 
-from etl_inreach_spark.operators.dedup import (
-    latest_by_key,
-    latest_by_key_window,
-    topk_by_key,
-)
+from etl_inreach_spark.operators.dedup import latest_by_key, topk_by_key
+from tests.references import latest_by_key_window
 
 T0 = dt.datetime(2024, 1, 1, 12, 0, 0)
 

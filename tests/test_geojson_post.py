@@ -7,7 +7,8 @@ import json
 import os
 import uuid
 
-from etl_inreach_spark.sinks.geojson import parse_feature_collection, post_feature_collections
+from etl_inreach_spark.sinks.geojson import post_feature_collections
+from tests.references import parse_feature_collection
 
 
 def test_post_batches_one_partition(spark, tmp_path):

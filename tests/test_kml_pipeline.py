@@ -258,7 +258,8 @@ def test_callsign_defaults_to_share_id(spark):
 
 def test_geojson_sink_shape(spark):
     from etl_inreach_spark.plans.inreach import inreach_pipeline
-    from etl_inreach_spark.sinks.geojson import features_to_json, parse_feature_collection
+    from etl_inreach_spark.sinks.geojson import features_to_json
+    from tests.references import parse_feature_collection
 
     shares = spark.createDataFrame(SHARES, "share_id string, callsign string, password string")
     feeds = spark.createDataFrame(FEEDS, "share_id string, body string")
@@ -300,3 +301,62 @@ def test_single_xml_parse_in_plan(spark):
     )
     plan = kml_to_placemarks(feeds)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("from_xml") == 1, plan
+
+
+def _fixture_frames(spark, shares=SHARES, feeds=FEEDS):
+    return (
+        spark.createDataFrame(shares, "share_id string, callsign string, password string"),
+        spark.createDataFrame(feeds, "share_id string, body string"),
+    )
+
+
+def test_config_joins_above_the_dedup(spark):
+    """The callsign never touches the dedup key (share_id, id) or its
+    ordering, so the config joins onto the dedup's survivors: the join
+    sits above the aggregate, and the aggregate (and its shuffle) never
+    carries the callsign. A join below the aggregate would put the
+    config broadcast back on the feed-read stage's critical path."""
+    shares, feeds = _fixture_frames(spark)
+    plan = inreach_pipeline(shares, feeds)._jdf.queryExecution().optimizedPlan().toString()
+    lines = plan.splitlines()
+    join = next(i for i, line in enumerate(lines) if "Join " in line)
+    agg = next(i for i, line in enumerate(lines) if "Aggregate [" in line)
+    assert join < agg, plan
+    assert "callsign" not in lines[agg], plan
+
+
+def test_duplicate_config_rows_each_get_their_feature(spark):
+    """Two config rows that normalize to one share id: the reference
+    runs one closure per configured share (task.ts:66-170), so each
+    config row posts the feed's deduped features under its own
+    callsign."""
+    shares, feeds = _fixture_frames(
+        spark,
+        shares=[
+            Row(share_id="https://share.garmin.com/AAA", callsign="ALPHA", password=None),
+            Row(share_id="AAA", callsign="ALPHA-2", password=None),
+        ],
+        feeds=[Row(share_id="AAA", body=GOOD_FEED)],
+    )
+    rows = inreach_pipeline(shares, feeds).collect()
+    assert sorted((r["id"], r["callsign"]) for r in rows) == [
+        ("inreach-111", "ALPHA"),
+        ("inreach-111", "ALPHA-2"),
+        ("inreach-222", "ALPHA"),
+        ("inreach-222", "ALPHA-2"),
+    ]
+    # both copies carry the same dedup winner (first seen of the tie)
+    assert {r["inreach_id"] for r in rows if r["id"] == "inreach-111"} == {"msg-2"}
+
+
+def test_pipeline_build_round_trips(spark):
+    """Every stage is built from SQL text, so building the whole
+    pipeline through the GeoJSON rendering stays within a fixed py4j
+    budget (a Column-built pipeline made about 1,430 round trips)."""
+    from etl_inreach_spark.sinks.geojson import features_to_json
+    from tools.measure import py4j_calls
+
+    shares, feeds = _fixture_frames(spark)
+    with py4j_calls(spark) as calls:
+        features_to_json(inreach_pipeline(shares, feeds))
+    assert calls.n <= 300, calls.n

@@ -10,10 +10,8 @@ from collections import Counter
 import pyspark.sql.functions as F
 
 from etl_inreach_spark.catalog import load_table
-from etl_inreach_spark.operators.nb_quality import (
-    ilog2_fp_py,
-    with_ilog2_fp,
-)
+from etl_inreach_spark.operators.nb_quality import with_ilog2_fp
+from tests.references import ilog2_fp_py
 
 
 def test_ilog2_fp_spark_matches_python_replica(spark):

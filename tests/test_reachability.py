@@ -44,22 +44,9 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = "etl_inreach_spark"
 
-# Unreached by production on purpose: tests compare production code
-# against these references.
-KEPT_REFERENCES = {
-    # tests/test_nb_quality.py::test_ilog2_fp_spark_matches_python_replica
-    # pins the fixed-point log2 column expression against it.
-    ("etl_inreach_spark/operators/nb_quality.py", "ilog2_fp_py"),
-    # tests/test_geojson_post.py and tests/test_kml_pipeline.py parse the
-    # posted FeatureCollection documents with it.
-    ("etl_inreach_spark/sinks/geojson.py", "parse_feature_collection"),
-    # tests/test_dedup.py::test_agg_and_window_agree_on_events checks the
-    # max_by aggregation form against this window form.
-    ("etl_inreach_spark/operators/dedup.py", "latest_by_key_window"),
-    # tests/test_binary_media.py pins the binary-file scan's media struct
-    # schema against it.
-    ("etl_inreach_spark/operators/multimodal.py", "MEDIA_SCHEMA"),
-}
+# Unreached by production on purpose. Empty: the references tests compare
+# production code against live in tests/references.py.
+KEPT_REFERENCES: set[tuple[str, str]] = set()
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 _IMPORTS = (ast.Import, ast.ImportFrom)

@@ -81,12 +81,9 @@ def test_stream_features_dedups_across_batches(spark, feed_dir, tmp_path):
 def test_foreachbatch_sink_posts_feature_collections(spark, feed_dir, tmp_path):
     """The streaming sink is the batch sink applied per micro-batch:
     foreachBatch -> features_to_json -> post_feature_collections."""
-    from etl_inreach_spark.sinks.geojson import (
-        features_to_json,
-        parse_feature_collection,
-        post_feature_collections,
-    )
+    from etl_inreach_spark.sinks.geojson import features_to_json, post_feature_collections
     from etl_inreach_spark.streaming.pipeline import run_once, stream_features
+    from tests.references import parse_feature_collection
 
     feeds = spark.readStream.schema("share_id string, body string").json(feed_dir)
     shares = spark.createDataFrame(SHARES, "share_id string, callsign string, password string")
