@@ -156,10 +156,9 @@ def bigram_lm_score(docs: DataFrame) -> DataFrame:
     )
     scored = doc_big.join(model, ["w1", "w2"], "left").select(
         "doc_id",
-        # train-on-self: every non-null bigram finds its model row
-        F.when(F.col("w1").isNull(), F.lit(None))
-        .otherwise(F.expr(f"({_PPM}L * c_big) DIV c_pre"))
-        .alias("p_ppm"),
+        # train-on-self: every non-null bigram finds its model row; a
+        # document with no bigram (NULL w1) matches none, so p_ppm is NULL
+        F.expr(f"({_PPM}L * c_big) DIV c_pre").alias("p_ppm"),
     )
     return (
         scored.groupBy("doc_id")

@@ -1,7 +1,8 @@
-"""Graph operators over pair relations: co-occurrence edge building
-and distributed triangle counting — the graph-analytics tail of the
-dedup pipeline (near-dup pairs ARE an edge relation; triangles measure
-cluster cliquishness) and a standard analytics-engine capability.
+"""Graph operators over pair relations: co-occurrence edge building,
+distributed triangle counting and integer power iteration — the
+graph-analytics tail of the dedup pipeline (near-dup pairs ARE an edge
+relation; triangles measure cluster cliquishness) and a standard
+analytics-engine capability.
 
 Scale design:
   * ``cooccurrence_edges`` is bucketed pair expansion — the same
@@ -30,6 +31,12 @@ Scale design:
     rows bounded per-row by the sqrt(|E|) out-degree cap, so AQE may
     broadcast it when small and shuffle-join it at cluster scale. No
     UDFs, no cartesian products.
+  * ``walk_counts`` and ``pagerank_integer`` run over ``neighbour_sets``,
+    the |V|-row adjacency-list form of the same graph, checkpointed
+    once. A round joins |V| neighbour rows to the |V|-row vector and
+    explodes the contributions into a partial-agg sum, instead of
+    shuffling a symmetrized |E|-row edge list (the RDD paper's
+    ``links.join(ranks).flatMap(contribs)``).
 """
 
 from __future__ import annotations
@@ -130,14 +137,51 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     )
 
 
-def symmetrize(edges: DataFrame) -> DataFrame:
-    """Both orientations of an undirected (u < v) edge relation."""
-    return edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+def neighbour_sets(df: DataFrame) -> DataFrame:
+    """(u, _nbrs): each ``l_partkey`` node with the array of the
+    distinct other parts that share an ``l_orderkey`` with it — the
+    co-purchase graph of ``cooccurrence_edges`` as |V| adjacency rows,
+    localCheckpointed once, eagerly.
+
+    Two partial-aggregated shuffles and no join: a ``collect_set`` of
+    parts per order, then each part paired with the rest of its
+    order's set (``explode`` + ``array_remove``) and a ``collect_set``
+    of neighbours per part. A pair that shares several orders counts
+    once, as ``distinct`` does in the edge form. A part that never
+    shares an order with another part has no neighbour and no row.
+
+    Row bounds: an order's set is one row of its distinct parts, and
+    the pair stream expands only within an order (sum of per-order
+    |parts|^2, the ``cooccurrence_edges`` contract). A hub's
+    neighbour set is ONE row of deg(hub) longs, built by a map-side
+    partial ``collect_set`` before the shuffle; the rounds that
+    consume it explode it inside one task, so its row size is the
+    skew term (the same as ``triangles``' adjacency arrays).
+    """
+    orders = df.groupBy("l_orderkey").agg(F.collect_set("l_partkey").alias("_set"))
+    pairs = orders.select(F.explode("_set").alias("u"), "_set").select(
+        "u", F.explode(F.array_remove("_set", F.col("u"))).alias("_v")
+    )
+    return (
+        pairs.groupBy("u")
+        .agg(F.collect_set("_v").alias("_nbrs"))
+        .localCheckpoint(eager=True)
     )
 
 
-def walk_counts(edges: DataFrame, length: int) -> DataFrame:
+def _push(src: DataFrame, value: str) -> DataFrame:
+    """(u, _s): SQL ``value`` of every ``src`` row summed into
+    each of the row's neighbours — an explode plus a partial-agg sum
+    keyed on node id. On symmetric adjacency, pushing along
+    out-neighbours is the same sum as pulling from in-neighbours."""
+    return (
+        src.select(F.explode("_nbrs").alias("u"), F.expr(value).alias("_c"))
+        .groupBy("u")
+        .agg(F.sum("_c").alias("_s"))
+    )
+
+
+def walk_counts(nbrs: DataFrame, length: int) -> DataFrame:
     """Per-node count of walks of ``length`` steps leaving the node —
     the integer power-iteration skeleton (w_{i+1} = A @ w_i on the
     symmetric adjacency). Eigenvector/PageRank centrality is this loop
@@ -146,44 +190,29 @@ def walk_counts(edges: DataFrame, length: int) -> DataFrame:
     iteration would hash-diverge on summation order, which is why the
     oracle-gated query ships this form).
 
-    Each round is one equi-join of the |E|-sized symmetric edge list
-    against the |V|-sized weight vector plus a groupBy-sum — map-side
-    partial agg, shuffle keyed on node id both times, no UDFs. Rounds
-    are a fixed small constant (the query pins 3), so lineage stays
-    shallow — but the symmetric edge list is MATERIALIZED once anyway:
-    every round's plan references it, and an unmaterialized sym would
-    re-run the (possibly expensive) upstream edge build — e.g. the
-    co-purchase distinct self-join — once per round plus once for the
-    degree seed (measured ~2x end-to-end on walk3_centrality).
+    ``nbrs`` is ``neighbour_sets``' checkpointed (u, _nbrs) relation.
+    The seed w_1 = deg = size(_nbrs) needs no shuffle, and w_2 pushes
+    it straight from ``nbrs``. Each later round joins the |V|
+    neighbour rows to the |V|-row weight vector, explodes and sums
+    with a partial aggregate: no |E|-row relation is ever shuffled.
     """
-    # Inner checkpoint LAZY (r11): sym's eager materialization job
-    # computes the edge build and persists it en route (2 jobs -> 1).
-    # sym stays eager — every round references it.
-    sym = symmetrize(
-        edges.localCheckpoint(eager=False)
-    ).localCheckpoint(eager=True)
-    w = sym.groupBy(F.col("u").alias(NODE_COL)).agg(
-        F.count(F.lit(1)).alias("walks")
-    )
-    for _ in range(length - 1):
-        w = (
-            sym.join(w, sym["v"] == w[NODE_COL])
-            .groupBy(sym["u"].alias(NODE_COL))
-            .agg(F.sum("walks").alias("walks"))
-        )
-    return w
+    seed = "CAST(size(_nbrs) AS BIGINT)"
+    w = nbrs.select("u", F.expr(seed).alias("_s"))
+    for i in range(length - 1):
+        # round 2 reads w_1 = size(_nbrs) off nbrs itself: no join
+        w = _push(nbrs.join(w, "u"), "_s") if i else _push(nbrs, seed)
+    return w.select(F.col("u").alias(NODE_COL), F.col("_s").alias("walks"))
 
 
-# Integer PageRank: ranks on a 2^20 fixed-point grid, damping 17/20 = 0.85.
+# Integer PageRank: ranks on a 2^20 fixed-point grid, damping 17/20 = 0.85,
+# three power iterations.
 PR_SCALE = 1 << 20
 PR_D_NUM = 17
 PR_D_DEN = 20
+PR_ITERS = 3
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    iters: int = 3,
-) -> DataFrame:
+def pagerank_integer(nbrs: DataFrame) -> DataFrame:
     """Damped PageRank in EXACT integer arithmetic: ranks live on the
     PR_SCALE = 2^20 fixed-point grid, the damping factor is the rational
     PR_D_NUM/PR_D_DEN = 17/20 = 0.85, and every division is an
@@ -194,72 +223,41 @@ def pagerank_integer(
     deterministic only up to summation order — the same reason the
     k-means trainer (operators/clustering.py) went integer.
 
-    Per iteration: r'(v) = (d_den-d_num)*scale // (d_den*N)
-                          + d_num * SUM_{u->v}(r(u) // deg(u)) // d_den
-    with scale = PR_SCALE, d_num = PR_D_NUM, d_den = PR_D_DEN
-    — exactly ONE |E|-edge equi-join against the |V|-row rank vector
-    plus ONE partial-agg groupBy per iteration (the walk_counts loop
-    with the damping added). Two lineage/plan rules make that true:
+    Per iteration (PR_ITERS of them):
+        r'(v) = (d_den-d_num)*scale // (d_den*N)
+                + d_num * SUM_{u~v}(r(u) // deg(u)) // d_den
+    with scale = PR_SCALE, d_num = PR_D_NUM, d_den = PR_D_DEN, over
+    ``neighbour_sets``' checkpointed (u, _nbrs) relation, where
+    deg(u) = size(_nbrs). This is the adjacency-list PageRank of the
+    RDD paper (``links.join(ranks).flatMap(contribs)``): each u
+    pushes r(u) // deg(u) to every neighbour, so one iteration is ONE
+    join of the |V| neighbour rows to the |V|-row rank vector, an
+    explode and ONE partial-agg groupBy. The first iteration needs no
+    join at all: the seed rank scale // N is the same for every node.
+    Each iteration's rank vector is consumed exactly once, so the
+    unmaterialized rank subtree grows linearly with the rounds.
 
-    * the source degree is FOLDED INTO the edge list once (``sym_deg``
-      = (u, v, deg(u)), localCheckpointed), so the per-edge
-      contribution ``rank div deg`` is computed inline during the
-      aggregation and no second join back to a degree relation runs
-      per round — measured ~2x per-iteration over the join-back form;
-    * each iteration's rank vector is consumed exactly once. A first
-      draft joined state to its own derived sums, doubling the
-      unmaterialized rank subtree every round — 2^iters replay of the
-      edge build, measured 21 s cold / 76 s by the third run at
-      sf0.1 vs ~3 s for this linear form.
-
-    N is read by ONE bounded 1-row collect at build time (r12) off the
-    degree relation the eager sym_deg checkpoint has just persisted —
-    the same frozen-at-build discipline as the nearest-cell centroid
-    collect and the nation-chain VALUES relation. The r11 form rode N
-    as a broadcast 1-row aggregate instead (no driver collect), but
-    that subtree is NOT shared across iterations: the initial plan
-    rebuilt the aggregate + BroadcastExchange + BroadcastNestedLoopJoin
-    once per iteration plus once for the seed (4x at iters=3), each a
-    broadcast-build job AQE cannot always dedupe, and the cross joins
-    blocked nothing else from simplifying. Inlining N as a literal
-    deletes every one of those operators; the two integer expressions
-    (seed rank, damping base) floor-divide identically in Python and
-    Spark (all operands non-negative). Frozen-at-build caveat: callers
-    that swap the upstream edge relation after build would keep the old
-    N — same contract as the quantizer collect. ``edges`` must be
-    distinct undirected pairs with u < v; symmetrization gives every
-    node degree >= 1, so the floor division never sees zero and no
-    node drops from the sums (every node has an in-edge).
+    N is read by ONE bounded 1-row collect at build time: the row
+    count of the checkpointed ``nbrs``, which scans |V| cached rows.
+    Inlining N as a literal keeps every round free of a 1-row
+    aggregate and its broadcast; the two integer expressions (seed
+    rank, damping base) floor-divide identically in Python and Spark
+    (all operands non-negative). Frozen-at-build caveat: callers that
+    swap the upstream relation after build keep the old N — same
+    contract as the quantizer collect. Every node in ``nbrs`` has
+    degree >= 1, so the floor division never sees zero, and adjacency
+    is symmetric, so every node receives a sum and none drops out.
     """
-    # Only the LAST checkpoint in the chain is eager (r11): sym_deg's
-    # materialization job computes edges -> sym -> deg in one pass,
-    # persisting each lazy link as it goes (3 jobs -> 1-2; the deg
-    # broadcast build, when the planner picks it, is the only extra).
-    # sym_deg itself must be materialized before the loop — every
-    # iteration references it, and an unmaterialized sym_deg would
-    # re-run the upstream edge build once per round.
-    sym = symmetrize(edges.localCheckpoint(eager=False))
-    deg = (
-        sym.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("_deg"))
-        .localCheckpoint(eager=False)
-    )
-    sym_deg = sym.join(deg, "u").localCheckpoint(eager=True)
-    # bounded: one bigint. deg's RDD is already persisted by sym_deg's
-    # checkpoint job, so this scans |V| cached rows. max(n, 1) only
-    # guards the Python division on an EMPTY edge relation — deg (and
-    # so every downstream relation) has zero rows then, the literals
-    # are never observed, and the result is empty either way.
-    n = max(deg.count(), 1)
+    # bounded: one bigint. max(n, 1) only guards the Python division on
+    # an EMPTY relation: every downstream relation is empty then, the
+    # literals are never observed, and the result is empty either way.
+    n = max(nbrs.count(), 1)
     base = (PR_D_DEN - PR_D_NUM) * PR_SCALE // (PR_D_DEN * n)
-    state = deg.select("u", F.lit(PR_SCALE // n).cast("bigint").alias("_rank"))
-    for _ in range(iters):
-        sums = (
-            sym_deg.join(state, "u")
-            .groupBy(F.col("v").alias("u"))
-            .agg(F.sum(F.expr("_rank div _deg")).alias("_s"))
-        )
-        state = sums.select(
+    state = None
+    for i in range(PR_ITERS):
+        # the seed rank is one literal for every node: round 1 reads nbrs alone
+        src, rank = (nbrs.join(state, "u"), "_rank") if i else (nbrs, f"{PR_SCALE // n}L")
+        state = _push(src, f"{rank} div size(_nbrs)").select(
             "u",
             F.expr(f"{base}L + ({PR_D_NUM}L * _s) div {PR_D_DEN}L").alias("_rank"),
         )

@@ -959,7 +959,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe), and an unmaterialized plan replays the distinct
     # self-join over lineitem for each — measured 4.9-5.3 -> 4.2 s
     # min-of-3 at sf0.1. Same discipline as connected_components /
-    # pagerank_integer; the earlier "checkpoint measured slower" note
+    # neighbour_sets; the earlier "checkpoint measured slower" note
     # in operators/graph.py applies to the ORIENTED relation (cheap to
     # recompute from edges), not to the edge build itself.
     edges = cooccurrence_edges(m).localCheckpoint(eager=True)
@@ -1230,15 +1230,15 @@ def walk3_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     eigenvector/PageRank centrality with the float damping stripped so
     every sum stays in bigint and the result is EXACT and
     engine-portable (a float PageRank would hash-diverge on summation
-    order). Each round is one |E|-edge equi-join against the |V|-row
-    weight vector + a partial-agg groupBy — both shuffles keyed on
-    node id; a fixed 3 rounds keeps lineage shallow with no
-    checkpoint (operators/graph.walk_counts)."""
-    from etl_inreach_spark.operators.graph import cooccurrence_edges, walk_counts
+    order). The graph is built once as checkpointed per-part neighbour
+    sets (operators/graph.neighbour_sets); the first two rounds read
+    them alone, and the third joins the |V| neighbour rows to the
+    |V|-row weight vector, explodes and sums with a partial aggregate
+    keyed on node id (operators/graph.walk_counts)."""
+    from etl_inreach_spark.operators.graph import neighbour_sets, walk_counts
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(li.select("l_orderkey", "l_partkey"))
-    return walk_counts(edges, 3)
+    return walk_counts(neighbour_sets(li.select("l_orderkey", "l_partkey")), 3)
 
 
 @query(
@@ -2410,13 +2410,15 @@ def pagerank3_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     all three iterations verbatim — the same literal-determinism
     proof as kmeans_cluster_sizes, applied to an iterative graph
     algorithm. See operators/graph.py:pagerank_integer for the
-    per-iteration plan (|E| equi-join + node-keyed partial agg; sym
-    checkpointed once; N as a broadcast 1-row aggregate)."""
-    from etl_inreach_spark.operators.graph import cooccurrence_edges, pagerank_integer
+    per-iteration plan: the per-part neighbour sets are checkpointed
+    once (operators/graph.neighbour_sets), the first iteration reads
+    them alone, and each later one joins the |V| neighbour rows to the
+    |V|-row rank vector and sums the exploded contributions with a
+    node-keyed partial aggregate; N is a literal read at build time."""
+    from etl_inreach_spark.operators.graph import neighbour_sets, pagerank_integer
 
     li = load_table(spark, sf_dir, "lineitem")
-    edges = cooccurrence_edges(li.select("l_orderkey", "l_partkey"))
-    return pagerank_integer(edges, iters=3)
+    return pagerank_integer(neighbour_sets(li.select("l_orderkey", "l_partkey")))
 
 
 _JL_K = 16  # projected dims

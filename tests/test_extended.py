@@ -233,7 +233,7 @@ def test_triangle_counts_orientation_invariant(spark):
 
 
 def test_cooccurrence_edges_bucketed(spark):
-    from etl_inreach_spark.operators.graph import cooccurrence_edges
+    from etl_inreach_spark.operators.graph import cooccurrence_edges, neighbour_sets
 
     df = spark.createDataFrame(
         [("b1", 1), ("b1", 2), ("b1", 3), ("b2", 3), ("b2", 4), ("b3", 5)],
@@ -242,22 +242,35 @@ def test_cooccurrence_edges_bucketed(spark):
     got = {(r["u"], r["v"]) for r in cooccurrence_edges(df).collect()}
     # pairs only WITHIN a bucket; singleton bucket b3 contributes none
     assert got == {(1, 2), (1, 3), (2, 3), (3, 4)}
+    # the same graph as adjacency rows; part 5 has no neighbour and no row
+    nbrs = {r["u"]: set(r["_nbrs"]) for r in neighbour_sets(df).collect()}
+    assert nbrs == {1: {2, 3}, 2: {1, 3}, 3: {1, 2, 4}, 4: {3}}
+
+
+def _walks(spark, rows, length):
+    from etl_inreach_spark.operators.graph import neighbour_sets, walk_counts
+
+    df = spark.createDataFrame(rows, "l_orderkey long, l_partkey long")
+    return {r["part_id"]: r["walks"] for r in walk_counts(neighbour_sets(df), length).collect()}
 
 
 def test_walk_counts_path_graph(spark):
-    """P4 path graph 1-2-3-4: adjacency powers are hand-checkable.
-    w1 = degree; w2(v) = sum of neighbor degrees; w3 = next power."""
-    from etl_inreach_spark.operators.graph import walk_counts
+    """P4 path graph 1-2-3-4, one order per edge: adjacency powers are
+    hand-checkable. w1 = degree; w2(v) = sum of neighbor degrees; w3 =
+    next power."""
+    rows = [(o, p) for o, edge in enumerate([(1, 2), (2, 3), (3, 4)]) for p in edge]
+    assert _walks(spark, rows, 1) == {1: 1, 2: 2, 3: 2, 4: 1}
+    assert _walks(spark, rows, 2) == {1: 2, 2: 3, 3: 3, 4: 2}
+    assert _walks(spark, rows, 3) == {1: 3, 2: 5, 3: 5, 4: 3}
 
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "u long, v long"
-    )
-    w1 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 1).collect()}
-    assert w1 == {1: 1, 2: 2, 3: 2, 4: 1}
-    w2 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 2).collect()}
-    assert w2 == {1: 2, 2: 3, 3: 3, 4: 2}
-    w3 = {r["part_id"]: r["walks"] for r in walk_counts(edges, 3).collect()}
-    assert w3 == {1: 3, 2: 5, 3: 5, 4: 3}
+
+def test_walk_counts_count_shared_orders_once(spark):
+    """Triangle 1-2-3 in one order plus the pair (1, 2) again in two
+    more orders (one listing part 2 twice): the graph is still K3,
+    where every node has 2^k walks of length k."""
+    rows = [(1, 1), (1, 2), (1, 3), (2, 1), (2, 2), (3, 2), (3, 1), (3, 2)]
+    assert _walks(spark, rows, 1) == {1: 2, 2: 2, 3: 2}
+    assert _walks(spark, rows, 3) == {1: 8, 2: 8, 3: 8}
 
 
 def test_bloom_prune_no_false_negatives_and_fp_bounded(spark):

@@ -1,9 +1,11 @@
 """Integer PageRank: bit-exact parity with an independent pure-Python
-replica, plus the invariants that make the fixed-point form safe."""
+replica, plus the invariants that make the fixed-point form safe.
+The operator reads ``neighbour_sets`` built from (order, part) bucket
+rows; each test edge is its own order of two parts."""
 
 from __future__ import annotations
 
-from etl_inreach_spark.operators.graph import pagerank_integer
+from etl_inreach_spark.operators.graph import neighbour_sets, pagerank_integer
 
 SCALE = 1 << 20
 
@@ -26,10 +28,19 @@ def _replica(edges, iters=3, scale=SCALE, d_num=17, d_den=20):
     return rank
 
 
-def _spark_ranks(spark, edges, iters=3):
-    df = spark.createDataFrame(edges, "u bigint, v bigint")
-    out = pagerank_integer(df, iters=iters)
-    return {r.part_id: r.rank_scaled for r in out.collect()}
+BUCKETS = "l_orderkey bigint, l_partkey bigint"
+
+
+def _bucket_rows(edges):
+    return [(o, p) for o, edge in enumerate(edges) for p in edge]
+
+
+def _ranks(df):
+    return {r.part_id: r.rank_scaled for r in pagerank_integer(neighbour_sets(df)).collect()}
+
+
+def _spark_ranks(spark, edges):
+    return _ranks(spark.createDataFrame(_bucket_rows(edges), BUCKETS))
 
 
 EDGES = [
@@ -48,11 +59,20 @@ class TestPagerankInteger:
     def test_matches_python_replica_exactly(self, spark):
         assert _spark_ranks(spark, EDGES) == _replica(EDGES)
 
+    def test_shared_orders_count_each_pair_once(self, spark):
+        # (1, 2) shares orders 10, 11 and 13; orders 10 and 12 hold three
+        # parts, and order 13 lists part 2 twice. Each distinct pair is one
+        # edge: it counts once in the degree and once in the sums.
+        orders = {10: [1, 2, 3], 11: [1, 2], 12: [2, 3, 4], 13: [2, 1, 2], 14: [4, 5]}
+        rows = [(o, p) for o, parts in orders.items() for p in parts]
+        edges = {(u, v) for ps in orders.values() for u in ps for v in ps if u < v}
+        assert edges == {(1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (4, 5)}
+        assert _ranks(spark.createDataFrame(rows, BUCKETS)) == _replica(sorted(edges))
+
     def test_partition_invariant(self, spark):
-        df1 = spark.createDataFrame(EDGES, "u bigint, v bigint").repartition(1)
-        df7 = spark.createDataFrame(EDGES, "u bigint, v bigint").repartition(7)
-        r1 = {r.part_id: r.rank_scaled for r in pagerank_integer(df1).collect()}
-        r7 = {r.part_id: r.rank_scaled for r in pagerank_integer(df7).collect()}
+        rows = _bucket_rows(EDGES)
+        r1 = _ranks(spark.createDataFrame(rows, BUCKETS).repartition(1))
+        r7 = _ranks(spark.createDataFrame(rows, BUCKETS).repartition(7))
         assert r1 == r7
 
     def test_hub_outranks_leaf(self, spark):
@@ -66,7 +86,24 @@ class TestPagerankInteger:
         assert 0 < sum(ranks.values()) <= SCALE
 
     def test_no_python_udf_and_no_cartesian(self, spark):
-        df = spark.createDataFrame(EDGES, "u bigint, v bigint")
-        plan = pagerank_integer(df)._jdf.queryExecution().executedPlan().toString()
+        df = spark.createDataFrame(_bucket_rows(EDGES), BUCKETS)
+        plan = pagerank_integer(neighbour_sets(df))._jdf.queryExecution().executedPlan().toString()
         assert "CartesianProduct" not in plan
         assert "BatchEvalPython" not in plan
+
+
+def test_pagerank3_build_budget(spark, sf_dir):
+    """The neighbour-set build runs at most half of the edge-list
+    form's 10 eager build jobs at sf0.001, warm, and its one
+    checkpoint is the only one the query takes."""
+    from etl_inreach_spark.queries import all_queries
+    from perfbench.trace import Tracer, count_materializations
+    from tools import measure as m
+
+    build = all_queries()["pagerank3_copurchase"]
+    build(spark, sf_dir)  # a cold first read of the table runs one more job
+    tracer = Tracer()
+    with count_materializations(type(spark.range(1)), tracer):
+        rec = m.measure(spark, "test:pagerank3_budget", lambda: build(spark, sf_dir))
+    assert rec["build_jobs"] <= 5
+    assert tracer.counters["operators.checkpoints"] == 1

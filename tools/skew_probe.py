@@ -113,6 +113,7 @@ def _run(spark, name, fn, sf_dir, repeats: int = 3, warm: bool = True):
     return {
         "wall_sec": round(min(r["wall_s"] for r in recs), 2),
         "rows": n,
+        "jobs_per_repeat": [r["jobs"] for r in recs],
         "max_task_sec": round(max(r["max_task_s"] for r in recs), 2),
         "max_task_sec_per_repeat": [round(r["max_task_s"], 2) for r in recs],
         # worst max/p50 task ratio over stages of >= 4 tasks, per
